@@ -23,6 +23,19 @@ class TestConstraintAnalysis:
         assert conjunctive_constraints("a=not.eq.1") == []
         assert conjunctive_constraints("a=like.*x*") == []
 
+    def test_and_group_members(self):
+        cs = conjunctive_constraints(
+            "and=(id.gte.3,id.lte.5,v.in.(1,2),or(a.eq.1,b.eq.2),"
+            "and(c.eq.1),w.not.eq.4,n.like.*x*)&z=eq.9"
+        )
+        assert cs == [
+            ("id", "gte", 3),
+            ("id", "lte", 5),
+            ("v", "in", [1, 2]),
+            ("z", "eq", 9),
+        ]
+        assert conjunctive_constraints("not.and=(id.gte.3,id.lte.5)") == []
+
     def test_file_may_match(self):
         stats = {"a": (10, 20)}
         assert not file_may_match(stats, [("a", "eq", 5)])
@@ -42,7 +55,11 @@ def client(spark, tmp_path):
 @pytest.fixture()
 def chunked(client):
     """Collection with two data files with disjoint value ranges."""
-    client.create_collection("c", {"v": "int", "name": "text"})
+    return _make_chunked(client, "c")
+
+
+def _make_chunked(client, name):
+    client.create_collection(name, {"v": "int", "name": "text"})
     lo = pd.DataFrame(
         {
             "geometry": [f"POINT ({i} {i})" for i in range(10)],
@@ -57,9 +74,9 @@ def chunked(client):
             "name": [f"hi{i}" for i in range(10)],
         }
     )
-    client.insert_into_collection("c", lo)
-    client.insert_into_collection("c", hi)  # second file(s), separate commit
-    return "c"
+    client.insert_into_collection(name, lo)
+    client.insert_into_collection(name, hi)  # second file(s), separate commit
+    return name
 
 
 def _file_set(client, coll):
@@ -109,6 +126,50 @@ class TestFilePruning:
         df = client.get_collection(chunked)
         assert len(df) == 20
         assert df[df["id"] == 1].iloc[0]["v"] == 999
+
+
+class TestAndGroupPruning:
+    """A DML filter spelled ``and=(id.gte.A,id.lte.B)`` prunes files like
+    ``id=gte.A&id=lte.B``, and the pruned rewrite equals the unpruned one."""
+
+    GROUP, PAIRS = "and=(id.gte.12,id.lte.14)", "id=gte.12&id=lte.14"
+
+    def test_same_files_as_top_level_pairs(self, client, chunked):
+        from xcube_geodb_spark.operators.dml import _touched_untouched
+
+        group = _touched_untouched(client.catalog, chunked, "pruner", self.GROUP)
+        pairs = _touched_untouched(client.catalog, chunked, "pruner", self.PAIRS)
+        assert group == pairs
+        assert group[1], "the lo file(s) must be left untouched"
+
+    @pytest.mark.parametrize("dml", ["delete", "update"])
+    def test_pruned_equals_unpruned(self, client, chunked, monkeypatch, dml):
+        from xcube_geodb_spark.operators import pruning
+
+        def run(coll):
+            if dml == "delete":
+                client.delete_from_collection(coll, self.GROUP)
+            else:
+                client.update_collection(coll, {"name": "X"}, self.GROUP)
+            return client.get_collection(coll).sort_values("id")
+
+        _make_chunked(client, "unpruned")
+        before = _file_set(client, chunked)
+        pruned = run(chunked)
+        assert before & _file_set(client, chunked), "pruning kept no file"
+        monkeypatch.setattr(pruning, "conjunctive_constraints", lambda q: [])
+        before = _file_set(client, "unpruned")
+        unpruned = run("unpruned")
+        assert not before & _file_set(client, "unpruned")  # full rewrite
+        cols = ["id", "v", "name"]
+        pd.testing.assert_frame_equal(
+            pruned[cols].reset_index(drop=True), unpruned[cols].reset_index(drop=True)
+        )
+        changed = {12, 13, 14}
+        if dml == "delete":
+            assert changed.isdisjoint(pruned["id"]) and len(pruned) == 17
+        else:
+            assert set(pruned[pruned["name"] == "X"]["id"]) == changed
 
 
 class TestScanFilePruning:

@@ -29,7 +29,7 @@ def test_zorder_key_sql_matches_column_api(spark):
         (rnd.uniform(-200.0, 200.0), rnd.uniform(-100.0, 100.0))
         for _ in range(2000)
     ]
-    # exact bounds, the origin, out-of-bounds clamps, NULL
+    # exact bounds, the origin, out-of-bounds clamps, NULL, non-finite
     rows += [
         (-180.0, -90.0),
         (180.0, 90.0),
@@ -37,6 +37,8 @@ def test_zorder_key_sql_matches_column_api(spark):
         (181.0, -91.0),
         (-999.0, 999.0),
         (None, 5.0),
+        (float("nan"), 1.0),
+        (float("inf"), float("-inf")),
     ]
     df = spark.createDataFrame(rows, "x double, y double").repartition(7)
     col_keys = [

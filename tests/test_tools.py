@@ -1,0 +1,71 @@
+"""Measurement tools under tools/: the scaled-dataset cache and the plan
+capture's round directory."""
+
+import importlib.util
+import os
+import sys
+import types
+
+TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+
+
+def _load(name):
+    spec = importlib.util.spec_from_file_location(name, os.path.join(TOOLS, f"{name}.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+class TestScaledDirMarker:
+    def test_rebuilds_on_other_replication(self, tmp_path, monkeypatch):
+        scaled_ab = _load("scaled_ab")
+        builds = []
+
+        def prep(sf_dir, repl):
+            out = tmp_path / f"built{len(builds)}"
+            out.mkdir()
+            (out / "repl").write_text(str(repl))
+            builds.append(repl)
+            return str(out)
+
+        monkeypatch.setitem(sys.modules, "bench", types.SimpleNamespace(_prep_scaled_dir=prep))
+        monkeypatch.setenv("SPARK_GRAFT_SCALED_DIR", str(tmp_path / "scaled"))
+        path = scaled_ab.scaled_dir("sf", 10)
+        assert scaled_ab.scaled_dir("sf", 10) == path
+        assert builds == [10]  # reused while the factor matches
+        scaled_ab.scaled_dir("sf", 100)
+        assert builds == [10, 100]
+        assert (tmp_path / "scaled" / "repl").read_text() == "100"
+
+    def test_unstamped_marker_rebuilds(self, tmp_path, monkeypatch):
+        scaled_ab = _load("scaled_ab")
+        builds = []
+
+        def prep(sf_dir, repl):
+            builds.append(repl)
+            out = tmp_path / "built"
+            out.mkdir()
+            return str(out)
+
+        monkeypatch.setitem(sys.modules, "bench", types.SimpleNamespace(_prep_scaled_dir=prep))
+        old = tmp_path / "scaled"
+        old.mkdir()
+        (old / "_ready").write_text("ok\n")  # marker written before the stamp
+        monkeypatch.setenv("SPARK_GRAFT_SCALED_DIR", str(old))
+        scaled_ab.scaled_dir("sf", 10)
+        assert builds == [10]
+
+
+class TestCapturePlansRound:
+    def test_next_round(self, tmp_path):
+        capture_plans = _load("capture_plans")
+        assert capture_plans.next_round(str(tmp_path / "missing")) == "r1"
+        for d in ("r12", "r13", "notes", "rx"):
+            (tmp_path / d).mkdir()
+        assert capture_plans.next_round(str(tmp_path)) == "r14"
+
+    def test_round_is_required(self, monkeypatch, capsys):
+        capture_plans = _load("capture_plans")
+        monkeypatch.delenv("SPARK_GRAFT_PLANS_ROUND", raising=False)
+        assert capture_plans.main() == 2
+        assert "SPARK_GRAFT_PLANS_ROUND" in capsys.readouterr().err

@@ -4,7 +4,8 @@
 Reuses bench.py's _prep_scaled_dir materialization, but KEEPS the scaled
 dir under /tmp between invocations (env SPARK_GRAFT_SCALED_DIR overrides;
 delete it to force a rebuild) so repeated experiments time the query, not
-the DuckDB COPY.
+the DuckDB COPY. The dir's ``_ready`` marker records the replication
+factor; a dir built with another ``-x`` is rebuilt.
 
 Usage: python tools/scaled_ab.py [-n REPS] [-x REPL] query [query ...]
 """
@@ -24,8 +25,11 @@ def scaled_dir(sf_dir: str, repl: int) -> str:
         "SPARK_GRAFT_SCALED_DIR", f"/tmp/geodb_scaled_x{repl}"
     )
     marker = os.path.join(path, "_ready")
+    stamp = f"repl={repl}\n"
     if os.path.exists(marker):
-        return path
+        with open(marker) as f:
+            if f.read() == stamp:
+                return path
     import shutil
 
     import bench
@@ -33,7 +37,8 @@ def scaled_dir(sf_dir: str, repl: int) -> str:
     built = bench._prep_scaled_dir(sf_dir, repl)
     shutil.rmtree(path, ignore_errors=True)
     shutil.move(built, path)
-    open(marker, "w").write("ok\n")
+    with open(marker, "w") as f:
+        f.write(stamp)
     return path
 
 

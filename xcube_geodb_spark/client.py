@@ -70,10 +70,16 @@ class GeoDBSparkClient:
     def _db(self, database: str | None) -> str:
         return database or self.database
 
-    def _collect_geo(self, df: DataFrame, srid: int | None = None) -> pd.DataFrame:
+    def _collect_geo(
+        self, df: DataFrame, srid: int | None = None, refine=None
+    ) -> pd.DataFrame:
         """Spark -> pandas; decode WKB to Geometry objects (the reference
-        decodes hex-EWKB to shapely, geodb.py:2104-2149)."""
+        decodes hex-EWKB to shapely, geodb.py:2104-2149). ``refine`` maps
+        the collected rows to the result before decoding (the driver half
+        of a filter-and-refine read, operators/spatial.py)."""
         pdf = df.toPandas()
+        if refine is not None:
+            pdf = refine(pdf)
         if "geometry" in pdf.columns:
             pdf["geometry"] = pdf["geometry"].map(
                 lambda b: parse_wkb(b) if b is not None else None
@@ -489,21 +495,26 @@ class GeoDBSparkClient:
     ) -> pd.DataFrame:
         db = self._db(database)
         srid = self.catalog.get_collection_srid(collection, db)
-        df = spatial.get_collection_by_bbox(
-            self.catalog,
-            collection,
-            tuple(bbox),
+        args = (self.catalog, collection, tuple(bbox))
+        kw = dict(
             comparison_mode=comparison_mode,
             bbox_crs=bbox_crs,
-            limit=limit or None,
-            offset=offset or None,
             where=where,
             op=op,
             database=db,
             wsg84_order=wsg84_order,
         )
+        if limit or offset or (where and str(op).upper() == "OR"):
+            # the exact filter must run before the limit, and an OR-ed
+            # `where` admits rows the envelope pre-filter cannot bound
+            df = spatial.get_collection_by_bbox(
+                *args, limit=limit or None, offset=offset or None, **kw
+            )
+            refine = None
+        else:
+            df, refine = spatial.bbox_candidates(*args, **kw)
         self.events.log("read", f"Collection {db}_{collection} read by bbox")
-        return self._collect_geo(df, srid)
+        return self._collect_geo(df, srid, refine)
 
     def get_collection_knn(
         self,
@@ -518,7 +529,7 @@ class GeoDBSparkClient:
         (engine superset: the PostGIS ``ORDER BY geom <-> q`` idiom)."""
         db = self._db(database)
         srid = self.catalog.get_collection_srid(collection, db)
-        df = spatial.get_knn(
+        df, refine = spatial.knn_candidates(
             self.catalog,
             collection,
             (float(point[0]), float(point[1])),
@@ -528,7 +539,7 @@ class GeoDBSparkClient:
             wsg84_order=wsg84_order,
         )
         self.events.log("read", f"Collection {db}_{collection} knn query")
-        return self._collect_geo(df, srid)
+        return self._collect_geo(df, srid, refine)
 
     def spatial_join_collections(
         self,

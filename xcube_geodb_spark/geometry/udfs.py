@@ -1,12 +1,19 @@
-"""Arrow-vectorized pandas UDFs wrapping the geometry kernel.
+"""Arrow-vectorized pandas UDFs wrapping the geometry kernel, and the
+JVM-side envelope tests that keep rows away from them.
 
-These are the only places the engine leaves the JVM on the data path, and
-each is batch-vectorized (Arrow transfer, numpy inner loops). Scans avoid
-calling them entirely when the envelope pre-filter is decisive
-(operators/spatial.py).
+The UDFs are the only places the engine leaves the JVM on the data path,
+and each is batch-vectorized (Arrow transfer, numpy inner loops). The
+envelope pre-filter (:func:`envelope_prefilter`) only narrows the rows a
+bbox predicate UDF sees; it never replaces the exact test. Client reads
+skip the UDF altogether: they collect the pre-filtered candidates and run
+the same exact function, :func:`bbox_predicate_batch`, on the driver
+(operators/spatial.py). Counts also skip the rows whose envelope alone
+decides ``intersects``/``disjoint`` (:func:`envelope_decides`).
 """
 
 from __future__ import annotations
+
+import math
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -193,8 +200,13 @@ def _point_batch_predicate(mode: str, xs, ys, box: Box):
     return np.zeros(len(xs), dtype=bool)
 
 
-def bbox_predicate_column(mode: str, box: Box, geometry_col: str = "geometry") -> Column:
-    """Exact ``ST_<mode>(bbox, geom)`` as a vectorized pandas-UDF Column.
+def bbox_predicate_batch(mode: str, wkb_values, box: Box):
+    """Exact ``ST_<mode>(bbox, geom)`` over a batch of WKB values (None for
+    NULL geometry, which never matches); returns a numpy bool array.
+
+    The one exact-predicate implementation: the pandas UDF below calls it
+    inside Python workers, and client reads call it on the driver over the
+    rows the envelope pre-filter let through (operators/spatial.py).
 
     Fast paths: 2D point WKB (fixed 21-byte layout) and axis-aligned
     rectangle polygons (fixed 93-byte layout) are decoded with a single
@@ -204,82 +216,88 @@ def bbox_predicate_column(mode: str, box: Box, geometry_col: str = "geometry") -
     import numpy as np
 
     bx = tuple(float(v) for v in box)
+    n = len(wkb_values)
+    # fromiter, not asarray: asarray turns equal-length bytearrays into a
+    # 2-D array of ints
+    vals = np.fromiter(wkb_values, dtype=object, count=n)
+    out = np.zeros(n, dtype=bool)
+    handled = np.zeros(n, dtype=bool)
+
+    is_point = np.fromiter(
+        (
+            b is not None and len(b) == 21 and bytes(b[:5]) == _POINT_WKB_LE
+            for b in vals
+        ),
+        dtype=bool,
+        count=n,
+    )
+    idx = np.nonzero(is_point)[0]
+    if len(idx):
+        buf = b"".join(bytes(vals[i][5:21]) for i in idx)
+        coords = np.frombuffer(buf, dtype="<f8").reshape(-1, 2)
+        out[idx] = _point_batch_predicate(mode, coords[:, 0], coords[:, 1], bx)
+        handled[idx] = True
+
+    maybe_rect = np.fromiter(
+        (
+            b is not None and len(b) == 93 and bytes(b[:13]) == _RECT_WKB_LE
+            for b in vals
+        ),
+        dtype=bool,
+        count=n,
+    )
+    ridx = np.nonzero(maybe_rect)[0]
+    if len(ridx):
+        buf = b"".join(bytes(vals[i][13:93]) for i in ridx)
+        ring = np.frombuffer(buf, dtype="<f8").reshape(-1, 5, 2)
+        xs, ys = ring[..., 0], ring[..., 1]
+        closed = (xs[:, 0] == xs[:, 4]) & (ys[:, 0] == ys[:, 4])
+        # axis-aligned rectangle: consecutive edges alternate
+        # horizontal/vertical
+        axis = np.ones(len(ridx), dtype=bool)
+        for k in range(4):
+            axis &= (xs[:, k] == xs[:, k + 1]) | (ys[:, k] == ys[:, k + 1])
+        # each diagonal pair must differ in BOTH coordinates; with
+        # axis-aligned edges this forces a true 4-corner rectangle and
+        # rejects degenerate out-and-back rings whose phantom envelope
+        # would disagree with the exact kernel
+        diag = (
+            (xs[:, 0] != xs[:, 2])
+            & (ys[:, 0] != ys[:, 2])
+            & (xs[:, 1] != xs[:, 3])
+            & (ys[:, 1] != ys[:, 3])
+        )
+        rect_ok = closed & axis & diag
+        env = np.stack(
+            [
+                xs[:, :4].min(axis=1),
+                ys[:, :4].min(axis=1),
+                xs[:, :4].max(axis=1),
+                ys[:, :4].max(axis=1),
+            ],
+            axis=1,
+        )
+        good = np.nonzero(rect_ok)[0]
+        if len(good):
+            out[ridx[good]] = _rect_batch_predicate(mode, env[good], bx)
+            handled[ridx[good]] = True
+
+    for i in np.nonzero(~handled)[0]:
+        b = vals[i]
+        out[i] = (
+            bbox_predicate(mode, parse_wkb(bytes(b)), bx) if b is not None else False
+        )
+    return out
+
+
+def bbox_predicate_column(mode: str, box: Box, geometry_col: str = "geometry") -> Column:
+    """Exact ``ST_<mode>(bbox, geom)`` as a vectorized pandas-UDF Column
+    (:func:`bbox_predicate_batch` per Arrow batch)."""
+    bx = tuple(float(v) for v in box)
 
     @F.pandas_udf(T.BooleanType())
     def _pred(wkb: pd.Series) -> pd.Series:
-        vals = wkb.to_numpy(dtype=object)
-        n = len(vals)
-        out = np.zeros(n, dtype=bool)
-        handled = np.zeros(n, dtype=bool)
-
-        is_point = np.fromiter(
-            (
-                b is not None and len(b) == 21 and bytes(b[:5]) == _POINT_WKB_LE
-                for b in vals
-            ),
-            dtype=bool,
-            count=n,
-        )
-        idx = np.nonzero(is_point)[0]
-        if len(idx):
-            buf = b"".join(bytes(vals[i][5:21]) for i in idx)
-            coords = np.frombuffer(buf, dtype="<f8").reshape(-1, 2)
-            out[idx] = _point_batch_predicate(mode, coords[:, 0], coords[:, 1], bx)
-            handled[idx] = True
-
-        maybe_rect = np.fromiter(
-            (
-                b is not None and len(b) == 93 and bytes(b[:13]) == _RECT_WKB_LE
-                for b in vals
-            ),
-            dtype=bool,
-            count=n,
-        )
-        ridx = np.nonzero(maybe_rect)[0]
-        if len(ridx):
-            buf = b"".join(bytes(vals[i][13:93]) for i in ridx)
-            ring = np.frombuffer(buf, dtype="<f8").reshape(-1, 5, 2)
-            xs, ys = ring[..., 0], ring[..., 1]
-            closed = (xs[:, 0] == xs[:, 4]) & (ys[:, 0] == ys[:, 4])
-            # axis-aligned rectangle: consecutive edges alternate
-            # horizontal/vertical
-            axis = np.ones(len(ridx), dtype=bool)
-            for k in range(4):
-                axis &= (xs[:, k] == xs[:, k + 1]) | (ys[:, k] == ys[:, k + 1])
-            # each diagonal pair must differ in BOTH coordinates; with
-            # axis-aligned edges this forces a true 4-corner rectangle and
-            # rejects degenerate out-and-back rings whose phantom envelope
-            # would disagree with the exact kernel
-            diag = (
-                (xs[:, 0] != xs[:, 2])
-                & (ys[:, 0] != ys[:, 2])
-                & (xs[:, 1] != xs[:, 3])
-                & (ys[:, 1] != ys[:, 3])
-            )
-            rect_ok = closed & axis & diag
-            env = np.stack(
-                [
-                    xs[:, :4].min(axis=1),
-                    ys[:, :4].min(axis=1),
-                    xs[:, :4].max(axis=1),
-                    ys[:, :4].max(axis=1),
-                ],
-                axis=1,
-            )
-            good = np.nonzero(rect_ok)[0]
-            if len(good):
-                res = _rect_batch_predicate(mode, env[good], bx)
-                out[ridx[good]] = res
-                handled[ridx[good]] = True
-
-        for i in np.nonzero(~handled)[0]:
-            b = vals[i]
-            out[i] = (
-                bbox_predicate(mode, parse_wkb(bytes(b)), bx)
-                if b is not None
-                else False
-            )
-        return pd.Series(out)
+        return pd.Series(bbox_predicate_batch(mode, wkb.to_numpy(dtype=object), bx))
 
     return _pred(F.col(geometry_col))
 
@@ -290,32 +308,107 @@ def envelope_prefilter(mode: str, box: Box) -> Column | None:
     predicate (None when the mode admits no envelope shortcut, i.e.
     ``disjoint``)."""
     xmin, ymin, xmax, ymax = (float(v) for v in box)
-    # margin keeps the pre-filter strictly looser than the exact kernel
-    # predicate (which tolerates ~1e-9 relative) — it must stay a NECESSARY
-    # condition, never reject a row the kernel would accept
-    m = 1e-6 * max(abs(xmin), abs(ymin), abs(xmax), abs(ymax), 1.0)
-    env_intersects = (
-        (F.col("__xmin") <= xmax + m)
-        & (F.col("__xmax") >= xmin - m)
-        & (F.col("__ymin") <= ymax + m)
-        & (F.col("__ymax") >= ymin - m)
-    )
+    m = _margin(box)
     if mode in ("intersects", "touches", "overlaps", "crosses"):
-        return env_intersects
+        return F.expr(_envelope_meets(box))
     if mode in ("contains", "equals"):
         # geom ⊆ box ⇒ envelope ⊆ box
-        return (
-            (F.col("__xmin") >= xmin - m)
-            & (F.col("__xmax") <= xmax + m)
-            & (F.col("__ymin") >= ymin - m)
-            & (F.col("__ymax") <= ymax + m)
+        return F.expr(
+            _all(
+                f"__xmin >= {_d(xmin - m)}",
+                f"__xmax <= {_d(xmax + m)}",
+                f"__ymin >= {_d(ymin - m)}",
+                f"__ymax <= {_d(ymax + m)}",
+            )
         )
     if mode == "within":
         # box ⊆ geom ⇒ geom envelope ⊇ box
-        return (
-            (F.col("__xmin") <= xmin + m)
-            & (F.col("__xmax") >= xmax - m)
-            & (F.col("__ymin") <= ymin + m)
-            & (F.col("__ymax") >= ymax - m)
+        return F.expr(
+            _all(
+                f"__xmin <= {_d(xmin + m)}",
+                f"__xmax >= {_d(xmax - m)}",
+                f"__ymin <= {_d(ymin + m)}",
+                f"__ymax >= {_d(ymax - m)}",
+            )
         )
     return None  # disjoint: complement — no cheap necessary condition
+
+
+# The envelope tests are spelled as SQL text and parsed once: building them
+# through the Column API costs ~10 py4j round trips per comparison, about
+# 30 ms of driver latency per count (the layout.zorder_key_sql lesson).
+
+
+def _d(v: float) -> str:
+    """A SQL DOUBLE literal of exactly ``v``."""
+    if math.isfinite(v):
+        return f"{v!r}D"  # the D suffix: DOUBLE, not DECIMAL; repr round-trips
+    return f"CAST('{'NaN' if v != v else 'Infinity' if v > 0 else '-Infinity'}' AS DOUBLE)"
+
+
+def _all(*terms: str) -> str:
+    return " AND ".join(f"({t})" for t in terms)
+
+
+def _margin(box: Box) -> float:
+    # keeps the envelope tests strictly looser than the exact kernel
+    # predicate (which tolerates ~1e-9 relative) — a pre-filter must stay a
+    # NECESSARY condition, never reject a row the kernel would accept
+    return 1e-6 * max(abs(float(v)) for v in (*box, 1.0))
+
+
+def _envelope_meets(box: Box) -> str:
+    xmin, ymin, xmax, ymax = (float(v) for v in box)
+    m = _margin(box)
+    return _all(
+        f"__xmin <= {_d(xmax + m)}",
+        f"__xmax >= {_d(xmin - m)}",
+        f"__ymin <= {_d(ymax + m)}",
+        f"__ymax >= {_d(ymin - m)}",
+    )
+
+
+# Little-endian 2D WKB layouts with ONE vertex array: a point, a linestring
+# of >= 2 vertices, a single-ring polygon whose ring has >= 2 vertices. A
+# NaN coordinate drops its array from the persisted envelope
+# (geom.envelope folds NaN away), so for these layouts a finite,
+# non-inverted envelope means every vertex is finite — and then the
+# envelope alone decides ST_Intersects exactly.
+_ONE_ARRAY_WKB = (
+    "(length(geometry) = 21 AND substring(geometry, 1, 5) = X'0101000000')"
+    " OR (length(geometry) >= 41 AND substring(geometry, 1, 5) = X'0102000000')"
+    " OR (length(geometry) >= 45"
+    " AND substring(geometry, 1, 9) = X'010300000001000000')"
+)
+
+
+def envelope_decides(box: Box) -> tuple[Column, Column]:
+    """``(inside, clear)``: JVM Columns, never NULL, that settle
+    ``ST_Intersects(bbox, geom)`` from the persisted envelope alone.
+
+    ``inside`` — the envelope lies in the closed box, so every vertex does
+    and the exact kernel says *intersects*; ``clear`` — the envelope misses
+    the box by more than the pre-filter margin, so the kernel says
+    *disjoint*. Both are FALSE unless the row has a one-array WKB layout
+    (see ``_ONE_ARRAY_WKB``) with a finite, non-inverted envelope; every
+    other row (multi-geometries, holed polygons, NaN or infinite
+    coordinates, NULL) is left to :func:`bbox_predicate_batch`."""
+    xmin, ymin, xmax, ymax = (float(v) for v in box)
+    inf = _d(float("inf"))
+    valid = _all(
+        _ONE_ARRAY_WKB,
+        "__xmin <= __xmax",
+        "__ymin <= __ymax",
+        # `c < inf` is FALSE for NaN (Spark orders NaN above +inf)
+        *(f"{c} > -{inf} AND {c} < {inf}" for c in ("__xmin", "__ymin", "__xmax", "__ymax")),
+    )
+    inside = _all(
+        f"__xmin >= {_d(xmin)}",
+        f"__xmax <= {_d(xmax)}",
+        f"__ymin >= {_d(ymin)}",
+        f"__ymax <= {_d(ymax)}",
+    )
+    return (
+        F.expr(f"coalesce({valid} AND {inside}, false)"),
+        F.expr(f"coalesce({valid} AND NOT ({_envelope_meets(box)}), false)"),
+    )

@@ -8,8 +8,9 @@ Z-order/btree clustered at write, so intervals are tight).
 
 The analysis is deliberately conservative: it extracts only *top-level
 conjunctive* constraints of the form ``col op literal`` (eq/gt/gte/lt/lte/
-in) from the raw query string; anything it cannot understand (or-groups,
-like, negation, is) contributes no constraint, meaning "maybe matches".
+in) from the raw query string, including the plain members of a top-level
+``and=(...)`` group; anything it cannot understand (or-groups, like,
+negation, is) contributes no constraint, meaning "maybe matches".
 A file is skipped ONLY when some understood constraint provably excludes
 its entire [min, max] range — never the other way around.
 """
@@ -26,29 +27,39 @@ _INTERVAL_OPS = {"eq", "gt", "gte", "ge", "lt", "lte", "le", "in"}
 
 
 def conjunctive_constraints(query: str | None) -> list[tuple[str, str, object]]:
-    """[(column, op, literal)] for top-level ANDed simple comparisons."""
+    """[(column, op, literal)] for top-level ANDed simple comparisons:
+    ``col=op.literal`` pairs and the plain ``col.op.literal`` members of a
+    top-level ``and=(...)`` group (its nested ``or(...)``/``and(...)``
+    groups and negated members contribute nothing)."""
     if not query:
         return []
     out = []
     for key, value in _split_pairs(query):
-        if key.lower() in _RESERVED:
-            continue
-        bits = value.split(".")
-        if bits[0].lower() == "not":
-            continue  # negations: no safe interval constraint
-        op = bits[0].lower()
-        if op not in _INTERVAL_OPS:
-            continue
-        raw = ".".join(bits[1:])
-        if op == "in":
-            raw = raw.strip()
-            if raw.startswith("(") and raw.endswith(")"):
-                out.append(
-                    (key, "in", [_parse_literal(v) for v in _split_csv(raw[1:-1])])
-                )
-            continue
-        out.append((key, op, _parse_literal(raw)))
+        if key.lower() == "and" and value.startswith("(") and value.endswith(")"):
+            for member in _split_csv(value[1:-1]):
+                col, _, cond = member.partition(".")
+                if "(" not in col:
+                    _add_constraint(out, col, cond)
+        elif key.lower() not in _RESERVED:
+            _add_constraint(out, key, value)
     return out
+
+
+def _add_constraint(out: list, col: str, cond: str) -> None:
+    """Append ``(col, op, literal)`` for an ``op.literal`` condition with
+    an interval operator; anything else (negation, like, is, ...) adds
+    nothing."""
+    bits = cond.split(".")
+    op = bits[0].lower()
+    if op not in _INTERVAL_OPS:
+        return  # includes "not": negations have no safe interval
+    raw = ".".join(bits[1:])
+    if op == "in":
+        raw = raw.strip()
+        if raw.startswith("(") and raw.endswith(")"):
+            out.append((col, "in", [_parse_literal(v) for v in _split_csv(raw[1:-1])]))
+        return
+    out.append((col, op, _parse_literal(raw)))
 
 
 def fts_term_groups(

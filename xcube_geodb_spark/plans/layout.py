@@ -25,20 +25,22 @@ def zorder_key(
 
     Quantizes each coordinate to ``bits`` levels inside ``bounds`` and
     interleaves them with shift/or — no UDF, fully codegen'd, usable in
-    ``repartitionByRange``/``sortWithinPartitions``."""
+    ``repartitionByRange``/``sortWithinPartitions``. A coordinate with no
+    ``long`` quantization (NaN, +-inf) quantizes to 0 instead of failing
+    the ANSI cast."""
     xmin, ymin, xmax, ymax = bounds
     qx = F.least(
         F.lit((1 << bits) - 1),
         F.greatest(
             F.lit(0),
-            ((x - xmin) / (xmax - xmin) * (1 << bits)).cast("long"),
+            ((x - xmin) / (xmax - xmin) * (1 << bits)).try_cast("long"),
         ),
     )
     qy = F.least(
         F.lit((1 << bits) - 1),
         F.greatest(
             F.lit(0),
-            ((y - ymin) / (ymax - ymin) * (1 << bits)).cast("long"),
+            ((y - ymin) / (ymax - ymin) * (1 << bits)).try_cast("long"),
         ),
     )
     key = F.lit(0).cast("long")
@@ -73,11 +75,11 @@ def zorder_key_sql(
     # matching F.lit(float)'s type so the arithmetic is bit-identical
     qx = (
         f"least({top}, greatest(0, "
-        f"cast((({x}) - {xmin!r}D) / {(xmax - xmin)!r}D * {1 << bits} as bigint)))"
+        f"try_cast((({x}) - {xmin!r}D) / {(xmax - xmin)!r}D * {1 << bits} as bigint)))"
     )
     qy = (
         f"least({top}, greatest(0, "
-        f"cast((({y}) - {ymin!r}D) / {(ymax - ymin)!r}D * {1 << bits} as bigint)))"
+        f"try_cast((({y}) - {ymin!r}D) / {(ymax - ymin)!r}D * {1 << bits} as bigint)))"
     )
     key = "cast(0 as bigint)"
     for b in range(bits - 1, -1, -1):
