@@ -262,6 +262,17 @@ class TestDML:
         other = client.get_collection(land_use, query="raba_id=eq.1410")
         assert other["modified_at"].isna().all()
 
+    def test_update_of_the_filtered_column_sets_every_value(self, client, land_use):
+        # every SET value and the modified_at stamp test the filter
+        # against the row as it was, not as an earlier SET left it
+        client.update_collection(
+            land_use, {"raba_id": 1600.0, "raba_pid": 1.0}, "raba_id=eq.1300"
+        )
+        df = client.get_collection(land_use).set_index("id")
+        assert (df.loc[2, "raba_id"], df.loc[2, "raba_pid"]) == (1600.0, 1.0)
+        assert pd.notna(df.loc[2, "modified_at"])
+        assert df.drop(index=2)["modified_at"].isna().all()
+
     def test_insert_appends_ids(self, client, land_use):
         client.insert_into_collection(
             land_use,

@@ -1,11 +1,12 @@
 """r12 optimization pins: the vectorized single-ring-polygon envelope
 fast path must be bit-identical to the per-row parse_wkb slow path, and
-the small-rewrite heuristic must only fire when manifest row stats prove
-the bound."""
+the small-commit decision must only fire when the batch's decoded size is
+proved within the bound."""
 
 from __future__ import annotations
 
 import math
+from types import SimpleNamespace
 
 import pandas as pd
 import pytest
@@ -75,79 +76,122 @@ def test_envelope_udf_fastpath_mixed_lengths_order():
 
 
 class _StubMeta:
-    def __init__(self, stats, max_file_rows=100):
-        self._stats = stats
-        self.d = {"max_file_rows": max_file_rows}
-
-    def file_stats(self):
-        return self._stats
+    def __init__(self):
+        self.d = {}
 
 
-def test_small_rewrite_bounds():
-    from xcube_geodb_spark.operators.dml import _small_rewrite
+def _stub_spark(max_result_size=1 << 30, broken=False):
+    """Mimics spark.sparkContext._jsc.sc().conf().getSizeAsBytes()."""
 
-    m = _StubMeta(
+    def get_size_as_bytes(key, default):
+        if broken:
+            raise RuntimeError("no conf")
+        assert key == "spark.driver.maxResultSize"
+        return max_result_size
+
+    conf = SimpleNamespace(getSizeAsBytes=get_size_as_bytes)
+    sc = SimpleNamespace(conf=lambda: conf)
+    return SimpleNamespace(
+        sparkContext=SimpleNamespace(_jsc=SimpleNamespace(sc=lambda: sc))
+    )
+
+
+def test_fits_driver_write_bounds_bytes():
+    from xcube_geodb_spark.operators.dml import fits_driver_write
+
+    m, spark = _StubMeta(), _stub_spark()
+    assert fits_driver_write(spark, m, 0)  # an empty batch fits
+    assert fits_driver_write(spark, m, 256 << 20)  # bound inclusive
+    assert not fits_driver_write(spark, m, (256 << 20) + 1)
+    # a quarter of spark.driver.maxResultSize caps the option ...
+    assert not fits_driver_write(_stub_spark(400 << 20), m, (100 << 20) + 1)
+    # ... unless the result size is unlimited (0)
+    assert fits_driver_write(_stub_spark(0), m, 256 << 20)
+    assert not fits_driver_write(_stub_spark(broken=True), m, 0)  # unprovable
+    m.d["small_append_bytes"] = 10
+    assert not fits_driver_write(spark, m, 11)
+
+
+def test_small_rewrite_bounds(tmp_path):
+    """A rewrite fits the driver when the decoded size of its touched
+    files does, read from their files (no manifest stat needed)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from xcube_geodb_spark.operators.dml import rewrite_fits_driver
+    from xcube_geodb_spark.operators.stats import file_arrow_bytes
+
+    for name, n in (("a", 40), ("b", 50), ("c", 80)):
+        pq.write_table(
+            pa.table({"id": pa.array(range(n), pa.int64())}),
+            tmp_path / f"{name}.parquet",
+        )
+    size = {f: file_arrow_bytes(str(tmp_path / f"{f}.parquet")) for f in "abc"}
+    assert size["a"] < size["b"] < size["c"]
+    m = _StubMeta()
+    catalog = SimpleNamespace(
+        spark=_stub_spark(), _coll_dir=lambda coll, db: str(tmp_path)
+    )
+
+    def fits(*files):
+        return rewrite_fits_driver(
+            catalog, m, "t", "public", [f"{f}.parquet" for f in files]
+        )
+
+    m.d["small_append_bytes"] = size["a"] + size["b"]
+    assert fits("a", "b")  # bound inclusive
+    assert not fits("a", "c")
+    assert not fits("a", "b", "c")
+    assert fits()  # nothing touched
+    catalog.spark = _stub_spark(4 * size["a"])  # maxResultSize / 4
+    assert fits("a") and not fits("b")
+
+
+def test_single_task_append_bounds(spark):
+    """The counted append measures its batch's decoded size in the id
+    count job; the measure bounds what ``toArrow`` collects and decides
+    the single-task driver write."""
+    from xcube_geodb_spark.operators.dml import _arrow_row_bytes, fits_driver_write
+    from xcube_geodb_spark.operators.ids import assign_sequential_ids_measured
+
+    df = spark.createDataFrame(
+        [
+            (i, f"name {i % 3}" * (i % 5), bytes(i % 7), [float(i)] * (i % 4),
+             ["x" * (i % 6)] if i % 2 else None, i % 2 == 0)
+            for i in range(200)
+        ],
+        "v long, s string, b binary, a array<double>, t array<string>, f boolean",
+    )
+    out, n, nbytes, cached = assign_sequential_ids_measured(
+        df, _arrow_row_bytes(df.schema) + 17
+    )
+    try:
+        assert n == 200
+        assert nbytes >= out.toArrow().nbytes
+        m = _StubMeta()
+        assert fits_driver_write(spark, m, nbytes)
+        m.d["small_append_bytes"] = nbytes - 1
+        assert not fits_driver_write(spark, m, nbytes)
+    finally:
+        cached.unpersist()
+
+
+def test_pandas_batch_size_bound_counts_array_elements(spark):
+    """pandas memory counts a list cell without its elements; the pandas
+    insert's size bound must still cover what ``toArrow`` collects."""
+    import numpy as np
+
+    from xcube_geodb_spark.operators.dml import _pandas_arrow_bytes
+
+    schema = "v long, s string, t array<string>, e array<double>"
+    pdf = pd.DataFrame(
         {
-            "a": {"::rows": [40, 40]},
-            "b": {"::rows": [50, 50]},
-            "c": {"::rows": [80, 80]},
-            "d": {},  # no row stats
+            "v": range(50),
+            "s": ["x" * (i % 4) for i in range(50)],
+            "t": [["y" * 500] * (i % 3) if i % 5 else None for i in range(50)],
+            "e": [np.full(64, float(i)) for i in range(50)],
         }
     )
-    assert _small_rewrite(m, ["a", "b"])  # 90 <= 100
-    assert not _small_rewrite(m, ["a", "c"])  # 120 > 100
-    assert not _small_rewrite(m, ["a", "d"])  # unprovable -> distributed
-    assert not _small_rewrite(m, ["a", "missing"])  # unknown file
-    assert _small_rewrite(m, [])  # nothing touched
-
-
-class _StubRDDInfo:
-    def __init__(self, mem, disk):
-        self._mem, self._disk = mem, disk
-
-    def memSize(self):
-        return self._mem
-
-    def diskSize(self):
-        return self._disk
-
-
-class _StubSpark:
-    """Mimics spark.sparkContext._jsc.sc().getRDDStorageInfo()."""
-
-    def __init__(self, infos, raise_=False):
-        self._infos, self._raise = infos, raise_
-        outer = self
-
-        class _SC:
-            class _JSC:
-                def sc(self_inner):
-                    class _S:
-                        def getRDDStorageInfo(self__):
-                            if outer._raise:
-                                raise RuntimeError("no storage info")
-                            return outer._infos
-
-                    return _S()
-
-            _jsc = _JSC()
-
-        self.sparkContext = _SC()
-
-
-def test_single_task_append_bounds():
-    from xcube_geodb_spark.operators.dml import _single_task_append
-
-    m = _StubMeta({})
-    small = _StubSpark([_StubRDDInfo(1 << 20, 0)])
-    big = _StubSpark([_StubRDDInfo(200 << 20, 100 << 20)])
-    broken = _StubSpark([], raise_=True)
-
-    assert _single_task_append(small, m, 500)
-    assert not _single_task_append(small, m, 0)  # empty batch
-    assert not _single_task_append(small, m, 200_000)  # too many rows
-    assert not _single_task_append(big, m, 500)  # cache bound exceeded
-    assert not _single_task_append(broken, m, 500)  # unprovable -> distributed
-    # knobs from collection options win over defaults
-    m.d["small_append_rows"] = 100
-    assert not _single_task_append(small, m, 500)
+    df = spark.createDataFrame(pdf, schema)
+    assert pdf.memory_usage(deep=True, index=False).sum() < df.toArrow().nbytes
+    assert _pandas_arrow_bytes(pdf, df.schema) >= df.toArrow().nbytes

@@ -41,6 +41,37 @@ def test_spread_partition_cap_env(monkeypatch, spark, small_df):
     assert spread_small(small_df).rdd.getNumPartitions() == 2 * par
 
 
+@pytest.mark.parametrize(
+    "name", ["SPARK_GRAFT_SPREAD_MAX_PARTS", "SPARK_GRAFT_SPREAD_TASK_BYTES"]
+)
+def test_spread_malformed_env_falls_back_to_default(
+    monkeypatch, spark, small_df, name
+):
+    from xcube_geodb_spark.functions.spread import spread_small
+
+    want = spread_small(small_df).rdd.getNumPartitions()
+    for bad in ("lots", "2.5", ""):
+        monkeypatch.setenv(name, bad)
+        assert spread_small(small_df).rdd.getNumPartitions() == want
+
+
+def test_spread_malformed_threshold_env_falls_back(monkeypatch, small_df):
+    from xcube_geodb_spark.functions.spread import spread_small
+
+    monkeypatch.setenv("SPARK_GRAFT_SPREAD_SMALL_BYTES", "256MB")
+    assert spread_small(small_df) is not small_df  # default 256 MB bound
+
+
+def test_spread_nonpositive_cap_clamps_to_one_partition(monkeypatch, small_df):
+    from xcube_geodb_spark.functions.spread import spread_small
+
+    for cap in ("0", "-4"):
+        monkeypatch.setenv("SPARK_GRAFT_SPREAD_MAX_PARTS", cap)
+        assert spread_small(small_df).rdd.getNumPartitions() == 1
+    monkeypatch.delenv("SPARK_GRAFT_SPREAD_MAX_PARTS")
+    assert spread_small(small_df, partitions=0).rdd.getNumPartitions() == 1
+
+
 def test_spread_skips_big_estimate(small_df):
     from xcube_geodb_spark.functions.spread import spread_small
 

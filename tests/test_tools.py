@@ -1,5 +1,5 @@
-"""Measurement tools under tools/: the scaled-dataset cache and the plan
-capture's round directory."""
+"""Measurement tools under tools/: the scaled-dataset cache, the plan
+capture's round directory and the composed-op phase timers."""
 
 import importlib.util
 import os
@@ -69,3 +69,18 @@ class TestCapturePlansRound:
         monkeypatch.delenv("SPARK_GRAFT_PLANS_ROUND", raising=False)
         assert capture_plans.main() == 2
         assert "SPARK_GRAFT_PLANS_ROUND" in capsys.readouterr().err
+
+
+class TestProfileComposedTimers:
+    def test_times_the_driver_write(self, tmp_path, monkeypatch):
+        import pyarrow as pa
+
+        import xcube_geodb_spark.catalog as cat_mod
+
+        prof = _load("profile_composed")
+        prof.install_timers(monkeypatch.setattr)
+        names = cat_mod.write_local_parquet(pa.table({"v": [1, 2]}), str(tmp_path), 10)
+        assert len(names) == 1
+        assert prof.CALLS["  driver_write.parquet"] == 1
+        assert prof.PHASES["  driver_write.parquet"] > 0
+        assert "  spark_write.parquet(job)" not in prof.CALLS

@@ -4,9 +4,11 @@
 ann_ivfpq_build, ann_index_topk, warehouse_ingest,
 dml_delete_update_roundtrip).
 
-Monkeypatches timers around the phases of the insert/commit path and runs
-each composed op the way bench.py does, printing a per-phase breakdown so
-the optimization targets the measured cost, not a guess (guide §1).
+Monkeypatches timers around the phases of the insert/commit path (the
+file write both as the driver-side ``write_local_parquet`` and as Spark's
+``DataFrameWriter.parquet``) and runs each composed op the way bench.py
+does, printing a per-phase breakdown so the optimization targets the
+measured cost, not a guess (guide §1).
 """
 
 from __future__ import annotations
@@ -24,7 +26,7 @@ PHASES: dict[str, float] = defaultdict(float)
 CALLS: dict[str, int] = defaultdict(int)
 
 
-def timed(label, obj, name):
+def timed(label, obj, name, patch=setattr):
     fn = getattr(obj, name)
 
     @functools.wraps(fn)
@@ -36,8 +38,40 @@ def timed(label, obj, name):
             PHASES[label] += time.perf_counter() - t0
             CALLS[label] += 1
 
-    setattr(obj, name, wrap)
+    patch(obj, name, wrap)
     return fn
+
+
+def install_timers(patch=setattr) -> None:
+    """Wrap the phases of the insert/commit path with timers (outermost
+    first so nesting is visible). ``patch`` sets each wrapper in place."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    import xcube_geodb_spark.catalog as cat_mod
+    import xcube_geodb_spark.operators.dml as dml_mod
+    import xcube_geodb_spark.operators.stats as stats_mod
+
+    for label, obj, name in (
+        ("commit_version(total)", cat_mod.GeoDBCatalog, "commit_version"),
+        ("  apply_clustering(plan)", cat_mod.GeoDBCatalog, "_apply_clustering"),
+        # the commit's file write: on the driver for small batches (their
+        # collect job runs just before, inside commit_version), a Spark
+        # write job for the others
+        ("  driver_write.parquet", cat_mod, "write_local_parquet"),
+        ("  spark_write.parquet(job)", DataFrameWriter, "parquet"),
+        ("  file_column_stats(footer)", stats_mod, "file_column_stats"),
+        ("  atomic_json_write", cat_mod, "_atomic_write_json"),
+        ("prepare_values_df", dml_mod, "prepare_values_df"),
+        # dml calls these by the names it imported
+        ("assign_ids(count job+plan)", dml_mod, "assign_sequential_ids_counted"),
+        ("assign_ids+size(count job+plan)", dml_mod, "assign_sequential_ids_measured"),
+        ("small_commit_probe", dml_mod, "fits_driver_write"),
+        ("with_envelopes(plan)", dml_mod, "_with_envelopes"),
+        ("create_collection", cat_mod.GeoDBCatalog, "create_collection"),
+        ("meta(parse)", cat_mod.GeoDBCatalog, "meta"),
+        ("noop_save(job)", DataFrameWriter, "save"),
+    ):
+        timed(label, obj, name, patch)
 
 
 def main() -> None:
@@ -48,27 +82,8 @@ def main() -> None:
     spark.range(1000).selectExpr("sum(id)").collect()
 
     import xcube_geodb_spark.catalog as cat_mod
-    import xcube_geodb_spark.operators.dml as dml_mod
-    import xcube_geodb_spark.operators.ids as ids_mod
-    import xcube_geodb_spark.operators.stats as stats_mod
 
-    # phase timers (outermost first so nesting is visible)
-    timed("commit_version(total)", cat_mod.GeoDBCatalog, "commit_version")
-    timed("  apply_clustering(plan)", cat_mod.GeoDBCatalog, "_apply_clustering")
-    timed("  file_column_stats(footer)", stats_mod, "file_column_stats")
-    timed("  atomic_json_write", cat_mod, "_atomic_write_json")
-    timed("prepare_values_df", dml_mod, "prepare_values_df")
-    timed("assign_ids(count job+plan)", ids_mod, "assign_sequential_ids_counted")
-    timed("single_task_probe", dml_mod, "_single_task_append")
-    timed("with_envelopes(plan)", dml_mod, "_with_envelopes")
-    timed("create_collection", cat_mod.GeoDBCatalog, "create_collection")
-    timed("meta(parse)", cat_mod.GeoDBCatalog, "meta")
-
-    # the Spark write inside commit_version: patch DataFrameWriter.parquet
-    from pyspark.sql.readwriter import DataFrameWriter
-
-    timed("  spark_write.parquet(job)", DataFrameWriter, "parquet")
-    timed("noop_save(job)", DataFrameWriter, "save")
+    install_timers()
 
     import shutil
     import tempfile

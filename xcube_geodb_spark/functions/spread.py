@@ -53,6 +53,15 @@ _DEFAULT_TASK_BYTES = 64 * 1024
 _DEFAULT_MAX_PARTS = 2048
 
 
+def _env_int(name: str, default: int) -> int:
+    """Integer env knob ``name``; the documented ``default`` when it is
+    unset or not an integer."""
+    try:
+        return int(os.environ.get(name, default))
+    except ValueError:
+        return default
+
+
 def spread_small(
     df: DataFrame,
     threshold: int | None = None,
@@ -60,7 +69,9 @@ def spread_small(
 ) -> DataFrame:
     """Round-robin repartition ``df`` iff its optimizer-estimated size is
     provably small; returns ``df`` unchanged otherwise (including on any
-    estimation failure — the safe default is the plan Spark chose)."""
+    estimation failure — the safe default is the plan Spark chose). A
+    malformed ``SPARK_GRAFT_SPREAD_*`` value falls back to its default,
+    and the partition count is at least 1."""
     try:
         if df.isStreaming:
             return df
@@ -75,11 +86,7 @@ def spread_small(
     except Exception:
         return df
     if threshold is None:
-        threshold = int(
-            os.environ.get(
-                "SPARK_GRAFT_SPREAD_SMALL_BYTES", _DEFAULT_THRESHOLD
-            )
-        )
+        threshold = _env_int("SPARK_GRAFT_SPREAD_SMALL_BYTES", _DEFAULT_THRESHOLD)
     if size <= 0 or size > threshold:
         return df
     if partitions is None:
@@ -87,19 +94,12 @@ def spread_small(
             par = df.sparkSession.sparkContext.defaultParallelism
         except Exception:
             return df
-        task_bytes = int(
-            os.environ.get(
-                "SPARK_GRAFT_SPREAD_TASK_BYTES", _DEFAULT_TASK_BYTES
-            )
-        )
-        hard_cap = int(
-            os.environ.get(
-                "SPARK_GRAFT_SPREAD_MAX_PARTS", _DEFAULT_MAX_PARTS
-            )
-        )
+        task_bytes = _env_int("SPARK_GRAFT_SPREAD_TASK_BYTES", _DEFAULT_TASK_BYTES)
+        hard_cap = _env_int("SPARK_GRAFT_SPREAD_MAX_PARTS", _DEFAULT_MAX_PARTS)
         partitions = min(
             2 * par,
             max(par, math.ceil(size / max(task_bytes, 1))),
             hard_cap,
         )
-    return df.repartition(int(partitions))
+    # a knob <= 0 must not reach repartition(0), which raises
+    return df.repartition(max(1, int(partitions)))

@@ -336,7 +336,7 @@ def envelope_prefilter(mode: str, box: Box) -> Column | None:
 
 # The envelope tests are spelled as SQL text and parsed once: building them
 # through the Column API costs ~10 py4j round trips per comparison, about
-# 30 ms of driver latency per count (the layout.zorder_key_sql lesson).
+# 30 ms of driver latency per count (the layout.zorder_interleave_sql lesson).
 
 
 def _d(v: float) -> str:

@@ -23,8 +23,9 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from xcube_geodb_spark.catalog import (
@@ -44,7 +45,11 @@ from xcube_geodb_spark.geometry.geom import (
     to_wkb,
 )
 from xcube_geodb_spark.geometry.udfs import with_envelope_columns
-from xcube_geodb_spark.operators.ids import assign_sequential_ids_counted
+from xcube_geodb_spark.operators.ids import (
+    assign_sequential_ids_counted,
+    assign_sequential_ids_measured,
+)
+from xcube_geodb_spark.operators.stats import file_arrow_bytes
 
 
 # ---------------------------------------------------------------------------
@@ -52,23 +57,55 @@ from xcube_geodb_spark.operators.ids import assign_sequential_ids_counted
 # ---------------------------------------------------------------------------
 
 
-def _normalize_geometry_value(v) -> bytes | None:
+def _parse_geometry_value(v) -> Geometry | None:
     if v is None:
         return None
     if isinstance(v, Geometry):
-        return to_wkb(v, srid=0)
+        return v
     if isinstance(v, (bytes, bytearray, memoryview)):
-        return to_wkb(parse_wkb(bytes(v)), srid=0)
+        return parse_wkb(bytes(v))
     if isinstance(v, str):
         s = v.strip()
         if s[:2].upper() in ("01", "00") and all(
             c in "0123456789abcdefABCDEF" for c in s
         ):
-            return to_wkb(parse_wkb_hex(s), srid=0)
-        return to_wkb(parse_wkt(s), srid=0)
+            return parse_wkb_hex(s)
+        return parse_wkt(s)
     if isinstance(v, dict):
-        return to_wkb(from_geojson(v), srid=0)
+        return from_geojson(v)
     raise GeoDBError(f"Cannot interpret geometry value of type {type(v).__name__}")
+
+
+def _normalize_geometry_value(v) -> bytes | None:
+    g = _parse_geometry_value(v)
+    return None if g is None else to_wkb(g, srid=0)
+
+
+def _check_crs(meta: CollectionMeta, crs: int | None) -> None:
+    if crs is not None and check_crs(crs) != meta.srid:
+        # geodb.py:1466-1469: CRS mismatch is an error
+        raise GeoDBError(
+            f"crs {crs} is not compatible with collection's crs {meta.srid}"
+        )
+
+
+def _pandas_to_spark(catalog: GeoDBCatalog, pdf: pd.DataFrame, schema) -> DataFrame:
+    """The columns of ``pdf`` that ``schema`` declares, as a Spark frame of
+    the declared types (``pdf``'s geometry must already be WKB)."""
+    import pyspark.sql.types as T
+
+    fields = [
+        T.StructField(f.name, f.dataType, True)
+        for f in schema.fields
+        if f.name in pdf.columns
+    ]
+    datetimes = {
+        f.name: pd.to_datetime(pdf[f.name])
+        for f in fields
+        if isinstance(f.dataType, (T.DateType, T.TimestampType))
+    }
+    pdf = pdf.assign(**datetimes)[[f.name for f in fields]]
+    return catalog.spark.createDataFrame(pdf, T.StructType(fields))
 
 
 def prepare_values_df(
@@ -80,29 +117,14 @@ def prepare_values_df(
 ) -> DataFrame:
     """Normalize user input (pandas or Spark DataFrame) to the collection
     schema: lower-cased columns, WKB geometry, typed property columns."""
-    if crs is not None and check_crs(crs) != meta.srid:
-        # geodb.py:1466-1469: CRS mismatch is an error
-        raise GeoDBError(
-            f"crs {crs} is not compatible with collection's crs {meta.srid}"
-        )
+    _check_crs(meta, crs)
     schema = meta.spark_schema(include_system=include_system)
     if isinstance(values, pd.DataFrame):
         pdf = values.copy()
         pdf.columns = [c.lower() for c in pdf.columns]
         if "geometry" in pdf.columns and len(pdf):
             pdf["geometry"] = pdf["geometry"].map(_normalize_geometry_value)
-        keep = [f.name for f in schema.fields if f.name in pdf.columns]
-        import pyspark.sql.types as T
-
-        fields = [
-            T.StructField(f.name, f.dataType, True)
-            for f in schema.fields
-            if f.name in keep
-        ]
-        for f in fields:
-            if isinstance(f.dataType, (T.DateType, T.TimestampType)):
-                pdf[f.name] = pd.to_datetime(pdf[f.name])
-        df = catalog.spark.createDataFrame(pdf[keep], T.StructType(fields))
+        df = _pandas_to_spark(catalog, pdf, schema)
     elif isinstance(values, DataFrame):
         df = values
         for c in df.columns:
@@ -113,11 +135,12 @@ def prepare_values_df(
             f"Cannot insert values of type {type(values).__name__}; "
             "expected a pandas or Spark DataFrame"
         )
-    # conform property columns to declared types
-    for f in schema.fields:
-        if f.name in df.columns and f.name != "geometry":
-            df = df.withColumn(f.name, F.col(f.name).cast(f.dataType))
-    return df
+    # conform property columns to declared types, in ONE projection (a
+    # withColumn per column re-analyzes the plan each time)
+    types = {f.name: f.dataType for f in schema.fields if f.name != "geometry"}
+    return df.select(
+        *[F.col(c).cast(types[c]).alias(c) if c in types else F.col(c) for c in df.columns]
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -147,28 +170,92 @@ def _enforce_constraints(m, df: DataFrame, what: str) -> None:
         raise GeoDBError(f"CHECK constraint violation on {what}: {detail}")
 
 
-def _single_task_append(spark, m, n_rows: int) -> bool:
-    """True when a counted append batch should write through ONE sorted
-    task (catalog._cluster_by ``local_batch``) instead of the
-    range-partitioned path: the rows fit one output file many times over
-    AND the materialized batch (its id-assignment cache) is provably
-    small. The byte check sums EVERY cached RDD — an upper bound on our
-    batch, conservative in the safe direction (a fat concurrent cache
-    just keeps the distributed path). Both knobs live in collection
-    options (``small_append_rows`` / ``small_append_bytes``) so a
-    deployment with huge rows can lower them; the defaults describe a
-    batch any single write task handles comfortably at any cluster
-    size."""
-    if not n_rows or n_rows > int(m.d.get("small_append_rows", 100_000)):
-        return False
+def fits_driver_write(spark, m, nbytes: int) -> bool:
+    """THE "small commit" decision: True when a batch whose decoded
+    (Arrow) size is at most ``nbytes`` is collected to the driver and
+    written there (catalog.commit_version ``local_batch``) instead of
+    taking the range-clustered distributed write. The bound is the
+    ``small_append_bytes`` collection option, capped at a quarter of the
+    session's ``spark.driver.maxResultSize`` so the collect stays well
+    inside it. Rows need no bound: the driver write splits files at
+    ``max_file_rows`` as Spark's does. Callers pass an upper bound of the
+    batch's decoded size, never an encoded or compressed one."""
+    limit = int(m.d.get("small_append_bytes", 256 * 1024 * 1024))
     try:
-        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-        cached_bytes = sum(i.memSize() + i.diskSize() for i in infos)
+        max_result = spark.sparkContext._jsc.sc().conf().getSizeAsBytes(
+            "spark.driver.maxResultSize", "1g"
+        )
     except Exception:
         return False
-    return cached_bytes <= int(
-        m.d.get("small_append_bytes", 256 * 1024 * 1024)
+    if max_result > 0:  # 0 means unlimited
+        limit = min(limit, max_result // 4)
+    return nbytes <= limit
+
+
+def _arrow_row_bytes(schema) -> Column:
+    """Per-row upper bound of the decoded (Arrow) size of a row of
+    ``schema``: each value's width or byte length, plus an 8-byte offset
+    and a validity byte (arrays sum their elements the same way). Other
+    types count at 16 bytes, the widest fixed-width Arrow value."""
+    import pyspark.sql.types as T
+
+    widths = {
+        T.BooleanType: 1,
+        T.ByteType: 1,
+        T.ShortType: 2,
+        T.IntegerType: 4,
+        T.FloatType: 4,
+        T.DateType: 4,
+        T.LongType: 8,
+        T.DoubleType: 8,
+        T.TimestampType: 8,
+        T.TimestampNTZType: 8,
+    }
+
+    def size(c: Column, t) -> Column:
+        if isinstance(t, (T.StringType, T.BinaryType)):
+            return F.coalesce(F.octet_length(c), F.lit(0)) + 9
+        if isinstance(t, T.ArrayType):
+            elems = F.aggregate(
+                c, F.lit(0).cast("long"), lambda acc, x: acc + size(x, t.elementType)
+            )
+            return F.coalesce(elems, F.lit(0)) + 9
+        return F.lit(widths.get(type(t), 16) + 9)
+
+    return sum(
+        (size(F.col(f.name), f.dataType) for f in schema.fields),
+        F.lit(0).cast("long"),
     )
+
+
+def _cell_bytes(v) -> int:
+    """Decoded (Arrow) size bound of one array-column cell, with an 8-byte
+    offset and a validity byte per value."""
+    if isinstance(v, str):
+        return len(v.encode()) + 9
+    if isinstance(v, (bytes, bytearray)):
+        return len(v) + 9
+    if isinstance(v, np.ndarray) and v.dtype != object:
+        return v.nbytes + 9 * v.size + 9
+    if isinstance(v, (list, tuple, np.ndarray)):
+        return sum(map(_cell_bytes, v)) + 9
+    return 17
+
+
+def _pandas_arrow_bytes(pdf: pd.DataFrame, schema) -> int:
+    """Upper bound of the decoded (Arrow) size of the pandas batch ``pdf``
+    written as ``schema``. pandas memory holds every scalar at least at its
+    Arrow size (a str or bytes object carries 33+ bytes of header), but
+    counts a list cell without its elements, so array columns are counted
+    cell by cell; 9 bytes per cell cover offsets, validity and the columns
+    only Spark fills in."""
+    import pyspark.sql.types as T
+
+    nbytes = int(pdf.memory_usage(deep=True, index=False).sum())
+    for f in schema.fields:
+        if isinstance(f.dataType, T.ArrayType) and f.name in pdf.columns:
+            nbytes += sum(map(_cell_bytes, pdf[f.name]))
+    return nbytes + 9 * len(pdf) * len(schema.fields)
 
 
 def _with_envelopes(df: DataFrame, had_geom: bool) -> DataFrame:
@@ -251,24 +338,34 @@ def insert_into_collection(
         # (id-assignment jobs + the envelope UDF)
         from xcube_geodb_spark.geometry.geom import envelope as _envelope
 
+        _check_crs(m, crs)
         pdf = values.copy()
         pdf.columns = [c.lower() for c in pdf.columns]
         pdf = pdf.drop(columns=["id"], errors="ignore")  # geodb.py:1499-1500
         pdf["id"] = range(m.max_id + 1, m.max_id + 1 + len(pdf))
         if "geometry" in pdf.columns:
-            pdf["geometry"] = pdf["geometry"].map(_normalize_geometry_value)
-            envs = pdf["geometry"].map(
-                lambda b: _envelope(parse_wkb(b)) if b is not None else (None,) * 4
+            # each value parsed once: its WKB and its envelope come from
+            # the same Geometry
+            geoms = pdf["geometry"].map(_parse_geometry_value)
+            pdf["geometry"] = geoms.map(
+                lambda g: None if g is None else to_wkb(g, srid=0)
+            )
+            envs = geoms.map(
+                lambda g: (None,) * 4 if g is None else _envelope(g)
             )
             for i, c in enumerate(("__xmin", "__ymin", "__xmax", "__ymax")):
                 pdf[c] = envs.map(lambda e, i=i: e[i])
-        df = prepare_values_df(catalog, m, pdf, crs, include_system=True)
         schema = m.spark_schema(include_system=True)
-        for f in schema.fields:
-            if f.name not in df.columns:
-                df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-        to_write = df.withColumn("created_at", F.current_timestamp()).select(
-            *[f.name for f in schema.fields]
+        df = _pandas_to_spark(catalog, pdf, schema)
+        to_write = df.select(
+            *[
+                F.current_timestamp().alias(f.name)
+                if f.name == "created_at"
+                else F.col(f.name)
+                if f.name in df.columns
+                else F.lit(None).cast(f.dataType).alias(f.name)
+                for f in schema.fields
+            ]
         )
         _enforce_constraints(m, to_write, "insert")
         catalog.commit_version(
@@ -279,9 +376,9 @@ def insert_into_collection(
             max_id=m.max_id + len(pdf),
             expected_version=base_version,
             merge_meta=merge_meta,
-            # the batch is driver-side pandas: clustering sorts in place
-            # instead of paying a range-sampling job (catalog._cluster_by)
-            local_batch=True,
+            local_batch=fits_driver_write(
+                catalog.spark, m, _pandas_arrow_bytes(pdf, schema)
+            ),
         )
         return len(pdf)
 
@@ -423,8 +520,9 @@ def insert_into_collection(
     pre = _with_envelopes(
         _conform(new_without_id.withColumn("created_at", now)), had_geom
     )
-    to_write, n_no_id, id_cache = assign_sequential_ids_counted(
-        pre, start=start
+    # the id count job also sums the batch's decoded size (+ the id)
+    to_write, n_no_id, n_bytes, id_cache = assign_sequential_ids_measured(
+        pre, _arrow_row_bytes(pre.schema) + 17, start=start
     )
     to_write = to_write.select(
         *[f.name for f in schema.fields], *SYSTEM_COLUMNS
@@ -439,12 +537,11 @@ def insert_into_collection(
             max_id=m.max_id + n_no_id,
             expected_version=base_version,
             merge_meta=merge_meta,
-            # the id pass counted the batch: a provably-small append (a
-            # streaming micro-batch, an ANN/bench fixture load) writes
-            # through one sorted task — identical file content (AQE
-            # coalesces such a range shuffle to one partition anyway),
-            # one fewer full pass (no range-sampling job)
-            local_batch=_single_task_append(catalog.spark, m, n_no_id),
+            # the id pass measured the batch: a provably-small append (a
+            # streaming micro-batch, an ANN/bench fixture load) is
+            # collected once and written on the driver — no range-sampling
+            # job, no Spark write job
+            local_batch=fits_driver_write(catalog.spark, m, n_bytes),
         )
     finally:
         if id_cache is not None:
@@ -457,24 +554,21 @@ def insert_into_collection(
 # ---------------------------------------------------------------------------
 
 
-def _small_rewrite(m, touched: list[str]) -> bool:
-    """True when the manifest's per-file row stats PROVE the rewrite is at
-    most one output file's worth of rows (``max_file_rows``). Such a
-    commit goes through the single-sorted-partition write path
-    (catalog._cluster_by ``local_batch``): same rows, same within-file
-    ordering, but no range-sampling job — halving the Spark jobs of the
-    common surgical delete/update. Scale-adaptive by construction: a
-    rewrite spanning more rows (or any file without row stats) keeps the
-    distributed range-clustered write."""
-    limit = int(m.d.get("max_file_rows", 2_000_000))
-    stats = m.file_stats()
-    total = 0
-    for f in touched:
-        r = (stats.get(f) or {}).get("::rows")
-        if not r:
-            return False
-        total += int(r[0])
-        if total > limit:
+def rewrite_fits_driver(
+    catalog: GeoDBCatalog, m, collection: str, database: str, files: list[str]
+) -> bool:
+    """:func:`fits_driver_write` for a rewrite of ``files`` (delete, update,
+    compaction): the rewritten batch holds at most their rows, so the sum
+    of their decoded sizes bounds it (:func:`stats.file_arrow_bytes`,
+    read from the footers of just these files, and from the dictionary
+    indices of any dictionary-encoded text). Such a commit is one collect
+    job and a driver-side write instead of a range-sampling job plus a
+    Spark write; a larger one keeps the distributed range-clustered write."""
+    cdir = catalog._coll_dir(collection, database)
+    nbytes = 0
+    for f in files:
+        nbytes += file_arrow_bytes(os.path.join(cdir, f))
+        if not fits_driver_write(catalog.spark, m, nbytes):
             return False
     return True
 
@@ -555,7 +649,7 @@ def delete_from_collection(
         keep_files=untouched,
         expected_version=m.version,
         rebase_on_disjoint=True,
-        local_batch=_small_rewrite(m, touched),
+        local_batch=rewrite_fits_driver(catalog, m, collection, database, touched),
     )
 
 
@@ -597,7 +691,7 @@ def delete_ids(
         keep_files=untouched,
         expected_version=m.version,
         rebase_on_disjoint=True,
-        local_batch=_small_rewrite(m, touched),
+        local_batch=rewrite_fits_driver(catalog, m, collection, database, touched),
     )
 
 
@@ -628,20 +722,24 @@ def update_collection(
         return  # no file can contain matching rows: update is a no-op
     df = catalog.load_files(collection, database, touched)
     pred = F.coalesce(pq.predicate, F.lit(False))
-    for k, v in values.items():
-        if k == "geometry":
-            v = _normalize_geometry_value(v)
-        df = df.withColumn(
-            k, F.when(pred, F.lit(v).cast(schema[k])).otherwise(F.col(k))
-        )
-    df = df.withColumn(
-        "modified_at", F.when(pred, F.current_timestamp()).otherwise(F.col("modified_at"))
+    sets = {
+        k: F.when(
+            pred,
+            F.lit(_normalize_geometry_value(v) if k == "geometry" else v).cast(
+                schema[k]
+            ),
+        ).otherwise(F.col(k))
+        for k, v in values.items()
+    }
+    sets["modified_at"] = F.when(pred, F.current_timestamp()).otherwise(
+        F.col("modified_at")
     )
+    df = df.withColumns(sets)
     if "geometry" in values:
         df = with_envelope_columns(df.drop(*SYSTEM_COLUMNS))
     _enforce_constraints(m, df, "update")
     catalog.commit_version(
         collection, database, df, keep_files=untouched,
         expected_version=m.version, rebase_on_disjoint=True,
-        local_batch=_small_rewrite(m, touched),
+        local_batch=rewrite_fits_driver(catalog, m, collection, database, touched),
     )

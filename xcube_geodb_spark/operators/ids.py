@@ -32,7 +32,7 @@ whole ingest pipeline).
 from __future__ import annotations
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _MONO_POS_MASK = (1 << 33) - 1  # low 33 bits: position within partition
@@ -60,19 +60,38 @@ def assign_sequential_ids_counted(
     callers that need both (DML insert) avoid a second full pass. The
     cache handle (None for an empty batch) must be unpersisted by the
     caller once the ids have been consumed by a terminal action."""
+    out, total, _sum, cached = assign_sequential_ids_measured(
+        df, F.lit(0), start, id_col
+    )
+    return out, total, cached
+
+
+def assign_sequential_ids_measured(
+    df: DataFrame, measure: Column, start: int = 1, id_col: str = "id"
+) -> tuple[DataFrame, int, int, DataFrame | None]:
+    """:func:`assign_sequential_ids_counted` whose count job also sums the
+    per-row ``measure`` over the batch (DML insert: the batch's decoded
+    size). Returns ``(df_with_ids, total_rows, measure_sum,
+    cache_handle)``."""
     cached = df.persist(StorageLevel.MEMORY_AND_DISK)
     pid = F.shiftright(F.monotonically_increasing_id(), 33).alias("__pid")
-    counts = cached.groupBy(pid).count().collect()
+    counts = (
+        cached.groupBy(pid)
+        .agg(F.count(F.lit(1)).alias("count"), F.sum(measure).alias("measure"))
+        .collect()
+    )
     offsets = []
     acc = int(start)
     for row in sorted(counts, key=lambda r: r["__pid"]):
         offsets.append((int(row["__pid"]), acc))
         acc += row["count"]
     total = acc - int(start)
+    measured = sum(int(r["measure"] or 0) for r in counts)
     if not offsets:
         cached.unpersist()
         return (
             df.withColumn(id_col, F.lit(None).cast("long")),
+            0,
             0,
             None,
         )
@@ -93,7 +112,7 @@ def assign_sequential_ids_counted(
             )
             .drop("__mono")
         )
-        return out, total, cached
+        return out, total, measured, cached
     import pandas as pd
 
     spark = df.sparkSession
@@ -117,7 +136,7 @@ def assign_sequential_ids_counted(
         )
         .drop("__pid", "__offset", "__mono")
     )
-    return out, total, cached
+    return out, total, measured, cached
 
 
 # above this many partitions the literal offsets map would bloat the plan;

@@ -34,6 +34,8 @@ import time
 
 import pyarrow.parquet as pq
 
+from xcube_geodb_spark.operators.dml import rewrite_fits_driver
+
 __all__ = ["optimize_collection", "vacuum_collection"]
 
 
@@ -96,10 +98,9 @@ def optimize_collection(
         keep_files=keep,
         expected_version=m.version,
         rebase_on_disjoint=True,
-        # compactions merging at most one output file's worth of rows take
-        # the single-sorted-partition write path: one task reads the small
-        # files and writes the merged file, no range-sampling job
-        local_batch=stats["rows_moved"] <= target,
+        # a compaction whose small files fit the driver is one collect job
+        # and a driver-side write, no range-sampling job
+        local_batch=rewrite_fits_driver(catalog, m, collection, database, small),
     )
     stats["files_after"] = len(catalog.meta(collection, database).files)
     return stats

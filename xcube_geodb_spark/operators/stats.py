@@ -184,6 +184,60 @@ def footer_row_count(paths: list[str]) -> int:
     return sum(pq.ParquetFile(p).metadata.num_rows for p in paths)
 
 
+# decoded Arrow width of a value of each fixed-width parquet physical type
+# (INT96 timestamps decode to 8 bytes, FIXED_LEN_BYTE_ARRAY adds its length)
+_ARROW_WIDTH = {
+    "BOOLEAN": 1,
+    "INT32": 4,
+    "INT64": 8,
+    "INT96": 8,
+    "FLOAT": 4,
+    "DOUBLE": 8,
+    "FIXED_LEN_BYTE_ARRAY": 16,
+}
+
+
+def file_arrow_bytes(path: str) -> int:
+    """An upper bound of the bytes the rows of the parquet file at ``path``
+    take decoded to Arrow, which is what a driver collect of them holds.
+
+    Encoded sizes can understate that many times over (a dictionary
+    column of a few distinct values costs bits per row on disk), so every
+    value counts at its decoded width plus an 8-byte offset and a validity
+    byte. Fixed-width and PLAIN byte-array values are bounded from the
+    footer alone (a PLAIN byte array is its bytes plus a 4-byte length).
+    Only dictionary-encoded byte-array columns are read: as dictionary
+    indices, whose value lengths are summed without decoding a string."""
+    import pyarrow.compute as pc
+
+    md = pq.ParquetFile(path).metadata
+    total, dict_paths = 0, set()
+    for rg in range(md.num_row_groups):
+        group = md.row_group(rg)
+        for i in range(group.num_columns):
+            col, leaf = group.column(i), md.schema.column(i)
+            total += 9 * col.num_values
+            if col.physical_type != "BYTE_ARRAY":
+                total += col.num_values * (
+                    _ARROW_WIDTH[col.physical_type] + (leaf.length or 0)
+                )
+            elif col.has_dictionary_page:
+                dict_paths.add(leaf.path)
+            else:
+                total += col.total_uncompressed_size
+    if dict_paths:
+        pf = pq.ParquetFile(path, read_dictionary=sorted(dict_paths))
+        tops = sorted({p.split(".")[0] for p in dict_paths})
+        for rg in range(md.num_row_groups):
+            for column in pf.read_row_group(rg, columns=tops).columns:
+                for chunk in column.chunks:
+                    while not hasattr(chunk, "indices"):  # list<dictionary>
+                        chunk = chunk.flatten()
+                    lengths = pc.binary_length(chunk.dictionary)
+                    total += pc.sum(pc.take(lengths, chunk.indices)).as_py() or 0
+    return total
+
+
 def file_column_stats(path: str, max_str: int = 64) -> dict[str, list]:
     """JSON-safe per-column [min, max] for ONE file, for embedding into the
     collection manifest at commit time (Delta-style data skipping: pruning

@@ -53,34 +53,31 @@ def zorder_key(
     return key
 
 
-def zorder_key_sql(
-    x: str,
-    y: str,
-    bounds: tuple[float, float, float, float] = (-180.0, -90.0, 180.0, 90.0),
-    bits: int = 16,
-) -> str:
-    """The same interleaved-bit Z-order key as :func:`zorder_key`, spelled
-    as ONE SQL expression string over SQL sub-expressions ``x``/``y``.
-
-    Building the key through the Column API costs ~100 py4j round trips
-    per call (~0.2-0.35 s of pure driver latency per commit, measured in
-    r13); parsing one string costs one. The expression tree is the same
-    operator-for-operator, so key values are bit-identical (pinned by
-    ``tests/test_r13_commit_fixed_costs.py``); codegen's common-
-    subexpression elimination folds the repeated ``qx``/``qy`` subtrees
-    exactly as it does for the Column spelling."""
-    xmin, ymin, xmax, ymax = bounds
-    top = (1 << bits) - 1
+def zorder_quantize_sql(v: str, lo: float, hi: float, bits: int = 16) -> str:
+    """:func:`zorder_key`'s quantization of one coordinate, spelled as a
+    SQL expression over the SQL sub-expression ``v``: ``bits`` levels
+    inside ``[lo, hi]``, clamped, and 0 for a coordinate with no ``long``
+    quantization (NaN, +-inf)."""
     # the D suffix forces DOUBLE literals (bare 360.0 parses as DECIMAL),
     # matching F.lit(float)'s type so the arithmetic is bit-identical
-    qx = (
-        f"least({top}, greatest(0, "
-        f"try_cast((({x}) - {xmin!r}D) / {(xmax - xmin)!r}D * {1 << bits} as bigint)))"
+    return (
+        f"least({(1 << bits) - 1}, greatest(0, "
+        f"try_cast((({v}) - {lo!r}D) / {(hi - lo)!r}D * {1 << bits} as bigint)))"
     )
-    qy = (
-        f"least({top}, greatest(0, "
-        f"try_cast((({y}) - {ymin!r}D) / {(ymax - ymin)!r}D * {1 << bits} as bigint)))"
-    )
+
+
+def zorder_interleave_sql(qx: str, qy: str, bits: int = 16) -> str:
+    """:func:`zorder_key`'s bit interleave, spelled as ONE SQL expression
+    over two already-quantized columns ``qx``/``qy`` (see
+    :func:`zorder_quantize_sql`).
+
+    The commit path projects the quantized coordinates once as columns and
+    interleaves over the column references: inlining the quantization
+    repeats it 16 times per coordinate, and the sort evaluates the key per
+    row (7k rows, sort + collect p50 190 -> 145 ms). Building the key
+    through the Column API costs ~100 py4j round trips (~0.2-0.35 s per
+    commit, r13); parsing one string costs one. Keys are bit-identical to
+    :func:`zorder_key` (pinned by ``tests/test_r13_commit_fixed_costs.py``)."""
     key = "cast(0 as bigint)"
     for b in range(bits - 1, -1, -1):
         key = (
