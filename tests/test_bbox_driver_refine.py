@@ -1,14 +1,16 @@
 """Client bbox, count and knn reads refine on the driver.
 
-The client collects the envelope pre-filter's candidates in one Spark job
-and applies the exact kernel, the sort and (for knn) the top-k on the
-driver. These tests pin that the result is the frame the DataFrame
-operators produce, row for row and dtype for dtype, on a multi-file
-collection with awkward geometries, and that the reads run the number of
-Spark jobs they should with no Python worker in any plan."""
+The client collects the envelope pre-filter's candidates (read on the
+driver when the pruned files are small, else in one Spark job) and applies
+the exact kernel, the sort and (for knn) the top-k on the driver. These
+tests pin that the result is the frame the DataFrame operators produce,
+row for row and dtype for dtype, on a multi-file collection with awkward
+geometries, and that the reads run the number of Spark jobs they should
+on each lane, with no Python worker in any plan."""
 
 import math
 import struct
+from unittest import mock
 
 import numpy as np
 import pandas as pd
@@ -17,7 +19,7 @@ import pytest
 from xcube_geodb_spark.client import GeoDBSparkClient
 from xcube_geodb_spark.geometry.geom import parse_wkt, to_wkb
 from xcube_geodb_spark.geometry.predicates import COMPARISON_MODES
-from xcube_geodb_spark.operators import spatial
+from xcube_geodb_spark.operators import dml, spatial
 
 DB = "refiner"
 COLL = "mix"
@@ -317,6 +319,17 @@ def _jobs_and_plans(spark, fn):
     return len(jobs), plans
 
 
+def _jobs(spark, fn) -> int:
+    """Number of Spark jobs ``fn`` runs, from the status tracker."""
+    return _jobs_and_plans(spark, fn)[0]
+
+
+def spark_lane():
+    """Within the block, pruned reads take the Spark lane: the driver bound
+    (``dml.DRIVER_BYTES``) is 0."""
+    return mock.patch.object(dml, "DRIVER_BYTES", 0)
+
+
 def _no_python(plans):
     assert plans
     for p in plans:
@@ -331,8 +344,8 @@ class TestJobsAndPlans:
         c = GeoDBSparkClient(spark, warehouse=str(tmp_path_factory.mktemp("wh")), user=DB)
         c.create_collection("town", {"v": "int"})
         rng = np.random.default_rng(3)
-        for _ in range(4):
-            xy = rng.uniform(0, 1, (800, 2))
+        for i in range(4):  # one quarter of the unit square per file
+            xy = rng.uniform(0, 0.5, (800, 2)) + [i % 2 / 2, i // 2 / 2]
             c.insert_into_collection(
                 "town",
                 pd.DataFrame(
@@ -343,38 +356,92 @@ class TestJobsAndPlans:
         c.get_collection_by_bbox("town", (0.4, 0.4, 0.41, 0.41), "intersects")
         return c
 
+    # The job counts of the Spark lane: a bound below the kept files'
+    # decoded size sends the read there.
+
     def test_street_bbox_read_is_one_job(self, spark, town):
         out = {}
-        n, plans = _jobs_and_plans(
-            spark,
-            lambda: out.setdefault(
-                "df", town.get_collection_by_bbox("town", (0.5, 0.5, 0.52, 0.51), "intersects")
-            ),
-        )
+        with spark_lane():
+            n, plans = _jobs_and_plans(
+                spark,
+                lambda: out.setdefault(
+                    "df", town.get_collection_by_bbox("town", (0.3, 0.3, 0.34, 0.33), "intersects")
+                ),
+            )
         assert len(out["df"]) > 0
+        assert out["df"].attrs["read"]["lane"] == "spark"
         assert n == 1
         _no_python(plans)
 
     def test_count_intersects_is_one_job(self, spark, town):
         out = {}
-        n, plans = _jobs_and_plans(
-            spark,
-            lambda: out.setdefault(
-                "n", town.count_collection_by_bbox("town", (0.2, 0.2, 0.6, 0.5), "intersects")
-            ),
-        )
+        decision = {}
+        with spark_lane():
+            n, plans = _jobs_and_plans(
+                spark,
+                lambda: out.setdefault(
+                    "n",
+                    spatial.count_collection_by_bbox(
+                        town.catalog, "town", (0.2, 0.2, 0.6, 0.5), "intersects",
+                        database=DB, decision=decision,
+                    ),
+                ),
+            )
         assert out["n"] > 0
+        assert decision["lane"] == "spark"
         assert n == 1
         _no_python(plans)
 
     def test_knn_is_two_jobs(self, spark, town):
         out = {}
-        n, plans = _jobs_and_plans(
-            spark, lambda: out.setdefault("df", town.get_collection_knn("town", (0.5, 0.5), k=10))
-        )
+        with spark_lane():
+            n, plans = _jobs_and_plans(
+                spark, lambda: out.setdefault("df", town.get_collection_knn("town", (0.25, 0.25), k=10))
+            )
         assert len(out["df"]) == 10
+        assert out["df"].attrs["read"]["lane"] == "spark"
         assert n == 2
         _no_python(plans)
+
+    # The same reads on the driver lane run no Spark job at all.
+
+    def test_street_bbox_read_on_the_driver_runs_no_job(self, spark, town):
+        out = {}
+        n = _jobs(
+            spark,
+            lambda: out.setdefault(
+                "df", town.get_collection_by_bbox("town", (0.3, 0.3, 0.34, 0.33), "intersects")
+            ),
+        )
+        read = out["df"].attrs["read"]
+        assert len(out["df"]) > 0 and read["lane"] == "driver"
+        assert read["files_kept"] < read["files_total"]
+        assert n == 0
+
+    def test_count_intersects_on_the_driver_runs_no_job(self, spark, town):
+        out, decision = {}, {}
+        n = _jobs(
+            spark,
+            lambda: out.setdefault(
+                "n",
+                spatial.count_collection_by_bbox(
+                    town.catalog, "town", (0.2, 0.2, 0.6, 0.5), "intersects",
+                    database=DB, decision=decision,
+                ),
+            ),
+        )
+        assert out["n"] > 0 and decision["lane"] == "driver"
+        assert n == 0
+
+    def test_knn_on_the_driver_runs_no_job(self, spark, town):
+        out = {}
+        n = _jobs(
+            spark, lambda: out.setdefault("df", town.get_collection_knn("town", (0.25, 0.25), k=10))
+        )
+        read = out["df"].attrs["read"]
+        assert len(out["df"]) == 10 and read["lane"] == "driver"
+        assert read["files_kept"] < read["files_total"]
+        assert n == 0
 
     def test_operator_path_still_runs_the_udf(self, spark, town):
         # the DataFrame operator keeps its in-Spark refine

@@ -35,7 +35,8 @@ _VALUES = {
         dt.date(9999, 12, 31),
         None,
     ],
-    T.TimestampType(): [  # pandas' datetime64[ns] spans 1677-2262
+    T.TimestampType(): [
+        dt.datetime(1500, 1, 1),  # outside pandas' datetime64[ns] (1677-2262)
         dt.datetime(1900, 1, 1, 0, 0, 0),
         dt.datetime(2200, 1, 1, 12, 34, 56, 789012),  # after 2100
         dt.datetime(1970, 1, 1),
@@ -240,15 +241,13 @@ def test_driver_write_empty_batch_writes_one_schema_file(spark, tmp_path):
     assert list(got.columns) == ["id", "created_at", "modified_at", "geometry", "v", "t"]
 
 
-def test_batch_over_byte_bound_takes_distributed_write(spark, tmp_path):
+def test_batch_over_byte_bound_takes_distributed_write(spark, tmp_path, monkeypatch):
     c = _client(spark, tmp_path)
     cat = c.catalog
     c.create_collection("b", {"v": "int"}, database="dw")
     batch = pd.DataFrame({"geometry": ["POINT (1 1)"] * 20, "v": range(20)})
     c.insert_into_collection("b", batch, database="dw")
-    m = cat.meta("b", "dw")
-    m.d["small_append_bytes"] = 100  # a 20-row frame is more than that
-    _atomic_write_json(m.path, m.d)
+    monkeypatch.setattr(dml, "DRIVER_BYTES", 100)  # a 20-row frame is more than that
     c.insert_into_collection("b", batch, database="dw")
     cdir = cat._coll_dir("b", "dw")
     files = cat.meta("b", "dw").files
@@ -356,7 +355,7 @@ def test_dictionary_choice_follows_parquet_mr(with_nan, tmp_path):
     assert md.metadata is None or b"ARROW:schema" not in md.metadata
 
 
-def test_rewrite_of_dictionary_heavy_file_is_sized_decoded(spark, tmp_path):
+def test_rewrite_of_dictionary_heavy_file_is_sized_decoded(spark, tmp_path, monkeypatch):
     """A low-cardinality text column costs bits per row on disk and its
     full length per row in Arrow: the rewrite decision sizes the decoded
     batch, so a bound between the two sends the rewrite to the distributed
@@ -399,9 +398,7 @@ def test_rewrite_of_dictionary_heavy_file_is_sized_decoded(spark, tmp_path):
     [f] = cat.meta("d", "dw").files
     assert not _written_by_spark(os.path.join(cdir, f))
     # a bound above the encoded but below the decoded size: distributed
-    m = cat.meta("d", "dw")
-    m.d["small_append_bytes"] = 10 * encoded
-    _atomic_write_json(m.path, m.d)
+    monkeypatch.setattr(dml, "DRIVER_BYTES", 10 * encoded)
     c.delete_from_collection("d", "id=eq.2", database="dw")
     assert all(
         _written_by_spark(os.path.join(cdir, f)) for f in cat.meta("d", "dw").files

@@ -109,6 +109,17 @@ class TestBboxPredicates:
         small = (-1.0, 9.5, 1.0, 10.5)
         assert not bbox_predicate("contains", parse_wkt(POLY_A), small)
 
+    def test_empty_polygon_meets_nothing(self):
+        # WKB polygon with no ring: as an empty multi-geometry, it is
+        # disjoint from every box and satisfies no other mode
+        import struct
+
+        for wkb in (struct.pack("<BII", 1, 3, 0), struct.pack("<BII", 1, 6, 1) + struct.pack("<BII", 1, 3, 0)):
+            g = parse_wkb(wkb)
+            for mode in ("within", "contains", "intersects", "touches", "overlaps", "crosses", "equals"):
+                assert not bbox_predicate(mode, g, (0.0, 0.0, 1.0, 1.0)), mode
+            assert bbox_predicate("disjoint", g, (0.0, 0.0, 1.0, 1.0))
+
     def test_contains_point_on_boundary_is_false(self):
         box = (0.0, 0.0, 10.0, 10.0)
         assert not bbox_predicate("contains", parse_wkt("POINT (0 5)"), box)

@@ -75,11 +75,6 @@ def test_envelope_udf_fastpath_mixed_lengths_order():
         assert tuple(got.iloc[i]) == envelope(parse_wkb(b)), wkts[i]
 
 
-class _StubMeta:
-    def __init__(self):
-        self.d = {}
-
-
 def _stub_spark(max_result_size=1 << 30, broken=False):
     """Mimics spark.sparkContext._jsc.sc().conf().getSizeAsBytes()."""
 
@@ -96,29 +91,31 @@ def _stub_spark(max_result_size=1 << 30, broken=False):
     )
 
 
-def test_fits_driver_write_bounds_bytes():
+def test_fits_driver_write_bounds_bytes(monkeypatch):
+    from xcube_geodb_spark.operators import dml
     from xcube_geodb_spark.operators.dml import fits_driver_write
 
-    m, spark = _StubMeta(), _stub_spark()
-    assert fits_driver_write(spark, m, 0)  # an empty batch fits
-    assert fits_driver_write(spark, m, 256 << 20)  # bound inclusive
-    assert not fits_driver_write(spark, m, (256 << 20) + 1)
-    # a quarter of spark.driver.maxResultSize caps the option ...
-    assert not fits_driver_write(_stub_spark(400 << 20), m, (100 << 20) + 1)
+    spark = _stub_spark()
+    assert fits_driver_write(spark, 0)  # an empty batch fits
+    assert fits_driver_write(spark, 256 << 20)  # bound inclusive
+    assert not fits_driver_write(spark, (256 << 20) + 1)
+    # a quarter of spark.driver.maxResultSize caps the bound ...
+    assert not fits_driver_write(_stub_spark(400 << 20), (100 << 20) + 1)
     # ... unless the result size is unlimited (0)
-    assert fits_driver_write(_stub_spark(0), m, 256 << 20)
-    assert not fits_driver_write(_stub_spark(broken=True), m, 0)  # unprovable
-    m.d["small_append_bytes"] = 10
-    assert not fits_driver_write(spark, m, 11)
+    assert fits_driver_write(_stub_spark(0), 256 << 20)
+    assert not fits_driver_write(_stub_spark(broken=True), 0)  # unprovable
+    monkeypatch.setattr(dml, "DRIVER_BYTES", 10)
+    assert not fits_driver_write(spark, 11)
 
 
-def test_small_rewrite_bounds(tmp_path):
+def test_small_rewrite_bounds(tmp_path, monkeypatch):
     """A rewrite fits the driver when the decoded size of its touched
     files does, read from their files (no manifest stat needed)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from xcube_geodb_spark.operators.dml import rewrite_fits_driver
+    from xcube_geodb_spark.operators import dml
+    from xcube_geodb_spark.operators.dml import files_fit_driver
     from xcube_geodb_spark.operators.stats import file_arrow_bytes
 
     for name, n in (("a", 40), ("b", 50), ("c", 80)):
@@ -128,17 +125,16 @@ def test_small_rewrite_bounds(tmp_path):
         )
     size = {f: file_arrow_bytes(str(tmp_path / f"{f}.parquet")) for f in "abc"}
     assert size["a"] < size["b"] < size["c"]
-    m = _StubMeta()
     catalog = SimpleNamespace(
         spark=_stub_spark(), _coll_dir=lambda coll, db: str(tmp_path)
     )
 
     def fits(*files):
-        return rewrite_fits_driver(
-            catalog, m, "t", "public", [f"{f}.parquet" for f in files]
+        return files_fit_driver(
+            catalog, "t", "public", [f"{f}.parquet" for f in files]
         )
 
-    m.d["small_append_bytes"] = size["a"] + size["b"]
+    monkeypatch.setattr(dml, "DRIVER_BYTES", size["a"] + size["b"])
     assert fits("a", "b")  # bound inclusive
     assert not fits("a", "c")
     assert not fits("a", "b", "c")
@@ -147,10 +143,11 @@ def test_small_rewrite_bounds(tmp_path):
     assert fits("a") and not fits("b")
 
 
-def test_single_task_append_bounds(spark):
+def test_single_task_append_bounds(spark, monkeypatch):
     """The counted append measures its batch's decoded size in the id
     count job; the measure bounds what ``toArrow`` collects and decides
     the single-task driver write."""
+    from xcube_geodb_spark.operators import dml
     from xcube_geodb_spark.operators.dml import _arrow_row_bytes, fits_driver_write
     from xcube_geodb_spark.operators.ids import assign_sequential_ids_measured
 
@@ -168,10 +165,9 @@ def test_single_task_append_bounds(spark):
     try:
         assert n == 200
         assert nbytes >= out.toArrow().nbytes
-        m = _StubMeta()
-        assert fits_driver_write(spark, m, nbytes)
-        m.d["small_append_bytes"] = nbytes - 1
-        assert not fits_driver_write(spark, m, nbytes)
+        assert fits_driver_write(spark, nbytes)
+        monkeypatch.setattr(dml, "DRIVER_BYTES", nbytes - 1)
+        assert not fits_driver_write(spark, nbytes)
     finally:
         cached.unpersist()
 

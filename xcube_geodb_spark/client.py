@@ -15,7 +15,9 @@ backend change. Differences (documented):
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import SparkSession
 
 from xcube_geodb_spark.admin import (
     AccessControl,
@@ -28,6 +30,88 @@ from xcube_geodb_spark.errors import GeoDBError
 from xcube_geodb_spark.geometry.geom import parse_wkb
 from xcube_geodb_spark.operators import dml, scan, spatial
 from xcube_geodb_spark.session import get_spark
+
+
+# the instants pandas' datetime64[ns] can hold, in microseconds
+_NS_MIN_US = -(-pd.Timestamp.min.value // 1000)
+_NS_MAX_US = pd.Timestamp.max.value // 1000
+
+
+def arrow_to_pandas(table: pa.Table, schema, spark: SparkSession) -> pd.DataFrame:
+    """The frame ``DataFrame.toPandas()`` (Arrow enabled) makes of ``table``,
+    the Arrow form of a frame with Spark ``schema``: the same
+    ``Table.to_pandas`` options, then pyspark's per-field converters in the
+    session time zone and struct handling mode
+    (``spark.sql.execution.pandas.structHandlingMode``). Both lanes of a
+    client read end here, so they agree on every dtype.
+
+    Two deviations:
+
+    - a timestamp column holding an instant outside pandas' datetime64[ns]
+      range (before 1677-09-21 or after 2262-04-11), which ``toPandas``
+      cannot convert at all, comes back as object cells of naive
+      ``datetime`` in the session time zone (None for NULL); every other
+      column keeps ``toPandas``' dtype;
+    - the rows are already an Arrow table, so there is no fallback to
+      ``toPandas``' row path (``spark.sql.execution.arrow.pyspark.fallback.
+      enabled``): a frame whose schema Arrow cannot hold fails in
+      ``toArrow()``. Collection schemas always convert; only a
+      ``get_collection_pg`` select can produce such a type."""
+    from pyspark.sql.pandas.types import _create_converter_to_pandas
+
+    columns = [f.name for f in schema.fields]
+    if not columns:
+        return table.to_pandas()
+    names = [f"col_{i}" for i in range(len(columns))]  # names may repeat
+    wide = set()
+    if table.num_rows == 0:  # toPandas collects no batch at all
+        pdf = pd.DataFrame(columns=names)
+    else:
+        table = table.rename_columns(names)
+        for i, field in enumerate(table.schema):
+            if pa.types.is_timestamp(field.type):
+                mm = pc.min_max(table.column(i).cast(pa.int64()))
+                lo, hi = mm["min"].as_py(), mm["max"].as_py()
+                if lo is not None and (lo < _NS_MIN_US or hi > _NS_MAX_US):
+                    wide.add(i)
+        pdf = table.drop_columns([names[i] for i in sorted(wide)]).to_pandas(
+            date_as_object=True, coerce_temporal_nanoseconds=True
+        )
+    timezone = spark.conf.get("spark.sql.session.timeZone")
+    struct_mode = spark.conf.get("spark.sql.execution.pandas.structHandlingMode", "legacy")
+    for i in sorted(wide):
+        pdf.insert(i, names[i], _datetime_cells(table.column(i), timezone))
+    pdf.columns = columns
+    return pd.concat(
+        [
+            pser
+            if i in wide
+            else _create_converter_to_pandas(
+                field.dataType,
+                field.nullable,
+                timezone=timezone,
+                struct_in_pandas="dict" if struct_mode == "legacy" else struct_mode,
+                error_on_duplicated_field_names=struct_mode == "legacy",
+            )(pser)
+            for i, ((_, pser), field) in enumerate(zip(pdf.items(), schema.fields))
+        ],
+        axis="columns",
+    )
+
+
+def _datetime_cells(column: pa.ChunkedArray, timezone: str) -> pd.Series:
+    """Timestamps as naive ``datetime`` cells in ``timezone``."""
+    from zoneinfo import ZoneInfo
+
+    zone = ZoneInfo(timezone)
+    return pd.Series(
+        [
+            v if v is None or v.tzinfo is None
+            else v.astimezone(zone).replace(tzinfo=None)
+            for v in column.to_pylist()
+        ],
+        dtype=object,
+    )
 
 
 class GeoDBSparkClient:
@@ -71,13 +155,24 @@ class GeoDBSparkClient:
         return database or self.database
 
     def _collect_geo(
-        self, df: DataFrame, srid: int | None = None, refine=None
+        self, df, srid: int | None = None, refine=None, raise_empty: bool = False
     ) -> pd.DataFrame:
-        """Spark -> pandas; decode WKB to Geometry objects (the reference
-        decodes hex-EWKB to shapely, geodb.py:2104-2149). ``refine`` maps
-        the collected rows to the result before decoding (the driver half
-        of a filter-and-refine read, operators/spatial.py)."""
-        pdf = df.toPandas()
+        """Collect a read to pandas; decode WKB to Geometry objects (the
+        reference decodes hex-EWKB to shapely, geodb.py:2104-2149).
+
+        ``df`` is a Spark DataFrame or the candidates of a pruned spatial
+        read (:class:`~xcube_geodb_spark.operators.spatial.Candidates`),
+        which may already hold its rows, read on the driver. Either way the
+        rows arrive as one Arrow table and take the same steps: converted
+        as ``toPandas`` converts them (:func:`arrow_to_pandas`), mapped by
+        ``refine`` (the driver half of a filter-and-refine read,
+        operators/spatial.py), then decoded. A spatial read's decision
+        (lane, files, decoded bytes) lands in ``attrs["read"]``."""
+        table = df.toArrow()
+        if raise_empty and table.num_rows == 0:
+            # parity with geodb.sql:1171-1175 ("Empty result")
+            raise GeoDBError("Empty result")
+        pdf = arrow_to_pandas(table, df.schema, self.spark)
         if refine is not None:
             pdf = refine(pdf)
         if "geometry" in pdf.columns:
@@ -86,6 +181,10 @@ class GeoDBSparkClient:
             )
             if srid is not None:
                 pdf.attrs["crs"] = f"EPSG:{srid}"
+        decision = getattr(df, "decision", None)
+        if decision is not None:
+            decision["decoded_bytes"] = table.nbytes
+            pdf.attrs["read"] = dict(decision)
         return pdf
 
     # -- databases ----------------------------------------------------------
@@ -475,10 +574,9 @@ class GeoDBSparkClient:
             limit=limit,
             offset=offset,
             database=db,
-            raise_empty=True,
         )
         self.events.log("read", f"Collection {db}_{collection} read")
-        return self._collect_geo(df, srid)
+        return self._collect_geo(df, srid, raise_empty=True)
 
     def get_collection_by_bbox(
         self,

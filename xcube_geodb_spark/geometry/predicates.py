@@ -295,10 +295,16 @@ def _leaf_box_within(leaf: Geometry, box: Box) -> bool:
     return True
 
 
+def _leaves(geom: Geometry):
+    """The leaves of ``geom`` that have a point: an EMPTY polygon (no ring)
+    meets nothing, as an empty multi-geometry has no leaf at all."""
+    return (leaf for leaf in geom.children() if leaf.kind != "Polygon" or leaf.parts)
+
+
 def _geom_within_box(geom: Geometry, box: Box) -> bool:
     """geom ⊆ closed box ⟺ envelope containment (box is axis-aligned)."""
     eps = _eps(box)
-    for leaf in geom.children():
+    for leaf in _leaves(geom):
         env = _envelope_leaf(leaf)
         if not (
             env[0] >= box[0] - eps
@@ -311,15 +317,15 @@ def _geom_within_box(geom: Geometry, box: Box) -> bool:
 
 
 def _intersects(geom: Geometry, box: Box) -> bool:
-    return any(_leaf_intersects(leaf, box) for leaf in geom.children())
+    return any(_leaf_intersects(leaf, box) for leaf in _leaves(geom))
 
 
 def _interiors_intersect(geom: Geometry, box: Box) -> bool:
-    return any(_leaf_interiors_intersect(leaf, box) for leaf in geom.children())
+    return any(_leaf_interiors_intersect(leaf, box) for leaf in _leaves(geom))
 
 
 def _box_within_geom(geom: Geometry, box: Box) -> bool:
-    return any(_leaf_box_within(leaf, box) for leaf in geom.children())
+    return any(_leaf_box_within(leaf, box) for leaf in _leaves(geom))
 
 
 # ---------------------------------------------------------------------------
@@ -372,7 +378,7 @@ def bbox_predicate(mode: str, geom: Geometry, box: Box) -> bool:
         tol = _REL_EPS * max(box_area, 1.0)
         clip_area = sum(
             _polygon_clip_area(leaf.parts, box)
-            for leaf in geom.children()
+            for leaf in _leaves(geom)
             if leaf.kind == "Polygon"
         )
         return clip_area >= box_area - tol

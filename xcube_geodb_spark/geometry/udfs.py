@@ -3,11 +3,13 @@ JVM-side envelope tests that keep rows away from them.
 
 The UDFs are the only places the engine leaves the JVM on the data path,
 and each is batch-vectorized (Arrow transfer, numpy inner loops). The
-envelope pre-filter (:func:`envelope_prefilter`) only narrows the rows a
-bbox predicate UDF sees; it never replaces the exact test. Client reads
-skip the UDF altogether: they collect the pre-filtered candidates and run
-the same exact function, :func:`bbox_predicate_batch`, on the driver
-(operators/spatial.py). Counts also skip the rows whose envelope alone
+envelope pre-filter (:func:`envelope_terms`, one :class:`Conjunction`
+spelt as Spark SQL, as manifest-stat constraints and as a ``pyarrow``
+expression) only narrows the rows a bbox predicate UDF sees; it never
+replaces the exact test. Client reads skip the UDF altogether: they collect
+the pre-filtered candidates (read by Spark or, for small pruned reads, by
+``pyarrow`` on the driver) and run the same exact function,
+:func:`bbox_predicate_batch`, on the driver (operators/spatial.py). Counts also skip the rows whose envelope alone
 decides ``intersects``/``disjoint`` (:func:`envelope_decides`).
 """
 
@@ -302,36 +304,112 @@ def bbox_predicate_column(mode: str, box: Box, geometry_col: str = "geometry") -
     return _pred(F.col(geometry_col))
 
 
-def envelope_prefilter(mode: str, box: Box) -> Column | None:
-    """Cheap JVM-side pre-filter on the persisted envelope columns — pushed
-    into the parquet scan. Returns a *necessary* condition for the exact
-    predicate (None when the mode admits no envelope shortcut, i.e.
-    ``disjoint``)."""
+class Conjunction:
+    """A conjunction of ``(column, op, literal)`` terms, ``op`` one of
+    ``< <= > >= =`` and ``literal`` a number: the one spec a pruned read
+    builds its filter from. It emits the three spellings of the same
+    filter, so they cannot drift apart:
+
+    - :meth:`sql`: Spark SQL text (an empty conjunction is ``None``);
+    - :meth:`constraints`: the ``(column, op, literal)`` triples
+      ``pruning.split_files_by_constraints`` tests file stats against;
+    - :meth:`arrow`: a ``pyarrow.compute`` expression for a driver read.
+
+    Spark orders NaN above every number and equal to NaN, where IEEE (and
+    pyarrow) compares NaN false to everything, so :meth:`arrow` spells
+    Spark's order out: ``x >= 1`` keeps a NaN ``x``. A NULL fails every
+    term in both engines. The expression is only ever a filter, so a term
+    that is FALSE where Spark's is NULL selects the same rows."""
+
+    _PRUNE_OPS = {"<": "lt", "<=": "lte", ">": "gt", ">=": "gte", "=": "eq"}
+
+    def __init__(self, terms=()):
+        self.terms = tuple(terms)
+
+    def __and__(self, other: "Conjunction") -> "Conjunction":
+        return Conjunction(self.terms + other.terms)
+
+    def __bool__(self) -> bool:
+        return bool(self.terms)
+
+    @property
+    def columns(self) -> list[str]:
+        return list(dict.fromkeys(c for c, _, _ in self.terms))
+
+    def sql(self) -> str | None:
+        if not self.terms:
+            return None
+        return _all(*(f"{c} {op} {_lit(v)}" for c, op, v in self.terms))
+
+    def constraints(self) -> list[tuple[str, str, object]]:
+        return [(c, self._PRUNE_OPS[op], v) for c, op, v in self.terms]
+
+    def arrow(self, floating=()):
+        """The filter as a ``pyarrow.compute`` expression; ``floating``
+        names the columns of a floating-point type (the ones that can hold
+        NaN)."""
+        import pyarrow.compute as pc
+
+        out = pc.scalar(True)
+        for c, op, v in self.terms:
+            out = out & _arrow_term(pc, pc.field(c), op, v, c in floating)
+        return out
+
+
+def _arrow_term(pc, f, op: str, v, floating: bool):
+    """``f op v`` under Spark's NaN order (NaN above +inf, NaN = NaN)."""
+    nan = pc.is_nan(f) if floating else pc.scalar(False)
+    if isinstance(v, float) and math.isnan(v):
+        return {
+            "<": f.is_valid() & ~nan,
+            "<=": f.is_valid(),
+            ">": pc.scalar(False),
+            ">=": nan,
+            "=": nan,
+        }[op]
+    plain = {
+        "<": f < v, "<=": f <= v, ">": f > v, ">=": f >= v, "=": f == v,
+    }[op]
+    return plain | nan if op in (">", ">=") and floating else plain
+
+
+def envelope_terms(mode: str, box: Box) -> Conjunction | None:
+    """The envelope pre-filter of ``mode`` as a :class:`Conjunction` on
+    the persisted ``__xmin..__ymax`` columns: a *necessary* condition for
+    the exact predicate (None when the mode admits no envelope shortcut,
+    i.e. ``disjoint``)."""
     xmin, ymin, xmax, ymax = (float(v) for v in box)
     m = _margin(box)
     if mode in ("intersects", "touches", "overlaps", "crosses"):
-        return F.expr(_envelope_meets(box))
+        return _meets_terms(box)
     if mode in ("contains", "equals"):
         # geom ⊆ box ⇒ envelope ⊆ box
-        return F.expr(
-            _all(
-                f"__xmin >= {_d(xmin - m)}",
-                f"__xmax <= {_d(xmax + m)}",
-                f"__ymin >= {_d(ymin - m)}",
-                f"__ymax <= {_d(ymax + m)}",
-            )
+        return Conjunction(
+            [
+                ("__xmin", ">=", xmin - m),
+                ("__xmax", "<=", xmax + m),
+                ("__ymin", ">=", ymin - m),
+                ("__ymax", "<=", ymax + m),
+            ]
         )
     if mode == "within":
         # box ⊆ geom ⇒ geom envelope ⊇ box
-        return F.expr(
-            _all(
-                f"__xmin <= {_d(xmin + m)}",
-                f"__xmax >= {_d(xmax - m)}",
-                f"__ymin <= {_d(ymin + m)}",
-                f"__ymax >= {_d(ymax - m)}",
-            )
+        return Conjunction(
+            [
+                ("__xmin", "<=", xmin + m),
+                ("__xmax", ">=", xmax - m),
+                ("__ymin", "<=", ymin + m),
+                ("__ymax", ">=", ymax - m),
+            ]
         )
     return None  # disjoint: complement — no cheap necessary condition
+
+
+def envelope_prefilter(mode: str, box: Box) -> Column | None:
+    """Cheap JVM-side pre-filter on the persisted envelope columns — pushed
+    into the parquet scan: :func:`envelope_terms` as a Column."""
+    terms = envelope_terms(mode, box)
+    return None if terms is None else F.expr(terms.sql())
 
 
 # The envelope tests are spelled as SQL text and parsed once: building them
@@ -346,6 +424,12 @@ def _d(v: float) -> str:
     return f"CAST('{'NaN' if v != v else 'Infinity' if v > 0 else '-Infinity'}' AS DOUBLE)"
 
 
+def _lit(v) -> str:
+    """A SQL literal of a term's number: integers as integers, floats as
+    DOUBLE."""
+    return str(v) if isinstance(v, int) else _d(v)
+
+
 def _all(*terms: str) -> str:
     return " AND ".join(f"({t})" for t in terms)
 
@@ -357,14 +441,16 @@ def _margin(box: Box) -> float:
     return 1e-6 * max(abs(float(v)) for v in (*box, 1.0))
 
 
-def _envelope_meets(box: Box) -> str:
+def _meets_terms(box: Box) -> Conjunction:
     xmin, ymin, xmax, ymax = (float(v) for v in box)
     m = _margin(box)
-    return _all(
-        f"__xmin <= {_d(xmax + m)}",
-        f"__xmax >= {_d(xmin - m)}",
-        f"__ymin <= {_d(ymax + m)}",
-        f"__ymax >= {_d(ymin - m)}",
+    return Conjunction(
+        [
+            ("__xmin", "<=", xmax + m),
+            ("__xmax", ">=", xmin - m),
+            ("__ymin", "<=", ymax + m),
+            ("__ymax", ">=", ymin - m),
+        ]
     )
 
 
@@ -374,11 +460,15 @@ def _envelope_meets(box: Box) -> str:
 # (geom.envelope folds NaN away), so for these layouts a finite,
 # non-inverted envelope means every vertex is finite — and then the
 # envelope alone decides ST_Intersects exactly.
-_ONE_ARRAY_WKB = (
-    "(length(geometry) = 21 AND substring(geometry, 1, 5) = X'0101000000')"
-    " OR (length(geometry) >= 41 AND substring(geometry, 1, 5) = X'0102000000')"
-    " OR (length(geometry) >= 45"
-    " AND substring(geometry, 1, 9) = X'010300000001000000')"
+_ENVELOPE = ("__xmin", "__ymin", "__xmax", "__ymax")
+_ONE_ARRAY_LAYOUTS = (  # (length test, length, byte prefix)
+    ("=", 21, bytes.fromhex("0101000000")),
+    (">=", 41, bytes.fromhex("0102000000")),
+    (">=", 45, bytes.fromhex("010300000001000000")),
+)
+_ONE_ARRAY_WKB = " OR ".join(
+    f"(length(geometry) {op} {n} AND substring(geometry, 1, {len(p)}) = X'{p.hex().upper()}')"
+    for op, n, p in _ONE_ARRAY_LAYOUTS
 )
 
 
@@ -393,22 +483,46 @@ def envelope_decides(box: Box) -> tuple[Column, Column]:
     (see ``_ONE_ARRAY_WKB``) with a finite, non-inverted envelope; every
     other row (multi-geometries, holed polygons, NaN or infinite
     coordinates, NULL) is left to :func:`bbox_predicate_batch`."""
-    xmin, ymin, xmax, ymax = (float(v) for v in box)
     inf = _d(float("inf"))
     valid = _all(
         _ONE_ARRAY_WKB,
         "__xmin <= __xmax",
         "__ymin <= __ymax",
         # `c < inf` is FALSE for NaN (Spark orders NaN above +inf)
-        *(f"{c} > -{inf} AND {c} < {inf}" for c in ("__xmin", "__ymin", "__xmax", "__ymax")),
-    )
-    inside = _all(
-        f"__xmin >= {_d(xmin)}",
-        f"__xmax <= {_d(xmax)}",
-        f"__ymin >= {_d(ymin)}",
-        f"__ymax <= {_d(ymax)}",
+        *(f"{c} > -{inf} AND {c} < {inf}" for c in _ENVELOPE),
     )
     return (
-        F.expr(f"coalesce({valid} AND {inside}, false)"),
-        F.expr(f"coalesce({valid} AND NOT ({_envelope_meets(box)}), false)"),
+        F.expr(f"coalesce({valid} AND {_inside_terms(box).sql()}, false)"),
+        F.expr(f"coalesce({valid} AND NOT ({_meets_terms(box).sql()}), false)"),
+    )
+
+
+def envelope_decides_arrow(box: Box):
+    """:func:`envelope_decides` as ``pyarrow.compute`` expressions over the
+    same columns, for a read on the driver; never NULL either. Both
+    require a finite envelope, where pyarrow and Spark compare alike."""
+    import pyarrow.compute as pc
+
+    g = pc.field("geometry")
+    size = pc.binary_length(g)
+    layout = pc.scalar(False)
+    for op, n, prefix in _ONE_ARRAY_LAYOUTS:
+        fits = size == n if op == "=" else size >= n
+        layout = layout | (fits & pc.starts_with(g, pattern=prefix))
+    xmin, ymin, xmax, ymax = env = [pc.field(c) for c in _ENVELOPE]
+    valid = layout & (xmin <= xmax) & (ymin <= ymax)
+    for c in env:
+        valid = valid & pc.is_finite(c)
+    false = pc.scalar(False)
+    return (
+        pc.coalesce(valid & _inside_terms(box).arrow(_ENVELOPE), false),
+        pc.coalesce(valid & ~_meets_terms(box).arrow(_ENVELOPE), false),
+    )
+
+
+def _inside_terms(box: Box) -> Conjunction:
+    """The envelope lies in the closed box."""
+    xmin, ymin, xmax, ymax = (float(v) for v in box)
+    return Conjunction(
+        [("__xmin", ">=", xmin), ("__xmax", "<=", xmax), ("__ymin", ">=", ymin), ("__ymax", "<=", ymax)]
     )

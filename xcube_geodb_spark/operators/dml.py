@@ -170,26 +170,39 @@ def _enforce_constraints(m, df: DataFrame, what: str) -> None:
         raise GeoDBError(f"CHECK constraint violation on {what}: {detail}")
 
 
-def fits_driver_write(spark, m, nbytes: int) -> bool:
+# The most decoded (Arrow) bytes the driver takes on in place of a Spark
+# job: the batch of a small commit, or the files a pruned client read keeps
+# (operators/spatial.py). A quarter of ``spark.driver.maxResultSize`` caps
+# it, so a collect stays well inside that.
+DRIVER_BYTES = 256 * 1024 * 1024
+
+
+def fits_driver_write(spark, nbytes: int) -> bool:
     """THE "small commit" decision: True when a batch whose decoded
     (Arrow) size is at most ``nbytes`` is collected to the driver and
     written there (catalog.commit_version ``local_batch``) instead of
-    taking the range-clustered distributed write. The bound is the
-    ``small_append_bytes`` collection option, capped at a quarter of the
-    session's ``spark.driver.maxResultSize`` so the collect stays well
-    inside it. Rows need no bound: the driver write splits files at
-    ``max_file_rows`` as Spark's does. Callers pass an upper bound of the
-    batch's decoded size, never an encoded or compressed one."""
-    limit = int(m.d.get("small_append_bytes", 256 * 1024 * 1024))
+    taking the range-clustered distributed write. The bound is
+    :data:`DRIVER_BYTES`, capped at a quarter of the session's
+    ``spark.driver.maxResultSize``. Rows need no bound: the driver write
+    splits files at ``max_file_rows`` as Spark's does. Callers pass an
+    upper bound of the batch's decoded size, never an encoded or
+    compressed one."""
+    limit = _driver_limit(spark)
+    return limit is not None and nbytes <= limit
+
+
+def _driver_limit(spark) -> int | None:
+    """The bound of :func:`fits_driver_write`; None when the session's
+    conf cannot be read (then nothing fits)."""
     try:
         max_result = spark.sparkContext._jsc.sc().conf().getSizeAsBytes(
             "spark.driver.maxResultSize", "1g"
         )
     except Exception:
-        return False
+        return None
     if max_result > 0:  # 0 means unlimited
-        limit = min(limit, max_result // 4)
-    return nbytes <= limit
+        return min(DRIVER_BYTES, max_result // 4)
+    return DRIVER_BYTES
 
 
 def _arrow_row_bytes(schema) -> Column:
@@ -376,9 +389,7 @@ def insert_into_collection(
             max_id=m.max_id + len(pdf),
             expected_version=base_version,
             merge_meta=merge_meta,
-            local_batch=fits_driver_write(
-                catalog.spark, m, _pandas_arrow_bytes(pdf, schema)
-            ),
+            local_batch=fits_driver_write(catalog.spark, _pandas_arrow_bytes(pdf, schema)),
         )
         return len(pdf)
 
@@ -541,7 +552,7 @@ def insert_into_collection(
             # streaming micro-batch, an ANN/bench fixture load) is
             # collected once and written on the driver — no range-sampling
             # job, no Spark write job
-            local_batch=fits_driver_write(catalog.spark, m, n_bytes),
+            local_batch=fits_driver_write(catalog.spark, n_bytes),
         )
     finally:
         if id_cache is not None:
@@ -554,21 +565,30 @@ def insert_into_collection(
 # ---------------------------------------------------------------------------
 
 
-def rewrite_fits_driver(
-    catalog: GeoDBCatalog, m, collection: str, database: str, files: list[str]
+def files_fit_driver(
+    catalog: GeoDBCatalog, collection: str, database: str, files: list[str]
 ) -> bool:
-    """:func:`fits_driver_write` for a rewrite of ``files`` (delete, update,
-    compaction): the rewritten batch holds at most their rows, so the sum
-    of their decoded sizes bounds it (:func:`stats.file_arrow_bytes`,
-    read from the footers of just these files, and from the dictionary
-    indices of any dictionary-encoded text). Such a commit is one collect
-    job and a driver-side write instead of a range-sampling job plus a
-    Spark write; a larger one keeps the distributed range-clustered write."""
+    """:func:`fits_driver_write` for the rows of ``files``: the sum of their
+    decoded sizes (:func:`stats.file_arrow_bytes`, from the footers of just
+    these files and the dictionary indices of any dictionary-encoded text)
+    bounds what a driver collect or read of them holds. It decides both
+    sides of "small enough for the driver":
+
+    - a rewrite (delete, update, compaction) of ``files`` is one collect
+      job and a driver-side write instead of a range-sampling job plus a
+      Spark write;
+    - a pruned client read of ``files`` (operators/spatial.py) reads and
+      refines them on the driver with no Spark job at all.
+
+    Anything larger keeps the Spark path."""
+    limit = _driver_limit(catalog.spark)
+    if limit is None:
+        return False
     cdir = catalog._coll_dir(collection, database)
     nbytes = 0
     for f in files:
         nbytes += file_arrow_bytes(os.path.join(cdir, f))
-        if not fits_driver_write(catalog.spark, m, nbytes):
+        if nbytes > limit:
             return False
     return True
 
@@ -649,7 +669,7 @@ def delete_from_collection(
         keep_files=untouched,
         expected_version=m.version,
         rebase_on_disjoint=True,
-        local_batch=rewrite_fits_driver(catalog, m, collection, database, touched),
+        local_batch=files_fit_driver(catalog, collection, database, touched),
     )
 
 
@@ -691,7 +711,7 @@ def delete_ids(
         keep_files=untouched,
         expected_version=m.version,
         rebase_on_disjoint=True,
-        local_batch=rewrite_fits_driver(catalog, m, collection, database, touched),
+        local_batch=files_fit_driver(catalog, collection, database, touched),
     )
 
 
@@ -741,5 +761,5 @@ def update_collection(
     catalog.commit_version(
         collection, database, df, keep_files=untouched,
         expected_version=m.version, rebase_on_disjoint=True,
-        local_batch=rewrite_fits_driver(catalog, m, collection, database, touched),
+        local_batch=files_fit_driver(catalog, collection, database, touched),
     )

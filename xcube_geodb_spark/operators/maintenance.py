@@ -34,7 +34,7 @@ import time
 
 import pyarrow.parquet as pq
 
-from xcube_geodb_spark.operators.dml import rewrite_fits_driver
+from xcube_geodb_spark.operators.dml import files_fit_driver
 
 __all__ = ["optimize_collection", "vacuum_collection"]
 
@@ -100,7 +100,7 @@ def optimize_collection(
         rebase_on_disjoint=True,
         # a compaction whose small files fit the driver is one collect job
         # and a driver-side write, no range-sampling job
-        local_batch=rewrite_fits_driver(catalog, m, collection, database, small),
+        local_batch=files_fit_driver(catalog, collection, database, small),
     )
     stats["files_after"] = len(catalog.meta(collection, database).files)
     return stats

@@ -4571,7 +4571,6 @@ def get_collection_pg(
     limit: int | None = None,
     offset: int | None = None,
     database: str = "public",
-    raise_empty: bool = False,
 ) -> DataFrame:
     """Raw-SQL scan (``geodb_get_pg``). Spark SQL parses/optimizes the
     statement (dialect deviation from Postgres documented in SURVEY.md §7);
@@ -4607,9 +4606,6 @@ def get_collection_pg(
             columns=list(df.columns),
         )
     )
-    if raise_empty and out.isEmpty():
-        # parity with geodb.sql:1171-1175 ("Empty result")
-        raise GeoDBError("Empty result")
     return out
 
 

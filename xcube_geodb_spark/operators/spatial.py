@@ -5,9 +5,13 @@ Reference: ``geodb_get_by_bbox`` / ``geodb_count_by_bbox``
 ``(where) op ST_pred(bbox_polygon, geometry)`` ordered by id. Our physical
 strategy (SURVEY.md §4) is filter-and-refine:
 
-1. cheap envelope pre-filter on the persisted ``__xmin..__ymax`` columns —
-   a plain range predicate Catalyst pushes into the parquet scan, so files
-   and row groups outside the query box are never read;
+1. cheap envelope pre-filter on the persisted ``__xmin..__ymax`` columns
+   (:func:`~xcube_geodb_spark.geometry.udfs.envelope_terms`), a
+   conjunction of range terms. Client reads first test it against each
+   file's ``__xmin..__ymax`` min/max in the manifest stats and keep only
+   the files it admits (a dataset-level MBR test, as in *Joinable Search
+   over Multi-Source Spatial Datasets*, ICDE 2025); then it filters the
+   rows of the kept files (Catalyst also pushes it into the parquet scan);
 2. exact predicate (``geometry.udfs.bbox_predicate_batch``) on survivors;
 3. ``ORDER BY id`` + limit/offset, parity with ``geodb.sql:1240-1241``.
 
@@ -19,27 +23,42 @@ Where steps 2 and 3 run depends on the caller:
 - the DataFrame operators (:func:`get_collection_by_bbox`, :func:`get_knn`)
   run them in Spark: a pandas UDF, then a global sort (or a top-k);
 - client reads that hand back pandas anyway (:func:`bbox_candidates`,
-  :func:`knn_candidates`) run only step 1 and ``where`` in Spark — one job,
-  no Python worker — and refine the collected candidates on the driver
-  with the same exact function, then sort there. The candidates are the
-  result plus the envelope margin, so the driver holds about what it
-  returns. Reads with a limit/offset or an ``OR``-ed ``where`` keep the
-  operator path: the exact filter must run before the limit, and the
-  candidate set would be unbounded;
-- :func:`count_collection_by_bbox` settles ``intersects``/``disjoint`` in
-  the JVM for rows whose envelope decides them and collects only the WKB
-  of the rest for the driver.
+  :func:`knn_candidates`, :func:`count_collection_by_bbox`) build their
+  filter from one spec (:class:`~xcube_geodb_spark.geometry.udfs.
+  Conjunction`: the pre-filter AND a ``where`` of ``column op number``
+  terms), prune the files of one manifest snapshot with it, and read the
+  kept files on one of two lanes. When the kept files are small
+  (``dml.files_fit_driver``, the predicate small commits use) the driver
+  reads them with ``pyarrow`` and no Spark job runs; otherwise Spark reads
+  them, one job with no Python worker. The bound is one of memory:
+  ``tools/lane_crossover.py`` measured the driver lane faster for every
+  read up to it. Either way the candidates reach the
+  driver as one Arrow table and are refined there with the same exact
+  function, then sorted. The candidates are the result plus the envelope
+  margin, so the driver holds about what it returns. knn goes best-first
+  over files (:func:`knn_candidates`). Reads with a limit/offset or an
+  ``OR``-ed ``where`` keep the operator path: the exact filter must run
+  before the limit, and the candidate set would be unbounded;
+- :func:`count_collection_by_bbox` settles ``intersects``/``disjoint``
+  for rows whose envelope decides them without the kernel, on either lane
+  (in the JVM, or in ``pyarrow`` on the driver), and decodes only the WKB
+  of the rest.
+
+Each client read reports what it did: the lane, the files in the snapshot
+and the files kept, and the bytes it decoded (``attrs["read"]`` of the
+frame; ``decision=`` of a count).
 """
 
 from __future__ import annotations
 
 import math
 import os
+import re
 from typing import Callable
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -49,12 +68,17 @@ from xcube_geodb_spark.geometry.crs import check_crs, transform_bbox_crs
 from xcube_geodb_spark.geometry.geom import Geometry, distance, parse_wkb
 from xcube_geodb_spark.geometry.predicates import COMPARISON_MODES
 from xcube_geodb_spark.geometry.udfs import (
+    Conjunction,
     bbox_predicate_batch,
     bbox_predicate_column,
     envelope_decides,
+    envelope_decides_arrow,
     envelope_prefilter,
+    envelope_terms,
     geom_type_udf,
 )
+from xcube_geodb_spark.operators import pruning
+from xcube_geodb_spark.operators.dml import files_fit_driver
 
 Bbox = tuple[float, float, float, float]
 # driver-side second half of a filter-and-refine read: candidate rows (as
@@ -173,6 +197,143 @@ def get_collection_by_bbox(
     return df
 
 
+class Candidates:
+    """The rows a client filter-and-refine read collects, with the decision
+    of how it reads them (``decision``: ``lane``, ``files_total``,
+    ``files_kept``). On the ``"driver"`` lane they are already an Arrow
+    table, read from the kept files with ``pyarrow``; on the ``"spark"``
+    lane they are a Spark DataFrame over the same files. Both answer a
+    collecting caller as a DataFrame does: ``schema``, ``toArrow()``,
+    ``toPandas()``."""
+
+    def __init__(self, spark, schema, decision: dict, df=None, table=None):
+        self.spark, self.schema, self.decision = spark, schema, decision
+        self.df, self.table = df, table
+
+    def toArrow(self):
+        return self.table if self.df is None else self.df.toArrow()
+
+    def toPandas(self) -> pd.DataFrame:
+        from xcube_geodb_spark.client import arrow_to_pandas
+
+        return arrow_to_pandas(self.toArrow(), self.schema, self.spark)
+
+
+_WHERE_TERM = re.compile(
+    r"\s*([A-Za-z_][A-Za-z0-9_]*)\s*(<=|>=|<|>|=)\s*"
+    r"([+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?)\s*"
+)
+_INTEGRAL = (T.LongType, T.IntegerType, T.ShortType)
+
+
+def where_terms(where: str | None, schema) -> Conjunction | None:
+    """``where`` as a :class:`Conjunction`, or None when the spec cannot
+    say it. It takes ``column op number`` terms joined by ``AND``, where the
+    column is integral and the number an integer, or the column is DOUBLE
+    (Spark and ``pyarrow`` then compare the same values the same way).
+    Anything else (``OR``, a function, a string, a FLOAT column, ...) is
+    None; no ``where`` is the empty conjunction."""
+    if not where:
+        return Conjunction()
+    fields = {f.name.lower(): f for f in schema.fields}
+    terms = []
+    for part in re.split(r"\s+and\s+", where.strip(), flags=re.IGNORECASE):
+        mt = _WHERE_TERM.fullmatch(part)
+        field = mt and fields.get(mt.group(1).lower())
+        if field is None:
+            return None
+        raw = mt.group(3)
+        if re.fullmatch(r"[+-]?\d+", raw) and isinstance(field.dataType, _INTEGRAL):
+            v = int(raw)
+            if not -(2**63) <= v < 2**63:
+                return None
+        elif isinstance(field.dataType, T.DoubleType):
+            v = float(raw)
+        else:
+            return None
+        terms.append((field.name, mt.group(2), v))
+    return Conjunction(terms)
+
+
+class _PrunedRead:
+    """A read of the ``files`` of one manifest snapshot ``m`` (by default
+    all of them), and the lane it takes (:meth:`decide`)."""
+
+    def __init__(self, catalog, collection, database, m, files=None):
+        self.catalog, self.collection, self.database, self.m = (
+            catalog, collection, database, m,
+        )
+        # the schema as Spark reports a parquet scan of it: all nullable
+        self.schema = T.StructType(
+            [T.StructField(f.name, f.dataType, True) for f in m.spark_schema().fields]
+        )
+        self.paths = catalog.manifest_paths(collection, database, m)
+        self.files = list(self.paths) if files is None else files
+        self.driver = False
+
+    def prune(self, spec: Conjunction) -> None:
+        """Keep the files whose stats admit ``spec``."""
+        self.files, _ = pruning.split_files_by_constraints(
+            {f: self.paths[f] for f in self.files}, spec.columns,
+            spec.constraints(), meta=self.m, need_untouched=False,
+        )
+
+    def decide(self, driver_ok: bool = True) -> None:
+        """Read on the driver when ``driver_ok`` and the files are small."""
+        self.driver = driver_ok and files_fit_driver(
+            self.catalog, self.collection, self.database, self.files
+        )
+        self.decision = {
+            "lane": "driver" if self.driver else "spark",
+            "files_total": len(self.paths),
+            "files_kept": len(self.files),
+        }
+
+    def read(self, spec: Conjunction, columns: list[str], also=None):
+        """The rows of the kept files that pass ``spec`` (and the
+        ``pyarrow`` expression ``also``), read on the driver under the
+        declared schema: a column a file lacks reads as NULL, Spark's INT96
+        timestamps as microseconds."""
+        import pyarrow.dataset as ds
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        base = self.catalog._coll_dir(self.collection, self.database)
+        fmt = ds.ParquetFileFormat(
+            read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+        )
+        floating = {f.name for f in self.schema.fields if isinstance(f.dataType, T.DoubleType)}
+        where = spec.arrow(floating)
+        if also is not None:
+            where = where & also
+        return ds.dataset(
+            [os.path.join(base, f) for f in self.files],
+            schema=to_arrow_schema(self.schema),
+            format=fmt,
+        ).to_table(columns=columns, filter=where)
+
+    def frame(self) -> DataFrame:
+        """The kept files as a Spark DataFrame (the Spark lane)."""
+        return self.catalog.load_files(
+            self.collection, self.database, self.files, meta=self.m
+        )
+
+    def candidates(self, spec: Conjunction, drop=SYSTEM_COLUMNS, spark_filters=(), also=None):
+        """:class:`Candidates` of the rows passing ``spec`` (and, on the
+        Spark lane, the Column filters ``spark_filters``; on the driver
+        lane, the ``pyarrow`` expression ``also``), without the columns
+        ``drop``."""
+        spark = self.catalog.spark
+        if self.driver:
+            schema = T.StructType([f for f in self.schema.fields if f.name not in drop])
+            table = self.read(spec, [f.name for f in schema.fields], also)
+            return Candidates(spark, schema, self.decision, table=table)
+        df = self.frame()
+        for cond in (*spark_filters, *([F.expr(spec.sql())] if spec else [])):
+            df = df.filter(cond)
+        df = df.drop(*drop)
+        return Candidates(spark, df.schema, self.decision, df=df)
+
+
 def bbox_candidates(
     catalog: GeoDBCatalog,
     collection: str,
@@ -183,32 +344,37 @@ def bbox_candidates(
     op: str = "AND",
     database: str = "public",
     wsg84_order: str = "lon_lat",
-) -> tuple[DataFrame, Refine]:
+) -> tuple[Candidates, Refine]:
     """:func:`get_collection_by_bbox` without limit/offset, split for a
     caller that collects the result: ``(candidates, refine)``. An ``OR``-ed
     ``where`` is not supported here (use the operator).
 
-    ``candidates`` is the envelope pre-filter plus ``where`` — no Python
-    UDF, no sort, so collecting it is one Spark job. ``refine`` maps the
-    collected candidates to exactly the frame ``get_collection_by_bbox(
-    ...).toPandas()`` returns: it keeps the rows
+    ``candidates`` are the rows of the files the envelope pre-filter and
+    ``where`` keep (:func:`~xcube_geodb_spark.geometry.udfs.envelope_terms`
+    plus :func:`where_terms`, tested against the manifest's file stats)
+    that pass the same filter row by row — read on the driver when the kept
+    files are small (``dml.files_fit_driver``) and ``where`` is a
+    conjunction the spec understands, else one Spark job, with no Python
+    UDF and no sort either way. ``refine`` maps the collected candidates to
+    exactly the frame ``get_collection_by_bbox(...).toPandas()`` returns:
+    it keeps the rows
     :func:`~xcube_geodb_spark.geometry.udfs.bbox_predicate_batch` accepts
     (the function the operator's UDF runs) and sorts them by id.
 
     ``disjoint`` has no necessary envelope condition; its candidates drop
-    the rows whose envelope proves they intersect the box instead."""
+    the rows whose envelope proves they intersect the box."""
     if _checked_op(comparison_mode, op) == "OR" and where:
         raise GeoDBError("bbox_candidates AND-s `where`; use get_collection_by_bbox")
     bbox = _aligned_bbox(catalog, collection, database, bbox, bbox_crs, wsg84_order)
-    df = catalog.load_df(collection, database, include_system=True)
+    read, spec, rest = _bbox_read(catalog, collection, database, comparison_mode, bbox, where)
     if comparison_mode == "disjoint":
-        df = df.filter(~envelope_decides(bbox)[0])
+        cands = read.candidates(
+            spec, spark_filters=[~envelope_decides(bbox)[0], *rest],
+            also=~envelope_decides_arrow(bbox)[0],
+        )
     else:
-        df = df.filter(envelope_prefilter(comparison_mode, bbox))
-    if where:
-        df = df.filter(F.expr(where))
-    df = df.drop(*SYSTEM_COLUMNS)
-    schema = df.schema
+        cands = read.candidates(spec, spark_filters=rest)
+    schema = cands.schema
 
     def refine(pdf: pd.DataFrame) -> pd.DataFrame:
         keep = bbox_predicate_batch(
@@ -217,7 +383,23 @@ def bbox_candidates(
         out = pdf[keep].sort_values("id", kind="stable")
         return _retyped(out.reset_index(drop=True), schema)
 
-    return df, refine
+    return cands, refine
+
+
+def _bbox_read(catalog, collection, database, mode: str, bbox: Bbox, where):
+    """``(read, spec, rest)`` of a bbox read or count: ``spec`` is the
+    envelope pre-filter of ``mode`` AND the terms of ``where``; ``rest`` is
+    ``[F.expr(where)]`` when the spec cannot say ``where`` (then only the
+    Spark lane reads); ``read`` holds the files ``spec`` keeps and its
+    lane."""
+    read = _PrunedRead(catalog, collection, database, catalog.meta(collection, database))
+    spec = envelope_terms(mode, bbox) or Conjunction()
+    terms = where_terms(where, read.schema)
+    rest = [F.expr(where)] if terms is None else []
+    spec = spec if terms is None else spec & terms
+    read.prune(spec)
+    read.decide(driver_ok=not rest)
+    return read, spec, rest
 
 
 def count_collection_by_bbox(
@@ -230,50 +412,66 @@ def count_collection_by_bbox(
     op: str = "AND",
     database: str = "public",
     wsg84_order: str = "lon_lat",
+    decision: dict | None = None,
 ) -> int:
     """``geodb_count_by_bbox`` (geodb.sql:1306-1370).
 
-    ``intersects`` and ``disjoint`` (with ``where`` AND-ed) run as one
-    Spark job with no Python worker: rows whose envelope settles the
-    predicate (:func:`~xcube_geodb_spark.geometry.udfs.envelope_decides`)
-    are counted in the JVM, and only the WKB of the remaining boundary rows
-    is collected and decided on the driver by the exact kernel. Other modes
-    and an ``OR``-ed ``where`` count the operator path's rows."""
+    ``intersects`` and ``disjoint`` (with ``where`` AND-ed) prune files as
+    :func:`bbox_candidates` does. Rows whose envelope settles the predicate
+    (:func:`~xcube_geodb_spark.geometry.udfs.envelope_decides`) are counted
+    without decoding a geometry; only the remaining boundary rows go
+    through the exact kernel on the driver. On the driver lane the kept
+    files are read with ``pyarrow`` and split by the same test in pyarrow
+    (``envelope_decides_arrow``), with no Spark job; on the Spark lane it
+    is one job with no Python worker, which counts the settled rows in the
+    JVM and collects only the boundary WKB. Other modes and an ``OR``-ed
+    ``where`` count the operator path's rows.
+
+    A count returns an int, so pass a dict as ``decision`` to see the
+    read's decision (what a frame's ``attrs["read"]`` holds)."""
     op = _checked_op(comparison_mode, op)
     bbox = _aligned_bbox(catalog, collection, database, bbox, bbox_crs, wsg84_order)
     if comparison_mode not in ("intersects", "disjoint") or (where and op == "OR"):
         return _bbox_filtered(
             catalog, collection, database, bbox, comparison_mode, where, op
         ).count()
-    df = catalog.load_df(collection, database, include_system=True)
-    inside, clear = envelope_decides(bbox)
-    if comparison_mode == "intersects":
-        # the operator path drops rows failing the pre-filter, so they
-        # never count (even where the kernel would accept them)
-        sure, maybe = inside, envelope_prefilter("intersects", bbox)
+    read, spec, rest = _bbox_read(catalog, collection, database, comparison_mode, bbox, where)
+    if read.driver:
+        # the same split in pyarrow: only the boundary rows reach the kernel
+        table = read.read(spec, ["geometry", *SYSTEM_COLUMNS])
+        inside, clear = envelope_decides_arrow(bbox)
+        boundary = table.filter(~(inside | clear)).column("geometry").to_pylist()
+        n = table.filter(inside if comparison_mode == "intersects" else clear).num_rows + int(
+            bbox_predicate_batch(comparison_mode, boundary, bbox).sum()
+        )
     else:
-        sure, maybe = clear, ~inside & F.col("geometry").isNotNull()
-    df = df.filter(maybe)
-    if where:
-        df = df.filter(F.expr(where))
-    # one job: the count of settled rows rides along as an observed metric
-    # of the scan that collects the boundary WKB (a global aggregate would
-    # add a shuffle stage, which adaptive execution submits as a 2nd job).
-    # `sure` depends on every row's envelope, so the optimizer cannot fold
-    # the filter above the observation away (it would drop the metric).
-    from pyspark.sql import Observation
+        inside, clear = envelope_decides(bbox)
+        if comparison_mode == "intersects":
+            # the operator path drops rows failing the pre-filter, so they
+            # never count (even where the kernel would accept them)
+            sure, maybe = inside, []
+        else:
+            sure, maybe = clear, [~inside & F.col("geometry").isNotNull()]
+        df = read.candidates(spec, drop=(), spark_filters=maybe + rest).df
+        # one job: the count of settled rows rides along as an observed
+        # metric of the scan that collects the boundary WKB (a global
+        # aggregate would add a shuffle stage, which adaptive execution
+        # submits as a 2nd job). `sure` depends on every row's envelope, so
+        # the optimizer cannot fold the filter above the observation away
+        # (it would drop the metric).
+        from pyspark.sql import Observation
 
-    obs = Observation()  # unnamed: a unique name per call
-    rows = (
-        df.observe(obs, F.count_if(sure).alias("n"))
-        .filter(~sure)
-        .select("geometry")
-        .collect()
-    )
-    boundary = [r[0] for r in rows]
-    return int(obs.get["n"]) + int(
-        bbox_predicate_batch(comparison_mode, boundary, bbox).sum()
-    )
+        obs = Observation()  # unnamed: a unique name per call
+        table = df.observe(obs, F.count_if(sure).alias("n")).filter(~sure).select(
+            "geometry"
+        ).toArrow()
+        boundary = table.column(0).to_pylist()
+        n = int(obs.get["n"]) + int(
+            bbox_predicate_batch(comparison_mode, boundary, bbox).sum()
+        )
+    if decision is not None:
+        decision.update(read.decision, decoded_bytes=table.nbytes)
+    return n
 
 
 def get_collection_bbox(
@@ -324,6 +522,66 @@ def get_collection_bbox(
     return (mm["__xmin"][0], mm["__ymin"][0], mm["__xmax"][1], mm["__ymax"][1])
 
 
+def _knn_point(
+    catalog: GeoDBCatalog,
+    collection: str,
+    point: tuple[float, float],
+    database: str,
+    point_crs,
+    wsg84_order: str,
+) -> tuple[float, float]:
+    """The query point in the collection's CRS."""
+    if point_crs is not None:
+        srid = catalog.get_collection_srid(collection, database)
+        crs = check_crs(point_crs)
+        if crs != srid:
+            x0, y0, _, _ = transform_bbox_crs(
+                (point[0], point[1], point[0], point[1]), crs, srid,
+                wsg84_order=wsg84_order,
+            )
+            point = (x0, y0)
+        elif crs == 4326 and wsg84_order == "lat_lon":
+            point = (point[1], point[0])
+    return float(point[0]), float(point[1])
+
+
+def _bounds(xmin, ymin, xmax, ymax, qx: float, qy: float):
+    """``(lower, upper)`` bounds of the distance from the point to a
+    geometry with that envelope: the distance to the envelope box (0
+    inside), and the distance to its center plus half its diagonal (a
+    non-empty geometry has a point within half a diagonal of the center).
+    The arguments are numpy arrays, floats or Spark Columns: the same
+    operations in the same order, so Spark and numpy compute the same
+    doubles (``greatest`` is ``np.maximum``: both return NaN for NaN)."""
+    if isinstance(xmin, Column):
+        zero = F.lit(0.0)
+        dx = F.greatest(xmin - qx, F.lit(qx) - xmax, zero)
+        dy = F.greatest(ymin - qy, F.lit(qy) - ymax, zero)
+        return _bound_pair(xmin, ymin, xmax, ymax, qx, qy, dx, dy, F.sqrt)
+    with np.errstate(invalid="ignore"):  # an empty envelope's inf - inf
+        dx = np.maximum(np.maximum(xmin - qx, qx - xmax), 0.0)
+        dy = np.maximum(np.maximum(ymin - qy, qy - ymax), 0.0)
+        return _bound_pair(xmin, ymin, xmax, ymax, qx, qy, dx, dy, np.sqrt)
+
+
+def _bound_pair(xmin, ymin, xmax, ymax, qx, qy, dx, dy, sqrt):
+    cx, cy = (xmin + xmax) / 2 - qx, (ymin + ymax) / 2 - qy
+    w, h = xmax - xmin, ymax - ymin
+    return sqrt(dx * dx + dy * dy), sqrt(cx * cx + cy * cy) + sqrt(w * w + h * h) / 2
+
+
+def _kth_upper_bound(df: DataFrame, q: tuple[float, float], k: int):
+    """``(T, n)``: the k-th smallest distance upper bound over the rows of
+    ``df`` and how many of its k smallest are not NULL (a NULL geometry
+    has NULL bounds; they sort last, as NULL distances do under PG's
+    ``ORDER BY ... ASC``). One root-level top-k job over the bound column
+    only — no geometry bytes move."""
+    _, ub = _bounds(*(F.col(c) for c in SYSTEM_COLUMNS), *q)
+    rows = df.select(ub.alias("ub")).orderBy(F.col("ub").asc_nulls_last()).limit(k).collect()
+    ubs = [r[0] for r in rows if r[0] is not None]
+    return (ubs[-1] if ubs else None), len(ubs)
+
+
 def _knn_candidates(
     catalog: GeoDBCatalog,
     collection: str,
@@ -336,51 +594,17 @@ def _knn_candidates(
     """Steps 1-2 of :func:`get_knn`: ``(candidates, query point)`` — the
     rows whose distance lower bound is within the k-th smallest upper
     bound, system columns kept, and the point in the collection's CRS."""
-    if point_crs is not None:
-        srid = catalog.get_collection_srid(collection, database)
-        crs = check_crs(point_crs)
-        if crs != srid:
-            x0, y0, _, _ = transform_bbox_crs(
-                (point[0], point[1], point[0], point[1]), crs, srid,
-                wsg84_order=wsg84_order,
-            )
-            point = (x0, y0)
-        elif crs == 4326 and wsg84_order == "lat_lon":
-            point = (point[1], point[0])
-    qx, qy = float(point[0]), float(point[1])
-
+    q = _knn_point(catalog, collection, point, database, point_crs, wsg84_order)
     df = catalog.load_df(collection, database, include_system=True)
-    zero = F.lit(0.0)
-    dx = F.greatest(F.col("__xmin") - qx, F.lit(qx) - F.col("__xmax"), zero)
-    dy = F.greatest(F.col("__ymin") - qy, F.lit(qy) - F.col("__ymax"), zero)
-    lb = F.sqrt(dx * dx + dy * dy)
-    cx = (F.col("__xmin") + F.col("__xmax")) / 2
-    cy = (F.col("__ymin") + F.col("__ymax")) / 2
-    half_diag = (
-        F.sqrt(
-            (F.col("__xmax") - F.col("__xmin")) ** 2
-            + (F.col("__ymax") - F.col("__ymin")) ** 2
-        )
-        / 2
-    )
-    ub = F.sqrt((cx - qx) ** 2 + (cy - qy) ** 2) + half_diag
-
-    bounds = df.select(lb.alias("__lb"), ub.alias("__ub"))
-    # NULL bounds (NULL geometry) sort last: their rows rank after every
-    # row with a geometry, as NULL distances do under PG's ORDER BY ASC
-    kth, n = (
-        bounds.orderBy(F.col("__ub").asc_nulls_last())
-        .limit(int(k))
-        .agg(F.max("__ub"), F.count("__ub"))
-        .collect()[0]
-    )
+    if k <= 0:
+        return df.limit(0), q
+    kth, n = _kth_upper_bound(df, q, int(k))
     if n < k:  # fewer than k geometries: every row is a candidate
-        return df, (qx, qy)
-    if kth is None:  # k = 0
-        return df.limit(0), (qx, qy)
+        return df, q
+    lb, _ = _bounds(*(F.col(c) for c in SYSTEM_COLUMNS), *q)
     # NULL-geometry rows would pass `lb <= kth` (greatest() skips NULLs)
     near = F.col("__xmin").isNotNull() & (lb <= F.lit(float(kth)))
-    return df.filter(near), (qx, qy)
+    return df.filter(near), q
 
 
 def _point_distance(q: tuple[float, float]) -> Callable:
@@ -450,20 +674,52 @@ def knn_candidates(
     database: str = "public",
     point_crs=4326,
     wsg84_order: str = "lon_lat",
-) -> tuple[DataFrame, Refine]:
+) -> tuple[Candidates, Refine]:
     """:func:`get_knn` split for a caller that collects the result:
-    ``(candidates, refine)``. Finding the threshold is one Spark job, as in
-    ``get_knn``; collecting ``candidates`` (step 3's rows, no UDF, no sort)
-    is the other. ``refine`` computes the same exact distances on the
-    driver, orders by ``(dist, id)`` as ``get_knn`` does (NULL last) and
-    keeps ``k`` — the frame ``get_knn(...).toPandas()`` returns."""
-    df, q = _knn_candidates(
-        catalog, collection, point, k, database, point_crs, wsg84_order
-    )
-    df = df.drop(*SYSTEM_COLUMNS)
-    schema = df.schema
+    ``(candidates, refine)``, best-first over files.
+
+    The manifest's per-file envelopes order the files by their lower bound
+    (the point's distance to the file's envelope, below every row's). The
+    nearest files that hold at least ``k`` geometries give a threshold
+    ``T``, the k-th smallest row upper bound among them; no row of a file
+    whose lower bound exceeds ``T`` can be among the k nearest, so only
+    the files within ``T`` are kept (the k-th-bound cut-off of REPOSE,
+    ICDE 2021, over dataset MBRs as in *Joinable Search over Multi-Source
+    Spatial Datasets*, ICDE 2025). ``candidates`` are their rows within the
+    box ``T`` around the point, read on the driver when the files are small
+    (``dml.files_fit_driver``), else by Spark (one job for ``T``, one for
+    the candidates).
+
+    ``refine`` finds the threshold ``get_knn`` uses among the candidates
+    (they hold every row whose upper bound is within ``T``, so the k
+    smallest), keeps the rows within it, computes the same exact distances
+    on the driver, orders by ``(dist, id)`` as ``get_knn`` does (NULL last)
+    and keeps ``k`` — the frame ``get_knn(...).toPandas()`` returns."""
+    q = _knn_point(catalog, collection, point, database, point_crs, wsg84_order)
+    k = int(k)
+    m = catalog.meta(collection, database)
+    read = _PrunedRead(catalog, collection, database, m)
+    kth = _knn_threshold(read, q, k)
+    spec = Conjunction()  # without a threshold: every row of every file
+    if kth is not None and not math.isnan(kth):
+        fstats = m.file_stats()
+        read.files = [f for f in read.files if _file_lower_bound(fstats.get(f), q) <= kth]
+        if read.files:
+            spec = envelope_terms("intersects", (q[0] - kth, q[1] - kth, q[0] + kth, q[1] + kth))
+    read.decide()
+    cands = read.candidates(spec, drop=())
+    schema = T.StructType([f for f in cands.schema.fields if f.name not in SYSTEM_COLUMNS])
 
     def refine(pdf: pd.DataFrame) -> pd.DataFrame:
+        env = [pdf[c].to_numpy(dtype=np.float64) for c in SYSTEM_COLUMNS]
+        # NULL bounds (a NULL geometry; ingest never writes a NaN one)
+        valid = ~np.isnan(np.array(env)).any(axis=0)
+        if 0 < k <= valid.sum():
+            lb, ub = _bounds(*env, *q)
+            t = np.sort(ub[valid])[k - 1]  # NaN sorts last, as in Spark
+            # Spark's `lb <= t`: anything is below a NaN
+            pdf = pdf[valid & ((lb <= t) | np.isnan(t))]
+        pdf = pdf.drop(columns=SYSTEM_COLUMNS).reset_index(drop=True)
         dist = pdf["geometry"].map(_point_distance(q)).tolist()
         ids = pdf["id"].tolist()
 
@@ -473,12 +729,55 @@ def knn_candidates(
             null = d is None or math.isnan(d)
             return (null, 0.0 if null else d, ids[i])
 
-        order = sorted(range(len(pdf)), key=key)[: int(k)]
+        order = sorted(range(len(pdf)), key=key)[: max(k, 0)]
         out = pdf.take(order).reset_index(drop=True)
         out["dist"] = pd.Series([dist[i] for i in order], dtype=np.float64)
         return _retyped(out, schema)
 
-    return df, refine
+    return cands, refine
+
+
+def _file_lower_bound(st: dict | None, q: tuple[float, float]) -> float:
+    """The point's distance to a file's envelope (from its manifest stats):
+    a lower bound of every row's, computed by the same operations on
+    smaller mins and larger maxes. 0 (keep, look first) when unknown."""
+    try:
+        env = [float(st[c][i]) for c, i in zip(SYSTEM_COLUMNS, (0, 0, 1, 1))]
+    except (KeyError, TypeError, IndexError, ValueError):
+        return 0.0
+    lb = float(_bounds(*np.array(env), *q)[0])
+    return 0.0 if math.isnan(lb) else lb
+
+
+def _knn_threshold(read: _PrunedRead, q: tuple[float, float], k: int):
+    """The k-th smallest row upper bound over the files nearest the point
+    (by :func:`_file_lower_bound`) that hold at least ``k`` geometries by
+    their stats; None when they hold fewer (then every row is a
+    candidate). Read on the driver when those files are small."""
+    if k <= 0:
+        return -math.inf
+    fstats = read.m.file_stats()
+    nearest, n = [], 0
+    for f in sorted(read.files, key=lambda f: _file_lower_bound(fstats.get(f), q)):
+        nearest.append(f)
+        st = fstats.get(f) or {}
+        rows = (st.get("::rows") or [0])[0]
+        n += rows - (st.get("::nulls:__xmin") or [0])[0]
+        if n >= k:
+            break
+    head = _PrunedRead(read.catalog, read.collection, read.database, read.m, nearest)
+    head.decide()
+    if not head.driver:
+        kth, n = _kth_upper_bound(head.frame(), q, k)
+        return kth if n >= k else None
+    table = head.read(Conjunction(), SYSTEM_COLUMNS)
+    valid = np.ones(table.num_rows, dtype=bool)
+    for col in table.columns:
+        valid &= col.is_valid().to_numpy(zero_copy_only=False)
+    env = [col.to_numpy(zero_copy_only=False) for col in table.columns]
+    _, ub = _bounds(*env, *q)
+    ub = np.sort(ub[valid])
+    return float(ub[k - 1]) if len(ub) >= k else None
 
 
 def get_geometry_types(

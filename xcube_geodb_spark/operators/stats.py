@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import base64
 import hashlib
+import os
 
 import pyarrow.parquet as pq
 
@@ -198,6 +199,15 @@ _ARROW_WIDTH = {
 
 
 def file_arrow_bytes(path: str) -> int:
+    """:func:`_file_arrow_bytes` of the file at ``path``, memoized per file
+    version: data files are immutable, and a pruned read sizes the same
+    files on every call."""
+    st = os.stat(path)
+    return _file_arrow_bytes(path, st.st_mtime_ns, st.st_size)
+
+
+@lru_cache(maxsize=4096)
+def _file_arrow_bytes(path: str, _mtime_ns: int, _size: int) -> int:
     """An upper bound of the bytes the rows of the parquet file at ``path``
     take decoded to Arrow, which is what a driver collect of them holds.
 
