@@ -163,6 +163,52 @@ class TestLifecycle:
                 group="raba_id",
             )
 
+    def test_pg_comment_with_apostrophe(self, client, land_use):
+        # the apostrophes inside the comments pair up into no literal:
+        # ^ is still PG's power (Spark's XOR would give 3 ^ 2 = 1)
+        df = client.get_collection_pg(
+            land_use, select="raba_pid, /* it's */ 3 ^ 2 AS p /* ok' */"
+        )
+        assert list(df["p"]) == [9.0] * 4
+        # a :: cast and a ~ after such a comment are still rewritten
+        df = client.get_collection_pg(
+            land_use,
+            select="id, /* it's */ raba_id::text AS rt /* ok' */",
+            where="raba_id > 0 /* don't */ AND d_od::text ~ '^2019-02' "
+            "/* won't */",
+            order="id",
+        )
+        assert list(df["id"]) == [1, 3]
+        assert list(df["rt"]) == ["1410.0", "1410.0"]
+
+    def test_pg_double_quoted_identifiers(self, client, land_use):
+        # PG's "ident" is a column, not Spark's double-quoted string
+        df = client.get_collection_pg(
+            land_use, select='raba_pid, "raba_id" AS q', order="raba_pid"
+        )
+        assert list(df["q"]) == [1410.0, 1300.0, 1410.0, 7000.0]
+        df = client.get_collection_pg(
+            land_use, select="id", where='"raba_id" = 1410', order="id"
+        )
+        assert list(df["id"]) == [1, 3]
+
+    def test_pg_line_comments_end_at_the_clause(self, client, land_use):
+        # a -- comment ends its own clause: the ORDER BY and LIMIT after
+        # it must survive (the statement is built on one line)
+        df = client.get_collection_pg(
+            land_use, select="id", where="id > 1 -- newer rows",
+            order="id DESC", limit=2,
+        )
+        assert list(df["id"]) == [4, 3]
+        df = client.get_collection_pg(
+            land_use,
+            select="raba_id, count(*) AS n",
+            group="raba_id -- per land-use class",
+            order="raba_id DESC",
+            limit=1,
+        )
+        assert list(zip(df["raba_id"], df["n"])) == [(7000.0, 1)]
+
     def test_counts(self, client, land_use):
         assert client.count_collection_rows(land_use) == 4
         assert client.count_collection_rows(land_use, exact_count=True) == 4
@@ -1364,13 +1410,20 @@ class TestR11AdviceFixes:
         )
 
 
+def _from_clause(table: str) -> str:
+    """The FROM clause build_pg_sql emits for ``table``."""
+    from xcube_geodb_spark.operators.scan import build_pg_sql
+
+    return build_pg_sql(table, select="*")[len("SELECT * FROM "):]
+
+
 class TestFromSrfRewrites:
     """FROM-position set-returning functions (r10 verdict order 1):
     string-level pins for operators/scan._rewrite_from_srfs; execution
     + value semantics are oracle-gated by pg_from_srf."""
 
     def test_comma_form_unnest(self):
-        from xcube_geodb_spark.operators.scan import _rewrite_from_srfs as f
+        f = _from_clause
 
         assert f("t, unnest(t.arr) AS u(x)") == (
             "t LATERAL VIEW explode(t.arr) u AS x"
@@ -1385,7 +1438,7 @@ class TestFromSrfRewrites:
         )
 
     def test_with_ordinality_and_multi_array(self):
-        from xcube_geodb_spark.operators.scan import _rewrite_from_srfs as f
+        f = _from_clause
 
         out = f("t, unnest(t.arr) WITH ORDINALITY AS u(x, i)")
         assert "inline(transform(t.arr" in out and "u AS x, i" in out
@@ -1398,7 +1451,7 @@ class TestFromSrfRewrites:
             f("t, unnest(a, b)")  # multi-array needs explicit columns
 
     def test_json_each_forms(self):
-        from xcube_geodb_spark.operators.scan import _rewrite_from_srfs as f
+        f = _from_clause
 
         assert f("e, json_each_text(props) AS x(k, v)") == (
             "e LATERAL VIEW explode(from_json(props, "
@@ -1410,7 +1463,7 @@ class TestFromSrfRewrites:
         assert out.endswith("x AS key, value")
 
     def test_elements_and_standalone(self):
-        from xcube_geodb_spark.operators.scan import _rewrite_from_srfs as f
+        f = _from_clause
 
         # PG's scalar-SRF rule: a bare alias names the COLUMN (text-
         # returning set function), so `... el` yields column el
@@ -1428,8 +1481,10 @@ class TestFromSrfRewrites:
         assert f("t, regexp_split_to_table(t.name, '[-_]') tok") == (
             "t LATERAL VIEW explode(split(t.name, '[-_]')) tok AS tok"
         )
+        # the separator is regex-escaped, and its backslash doubled for
+        # Spark's string-literal unescaping (Spark reads '\.' as '.')
         assert f("t, string_to_table(t.name, '.') part") == (
-            "t LATERAL VIEW explode(split(t.name, '\\.')) part AS part"
+            "t LATERAL VIEW explode(split(t.name, '\\\\.')) part AS part"
         )
         # standalone literal-args form -> lateral subquery
         assert f("unnest(array(1,2,3)) t(x)") == (
@@ -1439,8 +1494,17 @@ class TestFromSrfRewrites:
         assert out.startswith("(SELECT explode(from_json('{\"a\":1}'")
         assert out.endswith("AS (k, v)) e")
 
+    def test_string_to_table_splits_on_the_literal_separator(self, spark):
+        from xcube_geodb_spark.operators.scan import build_pg_sql
+
+        sql = build_pg_sql(
+            "(SELECT 'a.b' AS name) s, string_to_table(s.name, '.') p",
+            select="p",
+        )
+        assert [r[0] for r in spark.sql(sql).collect()] == ["a", "b"]
+
     def test_join_spellings_and_nesting(self):
-        from xcube_geodb_spark.operators.scan import _rewrite_from_srfs as f
+        f = _from_clause
 
         assert f("t CROSS JOIN unnest(t.arr) u(x)") == (
             "t LATERAL VIEW explode(t.arr) u AS x"
@@ -1461,7 +1525,7 @@ class TestFromSrfRewrites:
         )
 
     def test_alias_column_count_mismatch_refuses(self):
-        from xcube_geodb_spark.operators.scan import _rewrite_from_srfs as f
+        f = _from_clause
 
         with pytest.raises(GeoDBError, match="output column"):
             f("e, json_each_text(props) AS x(k)")
@@ -1907,6 +1971,11 @@ class TestR11ScalarShims:
             "x NULLS LAST, y DESC NULLS FIRST, z ASC NULLS LAST, "
             "w NULLS FIRST"
         )
+        # a comma inside a literal separates no sort items
+        assert build_pg_sql("t", order="y = 'a,b' DESC, x") == (
+            "SELECT * FROM t ORDER BY y = 'a,b' DESC NULLS FIRST, "
+            "x NULLS LAST"
+        )
         assert f("row_number() OVER (PARTITION BY a ORDER BY b DESC)") == (
             "row_number() OVER (PARTITION BY a ORDER BY b DESC "
             "NULLS FIRST)"
@@ -2181,7 +2250,7 @@ class TestR11ScalarShims:
     def test_numeric_to_char_values_negative_and_null(self, spark):
         """Value-level pins against literal PG outputs (r11 verdict: the
         formula-replay oracle could not catch sign-vs-pad-width)."""
-        from xcube_geodb_spark.operators.scan import _to_char_numeric
+        from xcube_geodb_spark.operators.scan import _pg_clause_to_spark
 
         spark.range(1).selectExpr(
             "CAST(-5 AS DOUBLE) AS n",
@@ -2201,7 +2270,7 @@ class TestR11ScalarShims:
             ("x", "9,999.99", None),
         ]
         exprs = [
-            f"{_to_char_numeric(col, fmt)} AS c{i}"
+            f"{_pg_clause_to_spark(f'to_char({col}, {fmt!r})')} AS c{i}"
             for i, (col, fmt, _) in enumerate(cases)
         ]
         row = spark.sql(

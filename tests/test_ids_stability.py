@@ -7,6 +7,7 @@ partition-layout stability; the cache-pinned form does not)."""
 
 import os
 import tempfile
+from unittest import mock
 
 import pytest
 from pyspark.sql import functions as F
@@ -31,6 +32,29 @@ def _checked(df, start, expect_n):
 
 
 class TestSequentialIds:
+    def test_offsets_switch_at_the_partition_bound(self, spark):
+        """Up to ``_OFFSET_MAP_MAX_ENTRIES`` partitions the offsets attach
+        as a literal map; one partition more takes the broadcast join.
+        Both assign the same ids."""
+        import xcube_geodb_spark.operators.ids as ids_mod
+
+        df = spark.range(0, 500, 1, 6).select(F.col("id").alias("v"))
+
+        def run(bound):
+            with mock.patch.object(ids_mod, "_OFFSET_MAP_MAX_ENTRIES", bound):
+                out, _n, cached = assign_sequential_ids_counted(df, start=5)
+            try:
+                plan = out._jdf.queryExecution().executedPlan().toString()
+                return {r["v"]: r["id"] for r in out.collect()}, "Join" in plan
+            finally:
+                cached.unpersist()
+
+        at_bound, at_joins = run(6)
+        below, below_joins = run(5)
+        assert not at_joins and below_joins
+        assert below == at_bound
+        assert sorted(at_bound.values()) == list(range(5, 505))
+
     def test_narrow_plan(self, spark):
         df = spark.range(0, 1000, 1, 7).select(F.col("id").alias("v"))
         _checked(df, start=11, expect_n=1000)

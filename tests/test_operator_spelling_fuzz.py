@@ -9,7 +9,7 @@ the operand shapes users write, must either
 2. refuse loudly with a GeoDBError.
 
 Silent middle ground — emitted text that Spark's parser rejects, or
-that contains a leaked ``__geodb``/``__GEODB_LIT`` placeholder — fails
+that contains a leaked ``__geodb``/``__GEODB_`` placeholder — fails
 the harness. The spellings share prefixes and characters (``~``, ``~~``,
 ``~~*``, ``@>``, ``@@``, ``?``, ``?|``, ``&&``, ``<->``, ``#>``,
 ``->``), so every new rewrite joins this corpus.
@@ -208,6 +208,22 @@ CORPUS = [
     # literal contents must never confuse the scanners
     "name = 'x ~~ y && z ->> w'",
     "j ->> 'key with '' quote'",
+    # comments between tokens (quotes inside them pair with nothing)
+    "num -- it's a trailing comment",
+    "num /* it's */ ^ 2", "num ^ /* ok' */ 2",
+    "name /* it's */ ~ 'p' /* ok' */",
+    "num /* it's */ ::int", "j /* ' */ ->> 'a'",
+    "num + /* outer /* nested it's */ still */ 1",
+    "name ~~ -- line one\n'p%'",
+    "(num /* don't */ + 1)::numeric(10,2)",
+    # PG double-quoted identifiers (Spark backtick identifiers)
+    '"num"', '"num"::int', '"name" ~ \'p\'', '"name" ~~ \'p%\'',
+    '"num" ^ 2', '"j" ->> \'a\'', '"arr" @> array(\'a\')',
+    '"g" && "h"', 'st_distance("g"::geography, "h"::geography)',
+    '"na""me"', '"select"', 'upper("name") || \'-\'',
+    # E'..' and dollar-quoted literals become standard literals
+    "E'a\\tb' || name", "name ~ E'\\\\d+'", "E'it\\'s' = name",
+    "$$it's$$ || name", "$tag$a$$b$tag$ || name", "name ~ $$^a.*$$",
 ]
 
 
@@ -244,7 +260,7 @@ class TestOperatorSpellingFuzz:
             # the leak classes: unconsumed geography markers and
             # literal placeholders (emitted lambda variables like
             # __geodb_e are intentional, parse, and shadow nothing)
-            if "__geodb_geography__" in out or "__GEODB_LIT_" in out:
+            if "__geodb_geography__" in out or "__GEODB_" in out:
                 problems.append((clause, out, "marker/placeholder leak"))
                 continue
             try:
@@ -304,6 +320,10 @@ FROM_CORPUS = [
     "fuzz_t, unnest(arr, arr)",
     "fuzz_t, json_each_text(j) AS e(k)",
     "fuzz_t, string_to_table(name, name) p",
+    # comments and quoted identifiers in the FROM clause
+    "fuzz_t /* it's */, unnest(arr) u(x) -- don't",
+    '"fuzz_t", unnest("arr") AS "u"("x")',
+    "fuzz_t, string_to_table(name, $$-$$) AS st3(p)",
 ]
 
 
@@ -319,7 +339,7 @@ class TestFromClauseFuzz:
                 sql = build_pg_sql(table, select="*")
             except GeoDBError:
                 continue  # loud refusal is a valid outcome
-            if "__geodb_geography__" in sql or "__GEODB_LIT_" in sql:
+            if "__geodb_geography__" in sql or "__GEODB_" in sql:
                 problems.append((table, sql, "marker/placeholder leak"))
                 continue
             try:

@@ -454,6 +454,30 @@ def quarters(spark, tmp_path_factory):
 STREET = (0.2, 0.2, 0.24, 0.23)
 
 
+@pytest.mark.parametrize("lane", ["driver", "spark"])
+def test_client_map_reads_take_one_manifest_snapshot(quarters, lane):
+    """A client bbox, count or knn read parses the manifest once: the SRID
+    for CRS alignment and for ``attrs["crs"]`` comes from the snapshot the
+    read prunes."""
+    cat = quarters.catalog
+    reads = {
+        "bbox": lambda: quarters.get_collection_by_bbox(
+            "q", STREET, "intersects", database=DB),
+        "bbox 3857": lambda: quarters.get_collection_by_bbox(
+            "q", (0, 0, 50000, 50000), "intersects", bbox_crs=3857, database=DB),
+        "count": lambda: quarters.count_collection_by_bbox(
+            "q", STREET, "intersects", database=DB),
+        "knn": lambda: quarters.get_collection_knn("q", (0.3, 0.3), k=3, database=DB),
+    }
+    with driver_bound(dml.DRIVER_BYTES if lane == "driver" else 0):
+        for name, read in reads.items():
+            with mock.patch.object(cat, "meta", wraps=cat.meta) as meta:
+                out = read()
+            assert meta.call_count == 1, name
+            if isinstance(out, pd.DataFrame):
+                assert out.attrs["crs"] == "EPSG:4326", name
+
+
 def test_small_pruned_reads_take_the_driver_lane(quarters):
     for where in (None, "id>-1", "v >= 10 AND v < 150"):
         f = quarters.get_collection_by_bbox("q", STREET, "intersects", where=where, database=DB)
@@ -545,35 +569,51 @@ def test_read_over_the_bound_takes_the_spark_lane(quarters):
 def test_out_of_range_timestamps_read_on_both_lanes(spark, tmp_path):
     """``toPandas`` cannot convert a timestamp outside datetime64[ns]; such
     a column comes back as ``datetime`` cells, every other column as
-    before, on either lane and from driver- and Spark-written files."""
+    before, on either lane and from driver-, Spark- and pandas-written
+    files. A date outside that range commits from pandas too."""
     c = GeoDBSparkClient(spark, warehouse=str(tmp_path / "wh"), user=DB)
-    c.create_collection("old", {"ts": "timestamp", "ok": "timestamp", "v": "int"}, database=DB)
+    c.create_collection(
+        "old", {"ts": "timestamp", "ok": "timestamp", "v": "int", "d": "date"}, database=DB
+    )
     schema = c.catalog.meta("old", DB).spark_schema(include_system=True)
     wide = [dt.datetime(1500, 1, 1), dt.datetime(2300, 1, 1, 12, 30), None]
     ok = [dt.datetime(2000, 1, 1), None, dt.datetime(2001, 2, 3, 4, 5, 6)]
+    days = [dt.date(1500, 1, 1), dt.date(2300, 1, 1), None]
     for local, first in ((True, 1), (False, 4)):  # driver- and Spark-written
         rows = [
             (first + i, None, None, to_wkb(parse_wkt(f"POINT ({i} {i})"), srid=0),
-             wide[i], ok[i], i, float(i), float(i), float(i), float(i))
+             wide[i], ok[i], i, days[i], float(i), float(i), float(i), float(i))
             for i in range(3)
         ]
         c.catalog.commit_version(
             "old", DB, spark.createDataFrame(rows, schema), max_id=first + 2, local_batch=local
         )
+    # and from pandas, where the wide instants cannot be datetime64[ns]
+    c.insert_into_collection(
+        "old",
+        pd.DataFrame({
+            "geometry": [f"POINT ({i} {i})" for i in range(3)],
+            "ts": ["1500-01-01", "2300-01-01 12:30", None],
+            "ok": ok, "v": [0, 1, 2], "d": ["1500-01-01", days[1], None],
+        }),
+        database=DB,
+    )
     got = c.get_collection("old", database=DB).sort_values("id", ignore_index=True)
     assert got["ts"].dtype == object
-    assert got["ts"].tolist() == wide * 2
+    assert got["ts"].tolist() == wide * 3
     assert got["ok"].dtype == "datetime64[ns]"
     assert got["v"].dtype == np.int64
+    assert got["d"].tolist() == days * 3
     lane = c.get_collection_by_bbox("old", (0, 0, 5, 5), "intersects", database=DB)
     assert lane.attrs["read"]["lane"] == "driver"
     with spark_lane():
         on_spark = c.get_collection_by_bbox("old", (0, 0, 5, 5), "intersects", database=DB)
     assert on_spark.attrs["read"]["lane"] == "spark"
     _same(lane, on_spark)
-    assert lane["ts"].tolist() == wide * 2
+    assert lane["ts"].tolist() == wide * 3
     assert lane["ok"].dtype == "datetime64[ns]"
-    assert lane["ok"].isna().tolist() == [False, True, False] * 2
+    assert lane["ok"].isna().tolist() == [False, True, False] * 3
+    assert lane["d"].tolist() == days * 3
 
 
 # -- one collect per get_collection_pg read -------------------------------------

@@ -427,3 +427,132 @@ def test_value_differential(spark):
         f"{e!r}: engine={sv!r} duckdb={dv!r}" for e, sv, dv in mismatches[:25]
     )
     assert len(kept) > 400  # the grid stays meaningfully sized
+
+
+
+def _grid_exprs() -> list[str]:
+    exprs = []
+    for template, pools in GRID:
+        combos = [[]]
+        for pool in pools:
+            combos = [c + [op] for c in combos for op in pool]
+        exprs += [template.format(*ops) for ops in combos]
+    return exprs
+
+
+# comments holding an unpaired quote: a quote-splitting shim reads the
+# text between two of them as a literal
+COMMENTS = [" /* it's */ ", " -- it's\n", " /* a /* nested ' */ b */ "]
+
+
+def _commented(expr: str, i: int) -> str | None:
+    """``expr`` with a comment in place of one of its blanks outside
+    string literals (the ``i``-th, cyclically); None without a blank."""
+    spaces, quotes = [], 0
+    for at, ch in enumerate(expr):
+        quotes += ch == "'"
+        if ch == " " and quotes % 2 == 0:
+            spaces.append(at)
+    if not spaces:
+        return None
+    at = spaces[i % len(spaces)]
+    return expr[:at] + COMMENTS[i % len(COMMENTS)] + expr[at + 1:]
+
+
+def _quoted_columns(expr: str) -> str:
+    """Double-quote every column name of an AGG/WIN grid expression."""
+    return re.sub(r"(?<!')\b([kvs])\b(?!')", r'"\1"', expr)
+
+
+def _engine_values(spark, exprs: list[str], source: str = "") -> list[list]:
+    """The shim's translations of ``exprs``, run in one SELECT over
+    ``source``: each expression's values as strings, row by row."""
+    sel = ", ".join(
+        f"CAST(({_pg_clause_to_spark(e)}) AS STRING) AS c{i}"
+        for i, e in enumerate(exprs)
+    )
+    rows = spark.sql(f"SELECT {sel} {source}").collect()
+    return [[r[i] for r in rows] for i in range(len(exprs))]
+
+
+def _translates(expr: str) -> bool:
+    try:
+        _pg_clause_to_spark(expr)
+    except GeoDBError:
+        return False  # refused: the spelling fuzz owns this
+    return True
+
+
+def test_comment_and_quoted_identifier_spellings_keep_values(spark):
+    """Metamorphic: a comment holding a ' between two tokens, or a
+    double-quoted column name, must not change the engine's value.
+    DuckDB reads both spellings natively, so where the expression needs
+    no oracle replay (_duck_sql) DuckDB must agree with them too."""
+    aggs, wins = f"FROM {AGG_TABLE}", f"FROM {AGG_TABLE} ORDER BY k"
+    cases = {"": [], aggs: [], wins: []}
+    for i, e in enumerate(_grid_exprs()):
+        cases[""].append((e, _commented(e, i)))
+    for i, t in enumerate(AGG_GRID + WIN_GRID):
+        for e in ([t.format(*([c] * t.count("{}"))) for c in AGG_COLS]
+                  if "{}" in t else [t]):
+            q = _quoted_columns(e)
+            cases[wins if "OVER" in t else aggs] += [(e, q), (e, _commented(q, i))]
+    con = duckdb.connect()
+    mismatches, n = [], 0
+    for source, pairs in cases.items():
+        pairs = [(p, q) for p, q in pairs if q is not None and _translates(p)]
+        n += len(pairs)
+        for lo in range(0, len(pairs), 80):
+            batch = pairs[lo: lo + 80]
+            plain = _engine_values(spark, [p for p, _ in batch], source)
+            spelled = _engine_values(spark, [q for _, q in batch], source)
+            for (p, q), vp, vq in zip(batch, plain, spelled):
+                if vq != vp:
+                    mismatches.append((q, vq, vp))
+                    continue
+                if _duck_sql(p) != p:
+                    continue  # DuckDB deviates from PG here: no oracle
+                try:
+                    dv = con.execute(f"SELECT {q} AS v {source}").fetchall()
+                except duckdb.Error:
+                    continue
+                dv = [
+                    d if d is None or isinstance(d, (int, float, bool))
+                    else str(d) for (d,) in dv
+                ]
+                if not all(_close(a, b) for a, b in zip(vq, dv)):
+                    mismatches.append((q, vq, dv))
+    assert n > 500
+    assert not mismatches, "\n".join(
+        f"{e!r}: engine={v!r} expected={w!r}" for e, v, w in mismatches[:25]
+    )
+
+
+# E'..' escapes and dollar quoting, with the values PG gives
+ESCAPED_LITERALS = [
+    (r"E'a\tb'", "a\tb"),
+    (r"E'it\'s'", "it's"),
+    (r"E'it''s'", "it's"),
+    (r"E'\x41\101B'", "AAB"),
+    (r"E'a\\b'", "a\\b"),
+    (r"e'\n'", "\n"),
+    ("$$it's$$", "it's"),
+    ("$$a\\b$$", "a\\b"),
+    ("$tag$a$$b$tag$", "a$$b"),
+    ("$q$ -- not a comment $q$", " -- not a comment "),
+    ("'/* not a comment */'", "/* not a comment */"),
+]
+
+
+def test_escape_and_dollar_literals(spark):
+    """E'..' and $tag$..$tag$ literals keep PG's value through the shim,
+    checked against hand-written values and against DuckDB."""
+    con = duckdb.connect()
+    got = _engine_values(spark, [lit for lit, _ in ESCAPED_LITERALS])
+    for (lit, want), v in zip(ESCAPED_LITERALS, got):
+        assert v == [want], lit
+        assert con.execute(f"SELECT {lit}").fetchone()[0] == want, lit
+    # the literal's value feeds the rewrites: a regex from E'..'
+    assert _engine_values(
+        spark, [r"'a12' ~ E'\\d+'", "'x' || $$'$$ || 'y'"]
+    ) == [["true"], ["x'y"]]

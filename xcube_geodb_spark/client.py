@@ -592,7 +592,6 @@ class GeoDBSparkClient:
         wsg84_order: str = "lon_lat",
     ) -> pd.DataFrame:
         db = self._db(database)
-        srid = self.catalog.get_collection_srid(collection, db)
         args = (self.catalog, collection, tuple(bbox))
         kw = dict(
             comparison_mode=comparison_mode,
@@ -609,8 +608,10 @@ class GeoDBSparkClient:
                 *args, limit=limit or None, offset=offset or None, **kw
             )
             refine = None
+            srid = self.catalog.get_collection_srid(collection, db)
         else:
             df, refine = spatial.bbox_candidates(*args, **kw)
+            srid = df.srid
         self.events.log("read", f"Collection {db}_{collection} read by bbox")
         return self._collect_geo(df, srid, refine)
 
@@ -626,7 +627,6 @@ class GeoDBSparkClient:
         """Exact k nearest features to a point with their distances
         (engine superset: the PostGIS ``ORDER BY geom <-> q`` idiom)."""
         db = self._db(database)
-        srid = self.catalog.get_collection_srid(collection, db)
         df, refine = spatial.knn_candidates(
             self.catalog,
             collection,
@@ -637,7 +637,7 @@ class GeoDBSparkClient:
             wsg84_order=wsg84_order,
         )
         self.events.log("read", f"Collection {db}_{collection} knn query")
-        return self._collect_geo(df, srid, refine)
+        return self._collect_geo(df, df.srid, refine)
 
     def spatial_join_collections(
         self,

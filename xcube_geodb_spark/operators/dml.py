@@ -21,6 +21,7 @@ that's the difference between rewriting a partition and rewriting the table.
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 
 import numpy as np
@@ -100,12 +101,41 @@ def _pandas_to_spark(catalog: GeoDBCatalog, pdf: pd.DataFrame, schema) -> DataFr
         if f.name in pdf.columns
     ]
     datetimes = {
-        f.name: pd.to_datetime(pdf[f.name])
+        f.name: _datetime_column(pdf[f.name])
         for f in fields
         if isinstance(f.dataType, (T.DateType, T.TimestampType))
     }
     pdf = pdf.assign(**datetimes)[[f.name for f in fields]]
     return catalog.spark.createDataFrame(pdf, T.StructType(fields))
+
+
+def _datetime_column(s: pd.Series) -> pd.Series:
+    """``s`` as datetime64[ns]; when a value lies outside that range
+    (before 1677 or after 2262), as Python ``datetime`` cells instead,
+    which Spark's date and timestamp types hold as they are."""
+    try:
+        return pd.to_datetime(s)
+    except (pd.errors.OutOfBoundsDatetime, OverflowError):
+        return s.map(_datetime_cell).astype(object)
+
+
+def _datetime_cell(v):
+    if v is None or v is pd.NaT or isinstance(v, float) and np.isnan(v):
+        return None
+    if isinstance(v, dt.date):  # datetime and date alike
+        return v
+    if isinstance(v, np.datetime64):
+        return v.astype("datetime64[us]").item()
+    try:
+        return pd.Timestamp(v).to_pydatetime()
+    except (pd.errors.OutOfBoundsDatetime, OverflowError):
+        try:
+            return dt.datetime.fromisoformat(str(v))
+        except ValueError:
+            raise GeoDBError(
+                f"Cannot read {v!r} as a date or timestamp outside "
+                "1677-2262; give it in ISO format or as a datetime"
+            ) from None
 
 
 def prepare_values_df(

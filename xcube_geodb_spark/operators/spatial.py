@@ -87,16 +87,10 @@ Refine = Callable[[pd.DataFrame], pd.DataFrame]
 
 
 def _aligned_bbox(
-    catalog: GeoDBCatalog,
-    collection: str,
-    database: str,
-    bbox: Bbox,
-    bbox_crs,
-    wsg84_order: str = "lon_lat",
+    srid: int, bbox: Bbox, bbox_crs, wsg84_order: str = "lon_lat"
 ) -> Bbox:
     """CRS auto-alignment: if the query bbox CRS differs from the collection
     SRID, reproject the bbox first (``geodb.py:1630-1637``)."""
-    srid = catalog.get_collection_srid(collection, database)
     crs = check_crs(bbox_crs)
     if crs != srid:
         return transform_bbox_crs(bbox, crs, srid, wsg84_order=wsg84_order)
@@ -187,7 +181,8 @@ def get_collection_by_bbox(
     a DataFrame: the exact predicate runs in a pandas UDF and the sort in
     Spark. Client reads without limit/offset use :func:`bbox_candidates`
     instead, which refines and sorts on the driver."""
-    bbox = _aligned_bbox(catalog, collection, database, bbox, bbox_crs, wsg84_order)
+    srid = catalog.get_collection_srid(collection, database)
+    bbox = _aligned_bbox(srid, bbox, bbox_crs, wsg84_order)
     df = _bbox_filtered(catalog, collection, database, bbox, comparison_mode, where, op)
     df = df.drop(*SYSTEM_COLUMNS).orderBy("id")
     if offset:
@@ -204,11 +199,11 @@ class Candidates:
     table, read from the kept files with ``pyarrow``; on the ``"spark"``
     lane they are a Spark DataFrame over the same files. Both answer a
     collecting caller as a DataFrame does: ``schema``, ``toArrow()``,
-    ``toPandas()``."""
+    ``toPandas()``. ``srid`` is the SRID of the manifest snapshot read."""
 
-    def __init__(self, spark, schema, decision: dict, df=None, table=None):
+    def __init__(self, spark, schema, decision: dict, srid: int, df=None, table=None):
         self.spark, self.schema, self.decision = spark, schema, decision
-        self.df, self.table = df, table
+        self.srid, self.df, self.table = srid, df, table
 
     def toArrow(self):
         return self.table if self.df is None else self.df.toArrow()
@@ -326,12 +321,12 @@ class _PrunedRead:
         if self.driver:
             schema = T.StructType([f for f in self.schema.fields if f.name not in drop])
             table = self.read(spec, [f.name for f in schema.fields], also)
-            return Candidates(spark, schema, self.decision, table=table)
+            return Candidates(spark, schema, self.decision, self.m.srid, table=table)
         df = self.frame()
         for cond in (*spark_filters, *([F.expr(spec.sql())] if spec else [])):
             df = df.filter(cond)
         df = df.drop(*drop)
-        return Candidates(spark, df.schema, self.decision, df=df)
+        return Candidates(spark, df.schema, self.decision, self.m.srid, df=df)
 
 
 def bbox_candidates(
@@ -365,8 +360,9 @@ def bbox_candidates(
     the rows whose envelope proves they intersect the box."""
     if _checked_op(comparison_mode, op) == "OR" and where:
         raise GeoDBError("bbox_candidates AND-s `where`; use get_collection_by_bbox")
-    bbox = _aligned_bbox(catalog, collection, database, bbox, bbox_crs, wsg84_order)
-    read, spec, rest = _bbox_read(catalog, collection, database, comparison_mode, bbox, where)
+    m = catalog.meta(collection, database)
+    bbox = _aligned_bbox(m.srid, bbox, bbox_crs, wsg84_order)
+    read, spec, rest = _bbox_read(catalog, collection, database, m, comparison_mode, bbox, where)
     if comparison_mode == "disjoint":
         cands = read.candidates(
             spec, spark_filters=[~envelope_decides(bbox)[0], *rest],
@@ -386,13 +382,13 @@ def bbox_candidates(
     return cands, refine
 
 
-def _bbox_read(catalog, collection, database, mode: str, bbox: Bbox, where):
-    """``(read, spec, rest)`` of a bbox read or count: ``spec`` is the
-    envelope pre-filter of ``mode`` AND the terms of ``where``; ``rest`` is
-    ``[F.expr(where)]`` when the spec cannot say ``where`` (then only the
-    Spark lane reads); ``read`` holds the files ``spec`` keeps and its
-    lane."""
-    read = _PrunedRead(catalog, collection, database, catalog.meta(collection, database))
+def _bbox_read(catalog, collection, database, m, mode: str, bbox: Bbox, where):
+    """``(read, spec, rest)`` of a bbox read or count of manifest snapshot
+    ``m``: ``spec`` is the envelope pre-filter of ``mode`` AND the terms of
+    ``where``; ``rest`` is ``[F.expr(where)]`` when the spec cannot say
+    ``where`` (then only the Spark lane reads); ``read`` holds the files
+    ``spec`` keeps and its lane."""
+    read = _PrunedRead(catalog, collection, database, m)
     spec = envelope_terms(mode, bbox) or Conjunction()
     terms = where_terms(where, read.schema)
     rest = [F.expr(where)] if terms is None else []
@@ -430,12 +426,13 @@ def count_collection_by_bbox(
     A count returns an int, so pass a dict as ``decision`` to see the
     read's decision (what a frame's ``attrs["read"]`` holds)."""
     op = _checked_op(comparison_mode, op)
-    bbox = _aligned_bbox(catalog, collection, database, bbox, bbox_crs, wsg84_order)
+    m = catalog.meta(collection, database)
+    bbox = _aligned_bbox(m.srid, bbox, bbox_crs, wsg84_order)
     if comparison_mode not in ("intersects", "disjoint") or (where and op == "OR"):
         return _bbox_filtered(
             catalog, collection, database, bbox, comparison_mode, where, op
         ).count()
-    read, spec, rest = _bbox_read(catalog, collection, database, comparison_mode, bbox, where)
+    read, spec, rest = _bbox_read(catalog, collection, database, m, comparison_mode, bbox, where)
     if read.driver:
         # the same split in pyarrow: only the boundary rows reach the kernel
         table = read.read(spec, ["geometry", *SYSTEM_COLUMNS])
@@ -523,16 +520,10 @@ def get_collection_bbox(
 
 
 def _knn_point(
-    catalog: GeoDBCatalog,
-    collection: str,
-    point: tuple[float, float],
-    database: str,
-    point_crs,
-    wsg84_order: str,
+    srid: int, point: tuple[float, float], point_crs, wsg84_order: str
 ) -> tuple[float, float]:
-    """The query point in the collection's CRS."""
+    """The query point in the collection's CRS (``srid``)."""
     if point_crs is not None:
-        srid = catalog.get_collection_srid(collection, database)
         crs = check_crs(point_crs)
         if crs != srid:
             x0, y0, _, _ = transform_bbox_crs(
@@ -594,7 +585,8 @@ def _knn_candidates(
     """Steps 1-2 of :func:`get_knn`: ``(candidates, query point)`` — the
     rows whose distance lower bound is within the k-th smallest upper
     bound, system columns kept, and the point in the collection's CRS."""
-    q = _knn_point(catalog, collection, point, database, point_crs, wsg84_order)
+    srid = catalog.get_collection_srid(collection, database)
+    q = _knn_point(srid, point, point_crs, wsg84_order)
     df = catalog.load_df(collection, database, include_system=True)
     if k <= 0:
         return df.limit(0), q
@@ -695,9 +687,9 @@ def knn_candidates(
     smallest), keeps the rows within it, computes the same exact distances
     on the driver, orders by ``(dist, id)`` as ``get_knn`` does (NULL last)
     and keeps ``k`` — the frame ``get_knn(...).toPandas()`` returns."""
-    q = _knn_point(catalog, collection, point, database, point_crs, wsg84_order)
-    k = int(k)
     m = catalog.meta(collection, database)
+    q = _knn_point(m.srid, point, point_crs, wsg84_order)
+    k = int(k)
     read = _PrunedRead(catalog, collection, database, m)
     kth = _knn_threshold(read, q, k)
     spec = Conjunction()  # without a threshold: every row of every file
