@@ -192,6 +192,24 @@ class TestLifecycle:
         )
         assert list(df["id"]) == [1, 3]
 
+    def test_pg_distinct_agg_order_by_resolves_quoted_names(self, client):
+        # "s" and s name one column in PG, "S" another: DISTINCT + ORDER BY
+        # compares the resolved names, not the spellings
+        client.create_collection("tags", {"s": "text"})
+        client.insert_into_collection(
+            "tags",
+            pd.DataFrame({"geometry": ["POINT (0 0)"] * 4, "s": ["b", "a", "b", None]}),
+        )
+        for arg, key in (('"s"', "s"), ("s", '"s"'), ("S", "s")):
+            df = client.get_collection_pg(
+                "tags", select=f"string_agg(DISTINCT {arg}, '|' ORDER BY {key}) AS j"
+            )
+            assert df["j"].tolist() == ["a|b"], (arg, key)
+        with pytest.raises(GeoDBError, match="must be x itself"):
+            client.get_collection_pg(
+                "tags", select="string_agg(DISTINCT \"S\", '|' ORDER BY s) AS j"
+            )
+
     def test_pg_line_comments_end_at_the_clause(self, client, land_use):
         # a -- comment ends its own clause: the ORDER BY and LIMIT after
         # it must survive (the statement is built on one line)

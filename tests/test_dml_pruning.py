@@ -512,6 +512,14 @@ class TestBloomIndex:
         assert info["bloom_columns"] == ["name"]
         assert info["files_scanned"] == 1
 
+    def test_explain_counts_the_files_a_read_keeps(self, bloom_client):
+        from xcube_geodb_spark.operators.scan import explain_scan
+
+        for q in ("name=eq.zeta3", "name=eq.nothere", "name=in.(alpha1,alpha2)", "name=eq.zeta1"):
+            read = bloom_client.get_collection("b", q).attrs["read"]
+            info = explain_scan(bloom_client.catalog, "b", q, database="pruner")
+            assert info["files_scanned"] == read["files_kept"], q
+
     def test_optimize_rebuilds_blooms(self, bloom_client):
         from xcube_geodb_spark.operators.scan import get_collection
 
@@ -555,6 +563,20 @@ class TestExplainScan:
         assert info["constraints"] == [
             {"column": "v", "op": "gte", "literal": 100}
         ]
+
+    @pytest.mark.parametrize("q", [
+        "id=eq.3", "v=gte.100", "v=eq.50", "v=eq.5", "or=(v.eq.5,v.eq.105)",
+        TestAndGroupPruning.GROUP, TestAndGroupPruning.PAIRS, None,
+    ])
+    def test_explain_counts_the_files_a_read_keeps(self, client, chunked, q):
+        """The files ``explain_scan`` reports are the files a client
+        grammar read keeps (``attrs["read"]``), on either lane."""
+        from xcube_geodb_spark.operators.scan import explain_scan
+
+        read = client.get_collection(chunked, q).attrs["read"]
+        info = explain_scan(client.catalog, chunked, q, database="pruner")
+        assert info["files_scanned"] == read["files_kept"]
+        assert info["files_total"] == read["files_total"]
 
     def test_explain_unfiltered_scans_all(self, client, chunked):
         from xcube_geodb_spark.operators.scan import explain_scan

@@ -160,6 +160,23 @@ class TestFtsBloomPruning:
             assert ex["files_skipped"] == 0, q
 
 
+@pytest.mark.parametrize("q", [
+    "text=fts(english).volcano", "text=fts(english).queries%26merged", "text=fts.volcano",
+    "text=fts(english).volcano|aurora", "text=not.fts(english).volcano",
+    "text=wfts(english).erupting basalt", "text=phfts(english).borealis shimmering",
+    "text=fts(english).!volcano", "text=fts(english).aurora%26-volcano",
+    "text=wfts(english).aurora !volcano", "n=eq.5",
+])
+def test_explain_counts_the_files_a_read_keeps(spark, english_cat, q):
+    """The files ``explain_scan`` reports are the files a client grammar
+    read keeps (``attrs["read"]``)."""
+    from xcube_geodb_spark.client import GeoDBSparkClient
+
+    client = GeoDBSparkClient(spark, warehouse=english_cat.warehouse, user="fts", database="ftsdb")
+    read = client.get_collection("docs", q).attrs["read"]
+    assert explain_scan(english_cat, "docs", q, database="ftsdb")["files_scanned"] == read["files_kept"]
+
+
 class TestDictionaryCompatibility:
     def test_simple_index_prunes_raw_queries(self, simple_cat):
         ex = explain_scan(

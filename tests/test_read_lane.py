@@ -1,11 +1,13 @@
-"""Small client map reads prune files by their manifest envelopes and read
-the kept files on the driver with pyarrow (the driver lane); anything else
-reads them with Spark (the Spark lane). Both lanes build their filter from
-one spec (``udfs.Conjunction``) and hand an Arrow table to the same
+"""Small client map and grammar reads prune files by their manifest stats
+and read the kept files on the driver with pyarrow (the driver lane);
+anything else reads them with Spark (the Spark lane). Both lanes build
+their filter from one spec (``udfs.Conjunction`` for map reads, the parsed
+``filters.Query`` for grammar reads) and hand an Arrow table to the same
 conversion, refine and decode, so their frames must be equal, dtypes
-included. These tests check that over generated collections, pin the
-spec's three spellings against each other, and cover every exit to the
-Spark lane."""
+included. These tests check that over generated collections and
+predicates, check the driver lane metamorphically (NoREC, TLP), pin each
+spec's spellings against each other, and cover every exit to the Spark
+lane."""
 
 from __future__ import annotations
 
@@ -59,8 +61,10 @@ def test_envelope_sql_is_the_prefilter_text():
 def test_arrow_expression_follows_spark_nan_order(spark):
     """Spark orders NaN above every number and equal to NaN; pyarrow's
     plain comparison is IEEE (NaN compares false), so ``x >= 1`` there
-    drops a NaN row Spark keeps. The spec's expression keeps it."""
+    drops a NaN row Spark keeps. The spec's expression keeps it, and is
+    NULL exactly where Spark's term is."""
     import pyarrow.compute as pc
+    import pyarrow.dataset as ds
 
     values = [NAN, -INF, -1.0, 0.0, 1.0, 2.5, INF, None]
     table = pa.table({"x": pa.array(values, pa.float64()), "i": pa.array(range(8))})
@@ -75,16 +79,50 @@ def test_arrow_expression_follows_spark_nan_order(spark):
         for lit in (1.0, 0.0, INF, -INF, NAN)
     ]
     rows = df.select(
-        "i", *(F.expr(f"coalesce({s.sql()}, false)").alias(f"s{j}") for j, s in enumerate(specs))
-    ).collect()
+        "i", *(F.expr(s.sql()).alias(f"s{j}") for j, s in enumerate(specs))
+    ).orderBy("i").collect()
     for j, spec in enumerate(specs):
         want = sorted(r["i"] for r in rows if r[f"s{j}"])
         got = sorted(table.filter(spec.arrow({"x"}))["i"].to_pylist())
         assert got == want, spec.terms
+        # TRUE, FALSE and NULL where Spark's are, so a negation stays right
+        truth = ds.dataset(table).to_table(columns={"t": spec.arrow({"x"})})["t"].to_pylist()
+        assert truth == [r[f"s{j}"] for r in rows], spec.terms
     # a NaN envelope value passes the intersects pre-filter's `>=` terms
     nan_row = pa.table({c: [NAN] for c in ("__xmin", "__ymin", "__xmax", "__ymax")})
     spec = Conjunction([("__xmax", ">=", 0.0), ("__ymax", ">=", 0.0)])
     assert nan_row.filter(spec.arrow({"__xmax", "__ymax"})).num_rows == 1
+
+
+_TYPES = {
+    "id": T.LongType(), "v": T.IntegerType(), "x": T.DoubleType(), "r": T.FloatType(),
+    "s": T.StringType(), "b": T.BooleanType(), "ts": T.TimestampType(),
+    "tags": T.ArrayType(T.StringType()),
+}
+
+
+@pytest.mark.parametrize("query", [
+    "id=eq.5", "v=not.in.(1,2)", "x=gte.NaN", "x=lt.3", "x=in.(1,2.5,NaN)", "s=eq.0123",
+    "s=in.(a,\"b c\")", "b=is.true", "ts=is.null", "tags=is.null",
+    "not.or=(v.lt.1,and(x.gt.0,s.neq.a))", "order=x.desc.nullslast,s,id",
+])
+def test_arrow_lowering_covers(query):
+    from xcube_geodb_spark.filters import parse_query
+
+    assert parse_query(query).arrow(_TYPES) is not None
+
+
+@pytest.mark.parametrize("query", [
+    "v=eq.2.5", "v=eq.true", "id=eq.99999999999999999999", "x=eq.a", "s=like.a*", "s=ilike.a*",
+    "s=match.a", "s=fts.a", "tags=cs.{a}", "r=eq.1", "ts=gt.2020-01-01", "v=is.true",
+    "b=is.maybe", "s->>k=eq.1", "nope=eq.1", "v=in.1,2", "v=in.()",
+    "x=in.(1,2,3,4,5,6,7,8,9,10,11)", "or=(v.eq.1,s.like.a*)",
+])
+def test_arrow_lowering_refuses(query):
+    """Outside the subset the lowering is None: the read stays on Spark."""
+    from xcube_geodb_spark.filters import parse_query
+
+    assert parse_query(query).arrow(_TYPES) is None
 
 
 def test_envelope_decides_arrow_is_the_spark_split(spark):
@@ -283,7 +321,7 @@ def _history(client, coll, seed, batches=5, rows=30):
             "geometry": geoms,
             "v": pd.array([None if i % 7 == 3 else int(rng.integers(0, 50)) for i in range(n)], dtype="Int64"),
             "score": [
-                [NAN, INF, -INF, None][i % 4] if i % 5 == 0 else float(rng.uniform(-1, 3))
+                [NAN, INF, -INF, None, -0.0, 0.0][i % 6] if i % 5 == 0 else float(rng.uniform(-1, 3))
                 for i in range(n)
             ],
             "name": [None if i % 6 == 0 else f"n{b}{i}" for i in range(n)],
@@ -395,6 +433,7 @@ def _differential(spark, tmp_path, seed, batches, rows, nboxes, operator_bbox=Fa
     assert lane_used - {(w, "nothing") for w in WHERES} == (
         {(w, "driver") for w in WHERES[:-1]} | {(WHERES[-1], "spark")}
     )
+    _grammar_differential(client, coll, rng)
     pruned = False
     for key, got in lane.items():
         want = spark_out[key]
@@ -416,6 +455,102 @@ def _differential(spark, tmp_path, seed, batches, rows, nboxes, operator_bbox=Fa
     assert pruned
 
 
+# -- grammar reads -------------------------------------------------------------
+
+# leaves of the pyarrow lowering's subset over the `_history` columns: NULL
+# in every column, NaN, +-inf and -0.0 in `score`, `late` added mid-history
+_LEAVES = [
+    *(f"v.{op}.{k}" for op in ("eq", "neq", "gt", "gte", "lt", "lte") for k in (7, 20, 33)),
+    "v.in.(1,2,3,40)", "v.is.null",
+    *(f"score.{op}.{x}" for op in ("eq", "gt", "gte", "lt", "le")
+      for x in ("0.5", "-0.0", "NaN", "Infinity", "-Infinity")),
+    "score.neq.NaN", "score.in.(0.0,NaN,Infinity)", "score.is.null",
+    "name.eq.n12", "name.gt.n2", "name.lt.n1", 'name.in.(n10,n21,"n3 4")', "name.is.null",
+    "flag.is.true", "flag.is.false", "flag.is.null",
+    "late.gt.5", "late.is.null", "sm.lt.0", "i4.gte.10000", "ts.is.null",
+]
+_ORDER_KEYS = ["score", "v", "name", "flag", "sm", "late", "ts", "d", "r"]
+
+
+def _grammar_query(rng) -> str:
+    """A random filter of ``_LEAVES`` (nested ``and``/``or`` groups and
+    ``not.`` at every level), ordered by keys ending in ``id``, with a
+    limit or offset now and then."""
+
+    def leaf():
+        col, _, rest = str(rng.choice(_LEAVES)).partition(".")
+        return col, f"{'not.' if rng.random() < 0.3 else ''}{rest}"
+
+    def group(depth):
+        head = f"{'not.' if rng.random() < 0.3 else ''}{'and' if rng.random() < 0.5 else 'or'}"
+        return head, ",".join(member(depth) for _ in range(rng.integers(1, 4)))
+
+    def member(depth):
+        if depth < 2 and rng.random() < 0.35:
+            return "{}({})".format(*group(depth + 1))
+        return "{}.{}".format(*leaf())
+
+    parts = [
+        "{}=({})".format(*group(0)) if rng.random() < 0.5 else "{}={}".format(*leaf())
+        for _ in range(rng.integers(1, 3))
+    ]
+    keys = [str(k) for k in rng.choice(_ORDER_KEYS, rng.integers(0, 3), replace=False)]
+    order = [f"{k}{rng.choice(['', '.asc', '.desc'])}{rng.choice(['', '.nullsfirst', '.nullslast'])}"
+             for k in keys]
+    parts.append("order=" + ",".join([*order, f"id{rng.choice(['', '.desc'])}"]))
+    if rng.random() < 0.3:
+        parts.append(f"limit={rng.integers(0, 12)}")
+    if rng.random() < 0.2:
+        parts.append(f"offset={rng.integers(0, 8)}")
+    return "&".join(parts)
+
+
+# fixed reads: every case the lowering must spell out
+_GRAMMAR = [
+    "score=not.gt.0.5&order=id", "score=not.eq.NaN&order=id", "v=not.lt.20&order=id",
+    "not.and=(score.gte.0,v.lt.30)&order=id",
+    "or=(v.lt.5,and(score.gt.1,v.gte.30))&order=id.desc",
+    "and=(or(v.eq.3,score.eq.NaN),not.or(late.is.null,flag.is.false))&order=id",
+    "v=in.(1,2,3,40)&order=id", "score=in.(0.5,Infinity,NaN,-0.0)&order=id",
+    'name=in.(n10,n21,"n3 4")&order=id', "name=eq.n12&order=id", "name=gt.n2&order=name,id",
+    "late=is.null&order=id", "flag=is.true&order=id", "flag=not.is.false&order=id",
+    *(f"order=score{d}{n},id" for d in ("", ".asc", ".desc") for n in ("", ".nullsfirst", ".nullslast")),
+    "order=v.desc.nullsfirst,name.nullsfirst,id",
+    "v=gt.5&order=score.desc,id&limit=7&offset=3", "order=id&offset=200",
+]
+
+
+def _grammar_reads(client, coll, queries):
+    out = {}
+    for q in queries:
+        out[q] = client.get_collection(coll, q, database=DB)
+    out["limit arg"] = client.get_collection(coll, "order=score,id", database=DB, limit=4, offset=2)
+    return out
+
+
+def _grammar_differential(client, coll, rng):
+    """Grammar reads on both lanes: equal frames, dtypes included; every
+    one of these takes the driver lane unless forced onto Spark. A lookup
+    keeps one file and needs no order; an unordered read of several files,
+    a filter outside the lowering and a dropped column take Spark."""
+    first_id = int(client.get_collection(coll, "order=id&limit=1", database=DB)["id"][0])
+    queries = [*_GRAMMAR, *(_grammar_query(rng) for _ in range(40)), f"id=eq.{first_id + 3}"]
+    lane = _grammar_reads(client, coll, queries)
+    with spark_lane():
+        on_spark = _grammar_reads(client, coll, queries)
+    for key, got in lane.items():
+        assert got.attrs["read"]["lane"] == "driver", key
+        # a read that keeps no file fits any bound
+        assert _lane(None, on_spark[key].attrs["read"])[1] in ("spark", "nothing"), key
+        _same(got, on_spark[key])
+    assert lane[f"id=eq.{first_id + 3}"].attrs["read"]["files_kept"] == 1
+    for q in ("late=gt.5", "name=like.n1*&order=id", "ts=gt.2020-01-05&order=id", "v=eq.2.5&order=id"):
+        got = client.get_collection(coll, q, database=DB)
+        assert got.attrs["read"]["lane"] == "spark", q
+    with pytest.raises(Exception, match="w"):
+        client.get_collection(coll, "w=eq.1&order=id", database=DB)
+
+
 def test_lane_equals_spark_lane(spark, tmp_path):
     _differential(spark, tmp_path, seed=1, batches=5, rows=25, nboxes=3)
 
@@ -424,6 +559,49 @@ def test_lane_equals_spark_lane(spark, tmp_path):
 @pytest.mark.parametrize("seed", [2, 3, 4])
 def test_lane_equals_spark_lane_sweep(spark, tmp_path, seed):
     _differential(spark, tmp_path, seed=seed, batches=6, rows=60, nboxes=6, operator_bbox=True)
+
+
+def test_grammar_reads_are_metamorphic_on_the_driver(spark, tmp_path):
+    """On the driver lane, over a generated history: the pruned read equals
+    the read of every file (NoREC), and a read splits into the reads of
+    ``p``, ``not p`` and ``p IS NULL`` for a leaf ``p`` (TLP)."""
+    from xcube_geodb_spark.operators import pruning
+
+    client = GeoDBSparkClient(spark, warehouse=str(tmp_path / "wh"), user=DB)
+    rng = _history(client, "m", seed=7, batches=5, rows=25)
+    ids = client.get_collection("m", "order=id", database=DB)["id"].tolist()
+    a, b = ids[len(ids) // 5], ids[len(ids) // 2]
+    pruning_queries = [
+        f"id=gte.{a}&id=lte.{b}&order=id", f"and=(id.gt.{a},v.lt.30,or(score.gt.1,flag.is.true))&order=id",
+        f"id=in.({a},{b},{ids[-1]})&order=v.desc,id", "late=gte.3&score=lt.NaN&order=score,id",
+        *(_grammar_query(rng) + f"&id=lte.{b}" for _ in range(10)),
+    ]
+    for q in pruning_queries:
+        pruned = client.get_collection("m", q, database=DB)
+        with mock.patch.object(pruning, "query_files", lambda *a, **k: None):
+            every = client.get_collection("m", q, database=DB)
+        assert pruned.attrs["read"]["lane"] == every.attrs["read"]["lane"] == "driver", q
+        assert every.attrs["read"]["files_kept"] == every.attrs["read"]["files_total"]
+        _same(pruned, every)
+    assert any(
+        client.get_collection("m", q, database=DB).attrs["read"]["files_kept"] < len(
+            client.catalog.meta("m", DB).files)
+        for q in pruning_queries
+    )
+
+    def got(q):
+        f = client.get_collection("m", q, database=DB)
+        assert f.attrs["read"]["lane"] == "driver", q
+        return f["id"].tolist()
+
+    for q in [*(_grammar_query(rng).split("&order=")[0] for _ in range(6)), "v=gte.0"]:
+        for leaf in rng.choice(_LEAVES, 6, replace=False):
+            col, _, cond = str(leaf).partition(".")
+            whole = got(f"{q}&order=id")
+            parts = [got(f"{q}&{col}={c}&order=id") for c in (cond, f"not.{cond}", "is.null")]
+            if cond == "is.null":  # `p IS NULL` of an IS NULL test is never true
+                parts[2] = []
+            assert sorted(parts[0] + parts[1] + parts[2]) == whole, (q, leaf)
 
 
 # -- exits to the Spark lane --------------------------------------------------
@@ -454,13 +632,31 @@ def quarters(spark, tmp_path_factory):
 STREET = (0.2, 0.2, 0.24, 0.23)
 
 
+def _jobs(spark, fn) -> int:
+    """The Spark jobs ``fn`` runs (``statusTracker``, listener bus drained)."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = set(sc.statusTracker().getJobIdsForGroup(None))
+    fn()
+    bus.waitUntilEmpty()
+    return len(set(sc.statusTracker().getJobIdsForGroup(None)) - before)
+
+
 @pytest.mark.parametrize("lane", ["driver", "spark"])
 def test_client_map_reads_take_one_manifest_snapshot(quarters, lane):
-    """A client bbox, count or knn read parses the manifest once: the SRID
-    for CRS alignment and for ``attrs["crs"]`` comes from the snapshot the
-    read prunes."""
+    """A client bbox, count, knn or grammar read parses the manifest once:
+    the SRID for CRS alignment and for ``attrs["crs"]`` comes from the
+    snapshot the read prunes. So does a count in a mode the manifest does
+    not prune, on a fresh client (a cold ``load_df`` memo)."""
     cat = quarters.catalog
+    fresh = GeoDBSparkClient(quarters.spark, warehouse=cat.warehouse, user=DB)
     reads = {
+        "lookup": lambda: quarters.get_collection("q", "id=eq.5", database=DB),
+        "filter": lambda: quarters.get_collection("q", "v=lt.3&order=id", database=DB),
+        "all": lambda: quarters.get_collection("q", database=DB),
+        "contains count": lambda: fresh.count_collection_by_bbox(
+            "q", STREET, "contains", database=DB),
         "bbox": lambda: quarters.get_collection_by_bbox(
             "q", STREET, "intersects", database=DB),
         "bbox 3857": lambda: quarters.get_collection_by_bbox(
@@ -471,9 +667,11 @@ def test_client_map_reads_take_one_manifest_snapshot(quarters, lane):
     }
     with driver_bound(dml.DRIVER_BYTES if lane == "driver" else 0):
         for name, read in reads.items():
-            with mock.patch.object(cat, "meta", wraps=cat.meta) as meta:
+            with mock.patch.object(cat, "meta", wraps=cat.meta) as meta, mock.patch.object(
+                fresh.catalog, "meta", wraps=fresh.catalog.meta
+            ) as fresh_meta:
                 out = read()
-            assert meta.call_count == 1, name
+            assert meta.call_count + fresh_meta.call_count == 1, name
             if isinstance(out, pd.DataFrame):
                 assert out.attrs["crs"] == "EPSG:4326", name
 
@@ -493,6 +691,30 @@ def test_small_pruned_reads_take_the_driver_lane(quarters):
     f = quarters.get_collection_knn("q", (0.25, 0.25), k=5, database=DB)
     assert f.attrs["read"]["lane"] == "driver"
     assert f.attrs["read"]["files_kept"] < f.attrs["read"]["files_total"]
+
+
+def test_grammar_reads_on_the_driver_run_no_job(spark, quarters):
+    """A lookup and an ordered filter read on the driver with no Spark
+    job; on the Spark lane each is one job. An unordered read that keeps
+    more than one file takes the Spark lane."""
+    reads = {
+        "lookup": lambda: quarters.get_collection("q", "id=eq.5", database=DB),
+        "ordered filter": lambda: quarters.get_collection(
+            "q", "or=(v.eq.7,v.eq.8)&order=id&limit=5", database=DB),
+    }
+    for name, read in reads.items():
+        out = {}
+        assert _jobs(spark, lambda: out.setdefault("f", read())) == 0, name
+        assert out["f"].attrs["read"]["lane"] == "driver" and len(out["f"]) > 0, name
+        with spark_lane():
+            assert _jobs(spark, lambda: out.update(s=read())) == 1, name
+        assert out["s"].attrs["read"]["lane"] == "spark", name
+        _same(out["f"], out["s"])
+    lookup = quarters.get_collection("q", "id=eq.5", database=DB).attrs["read"]
+    assert lookup["files_kept"] == 1 < lookup["files_total"] == 4
+    unordered = quarters.get_collection("q", "v=eq.7", database=DB)
+    assert unordered.attrs["read"]["lane"] == "spark" and unordered.attrs["read"]["files_kept"] == 4
+    assert sorted(unordered["v"].tolist()) == [7] * 4
 
 
 def test_driver_count_decodes_only_the_boundary(quarters, monkeypatch):
@@ -616,6 +838,35 @@ def test_out_of_range_timestamps_read_on_both_lanes(spark, tmp_path):
     assert lane["d"].tolist() == days * 3
 
 
+def test_pandas_insert_parses_mixed_iso_spellings(spark, tmp_path):
+    """A pandas batch may spell its dates and timestamps date-only and
+    date-and-time alike, in either order, inside 1677-2262 and outside it:
+    each reads back as given, and no value is parsed row by row with a
+    warning."""
+    import warnings
+
+    c = GeoDBSparkClient(spark, warehouse=str(tmp_path / "wh"), user=DB)
+    c.create_collection("iso", {"ts": "timestamp", "d": "date"}, database=DB)
+    batches = [
+        ["2020-01-01", "2020-01-02 12:30"],
+        ["2020-01-03 08:15:30", "2020-01-04"],
+        ["1500-01-01", "2300-01-01 12:30"],
+        ["2300-01-02 06:00", "1500-01-02"],
+    ]
+    for spelled in batches:
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", UserWarning)
+            c.insert_into_collection(
+                "iso",
+                pd.DataFrame({"geometry": ["POINT (0 0)"] * 2, "ts": spelled, "d": [v[:10] for v in spelled]}),
+                database=DB,
+            )
+    got = c.get_collection("iso", "order=id", database=DB)
+    given = [v for b in batches for v in b]
+    assert got["ts"].tolist() == [dt.datetime.fromisoformat(v) for v in given]
+    assert got["d"].tolist() == [dt.date.fromisoformat(v[:10]) for v in given]
+
+
 # -- one collect per get_collection_pg read -------------------------------------
 
 
@@ -624,26 +875,16 @@ def test_get_collection_pg_runs_its_plan_once(spark, quarters):
     job runs before the collect."""
     from xcube_geodb_spark.errors import GeoDBError
 
-    sc = spark.sparkContext
-    bus = sc._jsc.sc().listenerBus()
-
-    def jobs(fn):
-        bus.waitUntilEmpty()
-        before = set(sc.statusTracker().getJobIdsForGroup(None))
-        fn()
-        bus.waitUntilEmpty()
-        return len(set(sc.statusTracker().getJobIdsForGroup(None)) - before)
-
     out = {}
     pg = quarters.get_collection_pg
-    assert jobs(lambda: out.setdefault("f", pg("q", select="id, v", where="v < 3", database=DB))) == 1
+    assert _jobs(spark, lambda: out.setdefault("f", pg("q", select="id, v", where="v < 3", database=DB))) == 1
     assert sorted(out["f"]["v"].tolist()) == [0, 0, 0, 0, 1, 1, 1, 1, 2, 2, 2, 2]
 
     def empty():
         with pytest.raises(GeoDBError, match="Empty result"):
             pg("q", select="id", where="v < 0", database=DB)
 
-    assert jobs(empty) == 1
+    assert _jobs(spark, empty) == 1
 
 
 @pytest.mark.parametrize("mode", ["legacy", "row", "dict"])

@@ -1,10 +1,11 @@
 #!/usr/bin/env python
-"""Where does a client map read stop being faster on the driver lane?
+"""Where does a client read stop being faster on the driver lane?
 
 Builds the benchmark's ``land_use``-shaped collection (``perfbench/gen.py``,
 six spatially coherent files) at each size given, then times client bbox,
-count and knn reads on both lanes of ``operators/spatial.py``, forced by
-patching the lane decision, interleaved, median of ``--reps`` runs each:
+count, knn and grammar reads on both lanes of ``operators/pruning.py``
+(``PrunedRead``), forced by patching the lane decision, interleaved,
+median of ``--reps`` runs each:
 
 - ``bbox_street`` / ``bbox_district``: the benchmark's map views (2 of 6
   files kept, results grow with the collection);
@@ -12,7 +13,10 @@ patching the lane decision, interleaved, median of ``--reps`` runs each:
   rows returned (the scan cost alone);
 - ``count_region`` / ``count_all``: counts over a region and the whole
   domain (``count_all`` has every row as a candidate);
-- ``knn``: k=10 around a town.
+- ``knn``: k=10 around a town;
+- ``lookup``: ``id=eq.N`` (one file kept);
+- ``filter_ordered``: ``raba_id=eq.V&order=id&limit=40``, the benchmark's
+  grammar filter (every file kept).
 
 Prints one JSON line per read and size: the kept files' summed decoded
 bytes against the driver bound (``dml.DRIVER_BYTES``), both lanes' median
@@ -45,7 +49,7 @@ def main() -> None:
     ap.add_argument("--seed", type=int, default=1)
     args = ap.parse_args()
 
-    from gen import DOMAIN, PROPERTIES, make_dataset
+    from gen import DOMAIN, PROPERTIES, RABA_IDS, make_dataset
     from workloads import DISTRICT, REGION, STREET
 
     from xcube_geodb_spark.client import GeoDBSparkClient
@@ -61,7 +65,7 @@ def main() -> None:
             "spark.local.dir": os.path.join(tmp, "spark-local"),
         },
     )
-    decide = spatial.files_fit_driver
+    decide = dml.files_fit_driver
     lanes = {"driver": lambda *a: True, "spark": lambda *a: False}
 
     def around(c, half):
@@ -87,6 +91,10 @@ def main() -> None:
             "bbox_strip": lambda: client.get_collection_by_bbox("lu", strip, "intersects"),
             **count,
             "knn": lambda: client.get_collection_knn("lu", (town[0], town[1]), k=10),
+            "lookup": lambda: client.get_collection("lu", f"id=eq.{n // 2}"),
+            "filter_ordered": lambda: client.get_collection(
+                "lu", f"raba_id=eq.{RABA_IDS[2]:g}&order=id&limit=40"
+            ),
         }
         for name, read in reads.items():
             times = {lane: [] for lane in lanes}
@@ -94,12 +102,12 @@ def main() -> None:
             read()  # warm
             for r in range(args.reps):
                 for lane in (("driver", "spark") if r % 2 == 0 else ("spark", "driver")):
-                    spatial.files_fit_driver = lanes[lane]
+                    dml.files_fit_driver = lanes[lane]
                     t0 = time.perf_counter()
                     got = read()
                     times[lane].append(time.perf_counter() - t0)
                     answer[lane] = got if isinstance(got, int) else got["id"].tolist()
-            spatial.files_fit_driver = decide
+            dml.files_fit_driver = decide
             if name in boxes:
                 decision = {}
                 spatial.count_collection_by_bbox(

@@ -251,6 +251,8 @@ class CollectionMeta:
         # holds O(files) derivations — the absolute-path map, the live-file
         # set — that would otherwise rebuild on every probe
         self._derived: dict = derived if derived is not None else {}
+        # the manifest file's _stat_key when read by GeoDBCatalog.meta
+        self.stat_key: tuple | None = None
 
     def file_stats(self) -> dict:
         """Per-file column stats for the CURRENT snapshot's files:
@@ -488,9 +490,11 @@ class GeoDBCatalog:
         d = _copy.deepcopy({k: v for k, v in pristine.items() if k != "files"})
         if "files" in pristine:
             d["files"] = list(pristine["files"])
-        return CollectionMeta(
+        m = CollectionMeta(
             d, p, self._stats_loader(collection, database), derived=derived
         )
+        m.stat_key = key
+        return m
 
     def _stats_loader(self, collection: str, database: str):
         """Loader for stats sidecar shards with a catalog-level cache:
@@ -916,24 +920,30 @@ class GeoDBCatalog:
         database: str,
         include_system: bool = False,
         version: int | None = None,
+        meta: CollectionMeta | None = None,
     ) -> DataFrame:
         """Current snapshot as a DataFrame; evolved schema applied on read
         (missing columns -> NULL, dropped columns pruned). ``version``
-        time-travels to an earlier manifest snapshot."""
+        time-travels to an earlier manifest snapshot; ``meta`` reads the
+        snapshot a caller already holds (from :meth:`meta`)."""
         cache_key = (collection, database, include_system, version)
-        try:
-            stat_key = _stat_key(self._meta_path(collection, database))
-        except OSError:
-            stat_key = None
+        if meta is not None:
+            stat_key = meta.stat_key
+        else:
+            try:
+                stat_key = _stat_key(self._meta_path(collection, database))
+            except OSError:
+                stat_key = None
         if stat_key is not None:
             hit = self._load_df_cache.get(cache_key)
             if hit is not None and hit[0] == stat_key:
                 return hit[1]
-        m = (
-            self.meta(collection, database)
-            if version is None
-            else self.meta_at_version(collection, database, version)
-        )
+        if meta is not None:
+            m = meta
+        elif version is None:
+            m = self.meta(collection, database)
+        else:
+            m = self.meta_at_version(collection, database, version)
         schema = m.spark_schema(include_system=True)
         if not m.files:
             df = self.spark.createDataFrame([], schema)

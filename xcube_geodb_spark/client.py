@@ -160,14 +160,15 @@ class GeoDBSparkClient:
         """Collect a read to pandas; decode WKB to Geometry objects (the
         reference decodes hex-EWKB to shapely, geodb.py:2104-2149).
 
-        ``df`` is a Spark DataFrame or the candidates of a pruned spatial
-        read (:class:`~xcube_geodb_spark.operators.spatial.Candidates`),
-        which may already hold its rows, read on the driver. Either way the
-        rows arrive as one Arrow table and take the same steps: converted
-        as ``toPandas`` converts them (:func:`arrow_to_pandas`), mapped by
-        ``refine`` (the driver half of a filter-and-refine read,
-        operators/spatial.py), then decoded. A spatial read's decision
-        (lane, files, decoded bytes) lands in ``attrs["read"]``."""
+        ``df`` is a Spark DataFrame or the candidates of a pruned grammar
+        or spatial read (:class:`~xcube_geodb_spark.operators.pruning.
+        Candidates`), which may already hold its rows, read on the driver.
+        Either way the rows arrive as one Arrow table and take the same
+        steps: converted as ``toPandas`` converts them
+        (:func:`arrow_to_pandas`), mapped by ``refine`` (the driver half of
+        a filter-and-refine read, operators/spatial.py), then decoded. A
+        pruned read's decision (lane, files, decoded bytes) lands in
+        ``attrs["read"]``."""
         table = df.toArrow()
         if raise_empty and table.num_rows == 0:
             # parity with geodb.sql:1171-1175 ("Empty result")
@@ -447,12 +448,11 @@ class GeoDBSparkClient:
         offset: int | None = None,
     ) -> pd.DataFrame:
         db = self._db(database)
-        srid = self.catalog.get_collection_srid(collection, db)
-        df = scan.get_collection(
+        cands = scan.collection_candidates(
             self.catalog, collection, query, db, limit=limit, offset=offset
         )
         self.events.log("read", f"Collection {db}_{collection} read")
-        return self._collect_geo(df, srid)
+        return self._collect_geo(cands, cands.srid)
 
     def export_collection(
         self,

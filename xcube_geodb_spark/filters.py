@@ -1,12 +1,25 @@
-"""PostgREST filter-grammar parser -> pyspark ``Column`` trees.
+"""PostgREST filter-grammar parser: one predicate tree, three lowerings.
 
 The reference's ``get_collection(query=...)`` forwards the query string
 verbatim to PostgREST (``xcube_geodb/core/geodb.py:1866-1874``), which
 parses it into SQL; nothing in the reference repo implements the grammar.
 This module is the Spark-native replacement: a recursive-descent parser for
 the PostgREST v6 convention (pinned by the reference docstrings,
-``geodb.py:1335/:1372/:1843``) producing declarative ``Column`` expressions
-so Catalyst can push every predicate into the parquet scan.
+``geodb.py:1335/:1372/:1843``). :func:`parse_query` reads a query once into
+a :class:`Query`: a tree of :class:`Leaf` ``(column, op, value, negate,
+fts_lang)`` nodes and negatable ``and``/``or`` :class:`Group` nodes, with
+``select``, ``order``, ``limit`` and ``offset`` alongside. The tree lowers
+three ways:
+
+1. :func:`parse_postgrest_query`: a declarative Spark ``Column``, so
+   Catalyst can push every predicate into the parquet scan;
+2. :meth:`Query.constraints`: the ``(column, op, literal)`` triples that
+   prune manifest files (``operators/pruning.py``);
+3. :meth:`Query.arrow`: a ``pyarrow.compute`` expression, NULL exactly
+   where the ``Column`` is (Kleene logic, Spark's NaN order), for a subset
+   of the grammar, and :meth:`Query.arrow_sort` for the order; client
+   reads of small kept files run them on the driver
+   (``operators/scan.collection_candidates``).
 
 Supported surface (superset of every form in the reference's tests and
 notebooks — see SURVEY.md §2.2):
@@ -43,11 +56,14 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from xcube_geodb_spark.errors import GeoDBError
+from xcube_geodb_spark.geometry.udfs import _arrow_term
 
 _OPS = {
     "eq",
@@ -80,6 +96,197 @@ class ParsedQuery:
     order: list[tuple[str, bool, str | None]] = field(default_factory=list)
     limit: int | None = None
     offset: int | None = None
+
+
+@dataclass(frozen=True)
+class Leaf:
+    """``column op value``: ``op`` lower-cased as spelled (``ge``/``le``
+    kept), ``value`` the raw text after it."""
+
+    column: str
+    op: str
+    value: str
+    negate: bool = False
+    fts_lang: str | None = None
+
+
+@dataclass(frozen=True)
+class Group:
+    """An ``and`` / ``or`` of its members, possibly negated."""
+
+    conj: str
+    members: tuple = ()
+    negate: bool = False
+
+
+FTS_OPS = ("fts", "plfts", "phfts", "wfts")
+# the operators whose literal bounds a column's [min, max] (file pruning)
+_INTERVAL_OPS = {"eq", "gt", "gte", "ge", "lt", "lte", "le", "in"}
+# the comparison operators of the pyarrow lowering, as udfs._arrow_term spells them
+_ARROW_OPS = {
+    "eq": "=", "neq": "=", "in": "=", "gt": ">", "gte": ">=", "ge": ">=",
+    "lt": "<", "lte": "<=", "le": "<=",
+}
+_INTEGRAL = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
+# column types an Arrow sort orders as Spark does (NaN and NULL spelled out)
+_SORTABLE = (*_INTEGRAL, T.DoubleType, T.FloatType, T.StringType, T.BooleanType,
+             T.DateType, T.TimestampType)
+
+
+@dataclass
+class Query:
+    """A parsed grammar query: the filters (``where``, the top-level
+    filters AND-ed; no members, no filter) with ``select``, ``order``,
+    ``limit`` and ``offset`` alongside. The filters lower three ways:
+    :func:`parse_postgrest_query` (a Spark ``Column``),
+    :meth:`constraints` (file pruning) and :meth:`arrow` (a driver read)."""
+
+    where: Group = Group("and")
+    select: list[str] | None = None
+    order: list[tuple[str, bool, str | None]] = field(default_factory=list)
+    limit: int | None = None
+    offset: int | None = None
+
+    def constraints(self) -> list[tuple[str, str, object]]:
+        """``[(column, op, literal)]`` for the plain interval comparisons
+        every matching row satisfies: the top-level leaves and the leaves
+        directly inside a top-level ``and`` group. Negations, ``or``
+        groups, nested groups and other operators contribute nothing
+        ("maybe matches"). Literals are parsed without the column type."""
+        out = []
+        for node in self.where.members:
+            if isinstance(node, Leaf):
+                leaves = [node]
+            elif node.conj == "and" and not node.negate:
+                leaves = [m for m in node.members if isinstance(m, Leaf)]
+            else:
+                continue
+            for leaf in leaves:
+                if leaf.negate or leaf.op not in _INTERVAL_OPS:
+                    continue
+                if leaf.op != "in":
+                    out.append((leaf.column, leaf.op, _parse_literal(leaf.value)))
+                    continue
+                raw = leaf.value.strip()
+                if raw.startswith("(") and raw.endswith(")"):
+                    out.append(
+                        (leaf.column, "in", [_parse_literal(v) for v in _split_csv(raw[1:-1])])
+                    )
+        return out
+
+    def columns(self) -> set[str]:
+        """Every column the filters and the order name."""
+        out = {name for name, _, _ in self.order}
+
+        def walk(node):
+            if isinstance(node, Leaf):
+                out.add(node.column)
+            else:
+                for m in node.members:
+                    walk(m)
+
+        walk(self.where)
+        return out
+
+    def arrow(self, types: dict[str, T.DataType]) -> pc.Expression | None:
+        """The filters as a ``pyarrow.compute`` expression that is TRUE,
+        FALSE and NULL exactly where Spark's ``Column`` is (Kleene logic,
+        Spark's NaN order), or None outside the subset it covers:
+        ``eq``/``neq``/``gt``/``gte``/``lt``/``lte``/``in`` of an integral
+        column with integers, a DOUBLE column with numbers or a string
+        column with strings; ``is.null`` on any column; ``is.true``/
+        ``is.false`` on a boolean column; ``not.``; ``and``/``or`` groups.
+        ``types`` maps the declared columns to their Spark types."""
+        return _arrow(self.where, types) if self.where.members else pc.scalar(True)
+
+    def arrow_sortable(self, types: dict[str, T.DataType]) -> bool:
+        return all(isinstance(types.get(name), _SORTABLE) for name, _, _ in self.order)
+
+    def arrow_sort(self, table: pa.Table) -> pa.Table:
+        """``table`` in the order the Spark lowering sorts it: PG's NULL
+        placement (last ascending, first descending, or as spelled) and
+        NaN above every number. Each key is spelled out as a NULL rank, a
+        NaN rank and the value, because pyarrow's ``null_placement``
+        groups NaN with NULL."""
+        keys, cols = [], {}
+        for i, (name, asc, nulls) in enumerate(self.order):
+            col = table.column(name)
+            nulls_first = nulls == "nullsfirst" if asc else nulls != "nullslast"
+            cols[f"n{i}"] = col.is_null()
+            keys.append((f"n{i}", "descending" if nulls_first else "ascending"))
+            direction = "ascending" if asc else "descending"
+            if pa.types.is_floating(col.type):
+                nan = pc.fill_null(pc.is_nan(col), False)
+                cols[f"x{i}"] = nan
+                keys.append((f"x{i}", direction))
+                col = pc.if_else(nan, pa.scalar(0, col.type), col)
+            cols[f"v{i}"] = col
+            keys.append((f"v{i}", direction))
+        if not keys:
+            return table
+        return table.take(pc.sort_indices(pa.table(cols), sort_keys=keys))
+
+
+def _arrow(node: Leaf | Group, types: dict[str, T.DataType]) -> pc.Expression | None:
+    if isinstance(node, Group):
+        out = None
+        for m in node.members:
+            e = _arrow(m, types)
+            if e is None:
+                return None
+            out = e if out is None else (out & e) if node.conj == "and" else (out | e)
+        return ~out if node.negate else out
+    dtype = types.get(node.column)
+    if dtype is None:
+        return None
+    f = pc.field(node.column)
+    if node.op == "is":
+        v = node.value.strip().lower()
+        if v == "null":
+            out = f.is_null()
+        elif v in ("true", "false") and isinstance(dtype, T.BooleanType):
+            out = f == (v == "true")
+        else:
+            return None
+        return ~out if node.negate else out
+    op = _ARROW_OPS.get(node.op)
+    if op is None:
+        return None
+    raw = [node.value]
+    if node.op == "in":
+        inner = node.value.strip()
+        if not (inner.startswith("(") and inner.endswith(")")):
+            return None
+        raw = _split_csv(inner[1:-1])
+        # Spark turns a list of more than 10 into a hash-set lookup, where
+        # -0.0 no longer equals 0.0
+        if not raw or isinstance(dtype, T.DoubleType) and len(raw) > 10:
+            return None
+    out = None
+    for r in raw:
+        v = _arrow_literal(_parse_literal(r, dtype), dtype)
+        if v is None:
+            return None
+        e = _arrow_term(pc, f, op, v, isinstance(dtype, T.DoubleType))
+        out = e if out is None else out | e
+    if node.op == "neq":
+        out = ~out
+    return ~out if node.negate else out
+
+
+def _arrow_literal(v, dtype: T.DataType):
+    """``v`` as the literal pyarrow compares as Spark does with a column
+    of ``dtype``, or None: an integer with an integral column, a number
+    with a DOUBLE column, a string with a string column."""
+    if isinstance(dtype, T.StringType):
+        return v if isinstance(v, str) else None
+    if type(v) is int and not -(2**63) <= v < 2**63:
+        return None
+    if type(v) is int and isinstance(dtype, _INTEGRAL):
+        return v
+    if type(v) in (int, float) and isinstance(dtype, T.DoubleType):
+        return float(v)
+    return None
 
 
 def _parse_literal(raw: str, dtype: T.DataType | None = None):
@@ -222,7 +429,7 @@ def _compile_op(
             raise GeoDBError(f"is filter accepts null/true/false, got {value!r}")
     elif op in ("cs", "cd"):
         expr = _containment(c, op, value, dtype)
-    elif op in ("fts", "plfts", "phfts", "wfts"):
+    elif op in FTS_OPS:
         expr = _fts(c, op, value, fts_lang)
     else:
         raise GeoDBError(f"Unsupported filter operator: {op!r}")
@@ -437,7 +644,7 @@ def _norm_op(op: str) -> tuple[str, str | None]:
     The english dictionary also applies PG's stopword elision (Snowball
     list, functions/stopwords.py) to document tokens and query terms."""
     base, _, tag = op.partition("(")
-    if base not in ("fts", "plfts", "phfts", "wfts"):
+    if base not in FTS_OPS:
         return op, None
     lang = tag[:-1].strip().lower() if tag.endswith(")") else None
     if tag and not tag.endswith(")"):
@@ -449,9 +656,7 @@ def _norm_op(op: str) -> tuple[str, str | None]:
     return base, lang
 
 
-def _compile_condition(
-    token: str, schema: dict[str, T.DataType] | None = None
-) -> Column:
+def _parse_condition(token: str) -> Leaf | Group:
     """``col.op.value`` / ``col.not.op.value`` / nested ``and(...)``/``or(...)``."""
     token = token.strip()
     low = token.lower()
@@ -461,31 +666,23 @@ def _compile_condition(
             open_idx = token.index("(")
             if not token.endswith(")"):
                 raise GeoDBError(f"Unbalanced logic group: {token!r}")
-            col = _compile_group(conj, token[open_idx + 1 : -1], schema)
-            return ~col if neg else col
+            return _parse_group(conj, token[open_idx + 1 : -1], neg)
     parts = token.split(".")
     if len(parts) < 3:
         raise GeoDBError(f"Invalid filter condition: {token!r}")
-    column = parts[0]
     negate = parts[1].lower() == "not"
     idx = 2 if negate else 1
     op, fts_lang = _norm_op(parts[idx].lower())
     if op not in _OPS:
         raise GeoDBError(f"Unknown operator {op!r} in condition {token!r}")
-    value = ".".join(parts[idx + 1 :])
-    return _compile_op(column, op, value, negate, schema, fts_lang)
+    return Leaf(parts[0], op, ".".join(parts[idx + 1 :]), negate, fts_lang)
 
 
-def _compile_group(
-    conj: str, body: str, schema: dict[str, T.DataType] | None = None
-) -> Column:
-    conditions = [_compile_condition(tok, schema) for tok in _split_csv(body)]
-    if not conditions:
+def _parse_group(conj: str, body: str, negate: bool = False) -> Group:
+    members = tuple(_parse_condition(tok) for tok in _split_csv(body))
+    if not members:
         raise GeoDBError(f"Empty {conj}=() group")
-    out = conditions[0]
-    for c in conditions[1:]:
-        out = (out & c) if conj == "and" else (out | c)
-    return out
+    return Group(conj, members, negate)
 
 
 def _split_pairs(query: str) -> list[tuple[str, str]]:
@@ -509,21 +706,24 @@ def _split_pairs(query: str) -> list[tuple[str, str]]:
     return pairs
 
 
-def parse_postgrest_query(
-    query: str | None, schema: dict[str, T.DataType] | None = None
-) -> ParsedQuery:
-    pq = ParsedQuery()
+def parse_query(query: str | Query | None) -> Query:
+    """Parse a grammar query string into its :class:`Query` tree (a
+    ``Query`` passes through). Grammar errors raise here; errors that need
+    the column types (a bad ``in`` list, ``cs`` on a scalar, an empty fts
+    term) raise when the tree is lowered to a Spark ``Column``."""
+    if isinstance(query, Query):
+        return query
+    q = Query()
     if not query:
-        return pq
-    preds: list[Column] = []
+        return q
+    preds: list[Leaf | Group] = []
     for key, value in _split_pairs(query):
         low = key.lower()
         if low == "select":
-            pq.select = [c.strip() for c in value.split(",") if c.strip()]
+            q.select = [c.strip() for c in value.split(",") if c.strip()]
         elif low == "order":
             for item in _split_csv(value):
                 bits = item.split(".")
-                colname = bits[0]
                 asc = True
                 nulls = None
                 for b in bits[1:]:
@@ -532,19 +732,15 @@ def parse_postgrest_query(
                         asc = bl == "asc"
                     elif bl in ("nullsfirst", "nullslast"):
                         nulls = bl
-                pq.order.append((colname, asc, nulls))
+                q.order.append((bits[0], asc, nulls))
         elif low == "limit":
-            pq.limit = int(value)
+            q.limit = int(value)
         elif low == "offset":
-            pq.offset = int(value)
-        elif low in ("and", "or"):
+            q.offset = int(value)
+        elif low in ("and", "or", "not.and", "not.or"):
             if not (value.startswith("(") and value.endswith(")")):
                 raise GeoDBError(f"{key}= group must be parenthesized: {value!r}")
-            preds.append(_compile_group(low, value[1:-1], schema))
-        elif low in ("not.and", "not.or"):
-            if not (value.startswith("(") and value.endswith(")")):
-                raise GeoDBError(f"{key}= group must be parenthesized: {value!r}")
-            preds.append(~_compile_group(low.rsplit(".", 1)[-1], value[1:-1], schema))
+            preds.append(_parse_group(low.rsplit(".", 1)[-1], value[1:-1], low.startswith("not.")))
         else:
             # column filter: key is the column, value is "op.value" or
             # "not.op.value"
@@ -556,14 +752,37 @@ def parse_postgrest_query(
             op, fts_lang = _norm_op(bits[idx].lower())
             if op not in _OPS:
                 raise GeoDBError(f"Unknown operator {op!r} for column {key!r}")
-            val = ".".join(bits[idx + 1 :])
-            preds.append(_compile_op(key, op, val, negate, schema, fts_lang))
-    if preds:
-        pred = preds[0]
-        for p in preds[1:]:
-            pred = pred & p
-        pq.predicate = pred
-    return pq
+            preds.append(Leaf(key, op, ".".join(bits[idx + 1 :]), negate, fts_lang))
+    q.where = Group("and", tuple(preds))
+    return q
+
+
+def _column(node: Leaf | Group, schema: dict[str, T.DataType] | None) -> Column:
+    """The Spark lowering of a tree node."""
+    if isinstance(node, Leaf):
+        return _compile_op(
+            node.column, node.op, node.value, node.negate, schema, node.fts_lang
+        )
+    cols = [_column(m, schema) for m in node.members]
+    out = cols[0]
+    for c in cols[1:]:
+        out = (out & c) if node.conj == "and" else (out | c)
+    return ~out if node.negate else out
+
+
+def parse_postgrest_query(
+    query: str | Query | None, schema: dict[str, T.DataType] | None = None
+) -> ParsedQuery:
+    """The query with its filters lowered to one Spark ``Column``
+    (``predicate``; None without a filter)."""
+    q = parse_query(query)
+    return ParsedQuery(
+        predicate=_column(q.where, schema) if q.where.members else None,
+        select=q.select,
+        order=q.order,
+        limit=q.limit,
+        offset=q.offset,
+    )
 
 
 def _order_columns(order: list[tuple[str, bool, str | None]]) -> list[Column]:
@@ -591,7 +810,7 @@ def _order_columns(order: list[tuple[str, bool, str | None]]) -> list[Column]:
 
 def apply_postgrest_query(
     df: DataFrame,
-    query: str | None = None,
+    query: str | Query | None = None,
     limit: int | None = None,
     offset: int | None = None,
 ) -> DataFrame:

@@ -317,9 +317,10 @@ class Conjunction:
 
     Spark orders NaN above every number and equal to NaN, where IEEE (and
     pyarrow) compares NaN false to everything, so :meth:`arrow` spells
-    Spark's order out: ``x >= 1`` keeps a NaN ``x``. A NULL fails every
-    term in both engines. The expression is only ever a filter, so a term
-    that is FALSE where Spark's is NULL selects the same rows."""
+    Spark's order out: ``x >= 1`` keeps a NaN ``x``. Each term is NULL
+    exactly where Spark's is (a NULL operand), so the grammar's pyarrow
+    lowering (``filters.Query.arrow``) builds its comparisons from the
+    same terms, negations included."""
 
     _PRUNE_OPS = {"<": "lt", "<=": "lte", ">": "gt", ">=": "gte", "=": "eq"}
 
@@ -357,13 +358,16 @@ class Conjunction:
 
 
 def _arrow_term(pc, f, op: str, v, floating: bool):
-    """``f op v`` under Spark's NaN order (NaN above +inf, NaN = NaN)."""
-    nan = pc.is_nan(f) if floating else pc.scalar(False)
+    """``f op v`` under Spark's NaN order (NaN above +inf, NaN = NaN):
+    TRUE, FALSE and NULL exactly where Spark's term is, so the term stays
+    right under a negation."""
+    # NaN-ness of f, NULL where f is: `f != f` holds no NaN on other types
+    nan = pc.is_nan(f) if floating else f != f
     if isinstance(v, float) and math.isnan(v):
         return {
-            "<": f.is_valid() & ~nan,
-            "<=": f.is_valid(),
-            ">": pc.scalar(False),
+            "<": ~nan,
+            "<=": nan | ~nan,
+            ">": nan & ~nan,
             ">=": nan,
             "=": nan,
         }[op]

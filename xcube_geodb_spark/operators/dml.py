@@ -35,7 +35,7 @@ from xcube_geodb_spark.catalog import (
     GeoDBCatalog,
 )
 from xcube_geodb_spark.errors import GeoDBError
-from xcube_geodb_spark.filters import parse_postgrest_query
+from xcube_geodb_spark.filters import Query, parse_postgrest_query, parse_query
 from xcube_geodb_spark.geometry.crs import check_crs
 from xcube_geodb_spark.geometry.geom import (
     Geometry,
@@ -112,9 +112,19 @@ def _pandas_to_spark(catalog: GeoDBCatalog, pdf: pd.DataFrame, schema) -> DataFr
 def _datetime_column(s: pd.Series) -> pd.Series:
     """``s`` as datetime64[ns]; when a value lies outside that range
     (before 1677 or after 2262), as Python ``datetime`` cells instead,
-    which Spark's date and timestamp types hold as they are."""
+    which Spark's date and timestamp types hold as they are.
+
+    ISO 8601 text is parsed as such, whatever mix of date-only and
+    date-time spellings it holds (pandas would infer one format from the
+    first value, then fail or fall back to ``dateutil`` row by row); any
+    other input is left to pandas' inference."""
     try:
-        return pd.to_datetime(s)
+        try:
+            return pd.to_datetime(s, format="ISO8601")
+        except pd.errors.OutOfBoundsDatetime:
+            raise
+        except ValueError:  # not ISO 8601 text
+            return pd.to_datetime(s)
     except (pd.errors.OutOfBoundsDatetime, OverflowError):
         return s.map(_datetime_cell).astype(object)
 
@@ -627,49 +637,20 @@ def _touched_untouched(
     catalog: GeoDBCatalog,
     collection: str,
     database: str,
-    query: str,
-    meta=None,
+    query: str | Query,
+    meta: CollectionMeta | None = None,
 ) -> tuple[list[str], list[str]]:
-    """Partition manifest files into (maybe-touched, untouched) from the
-    manifest's commit-time file stats (footer fallback for older commits)
-    vs the filter's conjunctive interval constraints. Conservative:
-    anything unprovable counts as touched. ``meta`` reuses the caller's
-    already-rolled-forward snapshot (one metadata read per DML op)."""
-    from xcube_geodb_spark.operators.pruning import (
-        bloom_columns_needed,
-        conjunctive_constraints,
-        fts_term_groups,
-        split_files_by_constraints,
-    )
+    """Partition the files of snapshot ``meta`` (default: the snapshot to
+    write on) into (maybe-touched, untouched) by the filter's file test
+    (``pruning.query_files``: the commit-time file stats, footer fallback
+    for older commits, and the blooms). Conservative: anything unprovable
+    counts as touched. An fts filter (e.g. purge boilerplate docs)
+    rewrites only the files whose token blooms admit its terms."""
+    from xcube_geodb_spark.operators.pruning import query_files
 
-    constraints = conjunctive_constraints(query)
-    m = meta if meta is not None else catalog.meta_for_write(
-        collection, database
-    )
-    fts_idx = {
-        i["property"]: i.get("dictionary", "english")
-        for i in m.d.get("indexes", [])
-        if i.get("type") == "fts"
-    }
-    # a delete/update keyed on an fts filter (e.g. purge boilerplate docs)
-    # rewrites only files whose token blooms admit the terms
-    fts_groups = fts_term_groups(query, fts_idx)
-    paths = catalog.manifest_paths(collection, database, meta=m)
-    cols = sorted({c for c, _op, _v in constraints})
-    bloom_idx = {
-        i["property"]
-        for i in m.d.get("indexes", [])
-        if i.get("type") == "bloom"
-    }
-    return split_files_by_constraints(
-        paths, cols, constraints, meta=m,
-        fts_groups=fts_groups,
-        blooms_map=(
-            m.file_blooms()
-            if bloom_columns_needed(constraints, fts_groups, bloom_idx)
-            else None
-        ),
-    )
+    m = meta if meta is not None else catalog.meta_for_write(collection, database)
+    split = query_files(catalog, collection, database, m, parse_query(query), need_untouched=True)
+    return split if split is not None else (list(m.files), [])
 
 
 def delete_from_collection(
@@ -682,12 +663,11 @@ def delete_from_collection(
     Only files whose footer stats admit matching rows are rewritten."""
     m = catalog.meta_for_write(collection, database)
     sch = {f.name: f.dataType for f in m.spark_schema(include_system=True).fields}
-    pq = parse_postgrest_query(query, schema=sch)
+    q = parse_query(query)
+    pq = parse_postgrest_query(q, schema=sch)
     if pq.predicate is None:
         raise GeoDBError("delete requires a filter query")
-    touched, untouched = _touched_untouched(
-        catalog, collection, database, query, meta=m
-    )
+    touched, untouched = _touched_untouched(catalog, collection, database, q, m)
     if not touched:
         return  # no file can contain matching rows: delete is a no-op
     df = catalog.load_files(collection, database, touched)
@@ -757,7 +737,8 @@ def update_collection(
     Only files whose footer stats admit matching rows are rewritten."""
     m = catalog.meta_for_write(collection, database)
     sch = {f.name: f.dataType for f in m.spark_schema(include_system=True).fields}
-    pq = parse_postgrest_query(query, schema=sch)
+    q = parse_query(query)
+    pq = parse_postgrest_query(q, schema=sch)
     if pq.predicate is None:
         raise GeoDBError("update requires a filter query")
     values = {k.lower(): v for k, v in values.items() if k.lower() != "id"}
@@ -765,9 +746,7 @@ def update_collection(
     for k in values:
         if k not in schema:
             raise GeoDBError(f"Unknown property in update: {k!r}")
-    touched, untouched = _touched_untouched(
-        catalog, collection, database, query, meta=m
-    )
+    touched, untouched = _touched_untouched(catalog, collection, database, q, m)
     if not touched:
         return  # no file can contain matching rows: update is a no-op
     df = catalog.load_files(collection, database, touched)

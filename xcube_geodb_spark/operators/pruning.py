@@ -8,62 +8,45 @@ Z-order/btree clustered at write, so intervals are tight).
 
 The analysis is deliberately conservative: it extracts only *top-level
 conjunctive* constraints of the form ``col op literal`` (eq/gt/gte/lt/lte/
-in) from the raw query string, including the plain members of a top-level
-``and=(...)`` group; anything it cannot understand (or-groups, like,
-negation, is) contributes no constraint, meaning "maybe matches".
-A file is skipped ONLY when some understood constraint provably excludes
-its entire [min, max] range — never the other way around.
+in) from the parsed query (``filters.Query.constraints``), including the
+plain members of a top-level ``and=(...)`` group; anything it cannot
+understand (or-groups, like, negation, is) contributes no constraint,
+meaning "maybe matches". A file is skipped ONLY when some understood
+constraint provably excludes its entire [min, max] range — never the
+other way around.
+
+The kept files of a client read are then read on one of two lanes
+(:class:`PrunedRead`): on the driver with ``pyarrow`` when they are small
+(``dml.files_fit_driver``) and the filter has a ``pyarrow`` spelling, else
+by Spark. Spatial reads (``operators/spatial.py``) and grammar reads
+(``operators/scan.py``) share it.
 """
 
 from __future__ import annotations
 
 import math
+import os
 
-from xcube_geodb_spark.filters import _parse_literal, _split_csv, _split_pairs
+import pandas as pd
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-_RESERVED = {"select", "order", "limit", "offset", "and", "or", "not.and", "not.or"}
+from xcube_geodb_spark.catalog import SYSTEM_COLUMNS
+from xcube_geodb_spark.filters import FTS_OPS, Query, parse_query
+from xcube_geodb_spark.geometry.udfs import Conjunction
+from xcube_geodb_spark.operators import dml
 
-_INTERVAL_OPS = {"eq", "gt", "gte", "ge", "lt", "lte", "le", "in"}
-
-
-def conjunctive_constraints(query: str | None) -> list[tuple[str, str, object]]:
+def conjunctive_constraints(query: str | Query | None) -> list[tuple[str, str, object]]:
     """[(column, op, literal)] for top-level ANDed simple comparisons:
     ``col=op.literal`` pairs and the plain ``col.op.literal`` members of a
     top-level ``and=(...)`` group (its nested ``or(...)``/``and(...)``
-    groups and negated members contribute nothing)."""
-    if not query:
-        return []
-    out = []
-    for key, value in _split_pairs(query):
-        if key.lower() == "and" and value.startswith("(") and value.endswith(")"):
-            for member in _split_csv(value[1:-1]):
-                col, _, cond = member.partition(".")
-                if "(" not in col:
-                    _add_constraint(out, col, cond)
-        elif key.lower() not in _RESERVED:
-            _add_constraint(out, key, value)
-    return out
-
-
-def _add_constraint(out: list, col: str, cond: str) -> None:
-    """Append ``(col, op, literal)`` for an ``op.literal`` condition with
-    an interval operator; anything else (negation, like, is, ...) adds
-    nothing."""
-    bits = cond.split(".")
-    op = bits[0].lower()
-    if op not in _INTERVAL_OPS:
-        return  # includes "not": negations have no safe interval
-    raw = ".".join(bits[1:])
-    if op == "in":
-        raw = raw.strip()
-        if raw.startswith("(") and raw.endswith(")"):
-            out.append((col, "in", [_parse_literal(v) for v in _split_csv(raw[1:-1])]))
-        return
-    out.append((col, op, _parse_literal(raw)))
+    groups and negated members contribute nothing) — the pruning lowering
+    of the parsed query (``filters.Query.constraints``)."""
+    return parse_query(query).constraints()
 
 
 def fts_term_groups(
-    query: str | None, fts_indexes: dict[str, str]
+    query: str | Query | None, fts_indexes: dict[str, str]
 ) -> list[tuple[str, list[list[str]]]]:
     """Required-term groups for fts-family filters on fts-indexed columns:
     ``[(column, [[terms of group 1], [terms of group 2], ...])]`` where the
@@ -80,25 +63,21 @@ def fts_term_groups(
     english query on a 'simple' index can't be pruned and is skipped."""
     if not query or not fts_indexes:
         return []
-    from xcube_geodb_spark.filters import _fts_norm, _norm_op
+    from xcube_geodb_spark.filters import Leaf, _fts_norm
 
     out = []
-    for key, value in _split_pairs(query):
-        if key.lower() in _RESERVED or key not in fts_indexes:
+    for leaf in parse_query(query).where.members:
+        if (
+            not isinstance(leaf, Leaf)
+            or leaf.column not in fts_indexes
+            or leaf.negate  # negated fts: no safe constraint
+            or leaf.op not in FTS_OPS
+        ):
             continue
-        bits = value.split(".")
-        if bits[0].lower() == "not":
-            continue  # negated fts: no safe constraint
-        try:
-            op, lang = _norm_op(bits[0].lower())
-        except Exception:
-            continue
-        if op not in ("fts", "plfts", "phfts", "wfts"):
-            continue
-        dic = fts_indexes[key]
-        if dic == "simple" and lang in ("english", "en"):
+        dic = fts_indexes[leaf.column]
+        if dic == "simple" and leaf.fts_lang in ("english", "en"):
             continue  # stemmed query terms have no raw-token preimage
-        raw = ".".join(bits[1:])
+        op, raw = leaf.op, leaf.value
         groups_raw: list[list[str]] = []
         if op in ("plfts", "phfts"):
             groups_raw = [[t for t in _fts_norm(raw).split(" ") if t]]
@@ -147,7 +126,7 @@ def fts_term_groups(
                 ]
                 for g in groups_raw
             ]
-        out.append((key, groups_raw))
+        out.append((leaf.column, groups_raw))
     return out
 
 
@@ -384,3 +363,156 @@ def split_files_by_constraints(
         else:
             untouched.append(rel)
     return touched, untouched
+
+
+def fts_indexes(m) -> dict[str, str]:
+    """column -> dictionary for the collection's fts token-bloom indexes."""
+    return {
+        i["property"]: i.get("dictionary", "english")
+        for i in m.d.get("indexes", [])
+        if i.get("type") == "fts"
+    }
+
+
+def bloom_indexed(m) -> set[str]:
+    return {
+        i["property"]
+        for i in m.d.get("indexes", [])
+        if i.get("type") == "bloom"
+    }
+
+
+def query_files(
+    catalog, collection: str, database: str, m, query: Query, need_untouched: bool = False
+) -> tuple[list[str], list[str]] | None:
+    """``(kept, dropped)`` files of manifest snapshot ``m`` for grammar
+    ``query``: its conjunctive constraints against the file stats, its fts
+    terms (and ``eq``/``in`` values on bloom-indexed columns) against the
+    file blooms. None when the query has no such test or ``m`` no file.
+    Grammar scans, their DML rewrites and ``explain_scan`` all decide here."""
+    constraints = conjunctive_constraints(query)
+    fts_groups = fts_term_groups(query, fts_indexes(m))
+    if not (constraints or fts_groups) or not m.files:
+        return None
+    return split_files_by_constraints(
+        catalog.manifest_paths(collection, database, meta=m),
+        sorted({c for c, _, _ in constraints}),
+        constraints,
+        meta=m,
+        need_untouched=need_untouched,
+        fts_groups=fts_groups,
+        blooms_map=(
+            m.file_blooms()
+            if bloom_columns_needed(constraints, fts_groups, bloom_indexed(m))
+            else None
+        ),
+    )
+
+
+class Candidates:
+    """The rows a client read (a spatial filter-and-refine read, or a
+    grammar read) collects, with the decision of how it reads them
+    (``decision``: ``lane``, ``files_total``, ``files_kept``). On the ``"driver"`` lane they are already an Arrow
+    table, read from the kept files with ``pyarrow``; on the ``"spark"``
+    lane they are a Spark DataFrame over the same files. Both answer a
+    collecting caller as a DataFrame does: ``schema``, ``toArrow()``,
+    ``toPandas()``. ``srid`` is the SRID of the manifest snapshot read."""
+
+    def __init__(self, spark, schema, decision: dict, srid: int, df=None, table=None):
+        self.spark, self.schema, self.decision = spark, schema, decision
+        self.srid, self.df, self.table = srid, df, table
+
+    def toArrow(self):
+        return self.table if self.df is None else self.df.toArrow()
+
+    def toPandas(self) -> pd.DataFrame:
+        from xcube_geodb_spark.client import arrow_to_pandas
+
+        return arrow_to_pandas(self.toArrow(), self.schema, self.spark)
+
+
+class PrunedRead:
+    """A read of the ``files`` of one manifest snapshot ``m`` (by default
+    all of them), and the lane it takes (:meth:`decide`)."""
+
+    def __init__(self, catalog, collection, database, m, files=None):
+        self.catalog, self.collection, self.database, self.m = (
+            catalog, collection, database, m,
+        )
+        # the schema as Spark reports a parquet scan of it: all nullable
+        self.schema = T.StructType(
+            [T.StructField(f.name, f.dataType, True) for f in m.spark_schema().fields]
+        )
+        self.paths = catalog.manifest_paths(collection, database, m)
+        self.files = list(self.paths) if files is None else files
+        self.driver = False
+
+    def prune_query(self, query: Query) -> bool:
+        """Keep the files whose stats and blooms admit grammar ``query``
+        (:func:`query_files`); False when the query has no file test."""
+        split = query_files(self.catalog, self.collection, self.database, self.m, query)
+        if split is not None:
+            self.files = split[0]
+        return split is not None
+
+    def prune(self, spec: Conjunction) -> None:
+        """Keep the files whose stats admit ``spec``."""
+        self.files, _ = split_files_by_constraints(
+            {f: self.paths[f] for f in self.files}, spec.columns,
+            spec.constraints(), meta=self.m, need_untouched=False,
+        )
+
+    def decide(self, driver_ok: bool = True) -> None:
+        """Read on the driver when ``driver_ok`` and the files are small."""
+        self.driver = driver_ok and dml.files_fit_driver(
+            self.catalog, self.collection, self.database, self.files
+        )
+        self.decision = {
+            "lane": "driver" if self.driver else "spark",
+            "files_total": len(self.paths),
+            "files_kept": len(self.files),
+        }
+
+    def read(self, spec: Conjunction, columns: list[str], also=None):
+        """The rows of the kept files that pass ``spec`` (and the
+        ``pyarrow`` expression ``also``), read on the driver under the
+        declared schema: a column a file lacks reads as NULL, Spark's INT96
+        timestamps as microseconds."""
+        import pyarrow.dataset as ds
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        base = self.catalog._coll_dir(self.collection, self.database)
+        fmt = ds.ParquetFileFormat(
+            read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+        )
+        floating = {f.name for f in self.schema.fields if isinstance(f.dataType, T.DoubleType)}
+        where = spec.arrow(floating)
+        if also is not None:
+            where = where & also
+        return ds.dataset(
+            [os.path.join(base, f) for f in self.files],
+            schema=to_arrow_schema(self.schema),
+            format=fmt,
+        ).to_table(columns=columns, filter=where)
+
+    def frame(self) -> DataFrame:
+        """The kept files as a Spark DataFrame (the Spark lane)."""
+        return self.catalog.load_files(
+            self.collection, self.database, self.files, meta=self.m
+        )
+
+    def candidates(self, spec: Conjunction, drop=SYSTEM_COLUMNS, spark_filters=(), also=None):
+        """:class:`Candidates` of the rows passing ``spec`` (and, on the
+        Spark lane, the Column filters ``spark_filters``; on the driver
+        lane, the ``pyarrow`` expression ``also``), without the columns
+        ``drop``."""
+        spark = self.catalog.spark
+        if self.driver:
+            schema = T.StructType([f for f in self.schema.fields if f.name not in drop])
+            table = self.read(spec, [f.name for f in schema.fields], also)
+            return Candidates(spark, schema, self.decision, self.m.srid, table=table)
+        df = self.frame()
+        for cond in (*spark_filters, *([F.expr(spec.sql())] if spec else [])):
+            df = df.filter(cond)
+        df = df.drop(*drop)
+        return Candidates(spark, df.schema, self.decision, self.m.srid, df=df)

@@ -12,10 +12,21 @@ import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from xcube_geodb_spark.catalog import GeoDBCatalog
+from xcube_geodb_spark.catalog import SYSTEM_COLUMNS, GeoDBCatalog
 from xcube_geodb_spark.errors import GeoDBError
-from xcube_geodb_spark.filters import apply_postgrest_query
+from xcube_geodb_spark.filters import Query, apply_postgrest_query, parse_query
+from xcube_geodb_spark.geometry.udfs import Conjunction
+from xcube_geodb_spark.operators.pruning import (
+    Candidates,
+    PrunedRead,
+    conjunctive_constraints,
+    fts_indexes,
+    fts_term_groups,
+    query_files,
+    summary_excludes,
+)
 
 
 def get_collection(
@@ -32,57 +43,75 @@ def get_collection(
     exclude the query's conjunctive constraints (same analysis DML uses
     for rewrites): a point lookup like ``id=eq.N`` on a clustered
     collection plans a one-file scan instead of the table — the engine's
-    stand-in for the reference's PK btree (geodb.sql:310)."""
-    from xcube_geodb_spark.catalog import SYSTEM_COLUMNS
-    from xcube_geodb_spark.operators.pruning import (
-        bloom_columns_needed,
-        conjunctive_constraints,
-        fts_term_groups,
-        split_files_by_constraints,
+    stand-in for the reference's PK btree (geodb.sql:310). Client reads
+    use :func:`collection_candidates`, which may read on the driver."""
+    q = parse_query(query)
+    read = PrunedRead(catalog, collection, database, catalog.meta(collection, database))
+    return apply_postgrest_query(
+        _frame(read, read.prune_query(q)), q, limit=limit, offset=offset
     )
 
-    constraints = conjunctive_constraints(query)
+
+def _frame(read: PrunedRead, pruned: bool) -> DataFrame:
+    """The Spark lane's input: the kept files when the query ``pruned``
+    them, else every file (the ``load_df`` memo)."""
+    if pruned:
+        return read.frame().drop(*SYSTEM_COLUMNS)
+    return read.catalog.load_df(read.collection, read.database, meta=read.m)
+
+
+def collection_candidates(
+    catalog: GeoDBCatalog,
+    collection: str,
+    query: str | None = None,
+    database: str = "public",
+    limit: int | None = None,
+    offset: int | None = None,
+) -> Candidates:
+    """:func:`get_collection` for a caller that collects the result, as
+    :class:`~xcube_geodb_spark.operators.pruning.Candidates` of one
+    manifest snapshot. The query is parsed once; its constraints prune the
+    files, and the kept files are read on the driver with ``pyarrow``
+    (the filter's ``pyarrow`` lowering, then the sort, offset and limit in
+    Arrow) when all of these hold, else by Spark as :func:`get_collection`
+    reads them:
+
+    - the filter has a ``pyarrow`` lowering (``filters.Query.arrow``) and
+      the query no ``select=``;
+    - every column it names is declared (a missing one fails on Spark, with
+      Spark's error);
+    - both lanes define the row order alike: the ``order`` keys end in
+      ``id`` (and Arrow can sort them), or there is no ``order`` and at
+      most one file is kept;
+    - the kept files are small (``dml.files_fit_driver``)."""
+    q = parse_query(query)
     m = catalog.meta(collection, database)
-    fts_groups = fts_term_groups(query, _fts_indexes(m))
-    if (constraints or fts_groups) and m.files:
-        cols = sorted({c for c, _, _ in constraints})
-        touched, _ = split_files_by_constraints(
-            catalog.manifest_paths(collection, database, meta=m),
-            cols,
-            constraints,
-            meta=m,
-            need_untouched=False,
-            fts_groups=fts_groups,
-            blooms_map=(
-                m.file_blooms()
-                if bloom_columns_needed(
-                    constraints, fts_groups, _bloom_indexed(m)
-                )
-                else None
-            ),
+    read = PrunedRead(catalog, collection, database, m)
+    pruned = read.prune_query(q)
+    offset = q.offset if offset is None else offset
+    limit = q.limit if limit is None else limit
+    schema = T.StructType([f for f in read.schema.fields if f.name not in SYSTEM_COLUMNS])
+    types = {f.name: f.dataType for f in schema.fields}
+    where = None
+    if (
+        not q.select
+        and q.columns() <= set(types)
+        and (offset or 0) >= 0
+        and (limit or 0) >= 0
+        and (
+            q.order[-1][0] == "id" and q.arrow_sortable(types)
+            if q.order
+            else len(read.files) <= 1
         )
-        df = catalog.load_files(collection, database, touched, meta=m)
-        df = df.drop(*[c for c in df.columns if c in SYSTEM_COLUMNS])
-    else:
-        df = catalog.load_df(collection, database)
-    return apply_postgrest_query(df, query, limit=limit, offset=offset)
-
-
-def _fts_indexes(m) -> dict[str, str]:
-    """column -> dictionary for the collection's fts token-bloom indexes."""
-    return {
-        i["property"]: i.get("dictionary", "english")
-        for i in m.d.get("indexes", [])
-        if i.get("type") == "fts"
-    }
-
-
-def _bloom_indexed(m) -> set[str]:
-    return {
-        i["property"]
-        for i in m.d.get("indexes", [])
-        if i.get("type") == "bloom"
-    }
+    ):
+        where = q.arrow(types)
+    read.decide(driver_ok=where is not None)
+    if read.driver:
+        table = q.arrow_sort(read.read(Conjunction(), list(types), also=where))
+        table = table.slice(offset or 0, limit)
+        return Candidates(catalog.spark, schema, read.decision, m.srid, table=table)
+    df = apply_postgrest_query(_frame(read, pruned), q, limit=limit, offset=offset)
+    return Candidates(catalog.spark, df.schema, read.decision, m.srid, df=df)
 
 
 def explain_scan(
@@ -95,35 +124,13 @@ def explain_scan(
     planned read would touch and why (the engine's answer to EXPLAIN's
     PushedFilters line, at file granularity). Metadata-only: no Spark job,
     no footer IO when manifest stats cover the files."""
-    from xcube_geodb_spark.operators.pruning import (
-        bloom_columns_needed,
-        conjunctive_constraints,
-        fts_term_groups,
-        split_files_by_constraints,
-        summary_excludes,
-    )
-
+    q = parse_query(query)
     m = catalog.meta(collection, database)
-    constraints = conjunctive_constraints(query)
-    fts_groups = fts_term_groups(query, _fts_indexes(m))
+    constraints = conjunctive_constraints(q)
+    fts_groups = fts_term_groups(q, fts_indexes(m))
     stats_map = m.file_stats()
-    if (constraints or fts_groups) and m.files:
-        touched, skipped = split_files_by_constraints(
-            catalog.manifest_paths(collection, database, meta=m),
-            sorted({c for c, _, _ in constraints}),
-            constraints,
-            stats_map=stats_map,
-            fts_groups=fts_groups,
-            blooms_map=(
-                m.file_blooms()
-                if bloom_columns_needed(
-                    constraints, fts_groups, _bloom_indexed(m)
-                )
-                else None
-            ),
-        )
-    else:
-        touched, skipped = list(m.files), []
+    split = query_files(catalog, collection, database, m, q, need_untouched=True)
+    touched, skipped = split if split is not None else (list(m.files), [])
     bloom_cols = sorted(
         {
             i["property"]
@@ -152,8 +159,7 @@ def explain_scan(
         "manifest_stats": all(f in stats_map for f in m.files),
         "bloom_columns": bloom_cols,
         # stats-tree view: how many shard hulls a probing scan would skip
-        # WITHOUT loading (get_collection's fast path; this introspection
-        # itself loads everything to report per-file detail)
+        # WITHOUT loading (get_collection's fast path)
         "stats_tree": {
             "complete": m.stats_complete,
             "shards_total": len(m.stats_shards()),
@@ -3193,8 +3199,9 @@ def _ordered_collect_expr(
     return f"array_sort({collect}, (l, r) -> {cmp})"
 
 
-def _rewrite_agg_orderby(code: str) -> str:
-    """PG's aggregate-internal ``ORDER BY`` on literal-protected code:
+def _rewrite_agg_orderby(code: str, lits: list[str]) -> str:
+    """PG's aggregate-internal ``ORDER BY`` on literal-protected code
+    (``lits`` its pool):
 
     - ``string_agg(x, sep ORDER BY k...)`` ->
       ``string_agg(x, sep) WITHIN GROUP (ORDER BY k...)`` (Spark 4 runs
@@ -3263,8 +3270,7 @@ def _rewrite_agg_orderby(code: str) -> str:
             inner, sep = parts2[0].strip(), parts2[1].strip()
             keys, any_explicit = _split_order_keys(order)
             if distinct:
-                norm = lambda s2: re.sub(r"\s+", "", s2).lower()  # noqa: E731
-                if len(keys) != 1 or norm(keys[0][0]) != norm(inner):
+                if len(keys) != 1 or _resolved(keys[0][0], lits) != _resolved(inner, lits):
                     raise GeoDBError(
                         "string_agg(DISTINCT x ORDER BY ...): the ORDER "
                         "BY expression must be x itself (PG requires "
@@ -3285,8 +3291,7 @@ def _rewrite_agg_orderby(code: str) -> str:
                 # argument that means ORDER BY the value itself
                 inner = head[len("DISTINCT"):].strip()
                 keys, any_explicit = _split_order_keys(order)
-                norm = lambda s: re.sub(r"\s+", "", s).lower()  # noqa: E731
-                if len(keys) != 1 or norm(keys[0][0]) != norm(inner):
+                if len(keys) != 1 or _resolved(keys[0][0], lits) != _resolved(inner, lits):
                     raise GeoDBError(
                         "array_agg(DISTINCT x ORDER BY ...): the ORDER BY "
                         "expression must be x itself (PG requires ORDER "
@@ -3305,6 +3310,25 @@ def _rewrite_agg_orderby(code: str) -> str:
                 repl = f"to_json({repl})"
         code = code[: m.start()] + repl + code[j + 1:]
         pos = m.start() + len(repl)
+
+
+_RESOLVE_RE = re.compile(r"__GEODB_(LIT|ID)_(\d+)__|([A-Za-z_][A-Za-z0-9_$]*)|\s+")
+
+
+def _resolved(expr: str, lits: list[str]) -> str:
+    """Lexed ``expr`` with its names as PG resolves them: a quoted
+    identifier as spelled, a bare one folded to lower case (``"s"`` and
+    ``s`` are one column, ``"S"`` another); literals as their text and
+    blanks dropped. Two spellings of one expression compare equal."""
+
+    def one(m: re.Match) -> str:
+        if m.group(1) == "LIT":
+            return lits[int(m.group(2))]
+        if m.group(1) == "ID":
+            return '"' + lits[int(m.group(2))][1:-1].replace("``", "`") + '"'
+        return f'"{m.group(3).lower()}"' if m.group(3) else ""
+
+    return _RESOLVE_RE.sub(one, expr)
 
 
 _SPATIAL_AGG_RE = re.compile(
@@ -4038,7 +4062,7 @@ def _pg_rewrite(code: str, lits: list[str]) -> str:
     if need_cont:
         code = _rewrite_containment(code)
     if need_agg:
-        code = _rewrite_agg_orderby(code)
+        code = _rewrite_agg_orderby(code, lits)
     if need_spagg:
         code = _rewrite_spatial_aggs(code, lits)
     if need_rel3:

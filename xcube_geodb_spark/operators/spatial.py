@@ -77,8 +77,7 @@ from xcube_geodb_spark.geometry.udfs import (
     envelope_terms,
     geom_type_udf,
 )
-from xcube_geodb_spark.operators import pruning
-from xcube_geodb_spark.operators.dml import files_fit_driver
+from xcube_geodb_spark.operators.pruning import Candidates, PrunedRead
 
 Bbox = tuple[float, float, float, float]
 # driver-side second half of a filter-and-refine read: candidate rows (as
@@ -120,9 +119,11 @@ def _bbox_filtered(
     comparison_mode: str,
     where: str | None,
     op: str,
+    meta=None,
 ) -> DataFrame:
+    """The operator path's rows, of manifest snapshot ``meta`` when given."""
     op = _checked_op(comparison_mode, op)
-    df = catalog.load_df(collection, database, include_system=True)
+    df = catalog.load_df(collection, database, include_system=True, meta=meta)
     exact = bbox_predicate_column(comparison_mode, bbox)
     pre = envelope_prefilter(comparison_mode, bbox)
     if where:
@@ -192,28 +193,6 @@ def get_collection_by_bbox(
     return df
 
 
-class Candidates:
-    """The rows a client filter-and-refine read collects, with the decision
-    of how it reads them (``decision``: ``lane``, ``files_total``,
-    ``files_kept``). On the ``"driver"`` lane they are already an Arrow
-    table, read from the kept files with ``pyarrow``; on the ``"spark"``
-    lane they are a Spark DataFrame over the same files. Both answer a
-    collecting caller as a DataFrame does: ``schema``, ``toArrow()``,
-    ``toPandas()``. ``srid`` is the SRID of the manifest snapshot read."""
-
-    def __init__(self, spark, schema, decision: dict, srid: int, df=None, table=None):
-        self.spark, self.schema, self.decision = spark, schema, decision
-        self.srid, self.df, self.table = srid, df, table
-
-    def toArrow(self):
-        return self.table if self.df is None else self.df.toArrow()
-
-    def toPandas(self) -> pd.DataFrame:
-        from xcube_geodb_spark.client import arrow_to_pandas
-
-        return arrow_to_pandas(self.toArrow(), self.schema, self.spark)
-
-
 _WHERE_TERM = re.compile(
     r"\s*([A-Za-z_][A-Za-z0-9_]*)\s*(<=|>=|<|>|=)\s*"
     r"([+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?)\s*"
@@ -248,85 +227,6 @@ def where_terms(where: str | None, schema) -> Conjunction | None:
             return None
         terms.append((field.name, mt.group(2), v))
     return Conjunction(terms)
-
-
-class _PrunedRead:
-    """A read of the ``files`` of one manifest snapshot ``m`` (by default
-    all of them), and the lane it takes (:meth:`decide`)."""
-
-    def __init__(self, catalog, collection, database, m, files=None):
-        self.catalog, self.collection, self.database, self.m = (
-            catalog, collection, database, m,
-        )
-        # the schema as Spark reports a parquet scan of it: all nullable
-        self.schema = T.StructType(
-            [T.StructField(f.name, f.dataType, True) for f in m.spark_schema().fields]
-        )
-        self.paths = catalog.manifest_paths(collection, database, m)
-        self.files = list(self.paths) if files is None else files
-        self.driver = False
-
-    def prune(self, spec: Conjunction) -> None:
-        """Keep the files whose stats admit ``spec``."""
-        self.files, _ = pruning.split_files_by_constraints(
-            {f: self.paths[f] for f in self.files}, spec.columns,
-            spec.constraints(), meta=self.m, need_untouched=False,
-        )
-
-    def decide(self, driver_ok: bool = True) -> None:
-        """Read on the driver when ``driver_ok`` and the files are small."""
-        self.driver = driver_ok and files_fit_driver(
-            self.catalog, self.collection, self.database, self.files
-        )
-        self.decision = {
-            "lane": "driver" if self.driver else "spark",
-            "files_total": len(self.paths),
-            "files_kept": len(self.files),
-        }
-
-    def read(self, spec: Conjunction, columns: list[str], also=None):
-        """The rows of the kept files that pass ``spec`` (and the
-        ``pyarrow`` expression ``also``), read on the driver under the
-        declared schema: a column a file lacks reads as NULL, Spark's INT96
-        timestamps as microseconds."""
-        import pyarrow.dataset as ds
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        base = self.catalog._coll_dir(self.collection, self.database)
-        fmt = ds.ParquetFileFormat(
-            read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
-        )
-        floating = {f.name for f in self.schema.fields if isinstance(f.dataType, T.DoubleType)}
-        where = spec.arrow(floating)
-        if also is not None:
-            where = where & also
-        return ds.dataset(
-            [os.path.join(base, f) for f in self.files],
-            schema=to_arrow_schema(self.schema),
-            format=fmt,
-        ).to_table(columns=columns, filter=where)
-
-    def frame(self) -> DataFrame:
-        """The kept files as a Spark DataFrame (the Spark lane)."""
-        return self.catalog.load_files(
-            self.collection, self.database, self.files, meta=self.m
-        )
-
-    def candidates(self, spec: Conjunction, drop=SYSTEM_COLUMNS, spark_filters=(), also=None):
-        """:class:`Candidates` of the rows passing ``spec`` (and, on the
-        Spark lane, the Column filters ``spark_filters``; on the driver
-        lane, the ``pyarrow`` expression ``also``), without the columns
-        ``drop``."""
-        spark = self.catalog.spark
-        if self.driver:
-            schema = T.StructType([f for f in self.schema.fields if f.name not in drop])
-            table = self.read(spec, [f.name for f in schema.fields], also)
-            return Candidates(spark, schema, self.decision, self.m.srid, table=table)
-        df = self.frame()
-        for cond in (*spark_filters, *([F.expr(spec.sql())] if spec else [])):
-            df = df.filter(cond)
-        df = df.drop(*drop)
-        return Candidates(spark, df.schema, self.decision, self.m.srid, df=df)
 
 
 def bbox_candidates(
@@ -388,7 +288,7 @@ def _bbox_read(catalog, collection, database, m, mode: str, bbox: Bbox, where):
     ``where``; ``rest`` is ``[F.expr(where)]`` when the spec cannot say
     ``where`` (then only the Spark lane reads); ``read`` holds the files
     ``spec`` keeps and its lane."""
-    read = _PrunedRead(catalog, collection, database, m)
+    read = PrunedRead(catalog, collection, database, m)
     spec = envelope_terms(mode, bbox) or Conjunction()
     terms = where_terms(where, read.schema)
     rest = [F.expr(where)] if terms is None else []
@@ -430,7 +330,7 @@ def count_collection_by_bbox(
     bbox = _aligned_bbox(m.srid, bbox, bbox_crs, wsg84_order)
     if comparison_mode not in ("intersects", "disjoint") or (where and op == "OR"):
         return _bbox_filtered(
-            catalog, collection, database, bbox, comparison_mode, where, op
+            catalog, collection, database, bbox, comparison_mode, where, op, meta=m
         ).count()
     read, spec, rest = _bbox_read(catalog, collection, database, m, comparison_mode, bbox, where)
     if read.driver:
@@ -690,7 +590,7 @@ def knn_candidates(
     m = catalog.meta(collection, database)
     q = _knn_point(m.srid, point, point_crs, wsg84_order)
     k = int(k)
-    read = _PrunedRead(catalog, collection, database, m)
+    read = PrunedRead(catalog, collection, database, m)
     kth = _knn_threshold(read, q, k)
     spec = Conjunction()  # without a threshold: every row of every file
     if kth is not None and not math.isnan(kth):
@@ -741,7 +641,7 @@ def _file_lower_bound(st: dict | None, q: tuple[float, float]) -> float:
     return 0.0 if math.isnan(lb) else lb
 
 
-def _knn_threshold(read: _PrunedRead, q: tuple[float, float], k: int):
+def _knn_threshold(read: PrunedRead, q: tuple[float, float], k: int):
     """The k-th smallest row upper bound over the files nearest the point
     (by :func:`_file_lower_bound`) that hold at least ``k`` geometries by
     their stats; None when they hold fewer (then every row is a
@@ -757,7 +657,7 @@ def _knn_threshold(read: _PrunedRead, q: tuple[float, float], k: int):
         n += rows - (st.get("::nulls:__xmin") or [0])[0]
         if n >= k:
             break
-    head = _PrunedRead(read.catalog, read.collection, read.database, read.m, nearest)
+    head = PrunedRead(read.catalog, read.collection, read.database, read.m, nearest)
     head.decide()
     if not head.driver:
         kth, n = _kth_upper_bound(head.frame(), q, k)
