@@ -364,17 +364,19 @@ class TestRebaseConstraintGuard:
             dml.insert_into_collection(
                 cat, "c", pd.DataFrame({"v": list(range(n))}), database="d"
             )
-        orig_load = GeoDBCatalog.load_files
+        orig_split = dml._touched_untouched
         fired = {"done": False}
 
-        def hooked(self, coll, db, files, meta=None):
+        def hooked(*args):
+            # the rewrite has read its snapshot; it rewrites on the driver
+            # lane, as the snapshot declares no constraint
             if not fired["done"]:
                 fired["done"] = True
                 # racer adds a CHECK constraint (touches no files)
                 cat.add_constraint("c", "v_nonneg", "v >= 0", "d")
-            return orig_load(self, coll, db, files, meta=meta)
+            return orig_split(*args)
 
-        monkeypatch.setattr(GeoDBCatalog, "load_files", hooked)
+        monkeypatch.setattr(dml, "_touched_untouched", hooked)
         with pytest.raises(GeoDBError, match="Concurrent modification"):
             update_collection(cat, "c", {"v": -5}, "id=eq.1", database="d")
         monkeypatch.undo()

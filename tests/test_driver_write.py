@@ -8,6 +8,7 @@ from __future__ import annotations
 import datetime as dt
 import math
 import os
+from unittest import mock
 
 import pandas as pd
 import pyarrow.parquet as pq
@@ -270,18 +271,30 @@ def test_small_commits_run_one_job_and_leave_no_debris(spark, tmp_path):
     c.insert_into_collection("j", batch, database="dw")  # warm the path
     assert _jobs(spark, lambda: c.insert_into_collection("j", batch, database="dw")) == 1
     assert len(cat.meta("j", "dw").files) == 2
-    # both touch one file: ids 301..600 live in the second insert's file
+    # all touch one file: ids 301..600 live in the second insert's file.
+    # On the driver lane the rewrite runs no job; forced onto the Spark
+    # lane, it is one collect job
     assert _jobs(
         spark,
         lambda: c.update_collection("j", {"v": -1}, "id=gte.301&id=lte.320", database="dw"),
-    ) == 1
+    ) == 0
     assert _jobs(
         spark,
         lambda: c.delete_from_collection("j", "id=gte.321&id=lte.330", database="dw"),
-    ) == 1
+    ) == 0
+    with mock.patch.object(dml, "driver_rewrite_filter", lambda *a, **k: None):
+        assert _jobs(
+            spark,
+            lambda: c.update_collection("j", {"v": -2}, "id=gte.331&id=lte.340", database="dw"),
+        ) == 1
+        assert _jobs(
+            spark,
+            lambda: c.delete_from_collection("j", "id=gte.341&id=lte.350", database="dw"),
+        ) == 1
     got = c.get_collection("j", database="dw")
-    assert len(got) == 590
+    assert len(got) == 580
     assert (got.loc[got["id"].between(301, 320), "v"] == -1).all()
+    assert (got.loc[got["id"].between(331, 340), "v"] == -2).all()
     leftovers = [
         e
         for e in _data_entries(cat, "j", "dw")
@@ -393,8 +406,9 @@ def test_rewrite_of_dictionary_heavy_file_is_sized_decoded(spark, tmp_path, monk
     assert decoded > 20 * encoded  # ~2.4 MB of text in a few KB
     assert file_arrow_bytes(path) >= decoded
 
-    # fits: one collect job, the new file is driver-written
-    assert _jobs(spark, lambda: c.delete_from_collection("d", "id=eq.1", database="dw")) == 1
+    # fits: the one-file rewrite runs on the driver with no job, and the
+    # new file is driver-written
+    assert _jobs(spark, lambda: c.delete_from_collection("d", "id=eq.1", database="dw")) == 0
     [f] = cat.meta("d", "dw").files
     assert not _written_by_spark(os.path.join(cdir, f))
     # a bound above the encoded but below the decoded size: distributed

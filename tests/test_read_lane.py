@@ -11,6 +11,7 @@ lane."""
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 import math
 import struct
@@ -561,13 +562,60 @@ def test_lane_equals_spark_lane_sweep(spark, tmp_path, seed):
     _differential(spark, tmp_path, seed=seed, batches=6, rows=60, nboxes=6, operator_bbox=True)
 
 
-def test_grammar_reads_are_metamorphic_on_the_driver(spark, tmp_path):
-    """On the driver lane, over a generated history: the pruned read equals
-    the read of every file (NoREC), and a read splits into the reads of
-    ``p``, ``not p`` and ``p IS NULL`` for a leaf ``p`` (TLP)."""
+def spark_rewrite():
+    """Within the block, deletes and updates take the Spark lane; a batch
+    that fits the driver is still collected and written there, so both
+    lanes write through ``write_local_parquet``."""
+    return mock.patch.object(dml, "driver_rewrite_filter", lambda *a, **k: None)
+
+
+def _lone_files(cat, coll) -> list[tuple[int, int]]:
+    """The id ranges of the files whose ids no other file overlaps: a
+    filter inside one of them touches that file alone."""
+    spans = sorted(tuple(st["id"]) for st in cat.meta(coll, DB).file_stats().values() if "id" in st)
+    return [
+        (lo, hi) for i, (lo, hi) in enumerate(spans)
+        if (i == 0 or spans[i - 1][1] < lo) and (i == len(spans) - 1 or hi < spans[i + 1][0])
+    ]
+
+
+def _metamorphic(client, coll, rng, pruning_queries, wheres, n_leaves):
+    """NoREC: each pruning query's pruned read equals its read of every
+    file. TLP: each of ``wheres`` splits into the reads of ``p``, ``not p``
+    and ``p IS NULL`` for ``n_leaves`` leaves ``p``. All on the driver."""
     from xcube_geodb_spark.operators import pruning
 
+    for q in pruning_queries:
+        pruned = client.get_collection(coll, q, database=DB)
+        with mock.patch.object(pruning, "query_files", lambda *a, **k: None):
+            every = client.get_collection(coll, q, database=DB)
+        assert pruned.attrs["read"]["lane"] == every.attrs["read"]["lane"] == "driver", q
+        assert every.attrs["read"]["files_kept"] == every.attrs["read"]["files_total"]
+        _same(pruned, every)
+
+    def got(q):
+        f = client.get_collection(coll, q, database=DB)
+        assert f.attrs["read"]["lane"] == "driver", q
+        return f["id"].tolist()
+
+    for q in wheres:
+        for leaf in rng.choice(_LEAVES, n_leaves, replace=False):
+            col, _, cond = str(leaf).partition(".")
+            whole = got(f"{q}&order=id")
+            parts = [got(f"{q}&{col}={c}&order=id") for c in (cond, f"not.{cond}", "is.null")]
+            if cond == "is.null":  # `p IS NULL` of an IS NULL test is never true
+                parts[2] = []
+            assert sorted(parts[0] + parts[1] + parts[2]) == whole, (q, leaf)
+
+
+def test_grammar_reads_are_metamorphic_on_the_driver(spark, tmp_path):
+    """On the driver lane, over a generated history and after each later
+    step (deletes and literal updates on both rewrite lanes, a compaction,
+    a restore): the pruned read equals the read of every file (NoREC), and
+    a read splits into the reads of ``p``, ``not p`` and ``p IS NULL`` for
+    a leaf ``p`` (TLP)."""
     client = GeoDBSparkClient(spark, warehouse=str(tmp_path / "wh"), user=DB)
+    cat = client.catalog
     rng = _history(client, "m", seed=7, batches=5, rows=25)
     ids = client.get_collection("m", "order=id", database=DB)["id"].tolist()
     a, b = ids[len(ids) // 5], ids[len(ids) // 2]
@@ -576,32 +624,46 @@ def test_grammar_reads_are_metamorphic_on_the_driver(spark, tmp_path):
         f"id=in.({a},{b},{ids[-1]})&order=v.desc,id", "late=gte.3&score=lt.NaN&order=score,id",
         *(_grammar_query(rng) + f"&id=lte.{b}" for _ in range(10)),
     ]
-    for q in pruning_queries:
-        pruned = client.get_collection("m", q, database=DB)
-        with mock.patch.object(pruning, "query_files", lambda *a, **k: None):
-            every = client.get_collection("m", q, database=DB)
-        assert pruned.attrs["read"]["lane"] == every.attrs["read"]["lane"] == "driver", q
-        assert every.attrs["read"]["files_kept"] == every.attrs["read"]["files_total"]
-        _same(pruned, every)
+    wheres = [*(_grammar_query(rng).split("&order=")[0] for _ in range(6)), "v=gte.0"]
+    _metamorphic(client, "m", rng, pruning_queries, wheres, 6)
     assert any(
-        client.get_collection("m", q, database=DB).attrs["read"]["files_kept"] < len(
-            client.catalog.meta("m", DB).files)
+        client.get_collection("m", q, database=DB).attrs["read"]["files_kept"] < len(cat.meta("m", DB).files)
         for q in pruning_queries
     )
 
-    def got(q):
-        f = client.get_collection("m", q, database=DB)
-        assert f.attrs["read"]["lane"] == "driver", q
-        return f["id"].tolist()
+    def in_one_file(where, values=None, lane="driver"):
+        def step():
+            lo, hi = _lone_files(cat, "m")[int(rng.integers(0, len(_lone_files(cat, "m"))))]
+            query = f"id=gte.{lo}&id=lte.{hi}&{where}"
+            with contextlib.nullcontext() if lane == "driver" else spark_rewrite():
+                if values is None:
+                    client.delete_from_collection("m", query, database=DB)
+                else:
+                    client.update_collection("m", values, query, database=DB)
+            assert cat.list_versions("m", DB)[-1]["operationMetrics"]["lane"] == (
+                "driver" if lane == "driver" else "collect")
+        return step
 
-    for q in [*(_grammar_query(rng).split("&order=")[0] for _ in range(6)), "v=gte.0"]:
-        for leaf in rng.choice(_LEAVES, 6, replace=False):
-            col, _, cond = str(leaf).partition(".")
-            whole = got(f"{q}&order=id")
-            parts = [got(f"{q}&{col}={c}&order=id") for c in (cond, f"not.{cond}", "is.null")]
-            if cond == "is.null":  # `p IS NULL` of an IS NULL test is never true
-                parts[2] = []
-            assert sorted(parts[0] + parts[1] + parts[2]) == whole, (q, leaf)
+    steps = [
+        in_one_file("score=not.gt.0.5"),
+        in_one_file("or=(v.lt.10,name.is.null)", {"score": 2, "name": "u", "flag": None}),
+        in_one_file("flag=is.true", lane="spark"),
+        in_one_file("late=is.null", {"late": 4, "v": None}, lane="spark"),
+        lambda: client.update_collection("m", {"v": 41}, f"id=lte.{b}&score=gt.1.5", database=DB),
+        lambda: client.optimize_collection("m", database=DB),
+        lambda: client.restore_collection("m", cat.meta("m", DB).version - 3, database=DB),
+        in_one_file("v=gte.20", {"name": None}),
+    ]
+    for i, step in enumerate(steps):
+        version = cat.meta("m", DB).version
+        step()
+        assert cat.meta("m", DB).version == version + 1, i
+        _metamorphic(
+            client, "m", rng, rng.choice(pruning_queries, 4, replace=False),
+            rng.choice(wheres, 2, replace=False), 3,
+        )
+    assert [v["operation"] for v in cat.list_versions("m", DB)[-len(steps):]] == [
+        "DELETE", "UPDATE", "DELETE", "UPDATE", "UPDATE", "OPTIMIZE", "RESTORE", "UPDATE"]
 
 
 # -- exits to the Spark lane --------------------------------------------------

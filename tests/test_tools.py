@@ -84,3 +84,15 @@ class TestProfileComposedTimers:
         assert prof.CALLS["  driver_write.parquet"] == 1
         assert prof.PHASES["  driver_write.parquet"] > 0
         assert "  spark_write.parquet(job)" not in prof.CALLS
+
+
+class TestLaneCrossover:
+    def test_both_lanes_agree_at_a_tiny_size(self, spark, tmp_path):
+        """The crossover tool at 600 features, one run per lane: every read
+        and rewrite answers the same on both lanes."""
+        tool = _load("lane_crossover")
+        recs = list(tool.run(spark, [600], reps=1, seed=1, workdir=str(tmp_path)))
+        assert [r["read"] for r in recs][-2:] == ["delete", "update"]
+        assert len(recs) == 10
+        assert [r["read"] for r in recs if not r["same"]] == []
+        assert all(r["rows"] for r in recs[-2:])

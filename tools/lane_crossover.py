@@ -1,5 +1,6 @@
 #!/usr/bin/env python
-"""Where does a client read stop being faster on the driver lane?
+"""Where does a client read or a one-file rewrite stop being faster on the
+driver lane?
 
 Builds the benchmark's ``land_use``-shaped collection (``perfbench/gen.py``,
 six spatially coherent files) at each size given, then times client bbox,
@@ -18,13 +19,27 @@ median of ``--reps`` runs each:
 - ``filter_ordered``: ``raba_id=eq.V&order=id&limit=40``, the benchmark's
   grammar filter (every file kept).
 
-Prints one JSON line per read and size: the kept files' summed decoded
-bytes against the driver bound (``dml.DRIVER_BYTES``), both lanes' median
-milliseconds, and whether the lanes returned the same ids or count.
+It then times the benchmark's one-file rewrites on both lanes of
+``dml._rewrite``: the driver lane (pyarrow read, filter and write, no Spark
+job) against the Spark lane (forced by patching ``dml.driver_rewrite_filter``;
+the touched file fits the driver, so Spark's batch is collected and written
+there). Each run starts from the same snapshot (a ``restore_collection``
+after it, untimed):
+
+- ``delete``: ``id=gte.A&id=lte.A+59`` in the middle file;
+- ``update``: ``raba_id`` SET over a 400-id window of it, filtered on
+  ``raba_id``.
+
+Prints one JSON line per read or rewrite and size: the kept files' summed
+decoded bytes against the driver bound (``dml.DRIVER_BYTES``), both lanes'
+median milliseconds, and whether the lanes returned the same ids or count
+(for a rewrite: the same ids and ``raba_id`` values in and around its
+window after it).
 
     python tools/lane_crossover.py 40000 160000 640000 1000000 --reps 5
 
-One million features decode to about 261 MB, just under the 256 MiB bound.
+One million features decode to about 261 MB, just under the 256 MiB bound;
+each of the six files then holds about 167k rows.
 """
 
 from __future__ import annotations
@@ -37,44 +52,35 @@ import statistics
 import sys
 import tempfile
 import time
+from unittest import mock
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path[:0] = [REPO, os.path.join(REPO, "perfbench")]
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("sizes", type=int, nargs="+", help="features per collection")
-    ap.add_argument("--reps", type=int, default=5)
-    ap.add_argument("--seed", type=int, default=1)
-    args = ap.parse_args()
-
+def run(spark, sizes, reps: int, seed: int, workdir: str):
+    """Yield one record per read or rewrite and size (see the module
+    docstring), building each collection under ``workdir``."""
     from gen import DOMAIN, PROPERTIES, RABA_IDS, make_dataset
     from workloads import DISTRICT, REGION, STREET
 
     from xcube_geodb_spark.client import GeoDBSparkClient
     from xcube_geodb_spark.operators import dml, spatial
     from xcube_geodb_spark.operators.stats import file_arrow_bytes
-    from xcube_geodb_spark.session import get_spark
 
-    tmp = tempfile.mkdtemp(prefix="lane-crossover-")
-    spark = get_spark(
-        app_name="lane-crossover",
-        extra_conf={
-            "spark.sql.warehouse.dir": os.path.join(tmp, "spark-warehouse"),
-            "spark.local.dir": os.path.join(tmp, "spark-local"),
-        },
-    )
-    decide = dml.files_fit_driver
-    lanes = {"driver": lambda *a: True, "spark": lambda *a: False}
+    on_driver = mock.patch.object(dml, "files_fit_driver", lambda *a: True)
+    on_spark = {
+        "read": mock.patch.object(dml, "files_fit_driver", lambda *a: False),
+        "rewrite": mock.patch.object(dml, "driver_rewrite_filter", lambda *a, **k: None),
+    }
 
     def around(c, half):
         return (c[0] - half[0], c[1] - half[1], c[0] + half[0], c[1] + half[1])
 
-    for n in args.sizes:
-        client = GeoDBSparkClient(spark, warehouse=os.path.join(tmp, f"wh-{n}"))
+    for n in sizes:
+        client = GeoDBSparkClient(spark, warehouse=os.path.join(workdir, f"wh-{n}"))
         client.create_collection("lu", PROPERTIES, crs=4326)
-        data = make_dataset(args.seed, n)
+        data = make_dataset(seed, n)
         for batch in data.batches:
             client.insert_into_collection("lu", batch.to_pandas())
         cat, db = client.catalog, client.database
@@ -96,27 +102,18 @@ def main() -> None:
                 "lu", f"raba_id=eq.{RABA_IDS[2]:g}&order=id&limit=40"
             ),
         }
-        for name, read in reads.items():
-            times = {lane: [] for lane in lanes}
-            answer = {}
-            read()  # warm
-            for r in range(args.reps):
-                for lane in (("driver", "spark") if r % 2 == 0 else ("spark", "driver")):
-                    dml.files_fit_driver = lanes[lane]
-                    t0 = time.perf_counter()
-                    got = read()
-                    times[lane].append(time.perf_counter() - t0)
-                    answer[lane] = got if isinstance(got, int) else got["id"].tolist()
-            dml.files_fit_driver = decide
-            if name in boxes:
-                decision = {}
-                spatial.count_collection_by_bbox(
-                    cat, "lu", boxes[name], "intersects", database=db, decision=decision
-                )
-            else:
-                decision = read().attrs["read"]
-            kept = decision["files_kept"]
-            print(json.dumps({
+        # the rewrites' windows lie inside the middle file (ids run in
+        # batch order, one file per batch)
+        lo = n // 2 + 1
+        old_v, new_v = float(RABA_IDS[2]), float(RABA_IDS[1])
+        rewrites = {
+            "delete": (59, lambda hi: client.delete_from_collection("lu", f"id=gte.{lo}&id=lte.{hi}")),
+            "update": (399, lambda hi: client.update_collection(
+                "lu", {"raba_id": new_v}, f"id=gte.{lo}&id=lte.{hi}&raba_id=eq.{old_v:g}")),
+        }
+
+        def record(name, kept, times, answer):
+            return {
                 "features": n,
                 "read": name,
                 "files_kept": f"{kept}/{len(size)}",
@@ -128,10 +125,72 @@ def main() -> None:
                 "rows": answer["driver"] if isinstance(answer["driver"], int) else len(answer["driver"]),
                 "same": answer["driver"] == answer["spark"],
                 "load": round(os.getloadavg()[0], 2),
-            }), flush=True)
+            }
+
+        for name, read in reads.items():
+            times = {"driver": [], "spark": []}
+            answer = {}
+            read()  # warm
+            for r in range(reps):
+                for lane in (("driver", "spark") if r % 2 == 0 else ("spark", "driver")):
+                    with on_driver if lane == "driver" else on_spark["read"]:
+                        t0 = time.perf_counter()
+                        got = read()
+                        times[lane].append(time.perf_counter() - t0)
+                    answer[lane] = got if isinstance(got, int) else got["id"].tolist()
+            if name in boxes:
+                decision = {}
+                spatial.count_collection_by_bbox(
+                    cat, "lu", boxes[name], "intersects", database=db, decision=decision
+                )
+            else:
+                decision = read().attrs["read"]
+            yield record(name, decision["files_kept"], times, answer)
+
+        for name, (span, rewrite) in rewrites.items():
+            times = {"driver": [], "spark": []}
+            answer = {}
+            base = cat.meta("lu", db).version
+            hi = lo + min(span, n // 6 - 1)
+            for r in range(reps + 1):  # the first pair warms
+                for lane in (("driver", "spark") if r % 2 == 0 else ("spark", "driver")):
+                    with on_driver if lane == "driver" else on_spark["rewrite"]:
+                        t0 = time.perf_counter()
+                        rewrite(hi)
+                        if r:
+                            times[lane].append(time.perf_counter() - t0)
+                    took = cat.list_versions("lu", db)[-1]["operationMetrics"]["lane"]
+                    assert (took == "driver") == (lane == "driver"), (name, lane, took)
+                    got = client.get_collection("lu", f"id=gte.{lo - 20}&id=lte.{hi + 20}&order=id")
+                    answer[lane] = list(zip(got["id"].tolist(), got["raba_id"].tolist()))
+                    cat.restore_collection("lu", db, base)
+            yield record(name, 1, times, answer)
         client.drop_collection("lu")
-    spark.stop()
-    shutil.rmtree(tmp, ignore_errors=True)
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("sizes", type=int, nargs="+", help="features per collection")
+    ap.add_argument("--reps", type=int, default=5)
+    ap.add_argument("--seed", type=int, default=1)
+    args = ap.parse_args()
+
+    from xcube_geodb_spark.session import get_spark
+
+    tmp = tempfile.mkdtemp(prefix="lane-crossover-")
+    spark = get_spark(
+        app_name="lane-crossover",
+        extra_conf={
+            "spark.sql.warehouse.dir": os.path.join(tmp, "spark-warehouse"),
+            "spark.local.dir": os.path.join(tmp, "spark-local"),
+        },
+    )
+    try:
+        for rec in run(spark, args.sizes, args.reps, args.seed, tmp):
+            print(json.dumps(rec), flush=True)
+    finally:
+        spark.stop()
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -825,7 +825,19 @@ class GeoDBCatalog:
             )
 
     def list_versions(self, collection: str, database: str) -> list[dict]:
-        """Retained snapshots, oldest first: version + commit timestamp."""
+        """Retained snapshots, oldest first: version, commit timestamp and
+        the commit's ``operation`` and ``operationMetrics`` (see
+        :meth:`commit_version`; None for a snapshot no commit wrote, such
+        as the created collection)."""
+
+        def record(d: dict) -> dict:
+            return {
+                "version": d["version"],
+                "modified_at": d.get("modified_at"),
+                "operation": d.get("operation"),
+                "operationMetrics": d.get("operationMetrics"),
+            }
+
         m = self.meta(collection, database)
         hdir = os.path.join(self._coll_dir(collection, database), "history")
         out = []
@@ -833,12 +845,9 @@ class GeoDBCatalog:
             for fn in os.listdir(hdir):
                 if fn.startswith("v") and fn.endswith(".json"):
                     with open(os.path.join(hdir, fn)) as f:
-                        d = json.load(f)
-                    out.append(
-                        {"version": d["version"], "modified_at": d.get("modified_at")}
-                    )
+                        out.append(record(json.load(f)))
         if m.version not in {o["version"] for o in out}:
-            out.append({"version": m.version, "modified_at": m.d.get("modified_at")})
+            out.append(record(m.d))
         return sorted(out, key=lambda o: o["version"])
 
     def version_at_timestamp(self, collection: str, database: str, ts) -> int:
@@ -912,6 +921,7 @@ class GeoDBCatalog:
                 "srid": old.srid,
                 "stats_complete": set(old.files) <= covered,
             },
+            operation="RESTORE",
         )
 
     def load_df(
@@ -1021,19 +1031,38 @@ class GeoDBCatalog:
         rebase_on_disjoint: bool = False,
         local_batch: bool = False,
         cluster_persist: bool = False,
+        operation: str = "WRITE",
     ) -> None:
         """Write ``new_df`` (if any) as new data files; the next snapshot is
         ``keep_files + written files``.
 
-        ``local_batch`` (a batch :func:`operators.dml.fits_driver_write`
-        proved small): the clustered batch is collected in ONE Spark job
-        (``toArrow`` over ``coalesce(1).sortWithinPartitions(key)``, so
-        Spark still evaluates every cast, predicate and the clustering
-        key) and :func:`write_local_parquet` writes its files on the
-        driver — no Spark write job, no output-committer protocol. Any
-        other batch takes the range-clustered distributed Spark write.
+        ``new_df`` is written on one of three lanes:
+
+        - ``driver``: a ``pyarrow.Table`` the caller built on the driver
+          (a one-file delete or update, ``operators/dml.py``) is written
+          as it is by :func:`write_local_parquet`, with no Spark job. The
+          caller hands its rows over in layout order: they come from one
+          file whose clustering key the edit leaves unchanged.
+        - ``collect`` (``local_batch``, a batch
+          :func:`operators.dml.fits_driver_write` proved small): the
+          clustered batch is collected in ONE Spark job (``toArrow`` over
+          ``coalesce(1).sortWithinPartitions(key)``, so Spark still
+          evaluates every cast, predicate and the clustering key) and
+          :func:`write_local_parquet` writes its files on the driver — no
+          Spark write job, no output-committer protocol.
+        - ``spark``: any other batch takes the range-clustered distributed
+          Spark write.
+
         The manifest, stats shards, history link, version checks and
-        orphan cleanup below are the same for both.
+        orphan cleanup below are the same for all three.
+
+        Each history record carries Delta's ``operation`` (named by the
+        caller: INSERT, UPSERT, DELETE, UPDATE, OPTIMIZE, RESTORE, STREAM,
+        WRITE by default) and ``operationMetrics``: the ``lane`` (a commit
+        that writes nothing runs on the driver), ``files_added`` and
+        ``files_removed`` (the manifest delta), ``bytes_added`` (the sizes
+        of the added files) and ``duration_ms`` (this call up to the
+        commit point).
 
         Multi-writer safety (optimistic concurrency, Delta-style): the
         commit POINT is an exclusive hard-link of the serialized manifest
@@ -1106,6 +1135,13 @@ class GeoDBCatalog:
             expected_version = fresh.version
             return True
 
+        import pyarrow as pa
+
+        started = time.perf_counter()
+        if new_df is None or isinstance(new_df, pa.Table):
+            lane = "driver"
+        else:
+            lane = "collect" if local_batch else "spark"
         self._roll_forward_crashed_commit(collection, database)
         m = self.meta(collection, database)
         if expected_version is not None and m.version != expected_version:
@@ -1119,20 +1155,24 @@ class GeoDBCatalog:
         if new_df is not None:
             sub = os.path.join("data", uuid.uuid4().hex)
             out_dir = os.path.join(cdir, sub)
-            new_df, cached = self._apply_clustering(
-                new_df,
-                m,
-                local_batch=local_batch,
-                cluster_persist=cluster_persist,
-            )
             # bound file size: rows within a partition are cluster-sorted, so
             # split files keep disjoint key/z-order spans for footer pruning
             max_rows = int(m.d.get("max_file_rows", 2_000_000))
-            if local_batch:
+            if lane == "driver":
+                # the caller's rows are already in layout order
+                names = write_local_parquet(new_df, out_dir, max_rows)
+            else:
+                new_df, cached = self._apply_clustering(
+                    new_df,
+                    m,
+                    local_batch=local_batch,
+                    cluster_persist=cluster_persist,
+                )
+            if lane == "collect":
                 # one collect job; the files are written here, without
                 # Spark's write planning and output-committer protocol
                 names = write_local_parquet(new_df.toArrow(), out_dir, max_rows)
-            else:
+            elif lane == "spark":
                 try:
                     new_df.write.option("maxRecordsPerFile", max_rows).mode(
                         "overwrite"
@@ -1160,7 +1200,9 @@ class GeoDBCatalog:
                     f"expected v{expected_version}, found v{m.version}"
                 )
         keep = list(keep_files) if keep_files is not None else m.files
+        before = set(m.files)
         m.d["files"] = keep + new_files
+        added = [f for f in m.d["files"] if f not in before]
         # Delta-style data skipping: per-file column min/max computed ONCE
         # at commit (one footer read per new file), so selective scans/DML
         # prune files without touching any footer at query time. Stats are
@@ -1293,6 +1335,14 @@ class GeoDBCatalog:
                 merged = dict(m.d.get(k) or {})
                 merged.update(v)
                 m.d[k] = merged
+        m.d["operation"] = operation
+        m.d["operationMetrics"] = {
+            "lane": lane,
+            "files_added": len(added),
+            "files_removed": len(before - set(m.d["files"])),
+            "bytes_added": sum(os.path.getsize(os.path.join(cdir, f)) for f in added),
+            "duration_ms": round(1000 * (time.perf_counter() - started), 1),
+        }
         # COMMIT POINT: exclusive hard-link of the serialized manifest into
         # the history slot — the filesystem admits exactly one v{N} writer.
         # The history snapshot also serves time travel (load_df(version=...),

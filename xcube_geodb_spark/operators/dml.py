@@ -17,6 +17,13 @@ Physical model: collections are manifests of immutable parquet files
 but only the files whose parquet-footer ``id``/envelope stats can contain
 affected rows; untouched files stay in the manifest verbatim. At 100 TB
 that's the difference between rewriting a partition and rewriting the table.
+
+A delete or update that touches one small file rewrites it end to end on
+the driver (``_rewrite``): ``pyarrow`` reads the file, the filter's
+``pyarrow`` lowering masks it, and the Arrow table goes to the commit with
+no Spark job, when the collection's layout and the SET values need nothing
+only Spark computes (:func:`driver_rewrite_filter`). Every other rewrite
+reads the touched files with Spark.
 """
 
 from __future__ import annotations
@@ -28,6 +35,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from xcube_geodb_spark.catalog import (
     SYSTEM_COLUMNS,
@@ -45,7 +53,7 @@ from xcube_geodb_spark.geometry.geom import (
     parse_wkt,
     to_wkb,
 )
-from xcube_geodb_spark.geometry.udfs import with_envelope_columns
+from xcube_geodb_spark.geometry.udfs import Conjunction, with_envelope_columns
 from xcube_geodb_spark.operators.ids import (
     assign_sequential_ids_counted,
     assign_sequential_ids_measured,
@@ -93,8 +101,6 @@ def _check_crs(meta: CollectionMeta, crs: int | None) -> None:
 def _pandas_to_spark(catalog: GeoDBCatalog, pdf: pd.DataFrame, schema) -> DataFrame:
     """The columns of ``pdf`` that ``schema`` declares, as a Spark frame of
     the declared types (``pdf``'s geometry must already be WKB)."""
-    import pyspark.sql.types as T
-
     fields = [
         T.StructField(f.name, f.dataType, True)
         for f in schema.fields
@@ -250,8 +256,6 @@ def _arrow_row_bytes(schema) -> Column:
     ``schema``: each value's width or byte length, plus an 8-byte offset
     and a validity byte (arrays sum their elements the same way). Other
     types count at 16 bytes, the widest fixed-width Arrow value."""
-    import pyspark.sql.types as T
-
     widths = {
         T.BooleanType: 1,
         T.ByteType: 1,
@@ -302,8 +306,6 @@ def _pandas_arrow_bytes(pdf: pd.DataFrame, schema) -> int:
     counts a list cell without its elements, so array columns are counted
     cell by cell; 9 bytes per cell cover offsets, validity and the columns
     only Spark fills in."""
-    import pyspark.sql.types as T
-
     nbytes = int(pdf.memory_usage(deep=True, index=False).sum())
     for f in schema.fields:
         if isinstance(f.dataType, T.ArrayType) and f.name in pdf.columns:
@@ -336,10 +338,13 @@ def insert_into_collection(
     merge_meta: dict | None = None,
     retries: int = 0,
     expected_version: int | None = None,
+    operation: str | None = None,
 ) -> int:
     """Returns the number of rows written. ``merge_meta`` one-level-merges
     into dict-valued collection metadata keys in the same atomic commit
-    (streaming-sink epochs; see catalog.commit_version).
+    (streaming-sink epochs; see catalog.commit_version). ``operation``
+    names the commit in the version history (default INSERT or UPSERT;
+    the streaming sinks pass STREAM).
 
     ``expected_version`` pins the commit's base snapshot to a version the
     CALLER read (instead of this function's own fresh meta read). Pass it
@@ -374,7 +379,7 @@ def insert_into_collection(
             try:
                 return insert_into_collection(
                     catalog, collection, values, upsert, crs, database,
-                    merge_meta, retries=0,
+                    merge_meta, retries=0, operation=operation,
                 )
             except GeoDBError as e:
                 if "Concurrent modification" not in str(e):
@@ -385,6 +390,7 @@ def insert_into_collection(
         raise last
     m = catalog.meta_for_write(collection, database)
     base_version = m.version if expected_version is None else expected_version
+    operation = operation or ("UPSERT" if upsert else "INSERT")
     if isinstance(values, pd.DataFrame) and not upsert:
         # fast path: the rows are already driver-side — assign ids AND
         # envelopes in pandas, skipping every Python-worker round-trip
@@ -394,7 +400,8 @@ def insert_into_collection(
         _check_crs(m, crs)
         pdf = values.copy()
         pdf.columns = [c.lower() for c in pdf.columns]
-        pdf = pdf.drop(columns=["id"], errors="ignore")  # geodb.py:1499-1500
+        # geodb.py:1499-1500; envelopes always derive from the geometry
+        pdf = pdf.drop(columns=["id", *SYSTEM_COLUMNS], errors="ignore")
         pdf["id"] = range(m.max_id + 1, m.max_id + 1 + len(pdf))
         if "geometry" in pdf.columns:
             # each value parsed once: its WKB and its envelope come from
@@ -430,6 +437,7 @@ def insert_into_collection(
             expected_version=base_version,
             merge_meta=merge_meta,
             local_batch=fits_driver_write(catalog.spark, _pandas_arrow_bytes(pdf, schema)),
+            operation=operation,
         )
         return len(pdf)
 
@@ -549,6 +557,7 @@ def insert_into_collection(
                 # the merge re-runs joins + the envelope kernel if the
                 # clustering sampler recomputes it — cache it instead
                 cluster_persist=True,
+                operation=operation,
             )
         finally:
             if id_cache is not None:
@@ -593,6 +602,7 @@ def insert_into_collection(
             # collected once and written on the driver — no range-sampling
             # job, no Spark write job
             local_batch=fits_driver_write(catalog.spark, n_bytes),
+            operation=operation,
         )
     finally:
         if id_cache is not None:
@@ -611,14 +621,17 @@ def files_fit_driver(
     """:func:`fits_driver_write` for the rows of ``files``: the sum of their
     decoded sizes (:func:`stats.file_arrow_bytes`, from the footers of just
     these files and the dictionary indices of any dictionary-encoded text)
-    bounds what a driver collect or read of them holds. It decides both
-    sides of "small enough for the driver":
+    bounds what a driver collect or read of them holds. It decides every
+    "small enough for the driver":
 
-    - a rewrite (delete, update, compaction) of ``files`` is one collect
-      job and a driver-side write instead of a range-sampling job plus a
-      Spark write;
-    - a pruned client read of ``files`` (operators/spatial.py) reads and
-      refines them on the driver with no Spark job at all.
+    - a pruned client read of ``files`` (``pruning.PrunedRead``) reads and
+      refines them on the driver with no Spark job at all;
+    - a one-file delete or literal update of ``files`` (``_rewrite``, through
+      the same ``PrunedRead.decide``) reads, filters and writes the file on
+      the driver, with no Spark job either;
+    - any other rewrite (delete, update, compaction) of ``files`` is one
+      collect job and a driver-side write instead of a range-sampling job
+      plus a Spark write.
 
     Anything larger keeps the Spark path."""
     limit = _driver_limit(catalog.spark)
@@ -661,26 +674,7 @@ def delete_from_collection(
 ) -> None:
     """Delete rows matching a PostgREST filter (``geodb.py:1325-1354``).
     Only files whose footer stats admit matching rows are rewritten."""
-    m = catalog.meta_for_write(collection, database)
-    sch = {f.name: f.dataType for f in m.spark_schema(include_system=True).fields}
-    q = parse_query(query)
-    pq = parse_postgrest_query(q, schema=sch)
-    if pq.predicate is None:
-        raise GeoDBError("delete requires a filter query")
-    touched, untouched = _touched_untouched(catalog, collection, database, q, m)
-    if not touched:
-        return  # no file can contain matching rows: delete is a no-op
-    df = catalog.load_files(collection, database, touched)
-    keep = df.filter(~F.coalesce(pq.predicate, F.lit(False)))
-    catalog.commit_version(
-        collection,
-        database,
-        keep,
-        keep_files=untouched,
-        expected_version=m.version,
-        rebase_on_disjoint=True,
-        local_batch=files_fit_driver(catalog, collection, database, touched),
-    )
+    _rewrite(catalog, collection, database, query, None)
 
 
 def delete_ids(
@@ -722,6 +716,7 @@ def delete_ids(
         expected_version=m.version,
         rebase_on_disjoint=True,
         local_batch=files_fit_driver(catalog, collection, database, touched),
+        operation="DELETE",
     )
 
 
@@ -735,28 +730,138 @@ def update_collection(
     """UPDATE ... SET values WHERE filter (``geodb.py:1356-1398``);
     ``id`` removed from SET; ``modified_at`` stamped on changed rows.
     Only files whose footer stats admit matching rows are rewritten."""
+    values = {k.lower(): v for k, v in values.items() if k.lower() != "id"}
+    _rewrite(catalog, collection, database, query, values)
+
+
+# Spark's integral types and their widths: an int SET value inside the
+# range is what Spark's ``lit(v).cast(type)`` stores
+_INTEGRAL_BITS = {T.ByteType: 8, T.ShortType: 16, T.IntegerType: 32, T.LongType: 64}
+
+
+def _arrow_settable(v, dtype: T.DataType) -> bool:
+    """True when ``pa.scalar(v)`` of the column's Arrow type equals Spark's
+    ``lit(v).cast(dtype)``: None, a bool on a boolean column, a non-bool
+    int inside an integral column's range, an int of the long range or a
+    float on a DOUBLE column, a str on a string column. Anything else (a
+    date string, ``True`` into an integral column, a FLOAT column) is left
+    to Spark's cast."""
+    if v is None:
+        return True
+    if isinstance(dtype, T.BooleanType):
+        return type(v) is bool
+    if isinstance(dtype, T.StringType):
+        return type(v) is str
+    if type(v) is int:
+        bits = 64 if isinstance(dtype, T.DoubleType) else _INTEGRAL_BITS.get(type(dtype))
+        return bits is not None and -(2 ** (bits - 1)) <= v < 2 ** (bits - 1)
+    return type(v) is float and isinstance(dtype, T.DoubleType)
+
+
+def driver_rewrite_filter(m: CollectionMeta, q: Query, values: dict | None = None):
+    """The eligibility test of a rewrite's driver lane: the filter's
+    ``pyarrow`` lowering (:meth:`filters.Query.arrow` over the declared
+    columns, system columns included) when a delete (``values`` None) or
+    an update of SET ``values`` can rewrite its file on the driver, else
+    None. The collection must declare no CHECK constraint (its SQL runs in
+    Spark), no btree index and no lsh/ivf/ivfpq index (their layout and
+    the ``__annbucket``/``__pqcode`` columns are built in Spark); an update
+    may not SET ``geometry`` (the envelopes derive from it) and each SET
+    value must be :func:`_arrow_settable` on its column."""
+    if m.d.get("constraints") or any(
+        i.get("type") in ("btree", "lsh", "ivf", "ivfpq") for i in m.d.get("indexes", [])
+    ):
+        return None
+    types = {f.name: f.dataType for f in m.spark_schema().fields}
+    if values is not None and not all(
+        k != "geometry" and _arrow_settable(v, types[k]) for k, v in values.items()
+    ):
+        return None
+    return q.arrow(types)
+
+
+def _driver_batch(read, where, values: dict | None):
+    """The rewritten rows of the one kept file of ``read`` as an Arrow
+    table, in the file's order: without the rows ``where`` holds for (a
+    delete, ``values`` None), or with ``values`` and one UTC "now" in
+    ``modified_at`` on them (an update). A NULL of ``where`` counts as no
+    match, as Spark's ``coalesce(pred, false)`` does."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    names = [f.name for f in read.schema.fields]
+    table = read.read(Conjunction(), {**{n: pc.field(n) for n in names}, "__hit": where})
+    hit = pc.fill_null(table.column("__hit"), False)
+    table = table.drop_columns(["__hit"])
+    if values is None:
+        return table.filter(pc.invert(hit))
+    sets = {**values, "modified_at": dt.datetime.now(dt.timezone.utc)}
+    for k, v in sets.items():
+        i = table.schema.get_field_index(k)
+        col = table.column(i)
+        v = float(v) if pa.types.is_floating(col.type) and v is not None else v
+        table = table.set_column(i, k, pc.if_else(hit, pa.scalar(v, col.type), col))
+    return table
+
+
+def _rewrite(
+    catalog: GeoDBCatalog, collection: str, database: str, query: str, values: dict | None
+) -> None:
+    """Delete (``values`` None) or update the rows matching ``query``,
+    rewriting the files of the write snapshot that may hold them.
+
+    One maybe-touched file that fits the driver
+    (:meth:`pruning.PrunedRead.decide`, ``files_fit_driver``) and passes
+    :func:`driver_rewrite_filter` is read, filtered and handed to the
+    commit as an Arrow table: no Spark job. Any other rewrite reads the
+    touched files with Spark; the commit then collects the batch when it
+    fits the driver, else writes it with Spark."""
+    from xcube_geodb_spark.operators.pruning import PrunedRead
+
     m = catalog.meta_for_write(collection, database)
     sch = {f.name: f.dataType for f in m.spark_schema(include_system=True).fields}
     q = parse_query(query)
     pq = parse_postgrest_query(q, schema=sch)
+    what = "delete" if values is None else "update"
     if pq.predicate is None:
-        raise GeoDBError("update requires a filter query")
-    values = {k.lower(): v for k, v in values.items() if k.lower() != "id"}
-    schema = {f.name: f.dataType for f in m.spark_schema().fields}
-    for k in values:
-        if k not in schema:
-            raise GeoDBError(f"Unknown property in update: {k!r}")
+        raise GeoDBError(f"{what} requires a filter query")
+    if values is not None:
+        props = {f.name for f in m.spark_schema(include_system=False).fields}
+        for k in values:
+            if k not in props:
+                raise GeoDBError(f"Unknown property in update: {k!r}")
     touched, untouched = _touched_untouched(catalog, collection, database, q, m)
     if not touched:
-        return  # no file can contain matching rows: update is a no-op
-    df = catalog.load_files(collection, database, touched)
-    pred = F.coalesce(pq.predicate, F.lit(False))
+        return  # no file can contain matching rows: a no-op
+    read = PrunedRead(catalog, collection, database, m, touched)
+    where = driver_rewrite_filter(m, q, values) if len(touched) == 1 else None
+    read.decide(driver_ok=where is not None)
+    if read.driver:
+        batch = _driver_batch(read, where, values)
+    else:
+        batch = _spark_batch(read.frame(), pq.predicate, values, sch)
+        if values is not None:
+            _enforce_constraints(m, batch, what)
+    catalog.commit_version(
+        collection, database, batch, keep_files=untouched,
+        expected_version=m.version, rebase_on_disjoint=True,
+        local_batch=not read.driver and files_fit_driver(catalog, collection, database, touched),
+        operation=what.upper(),
+    )
+
+
+def _spark_batch(df: DataFrame, predicate: Column, values: dict | None, types: dict) -> DataFrame:
+    """The Spark lane's rewrite of the touched files ``df``: the rows
+    ``predicate`` does not hold for (a delete), or every row with
+    ``values`` SET where it holds (an update; a geometry SET recomputes
+    the envelopes)."""
+    pred = F.coalesce(predicate, F.lit(False))
+    if values is None:
+        return df.filter(~pred)
     sets = {
         k: F.when(
             pred,
-            F.lit(_normalize_geometry_value(v) if k == "geometry" else v).cast(
-                schema[k]
-            ),
+            F.lit(_normalize_geometry_value(v) if k == "geometry" else v).cast(types[k]),
         ).otherwise(F.col(k))
         for k, v in values.items()
     }
@@ -766,9 +871,4 @@ def update_collection(
     df = df.withColumns(sets)
     if "geometry" in values:
         df = with_envelope_columns(df.drop(*SYSTEM_COLUMNS))
-    _enforce_constraints(m, df, "update")
-    catalog.commit_version(
-        collection, database, df, keep_files=untouched,
-        expected_version=m.version, rebase_on_disjoint=True,
-        local_batch=files_fit_driver(catalog, collection, database, touched),
-    )
+    return df

@@ -101,6 +101,7 @@ def optimize_collection(
         # a compaction whose small files fit the driver is one collect job
         # and a driver-side write, no range-sampling job
         local_batch=files_fit_driver(catalog, collection, database, small),
+        operation="OPTIMIZE",
     )
     stats["files_after"] = len(catalog.meta(collection, database).files)
     return stats

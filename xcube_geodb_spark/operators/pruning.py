@@ -272,7 +272,10 @@ def bloom_columns_needed(
 
 def _classify_file(rel, raw, columns, constraints, fts_groups, blooms_map):
     """True (maybe touched) / False (provably untouched) for one file's
-    raw stats entry."""
+    raw stats entry. A file of no rows (a rewrite that deleted them all)
+    holds no column stats, and matches nothing."""
+    if raw.get("::rows") == [0, 0]:
+        return False
     stats = {}
     for c, v in raw.items():
         if c in columns:
@@ -473,11 +476,12 @@ class PrunedRead:
             "files_kept": len(self.files),
         }
 
-    def read(self, spec: Conjunction, columns: list[str], also=None):
+    def read(self, spec: Conjunction, columns: list[str] | dict, also=None):
         """The rows of the kept files that pass ``spec`` (and the
         ``pyarrow`` expression ``also``), read on the driver under the
         declared schema: a column a file lacks reads as NULL, Spark's INT96
-        timestamps as microseconds."""
+        timestamps as microseconds. ``columns`` names the columns read, or
+        maps output names to ``pyarrow`` expressions over them."""
         import pyarrow.dataset as ds
         from pyspark.sql.pandas.types import to_arrow_schema
 

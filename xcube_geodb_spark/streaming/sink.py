@@ -73,6 +73,7 @@ def collection_batch_writer(
             crs=crs,
             database=database,
             merge_meta={"stream_epochs": {query_name: int(batch_id)}},
+            operation="STREAM",
         )
 
     return _write_batch
@@ -189,6 +190,7 @@ def dedup_batch_writer(
             crs=crs,
             database=database,
             merge_meta={"stream_epochs": {query_name: int(batch_id)}},
+            operation="STREAM",
         )
 
     return _write_batch
