@@ -112,6 +112,26 @@ def test_rewrite_lanes_agree_over_generated_histories(spark, tmp_path, seed):
     assert emptied and "driver" in lanes[len(_EDITS):]
 
 
+def test_rewrite_lanes_agree_after_a_btree_index_is_removed(spark, tmp_path):
+    """A file written under a btree index is in that property's order;
+    once the index is removed, both lanes write its rewrite in Z-order,
+    split at ``max_file_rows`` into the same files."""
+    c = GeoDBSparkClient(spark, warehouse=str(tmp_path / "wh"), user=DB)
+    c.create_collection("b", {"v": "int", "x": "double"}, database=DB)
+    c.create_index("b", "v", database=DB)  # btree
+    rng = np.random.default_rng(5)
+    xy = rng.uniform(0, 1, (60, 2))
+    c.insert_into_collection("b", pd.DataFrame({
+        "geometry": [f"POINT ({x} {y})" for x, y in xy], "v": rng.permutation(60), "x": xy[:, 0],
+    }), database=DB)
+    c.remove_index("b", "v", database=DB)
+    c.catalog.commit_meta_change("b", DB, lambda m: {"max_file_rows": 20}, operation="SET TBLPROPERTIES")
+    (lo, hi), = _lone_files(c.catalog, "b")
+    assert _both_lanes(c, "b", lambda: c.update_collection(
+        "b", {"x": -1}, f"id=gte.{lo}&id=lte.{hi}&v=lt.30", database=DB)) == "driver"
+    assert len(_written(c.catalog, "b")) == 3
+
+
 # -- jobs and exits -----------------------------------------------------------
 
 
@@ -219,7 +239,8 @@ def test_history_records_operation_metrics(spark, tmp_path):
     """Each commit's ``files_added``/``files_removed``/``bytes_added`` are
     its manifest delta, and ``lane`` is the write it took: a one-file
     delete on the driver, a multi-file update collected, a forced Spark
-    write, a compaction, a restore."""
+    write, a compaction; a schema change and a restore write no file and
+    have no lane."""
     c = GeoDBSparkClient(spark, warehouse=str(tmp_path / "wh"), user=DB)
     c.create_collection("o", {"v": "int"}, database=DB)
     def insert(k):
@@ -239,7 +260,8 @@ def test_history_records_operation_metrics(spark, tmp_path):
         (lambda: c.insert_into_collection(
             "o", pd.DataFrame({"id": [1], "v": [9]}), upsert=True, database=DB), "UPSERT", "spark", plain),
         (lambda: c.optimize_collection("o", database=DB), "OPTIMIZE", "collect", plain),
-        (lambda: c.restore_collection("o", 2, database=DB), "RESTORE", "driver", plain),
+        (lambda: c.add_property("o", "late", "int", database=DB), "ADD COLUMNS", None, plain),
+        (lambda: c.restore_collection("o", 2, database=DB), "RESTORE", None, plain),
     ]
     for op, _, _, ctx in ops:
         with ctx():
@@ -258,7 +280,7 @@ def test_history_records_operation_metrics(spark, tmp_path):
         assert om["files_removed"] == len(before - after), v
         assert om["bytes_added"] == sum(os.path.getsize(os.path.join(cdir, f)) for f in after - before), v
         assert om["duration_ms"] >= 0
-    assert versions[-1]["operationMetrics"]["files_added"] > 0  # restored files
+    assert versions[-1]["operationMetrics"]["files_added"] > 0  # restored, not written
 
 
 # -- system columns -----------------------------------------------------------

@@ -195,3 +195,41 @@ def test_id_offsets_fallback_plan_has_no_python_workers(spark):
                 cache.unpersist()
     finally:
         ids_mod._OFFSET_MAP_MAX_ENTRIES = old
+
+
+def test_zorder_key_arrow_matches_the_commit_key(spark):
+    """The numpy key of the envelope centres, which sorts a driver-lane
+    rewrite, equals the key the commit path clusters a Spark batch by."""
+    import random
+
+    import pyarrow as pa
+
+    from xcube_geodb_spark.plans.layout import (
+        zorder_interleave_sql,
+        zorder_key_arrow,
+        zorder_quantize_sql,
+    )
+
+    rnd = random.Random(11)
+    rows = []
+    for _ in range(2000):
+        x, y = rnd.uniform(-200.0, 200.0), rnd.uniform(-100.0, 100.0)
+        rows.append((x, x + rnd.uniform(0, 3), y, y + rnd.uniform(0, 3)))
+    odd = [
+        -180.0, 180.0, 0.0, -0.0, 181.0, -999.0, None, float("nan"),
+        float("inf"), -float("inf"), 1e14, -1e14, 1e17, -1e17, 1e308,
+        179.99999999999997, 180.00000000000003, -90.00000000000001,
+        *(-180.0 + 360.0 * k / 65536 for k in (1, 255, 32768, 65535)),
+    ]
+    rows += [(a, a, b, b) for a in odd for b in odd[::-1]]
+    names = ["__xmin", "__xmax", "__ymin", "__ymax"]
+    df = spark.createDataFrame(rows, ", ".join(f"{n} double" for n in names))
+    q = df.withColumns(
+        {
+            "__qx": F.expr(zorder_quantize_sql("(__xmin + __xmax) / 2", -180.0, 180.0)),
+            "__qy": F.expr(zorder_quantize_sql("(__ymin + __ymax) / 2", -90.0, 90.0)),
+        }
+    )
+    want = [r["k"] for r in q.select(F.expr(zorder_interleave_sql("__qx", "__qy")).alias("k")).collect()]
+    table = pa.table({n: pa.array([r[i] for r in rows], pa.float64()) for i, n in enumerate(names)})
+    assert zorder_key_arrow(table).tolist() == want

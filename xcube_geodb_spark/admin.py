@@ -216,7 +216,9 @@ class AccessControl:
                 return None
             return {"acl": acl}
 
-        self.catalog.commit_meta_change(collection, database, mutate)
+        self.catalog.commit_meta_change(
+            collection, database, mutate, operation="SET ACL"
+        )
 
     def publish_collection_to_group(
         self, collection: str, group: str, database: str, user: str
@@ -507,7 +509,9 @@ class IndexManager:
         # declarations drive physical clustering + per-file bloom builds
         # at commit time, so a DML batch racing this change must conflict
         # rather than write files laid out for a stale declaration
-        self.catalog.commit_meta_change(collection, database, mutate)
+        self.catalog.commit_meta_change(
+            collection, database, mutate, operation="CREATE INDEX"
+        )
 
     def remove_index(self, collection: str, prop: str, database: str) -> None:
         def mutate(fresh):
@@ -516,7 +520,9 @@ class IndexManager:
                 raise GeoDBError(f"No index on {prop}")
             return {"indexes": idx}
 
-        self.catalog.commit_meta_change(collection, database, mutate)
+        self.catalog.commit_meta_change(
+            collection, database, mutate, operation="DROP INDEX"
+        )
 
     def show_indexes(self, collection: str, database: str) -> list[dict]:
         return list(self.catalog.meta(collection, database).d["indexes"])
@@ -591,7 +597,9 @@ class StacMetadata:
             stac[field] = value
             return {"stac": stac}
 
-        self.catalog.commit_meta_change(collection, database, mutate)
+        self.catalog.commit_meta_change(
+            collection, database, mutate, operation="SET TBLPROPERTIES"
+        )
 
     @staticmethod
     def _validate(field: str, value) -> None:

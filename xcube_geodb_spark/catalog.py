@@ -654,11 +654,13 @@ class GeoDBCatalog:
         _atomic_write_json(self._meta_path(new_name, new_database), m.d)
 
     def commit_meta_change(
-        self, collection: str, database: str, mutate, retries: int = 3
+        self, collection: str, database: str, mutate, *, operation: str,
+        retries: int = 3,
     ) -> None:
         """VERSIONED metadata-only change: ``mutate(meta) -> extra_meta``
         computed against a pinned snapshot, committed through the normal
-        CAS protocol. Schema, constraint, and index changes go through
+        CAS protocol and recorded in the history as ``operation`` (ADD
+        COLUMNS, ADD CONSTRAINT, CREATE INDEX, ...). Schema, constraint, and index changes go through
         here — a plain metadata.json swap would be INVISIBLE to the
         optimistic-concurrency version check, so a DML commit racing the
         change could enforce a stale schema/constraint set (and the
@@ -689,6 +691,7 @@ class GeoDBCatalog:
                     None,
                     extra_meta=extra,
                     expected_version=m.version,
+                    operation=operation,
                 )
                 return
             except GeoDBError as e:
@@ -713,7 +716,9 @@ class GeoDBCatalog:
                 props[k] = v
             return {"properties": props}
 
-        self.commit_meta_change(collection, database, mutate)
+        self.commit_meta_change(
+            collection, database, mutate, operation="ADD COLUMNS"
+        )
 
     def drop_properties(
         self, collection: str, properties: Iterable[str], database: str
@@ -732,7 +737,9 @@ class GeoDBCatalog:
                 del props[k]
             return {"properties": props}
 
-        self.commit_meta_change(collection, database, mutate)
+        self.commit_meta_change(
+            collection, database, mutate, operation="DROP COLUMNS"
+        )
 
     def add_constraint(
         self, collection: str, name: str, expr: str, database: str
@@ -770,7 +777,9 @@ class GeoDBCatalog:
         # bump and conflicts (its _enforce_constraints ran against the
         # pre-constraint snapshot), instead of silently committing
         # violating rows past an invisible metadata swap
-        self.commit_meta_change(collection, database, mutate)
+        self.commit_meta_change(
+            collection, database, mutate, operation="ADD CONSTRAINT"
+        )
 
     def drop_constraint(
         self, collection: str, name: str, database: str
@@ -782,7 +791,9 @@ class GeoDBCatalog:
             del cons[name]
             return {"constraints": cons}
 
-        self.commit_meta_change(collection, database, mutate)
+        self.commit_meta_change(
+            collection, database, mutate, operation="DROP CONSTRAINT"
+        )
 
     def get_constraints(self, collection: str, database: str) -> dict:
         return dict(self.meta(collection, database).d.get("constraints", {}))
@@ -1039,10 +1050,12 @@ class GeoDBCatalog:
         ``new_df`` is written on one of three lanes:
 
         - ``driver``: a ``pyarrow.Table`` the caller built on the driver
-          (a one-file delete or update, ``operators/dml.py``) is written
-          as it is by :func:`write_local_parquet`, with no Spark job. The
-          caller hands its rows over in layout order: they come from one
-          file whose clustering key the edit leaves unchanged.
+          (a one-file delete or update, ``operators/dml.py``, of a
+          collection with no btree or ANN index) is sorted by the
+          envelope-centre Z-order key (:func:`plans.layout.zorder_key_arrow`;
+          a stable sort, as the collect lane's ``sortWithinPartitions``
+          over one partition is) and written by :func:`write_local_parquet`,
+          with no Spark job.
         - ``collect`` (``local_batch``, a batch
           :func:`operators.dml.fits_driver_write` proved small): the
           clustered batch is collected in ONE Spark job (``toArrow`` over
@@ -1058,8 +1071,8 @@ class GeoDBCatalog:
 
         Each history record carries Delta's ``operation`` (named by the
         caller: INSERT, UPSERT, DELETE, UPDATE, OPTIMIZE, RESTORE, STREAM,
-        WRITE by default) and ``operationMetrics``: the ``lane`` (a commit
-        that writes nothing runs on the driver), ``files_added`` and
+        WRITE by default) and ``operationMetrics``: the ``lane`` (None for
+        a commit that writes no file), ``files_added`` and
         ``files_removed`` (the manifest delta), ``bytes_added`` (the sizes
         of the added files) and ``duration_ms`` (this call up to the
         commit point).
@@ -1136,9 +1149,14 @@ class GeoDBCatalog:
             return True
 
         import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from xcube_geodb_spark.plans.layout import zorder_key_arrow
 
         started = time.perf_counter()
-        if new_df is None or isinstance(new_df, pa.Table):
+        if new_df is None:
+            lane = None
+        elif isinstance(new_df, pa.Table):
             lane = "driver"
         else:
             lane = "collect" if local_batch else "spark"
@@ -1159,7 +1177,8 @@ class GeoDBCatalog:
             # split files keep disjoint key/z-order spans for footer pruning
             max_rows = int(m.d.get("max_file_rows", 2_000_000))
             if lane == "driver":
-                # the caller's rows are already in layout order
+                if "__xmin" in new_df.column_names:
+                    new_df = new_df.take(pc.sort_indices(zorder_key_arrow(new_df)))
                 names = write_local_parquet(new_df, out_dir, max_rows)
             else:
                 new_df, cached = self._apply_clustering(

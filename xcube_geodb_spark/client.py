@@ -1095,7 +1095,9 @@ class GeoDBSparkClient:
             gs["published"] = published
             return {"gs": gs}
 
-        self.catalog.commit_meta_change(collection, db, mutate)
+        self.catalog.commit_meta_change(
+            collection, db, mutate, operation="SET TBLPROPERTIES"
+        )
 
     def publish_gs(self, collection: str, database: str | None = None) -> dict:
         """Publish to the geoservice. Failure order: a failed PUT leaves

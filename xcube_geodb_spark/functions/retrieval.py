@@ -377,7 +377,10 @@ def build_bm25_collection(
         # max_file_rows knob from ever reverting a concurrent commit's
         # manifest pointer, same protocol as every other metadata change
         catalog.commit_meta_change(
-            name, database, lambda m: {"max_file_rows": int(max_file_rows)}
+            name,
+            database,
+            lambda m: {"max_file_rows": int(max_file_rows)},
+            operation="SET TBLPROPERTIES",
         )
     IndexManager(catalog).create_index(name, "token", database, kind="btree")
     n_docs, total_dl = corpus_totals(docs, text_col)

@@ -369,7 +369,10 @@ def build_lsh_tables_collection(
     )
     if max_file_rows is not None:
         catalog.commit_meta_change(
-            name, database, lambda m: {"max_file_rows": int(max_file_rows)}
+            name,
+            database,
+            lambda m: {"max_file_rows": int(max_file_rows)},
+            operation="SET TBLPROPERTIES",
         )
     IndexManager(catalog).create_index(name, "tb", database, kind="btree")
     insert_into_collection(

@@ -626,9 +626,9 @@ def files_fit_driver(
 
     - a pruned client read of ``files`` (``pruning.PrunedRead``) reads and
       refines them on the driver with no Spark job at all;
-    - a one-file delete or literal update of ``files`` (``_rewrite``, through
-      the same ``PrunedRead.decide``) reads, filters and writes the file on
-      the driver, with no Spark job either;
+    - a one-file delete or literal update of ``files`` (``_rewrite``, over
+      the same ``PrunedRead``) reads, filters and writes the file on the
+      driver, with no Spark job either;
     - any other rewrite (delete, update, compaction) of ``files`` is one
       collect job and a driver-side write instead of a range-sampling job
       plus a Spark write.
@@ -810,8 +810,8 @@ def _rewrite(
     """Delete (``values`` None) or update the rows matching ``query``,
     rewriting the files of the write snapshot that may hold them.
 
-    One maybe-touched file that fits the driver
-    (:meth:`pruning.PrunedRead.decide`, ``files_fit_driver``) and passes
+    One maybe-touched file that fits the driver (``files_fit_driver``,
+    decided once for both lanes) and passes
     :func:`driver_rewrite_filter` is read, filtered and handed to the
     commit as an Arrow table: no Spark job. Any other rewrite reads the
     touched files with Spark; the commit then collects the batch when it
@@ -834,9 +834,9 @@ def _rewrite(
     if not touched:
         return  # no file can contain matching rows: a no-op
     read = PrunedRead(catalog, collection, database, m, touched)
-    where = driver_rewrite_filter(m, q, values) if len(touched) == 1 else None
-    read.decide(driver_ok=where is not None)
-    if read.driver:
+    fits = files_fit_driver(catalog, collection, database, touched)
+    where = driver_rewrite_filter(m, q, values) if fits and len(touched) == 1 else None
+    if where is not None:
         batch = _driver_batch(read, where, values)
     else:
         batch = _spark_batch(read.frame(), pq.predicate, values, sch)
@@ -845,7 +845,7 @@ def _rewrite(
     catalog.commit_version(
         collection, database, batch, keep_files=untouched,
         expected_version=m.version, rebase_on_disjoint=True,
-        local_batch=not read.driver and files_fit_driver(catalog, collection, database, touched),
+        local_batch=fits and where is None,
         operation=what.upper(),
     )
 

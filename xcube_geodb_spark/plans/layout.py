@@ -11,6 +11,7 @@ SURVEY.md §4.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -85,4 +86,31 @@ def zorder_interleave_sql(qx: str, qy: str, bits: int = 16) -> str:
             f"| ((shiftright({qx}, {b}) & 1) * 2)) "
             f"| (shiftright({qy}, {b}) & 1)"
         )
+    return key
+
+
+def zorder_key_arrow(table, bits: int = 16) -> np.ndarray:
+    """:func:`zorder_key` of the envelope centres of a ``pyarrow.Table``
+    (``__xmin..__ymax``), computed with numpy: the key the commit path
+    clusters by (:func:`zorder_quantize_sql`, :func:`zorder_interleave_sql`),
+    bit-identical, NULL and NaN centres and those with no ``long``
+    quantization included (they quantize to 0, as ``try_cast`` + ``greatest``
+    do in Spark)."""
+
+    def quantize(lo_col: str, hi_col: str, lo: float, hi: float) -> np.ndarray:
+        lo_v, hi_v = (
+            table.column(c).to_numpy(zero_copy_only=False).astype(float)
+            for c in (lo_col, hi_col)
+        )
+        with np.errstate(invalid="ignore", over="ignore"):
+            v = ((lo_v + hi_v) / 2 - lo) / (hi - lo) * (1 << bits)
+            # Spark's ANSI double -> long range check; NaN fails it too
+            fits = (np.floor(v) <= 2.0**63) & (np.ceil(v) >= -(2.0**63))
+        return np.clip(np.trunc(np.where(fits, v, 0.0)), 0, (1 << bits) - 1).astype(np.int64)
+
+    qx = quantize("__xmin", "__xmax", -180.0, 180.0)
+    qy = quantize("__ymin", "__ymax", -90.0, 90.0)
+    key = np.zeros(len(qx), dtype=np.int64)
+    for b in range(bits - 1, -1, -1):
+        key = (key << 2) | (((qx >> b) & 1) * 2) | ((qy >> b) & 1)
     return key
