@@ -660,15 +660,15 @@ class GeoDBCatalog:
         """VERSIONED metadata-only change: ``mutate(meta) -> extra_meta``
         computed against a pinned snapshot, committed through the normal
         CAS protocol and recorded in the history as ``operation`` (ADD
-        COLUMNS, ADD CONSTRAINT, CREATE INDEX, ...). Schema, constraint, and index changes go through
-        here — a plain metadata.json swap would be INVISIBLE to the
-        optimistic-concurrency version check, so a DML commit racing the
-        change could enforce a stale schema/constraint set (and the
-        change could clobber the DML's manifest). On a version conflict
-        the mutation re-derives against the fresh snapshot and
-        retries (jittered backoff, same as the DML append retry — under
-        sustained load back-to-back attempts would all lose the same
-        link race).
+        COLUMNS, ADD CONSTRAINT, CREATE INDEX, ...). Schema, constraint,
+        and index changes go through here — a plain metadata.json swap
+        would be INVISIBLE to the optimistic-concurrency version check, so
+        a DML commit racing the change could enforce a stale
+        schema/constraint set (and the change could clobber the DML's
+        manifest). On a version conflict the mutation re-derives against
+        the fresh snapshot and retries (jittered backoff, same as the DML
+        append retry — under sustained load back-to-back attempts would
+        all lose the same link race).
 
         ``mutate`` may return ``None`` to signal a no-op (the change is
         already in effect): nothing is committed, so idempotent admin
