@@ -19,7 +19,8 @@ import pyarrow.parquet as pq
 import pytest
 
 from test_read_lane import (
-    DB, _grammar_query, _history, _jobs, _lone_files, _same, _square, driver_bound, spark_lane, spark_rewrite,
+    DB, _grammar_query, _history, _jobs, _lone_files, _same, _square, collect_insert, driver_bound, spark_lane,
+    spark_rewrite,
 )
 from xcube_geodb_spark.catalog import SYSTEM_COLUMNS
 from xcube_geodb_spark.client import GeoDBSparkClient
@@ -106,9 +107,9 @@ def test_rewrite_lanes_agree_over_generated_histories(spark, tmp_path, seed):
             lane = _both_lanes(client, "h", lambda: client.update_collection("h", values, query, database=DB))
         assert lane == "driver" or lane is None and i >= len(_EDITS), (where, values)
         lanes.append(lane)
-        emptied += pq.ParquetFile(
-            os.path.join(client.catalog._coll_dir("h", DB), client.catalog.meta("h", DB).files[-1])
-        ).metadata.num_rows == 0
+        if lane is not None:  # a rewrite that empties its file writes none
+            om = _last(client.catalog, "h")["operationMetrics"]
+            emptied += om["files_added"] == 0 and om["rows_removed"] > 0
     assert emptied and "driver" in lanes[len(_EDITS):]
 
 
@@ -232,15 +233,55 @@ def test_ann_layouts_take_the_spark_lane(spark, tmp_path, kind, options, physica
     assert sorted(c.get_collection("e", "v=gte.19&order=id", database=DB)["v"]) == [19, 100]
 
 
+# -- IS TRUE / IS FALSE ---------------------------------------------------------
+
+
+@pytest.mark.parametrize("lane", ["driver", "spark"])
+def test_is_true_and_is_false_are_never_null(spark, tmp_path, lane):
+    """PostgREST sends ``is.true``/``is.false`` as PG's IS TRUE / IS
+    FALSE, which are FALSE, never NULL, on a NULL cell: ``b=not.is.true``
+    reads, updates and deletes the row whose ``b`` is NULL, on both read
+    lanes and both rewrite lanes. Such a leaf gives no interval
+    constraint, so file pruning keeps the file of the NULL row."""
+    from xcube_geodb_spark.filters import parse_query
+
+    c = GeoDBSparkClient(spark, warehouse=str(tmp_path / "wh"), user=DB)
+    c.create_collection("b", {"b": "bool", "v": "int"}, database=DB)
+    for k, flags in enumerate(([True, True], [True, False, None])):
+        c.insert_into_collection("b", pd.DataFrame({
+            "geometry": [f"POINT ({k} {k})"] * len(flags), "b": flags, "v": range(len(flags)),
+        }), database=DB)
+    assert parse_query("b=not.is.true&id=gte.3").constraints() == [("id", "gte", 3)]
+    reads = {
+        "b=not.is.true": [4, 5], "b=not.is.false": [1, 2, 3, 5], "b=is.true": [1, 2, 3],
+        "b=is.false": [4], "not.or=(b.is.true,b.is.false)": [5], "b=is.null": [5],
+    }
+    with contextlib.nullcontext() if lane == "driver" else spark_lane():
+        for q, want in reads.items():
+            got = c.get_collection("b", f"{q}&order=id", database=DB)
+            assert got["id"].tolist() == want, q
+            assert got.attrs["read"]["lane"] == lane, q
+    rewrites = "driver" if lane == "driver" else "collect"
+    with contextlib.nullcontext() if lane == "driver" else spark_rewrite():
+        c.update_collection("b", {"v": -1}, "b=not.is.false&id=gte.3", database=DB)
+        assert _last(c.catalog, "b")["operationMetrics"]["lane"] == rewrites
+        c.delete_from_collection("b", "b=not.is.true&id=gte.3", database=DB)
+        assert _last(c.catalog, "b")["operationMetrics"]["lane"] == rewrites
+    got = c.get_collection("b", "order=id", database=DB)
+    assert got["id"].tolist() == [1, 2, 3]
+    assert got["v"].tolist() == [0, 1, -1]
+
+
 # -- the version history ------------------------------------------------------
 
 
 def test_history_records_operation_metrics(spark, tmp_path):
-    """Each commit's ``files_added``/``files_removed``/``bytes_added`` are
-    its manifest delta, and ``lane`` is the write it took: a one-file
-    delete on the driver, a multi-file update collected, a forced Spark
-    write, a compaction; a schema change and a restore write no file and
-    have no lane."""
+    """Each commit's ``files_added``/``files_removed``/``bytes_added`` and
+    ``rows_added``/``rows_removed`` are its manifest delta, and ``lane``
+    is the write it took: a pandas insert and a one-file delete on the
+    driver, a forced collect insert, a multi-file update collected, a
+    forced Spark write, a compaction; a schema change and a restore write
+    no file and have no lane."""
     c = GeoDBSparkClient(spark, warehouse=str(tmp_path / "wh"), user=DB)
     c.create_collection("o", {"v": "int"}, database=DB)
     def insert(k):
@@ -249,8 +290,8 @@ def test_history_records_operation_metrics(spark, tmp_path):
 
     plain = contextlib.nullcontext
     ops = [
-        (insert(1), "INSERT", "collect", plain),
-        (insert(2), "INSERT", "collect", plain),
+        (insert(1), "INSERT", "driver", plain),
+        (insert(2), "INSERT", "collect", collect_insert),
         (insert(3), "INSERT", "spark", spark_lane),
         (lambda: c.delete_from_collection("o", "id=eq.3", database=DB), "DELETE", "driver", plain),
         (lambda: c.update_collection("o", {"v": 1}, "id=gte.5&id=lte.15&v=eq.2", database=DB),
@@ -279,8 +320,16 @@ def test_history_records_operation_metrics(spark, tmp_path):
         assert om["files_added"] == len(after - before), v
         assert om["files_removed"] == len(before - after), v
         assert om["bytes_added"] == sum(os.path.getsize(os.path.join(cdir, f)) for f in after - before), v
+        assert om["rows_added"] == sum(_rows(cdir, f) for f in after - before), v
+        assert om["rows_removed"] == sum(_rows(cdir, f) for f in before - after), v
         assert om["duration_ms"] >= 0
     assert versions[-1]["operationMetrics"]["files_added"] > 0  # restored, not written
+    assert [v["operationMetrics"]["rows_added"] for v in versions[1:4]] == [10, 10, 10]
+    assert versions[4]["operationMetrics"]["rows_removed"] - versions[4]["operationMetrics"]["rows_added"] == 1
+
+
+def _rows(cdir, f) -> int:
+    return pq.ParquetFile(os.path.join(cdir, f)).metadata.num_rows
 
 
 # -- system columns -----------------------------------------------------------

@@ -224,7 +224,11 @@ def test_driver_write_splits_at_max_file_rows(spark, tmp_path):
     assert sorted(got["v"]) == list(range(1, 31))
 
 
-def test_driver_write_empty_batch_writes_one_schema_file(spark, tmp_path):
+def test_driver_write_empty_batch_writes_no_file(spark, tmp_path):
+    """A batch of no rows commits a version with no file on the collect
+    and Spark lanes (the schema-only file Spark writes is removed), as an
+    empty pandas insert does on the driver lane; reads still return every
+    declared column."""
     c = _client(spark, tmp_path)
     cat = c.catalog
     c.create_collection("e", {"v": "int", "t": "text"}, database="dw")
@@ -232,11 +236,14 @@ def test_driver_write_empty_batch_writes_one_schema_file(spark, tmp_path):
         [], cat.meta("e", "dw").spark_schema(include_system=True)
     )
     cat.commit_version("e", "dw", empty, local_batch=True)
-    files = cat.meta("e", "dw").files
-    assert len(files) == 1
-    md = pq.ParquetFile(os.path.join(cat._coll_dir("e", "dw"), files[0])).metadata
-    assert md.num_rows == 0
-    assert "v" in md.schema.names
+    cat.commit_version("e", "dw", empty, local_batch=False)
+    c.insert_into_collection("e", pd.DataFrame({"v": [], "t": []}), database="dw")
+    versions = c.get_collection_versions("e", database="dw")[1:]
+    om = [v["operationMetrics"] for v in versions]
+    assert [o["lane"] for o in om] == ["collect", "spark", "driver"]
+    assert [(o["files_added"], o["rows_added"], o["bytes_added"]) for o in om] == [(0, 0, 0)] * 3
+    assert cat.meta("e", "dw").files == []
+    assert [e for e in _data_entries(cat, "e", "dw") if e.endswith(".parquet")] == []
     got = c.get_collection("e", database="dw")
     assert len(got) == 0
     assert list(got.columns) == ["id", "created_at", "modified_at", "geometry", "v", "t"]
@@ -269,7 +276,8 @@ def test_small_commits_run_one_job_and_leave_no_debris(spark, tmp_path):
         }
     )
     c.insert_into_collection("j", batch, database="dw")  # warm the path
-    assert _jobs(spark, lambda: c.insert_into_collection("j", batch, database="dw")) == 1
+    # the pandas insert builds its batch on the driver: no job at all
+    assert _jobs(spark, lambda: c.insert_into_collection("j", batch, database="dw")) == 0
     assert len(cat.meta("j", "dw").files) == 2
     # all touch one file: ids 301..600 live in the second insert's file.
     # On the driver lane the rewrite runs no job; forced onto the Spark

@@ -88,11 +88,13 @@ class TestProfileComposedTimers:
 
 class TestLaneCrossover:
     def test_both_lanes_agree_at_a_tiny_size(self, spark, tmp_path):
-        """The crossover tool at 600 features, one run per lane: every read
-        and rewrite answers the same on both lanes."""
+        """The crossover tool at 600 features, one run per lane: every read,
+        rewrite and insert answers the same on both lanes."""
         tool = _load("lane_crossover")
         recs = list(tool.run(spark, [600], reps=1, seed=1, workdir=str(tmp_path)))
-        assert [r["read"] for r in recs][-2:] == ["delete", "update"]
-        assert len(recs) == 10
+        assert [r["read"] for r in recs][-4:] == ["delete", "update", "insert", "insert"]
+        assert len(recs) == 12
         assert [r["read"] for r in recs if not r["same"]] == []
-        assert all(r["rows"] for r in recs[-2:])
+        assert all(r["rows"] for r in recs[-4:-2])
+        assert [r["rows"] for r in recs[-2:]] == [300, 600]
+        assert all(r["kept_mb"] > 0 for r in recs[-2:])

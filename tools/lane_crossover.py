@@ -30,11 +30,25 @@ after it, untimed):
 - ``update``: ``raba_id`` SET over a 400-id window of it, filtered on
   ``raba_id``.
 
-Prints one JSON line per read or rewrite and size: the kept files' summed
-decoded bytes against the driver bound (``dml.DRIVER_BYTES``), both lanes'
-median milliseconds, and whether the lanes returned the same ids or count
-(for a rewrite: the same ids and ``raba_id`` values in and around its
-window after it).
+Last, it times pandas inserts on both lanes of
+``dml.insert_into_collection``: the driver lane (the Arrow batch built
+in-process, no Spark job) against the collect lane (forced by patching
+``dml.driver_insert_batch``: ``createDataFrame``, one collect job, the same
+driver-side write), with ``dml.fits_driver_write`` forced true on both, as
+``files_fit_driver`` is for the rewrites. Each run starts from the same
+snapshot (a ``restore_collection`` after it, untimed):
+
+- ``insert``: a batch of 300 new features (the benchmark's edit), then one
+  of every feature of the collection (at one million, a batch near the
+  driver bound).
+
+Prints one JSON line per read, rewrite or insert and size: the kept
+files' (for an insert: the batch's written files') summed decoded bytes
+against the driver bound (``dml.DRIVER_BYTES``), both lanes' median
+milliseconds, and whether the lanes returned the same ids or count (for a
+rewrite: the same ids and ``raba_id`` values in and around its window
+after it; for an insert: the same ids, ``raba_id`` and ``d_od`` of the
+rows it added).
 
     python tools/lane_crossover.py 40000 160000 640000 1000000 --reps 5
 
@@ -45,6 +59,7 @@ each of the six files then holds about 167k rows.
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import os
 import shutil
@@ -59,9 +74,10 @@ sys.path[:0] = [REPO, os.path.join(REPO, "perfbench")]
 
 
 def run(spark, sizes, reps: int, seed: int, workdir: str):
-    """Yield one record per read or rewrite and size (see the module
+    """Yield one record per read, rewrite or insert and size (see the module
     docstring), building each collection under ``workdir``."""
-    from gen import DOMAIN, PROPERTIES, RABA_IDS, make_dataset
+    import numpy as np
+    from gen import DOMAIN, PROPERTIES, RABA_IDS, make_dataset, make_features
     from workloads import DISTRICT, REGION, STREET
 
     from xcube_geodb_spark.client import GeoDBSparkClient
@@ -72,7 +88,9 @@ def run(spark, sizes, reps: int, seed: int, workdir: str):
     on_spark = {
         "read": mock.patch.object(dml, "files_fit_driver", lambda *a: False),
         "rewrite": mock.patch.object(dml, "driver_rewrite_filter", lambda *a, **k: None),
+        "insert": mock.patch.object(dml, "driver_insert_batch", lambda *a, **k: None),
     }
+    insert_fits = mock.patch.object(dml, "fits_driver_write", lambda *a: True)
 
     def around(c, half):
         return (c[0] - half[0], c[1] - half[1], c[0] + half[0], c[1] + half[1])
@@ -165,6 +183,32 @@ def run(spark, sizes, reps: int, seed: int, workdir: str):
                     answer[lane] = list(zip(got["id"].tolist(), got["raba_id"].tolist()))
                     cat.restore_collection("lu", db, base)
             yield record(name, 1, times, answer)
+
+        base = cat.meta("lu", db).version
+        inserts = [make_features(np.random.default_rng(seed), 300, data.towns), data.truth]
+        for batch in (b.to_pandas() for b in inserts):
+            times = {"driver": [], "spark": []}
+            answer, nbytes = {}, 0
+            for r in range(reps + 1):  # the first pair warms
+                for lane in (("driver", "spark") if r % 2 == 0 else ("spark", "driver")):
+                    with insert_fits, contextlib.nullcontext() if lane == "driver" else on_spark["insert"]:
+                        t0 = time.perf_counter()
+                        client.insert_into_collection("lu", batch)
+                        if r:
+                            times[lane].append(time.perf_counter() - t0)
+                    added = set(cat.meta("lu", db).files) - set(cat.meta_at_version("lu", db, base).files)
+                    took = cat.list_versions("lu", db)[-1]["operationMetrics"]["lane"]
+                    assert took == ("driver" if lane == "driver" else "collect"), ("insert", lane, took)
+                    got = client.get_collection("lu", f"id=gt.{n}&order=id")
+                    answer[lane] = list(zip(got["id"].tolist(), got["raba_id"].tolist(), got["d_od"].tolist()))
+                    nbytes = sum(file_arrow_bytes(os.path.join(cdir, f)) for f in added)
+                    cat.restore_collection("lu", db, base)
+            yield {
+                **record("insert", len(size), times, answer),
+                "files_kept": None,
+                "kept_mb": round(nbytes / 1e6, 1),
+                "rows": len(batch),
+            }
         client.drop_collection("lu")
 
 

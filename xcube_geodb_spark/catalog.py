@@ -169,7 +169,7 @@ def write_local_parquet(table, out_dir: str, max_rows: int) -> list[str]:
     ``part-00000-<uuid>-c000.snappy.parquet``, split every ``max_rows``
     rows into ``c001``, ``c002``, ... (Spark's ``maxRecordsPerFile``), all
     columns nullable, snappy, parquet-mr's dictionary choice. An empty
-    table still writes one schema-only file. There is no ``_temporary``
+    table writes no file (nor the directory). There is no ``_temporary``
     directory, ``_SUCCESS`` or ``.crc`` file: a file is only published by
     the manifest, and a crash leaves an orphan ``vacuum_collection``
     removes.
@@ -186,11 +186,13 @@ def write_local_parquet(table, out_dir: str, max_rows: int) -> list[str]:
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
+    if not table.num_rows:
+        return []
     table = table.cast(pa.schema([f.with_nullable(True) for f in table.schema]))
     os.makedirs(out_dir, exist_ok=True)
     job = uuid.uuid4()
     names = []
-    for i, start in enumerate(range(0, max(table.num_rows, 1), max_rows)):
+    for i, start in enumerate(range(0, table.num_rows, max_rows)):
         part = table.slice(start, max_rows)
         nan_cols = {
             f.name
@@ -1050,8 +1052,10 @@ class GeoDBCatalog:
         ``new_df`` is written on one of three lanes:
 
         - ``driver``: a ``pyarrow.Table`` the caller built on the driver
-          (a one-file delete or update, ``operators/dml.py``, of a
-          collection with no btree or ANN index) is sorted by the
+          (a pandas insert or a one-file delete or update,
+          ``operators/dml.py``, of a collection whose layout passes
+          ``dml.driver_layout``: no CHECK constraint, no btree or ANN
+          index) is sorted by the
           envelope-centre Z-order key (:func:`plans.layout.zorder_key_arrow`;
           a stable sort, as the collect lane's ``sortWithinPartitions``
           over one partition is) and written by :func:`write_local_parquet`,
@@ -1067,15 +1071,18 @@ class GeoDBCatalog:
           Spark write.
 
         The manifest, stats shards, history link, version checks and
-        orphan cleanup below are the same for all three.
+        orphan cleanup below are the same for all three. A batch of no
+        rows adds no file on any lane (the schema-only file a Spark write
+        leaves is removed); its version still commits.
 
         Each history record carries Delta's ``operation`` (named by the
         caller: INSERT, UPSERT, DELETE, UPDATE, OPTIMIZE, RESTORE, STREAM,
         WRITE by default) and ``operationMetrics``: the ``lane`` (None for
-        a commit that writes no file), ``files_added`` and
-        ``files_removed`` (the manifest delta), ``bytes_added`` (the sizes
-        of the added files) and ``duration_ms`` (this call up to the
-        commit point).
+        a commit with no batch), ``files_added`` and
+        ``files_removed`` (the manifest delta), ``rows_added`` and
+        ``rows_removed`` (the sums of those files' ``::rows`` stats; None
+        when a file has none), ``bytes_added`` (the sizes of the added
+        files) and ``duration_ms`` (this call up to the commit point).
 
         Multi-writer safety (optimistic concurrency, Delta-style): the
         commit POINT is an exclusive hard-link of the serialized manifest
@@ -1218,10 +1225,6 @@ class GeoDBCatalog:
                     f"Concurrent modification of {database}_{collection}: "
                     f"expected v{expected_version}, found v{m.version}"
                 )
-        keep = list(keep_files) if keep_files is not None else m.files
-        before = set(m.files)
-        m.d["files"] = keep + new_files
-        added = [f for f in m.d["files"] if f not in before]
         # Delta-style data skipping: per-file column min/max computed ONCE
         # at commit (one footer read per new file), so selective scans/DML
         # prune files without touching any footer at query time. Stats are
@@ -1268,6 +1271,19 @@ class GeoDBCatalog:
                     delta_blooms[f] = bl
             except Exception:
                 pass  # unreadable stats never block a commit
+        # a batch of no rows adds no file: the Spark write still leaves a
+        # schema-only one, which is removed here
+        empty = {f for f in new_files if delta_stats.get(f, {}).get("::rows") == [0, 0]}
+        for f in empty:
+            os.remove(os.path.join(cdir, f))
+            del delta_stats[f]
+            delta_blooms.pop(f, None)
+        new_files = [f for f in new_files if f not in empty]
+        keep = list(keep_files) if keep_files is not None else m.files
+        before = set(m.files)
+        m.d["files"] = keep + new_files
+        added = [f for f in m.d["files"] if f not in before]
+        removed = before - set(m.d["files"])
         from xcube_geodb_spark.operators.pruning import shard_summary
 
         # stats_complete: the stats-tree probe precondition — every live
@@ -1282,6 +1298,7 @@ class GeoDBCatalog:
         if inline:
             delta_stats = {**inline, **delta_stats}
         shards = list(m.d.get("stats_files") or [])
+        base_shards = list(shards)
         summaries = dict(m.d.get("stats_summaries") or {})
         sdir = os.path.join(cdir, "stats")
         if delta_stats:
@@ -1354,11 +1371,25 @@ class GeoDBCatalog:
                 merged = dict(m.d.get(k) or {})
                 merged.update(v)
                 m.d[k] = merged
+
+        def rows(files) -> int | None:
+            # the ``::rows`` stats of ``files``: the new files' from this
+            # commit, any other's from the base snapshot's shards
+            known = delta_stats
+            if not known.keys() >= set(files):
+                known = {**self._stats_loader(collection, database)(base_shards), **delta_stats}
+            try:
+                return sum(known[f]["::rows"][0] for f in files)
+            except KeyError:
+                return None
+
         m.d["operation"] = operation
         m.d["operationMetrics"] = {
             "lane": lane,
             "files_added": len(added),
-            "files_removed": len(before - set(m.d["files"])),
+            "files_removed": len(removed),
+            "rows_added": rows(added),
+            "rows_removed": rows(removed),
             "bytes_added": sum(os.path.getsize(os.path.join(cdir, f)) for f in added),
             "duration_ms": round(1000 * (time.perf_counter() - started), 1),
         }

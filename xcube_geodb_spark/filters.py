@@ -245,7 +245,8 @@ def _arrow(node: Leaf | Group, types: dict[str, T.DataType]) -> pc.Expression | 
         if v == "null":
             out = f.is_null()
         elif v in ("true", "false") and isinstance(dtype, T.BooleanType):
-            out = f == (v == "true")
+            # PG's IS TRUE / IS FALSE: FALSE, never NULL, on a NULL cell
+            out = f.is_valid() & (f == (v == "true"))
         else:
             return None
         return ~out if node.negate else out
@@ -421,10 +422,9 @@ def _compile_op(
         v = value.strip().lower()
         if v == "null":
             expr = c.isNull()
-        elif v == "true":
-            expr = c == F.lit(True)
-        elif v == "false":
-            expr = c == F.lit(False)
+        elif v in ("true", "false"):
+            # PG's IS TRUE / IS FALSE: false, never NULL, on a NULL cell
+            expr = c.eqNullSafe(F.lit(v == "true"))
         else:
             raise GeoDBError(f"is filter accepts null/true/false, got {value!r}")
     elif op in ("cs", "cd"):

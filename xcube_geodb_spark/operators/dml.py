@@ -18,12 +18,21 @@ but only the files whose parquet-footer ``id``/envelope stats can contain
 affected rows; untouched files stay in the manifest verbatim. At 100 TB
 that's the difference between rewriting a partition and rewriting the table.
 
-A delete or update that touches one small file rewrites it end to end on
-the driver (``_rewrite``): ``pyarrow`` reads the file, the filter's
-``pyarrow`` lowering masks it, and the Arrow table goes to the commit with
-no Spark job, when the collection's layout and the SET values need nothing
-only Spark computes (:func:`driver_rewrite_filter`). Every other rewrite
-reads the touched files with Spark.
+Small commits skip Spark where the collection's layout needs nothing only
+Spark computes (:func:`driver_layout`):
+
+- a pandas insert that fits the driver (:func:`fits_driver_write`) and is
+  not an upsert builds its batch as an Arrow table in-process, through
+  PySpark's own pandas-to-Arrow converter (:func:`driver_insert_batch`),
+  and the commit writes it with no Spark job. Any other pandas insert goes
+  through ``createDataFrame``: collected and written on the driver when it
+  fits, else written by Spark.
+- a delete or update that touches one small file rewrites it end to end on
+  the driver (``_rewrite``): ``pyarrow`` reads the file, the filter's
+  ``pyarrow`` lowering masks it, and the Arrow table goes to the commit
+  with no Spark job, when the SET values need nothing only Spark computes
+  either (:func:`driver_rewrite_filter`). Every other rewrite reads the
+  touched files with Spark.
 """
 
 from __future__ import annotations
@@ -98,9 +107,10 @@ def _check_crs(meta: CollectionMeta, crs: int | None) -> None:
         )
 
 
-def _pandas_to_spark(catalog: GeoDBCatalog, pdf: pd.DataFrame, schema) -> DataFrame:
-    """The columns of ``pdf`` that ``schema`` declares, as a Spark frame of
-    the declared types (``pdf``'s geometry must already be WKB)."""
+def _declared(pdf: pd.DataFrame, schema) -> tuple[pd.DataFrame, list]:
+    """The columns of ``pdf`` that ``schema`` declares (its date and
+    timestamp columns as :func:`_datetime_column` reads them) and their
+    fields, all nullable."""
     fields = [
         T.StructField(f.name, f.dataType, True)
         for f in schema.fields
@@ -111,8 +121,7 @@ def _pandas_to_spark(catalog: GeoDBCatalog, pdf: pd.DataFrame, schema) -> DataFr
         for f in fields
         if isinstance(f.dataType, (T.DateType, T.TimestampType))
     }
-    pdf = pdf.assign(**datetimes)[[f.name for f in fields]]
-    return catalog.spark.createDataFrame(pdf, T.StructType(fields))
+    return pdf.assign(**datetimes)[[f.name for f in fields]], fields
 
 
 def _datetime_column(s: pd.Series) -> pd.Series:
@@ -170,7 +179,8 @@ def prepare_values_df(
         pdf.columns = [c.lower() for c in pdf.columns]
         if "geometry" in pdf.columns and len(pdf):
             pdf["geometry"] = pdf["geometry"].map(_normalize_geometry_value)
-        df = _pandas_to_spark(catalog, pdf, schema)
+        pdf, fields = _declared(pdf, schema)
+        df = catalog.spark.createDataFrame(pdf, T.StructType(fields))
     elif isinstance(values, DataFrame):
         df = values
         for c in df.columns:
@@ -328,6 +338,63 @@ def _with_envelopes(df: DataFrame, had_geom: bool) -> DataFrame:
     return out
 
 
+def driver_layout(m: CollectionMeta) -> bool:
+    """True when a commit to ``m`` needs nothing only Spark computes, so
+    a batch built on the driver can be written as it is: the collection
+    declares no CHECK constraint (its SQL runs in Spark), no btree index
+    and no lsh/ivf/ivfpq index (their layout and the
+    ``__annbucket``/``__pqcode`` columns are built in Spark). The driver
+    lanes of rewrites (:func:`driver_rewrite_filter`) and of pandas
+    inserts (:func:`driver_insert_batch`) both require it."""
+    return not m.d.get("constraints") and not any(
+        i.get("type") in ("btree", "lsh", "ivf", "ivfpq") for i in m.d.get("indexes", [])
+    )
+
+
+def driver_insert_batch(spark, pdf: pd.DataFrame, schema: T.StructType):
+    """The driver lane of a pandas insert: the declared columns ``pdf``
+    (:func:`_declared`) as the ``pyarrow.Table`` of ``schema`` that the
+    collect lane's ``toArrow`` hands the commit, built with no Spark job.
+    Each column goes through PySpark's own pandas-to-Arrow converter, the
+    ``ArrowStreamPandasSerializer`` that ``createDataFrame`` uses, with the
+    session's time zone and ``arrowSafeTypeConversion``, so the values are
+    the ones the Spark lane stores. The columns ``pdf`` lacks are NULL and
+    ``created_at`` holds one UTC "now", as ``current_timestamp()`` does.
+
+    None when the session does not convert pandas through Arrow or the
+    converter refuses a column: ``createDataFrame`` then falls back to its
+    row-wise conversion, and the insert takes the Spark lane."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.serializers import ArrowStreamPandasSerializer
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    jconf = spark._jconf
+    if not jconf.arrowPySparkEnabled():
+        return None
+    target = to_arrow_schema(
+        schema,
+        error_on_duplicated_field_names_in_struct=True,
+        prefers_large_types=jconf.arrowUseLargeVarTypes(),
+    )
+    ser = ArrowStreamPandasSerializer(
+        jconf.sessionLocalTimeZone(), jconf.arrowSafeTypeConversion(), False
+    )
+    n = len(pdf)
+    cols = []
+    for f, af in zip(schema.fields, target):
+        if f.name == "created_at":
+            now = pa.scalar(dt.datetime.now(dt.timezone.utc), af.type)
+            cols.append(pa.repeat(now, n))
+        elif f.name in pdf.columns:
+            try:
+                cols.append(ser._create_array(pdf[f.name], af.type, f.dataType))
+            except Exception:  # createDataFrame falls back on any error too
+                return None
+        else:
+            cols.append(pa.nulls(n, af.type))
+    return pa.Table.from_arrays(cols, schema=pa.schema([af.with_nullable(True) for af in target]))
+
+
 def insert_into_collection(
     catalog: GeoDBCatalog,
     collection: str,
@@ -340,7 +407,13 @@ def insert_into_collection(
     expected_version: int | None = None,
     operation: str | None = None,
 ) -> int:
-    """Returns the number of rows written. ``merge_meta`` one-level-merges
+    """Returns the number of rows written. A pandas batch that is not an
+    upsert, fits the driver and goes into a collection whose layout passes
+    :func:`driver_layout` is built as an Arrow table on the driver and
+    committed with no Spark job (the ``driver`` lane); one PySpark's
+    pandas-to-Arrow converter refuses, or any other pandas batch, goes
+    through ``createDataFrame`` and the ``collect`` lane (one collect job)
+    when it fits, else the ``spark`` lane. ``merge_meta`` one-level-merges
     into dict-valued collection metadata keys in the same atomic commit
     (streaming-sink epochs; see catalog.commit_version). ``operation``
     names the commit in the version history (default INSERT or UPSERT;
@@ -416,27 +489,31 @@ def insert_into_collection(
             for i, c in enumerate(("__xmin", "__ymin", "__xmax", "__ymax")):
                 pdf[c] = envs.map(lambda e, i=i: e[i])
         schema = m.spark_schema(include_system=True)
-        df = _pandas_to_spark(catalog, pdf, schema)
-        to_write = df.select(
-            *[
-                F.current_timestamp().alias(f.name)
-                if f.name == "created_at"
-                else F.col(f.name)
-                if f.name in df.columns
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ]
-        )
-        _enforce_constraints(m, to_write, "insert")
+        fits = fits_driver_write(catalog.spark, _pandas_arrow_bytes(pdf, schema))
+        pdf, fields = _declared(pdf, schema)
+        batch = driver_insert_batch(catalog.spark, pdf, schema) if fits and driver_layout(m) else None
+        if batch is None:
+            df = catalog.spark.createDataFrame(pdf, T.StructType(fields))
+            batch = df.select(
+                *[
+                    F.current_timestamp().alias(f.name)
+                    if f.name == "created_at"
+                    else F.col(f.name)
+                    if f.name in df.columns
+                    else F.lit(None).cast(f.dataType).alias(f.name)
+                    for f in schema.fields
+                ]
+            )
+            _enforce_constraints(m, batch, "insert")
         catalog.commit_version(
             collection,
             database,
-            to_write,
+            batch,
             keep_files=None,
             max_id=m.max_id + len(pdf),
             expected_version=base_version,
             merge_meta=merge_meta,
-            local_batch=fits_driver_write(catalog.spark, _pandas_arrow_bytes(pdf, schema)),
+            local_batch=fits,
             operation=operation,
         )
         return len(pdf)
@@ -763,14 +840,10 @@ def driver_rewrite_filter(m: CollectionMeta, q: Query, values: dict | None = Non
     ``pyarrow`` lowering (:meth:`filters.Query.arrow` over the declared
     columns, system columns included) when a delete (``values`` None) or
     an update of SET ``values`` can rewrite its file on the driver, else
-    None. The collection must declare no CHECK constraint (its SQL runs in
-    Spark), no btree index and no lsh/ivf/ivfpq index (their layout and
-    the ``__annbucket``/``__pqcode`` columns are built in Spark); an update
-    may not SET ``geometry`` (the envelopes derive from it) and each SET
-    value must be :func:`_arrow_settable` on its column."""
-    if m.d.get("constraints") or any(
-        i.get("type") in ("btree", "lsh", "ivf", "ivfpq") for i in m.d.get("indexes", [])
-    ):
+    None. The collection's layout must pass :func:`driver_layout`; an
+    update may not SET ``geometry`` (the envelopes derive from it) and
+    each SET value must be :func:`_arrow_settable` on its column."""
+    if not driver_layout(m):
         return None
     types = {f.name: f.dataType for f in m.spark_schema().fields}
     if values is not None and not all(

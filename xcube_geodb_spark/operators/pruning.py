@@ -272,8 +272,9 @@ def bloom_columns_needed(
 
 def _classify_file(rel, raw, columns, constraints, fts_groups, blooms_map):
     """True (maybe touched) / False (provably untouched) for one file's
-    raw stats entry. A file of no rows (a rewrite that deleted them all)
-    holds no column stats, and matches nothing."""
+    raw stats entry. A file of no rows (older commits wrote one for a
+    rewrite that deleted them all) holds no column stats, and matches
+    nothing."""
     if raw.get("::rows") == [0, 0]:
         return False
     stats = {}
