@@ -91,9 +91,9 @@ class TestLshLayout:
         q = _query_vec(spark)
         via_index = ann_topk(cat, "emb_lsh", q, k=10, database="anndb")
         hp = S.lsh_hyperplanes(DIM, 8, 42)
-        full = S.lsh_topk(
+        full = S.lsh_multitable_topk(
             cat.load_df("emb_lsh", "anndb"), q, k=10, id_col="id",
-            hyperplanes=hp,
+            tables=[hp],
         )
         got = sorted((r["id"], r["cos_sim"]) for r in via_index.collect())
         want = sorted((r["id"], r["cos_sim"]) for r in full.collect())
@@ -210,9 +210,9 @@ class TestIvfPqLayout:
 
 class TestLargeCodebookPaths:
     """Production-resolution codebooks (e.g. trained 16x256 8-bit PQ)
-    auto-switch encode to the Arrow numpy path and ADC scoring to a
-    single parsed SQL expression. Both must agree exactly with the
-    Column-algebra paths on the same books."""
+    switch encode to the Arrow numpy path, which must agree exactly with
+    the SQL encoder on the same books; ADC scoring is one SQL expression
+    at every size and must equal a Python replay of its table."""
 
     @pytest.fixture(scope="class")
     def emb(self, spark):
@@ -222,67 +222,89 @@ class TestLargeCodebookPaths:
             .limit(400)
         )
 
-    def test_arrow_encode_matches_column_encode(self, emb):
-        books = S.pq_codebooks(emb, n_subspaces=8, n_centroids=8)
-        col = {
-            r["vec_id"]: list(r["pq_code"])
-            for r in S.pq_encode(emb, books, use_arrow=False).collect()
-        }
-        arrow = {
-            r["vec_id"]: list(r["pq_code"])
-            for r in S.pq_encode(emb, books, use_arrow=True).collect()
-        }
-        assert col == arrow and len(col) == 400
+    @staticmethod
+    def _codes(df):
+        return {r["vec_id"]: list(r["pq_code"]) for r in df.collect()}
 
-    def test_arrow_encode_matches_column_encode_residual(self, emb):
+    def _sql_and_arrow_codes(self, monkeypatch, encode):
+        sql = self._codes(encode())
+        # a 0-entry bound sends the same small books to the numpy encoder
+        monkeypatch.setattr(S, "_PQ_COLUMN_PATH_MAX_ENTRIES", 0)
+        return sql, self._codes(encode())
+
+    def test_arrow_encode_matches_column_encode(self, emb, monkeypatch):
+        books = S.pq_codebooks(emb, n_subspaces=8, n_centroids=8)
+        sql, arrow = self._sql_and_arrow_codes(
+            monkeypatch, lambda: S.pq_encode(emb, books)
+        )
+        assert sql == arrow and len(sql) == 400
+
+    def test_arrow_encode_matches_column_encode_residual(
+        self, emb, monkeypatch
+    ):
         cents = S.seed_centroids(emb, n_centroids=4)
         books = S.pq_codebooks_residual(emb, cents, n_subspaces=8,
                                         n_centroids=8)
         assigned = S.with_centroid_assignment(emb, cents)
-        col = {
-            r["vec_id"]: list(r["pq_code"])
-            for r in S.pq_encode(
-                assigned, books, centroids=cents, use_arrow=False
-            ).collect()
-        }
-        arrow = {
-            r["vec_id"]: list(r["pq_code"])
-            for r in S.pq_encode(
-                assigned, books, centroids=cents, use_arrow=True
-            ).collect()
-        }
-        assert col == arrow and len(col) == 400
+        sql, arrow = self._sql_and_arrow_codes(
+            monkeypatch,
+            lambda: S.pq_encode(assigned, books, centroids=cents),
+        )
+        assert sql == arrow and len(sql) == 400
 
-    def test_expr_adc_matches_column_adc(self, emb, spark, monkeypatch):
-        from xcube_geodb_spark.functions import similarity as sim
+    @staticmethod
+    def _replay(rows, k):
+        """Python replay of the ADC score: each row's table entries,
+        each rounded to 9 places as DECIMAL(28,9), summed exactly, then
+        cast to double; ordered like pq_topk (distance, id)."""
+        from decimal import ROUND_HALF_UP, Decimal
 
-        books = S.pq_codebooks(emb, n_subspaces=8, n_centroids=8)
+        nano = Decimal("1e-9")
+        scored = []
+        for vid, codes, tables in rows:
+            total = sum(
+                Decimal(repr(tables[j][c])).quantize(nano, ROUND_HALF_UP)
+                for j, c in enumerate(codes)
+            )
+            scored.append((vid, float(total)))
+        return sorted(scored, key=lambda t: (t[1], t[0]))[:k]
+
+    @pytest.mark.parametrize("n_centroids", [8, 72])  # 64 and 576 entries
+    def test_expr_adc_matches_decimal_replay(self, emb, n_centroids):
+        books = S.pq_codebooks(emb, n_subspaces=8, n_centroids=n_centroids)
         q = [float(v) for v in
              emb.orderBy("vec_id").limit(1).collect()[0]["embedding"]]
-        enc = S.pq_encode(emb, books, use_arrow=False)
-        want = [(r["vec_id"], r["dist_adc"])
-                for r in S.pq_topk(enc, q, books, k=15).collect()]
-        # force the expr-string path on the same small books
-        monkeypatch.setattr(sim, "_PQ_COLUMN_PATH_MAX_ENTRIES", 0)
+        enc = S.pq_encode(emb, books)
+        tables = S._adc_table(q, books)
+        want = self._replay(
+            [(r["vec_id"], r["pq_code"], tables) for r in enc.collect()], 15
+        )
         got = [(r["vec_id"], r["dist_adc"])
                for r in S.pq_topk(enc, q, books, k=15).collect()]
         assert got == want and len(got) == 15
 
-    def test_expr_adc_matches_column_adc_residual(self, emb, monkeypatch):
-        from xcube_geodb_spark.functions import similarity as sim
-
+    @pytest.mark.parametrize("n_centroids", [8, 72])
+    def test_expr_adc_matches_decimal_replay_residual(self, emb, n_centroids):
         cents = S.seed_centroids(emb, n_centroids=4)
         books = S.pq_codebooks_residual(emb, cents, n_subspaces=8,
-                                        n_centroids=8)
+                                        n_centroids=n_centroids)
         assigned = S.with_centroid_assignment(emb, cents)
-        enc = S.pq_encode(assigned, books, centroids=cents, use_arrow=False)
+        enc = S.pq_encode(assigned, books, centroids=cents)
         q = [float(v) for v in
              emb.orderBy("vec_id").limit(1).collect()[0]["embedding"]]
         probes = S.probe_ids(q, cents, 2)
-        want = [(r["vec_id"], r["dist_adc"])
-                for r in S.pq_topk_residual(
-                    enc, q, books, cents, probes, k=15).collect()]
-        monkeypatch.setattr(sim, "_PQ_COLUMN_PATH_MAX_ENTRIES", 0)
+        tables = {
+            p: S._adc_table([a - b for a, b in zip(q, cents[p])], books)
+            for p in probes
+        }
+        want = self._replay(
+            [
+                (r["vec_id"], r["pq_code"], tables[r["centroid_id"]])
+                for r in enc.collect()
+                if r["centroid_id"] in tables
+            ],
+            15,
+        )
         got = [(r["vec_id"], r["dist_adc"])
                for r in S.pq_topk_residual(
                    enc, q, books, cents, probes, k=15).collect()]
@@ -911,7 +933,9 @@ class TestMultiTableLsh:
         )
         single = self._recall(
             emb, qvecs, exact,
-            lambda df, v: S.lsh_topk(df, v, k=self.K),
+            lambda df, v: S.lsh_multitable_topk(
+                df, v, k=self.K, n_bits=8, n_tables=1
+            ),
         )
         assert multi >= 0.8, f"multi-table recall@10 regressed: {multi}"
         assert multi > single, (multi, single)

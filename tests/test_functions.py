@@ -105,9 +105,9 @@ class TestSimilarity:
         assert abs(out[2]["cos_sim"] - 1 / math.sqrt(2)) < 1e-6
 
     def test_cosine_topk_truncated(self, emb):
-        # full-width truncation == the full Arrow path, bit-identical
+        # full-width truncation == the full Arrow scorer, bit-identical
         q = [1.0, 0.0, 0.0, 0.0]
-        full = similarity.cosine_topk_arrow(emb, q, k=5).collect()
+        full = similarity._cosine_topk_arrow(emb, q, k=5).collect()
         trunc = similarity.cosine_topk_truncated(emb, q, k=5, dims=4).collect()
         assert [(r["vec_id"], r["cos_sim"]) for r in full] == [
             (r["vec_id"], r["cos_sim"]) for r in trunc
@@ -137,8 +137,8 @@ class TestSimilarity:
         ]
         df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
         q = [1.0, 0.0, 0.0, 0.0]
-        jvm = similarity.cosine_topk(df, q, k=4).collect()
-        arrow = similarity.cosine_topk_arrow(df, q, k=4).collect()
+        jvm = similarity._cosine_topk_jvm(df, q, k=4).collect()
+        arrow = similarity._cosine_topk_arrow(df, q, k=4).collect()
         assert [r["vec_id"] for r in jvm] == [0, 3, 1, 2]
         assert [(r["vec_id"], r["cos_sim"]) for r in jvm] == [
             (r["vec_id"], r["cos_sim"]) for r in arrow
@@ -158,15 +158,59 @@ class TestSimilarity:
         df = spark.createDataFrame(
             rows, "vec_id long, embedding array<float>"
         ).coalesce(1)
-        out = similarity.cosine_topk_arrow(
+        out = similarity._cosine_topk_arrow(
             df, [0.6, 0.8, 0.0, 0.0], k=5, local_margin=2
         ).collect()
         assert [r["vec_id"] for r in out] == [0, 1, 2, 3, 4]
         assert all(r["cos_sim"] == 1.0 for r in out)
 
+    @pytest.mark.parametrize("case", ["basic", "degenerate", "rounding_tie"])
+    def test_cosine_topk_picks_scorer_by_size(self, spark, emb, case,
+                                              monkeypatch, tmp_path):
+        """A frame the optimizer proves tiny scores on the JVM (no
+        Python node in the executed plan); with the bound at 0 the same
+        call takes the Arrow scorer (MapInPandas), with the same rows.
+        The frames round-trip through parquet: an in-memory RDD frame
+        has no size estimate, so it always takes the Arrow scorer."""
+        if case == "basic":
+            df, q, k = emb, [1.0, 0.0, 0.0, 0.0], 5
+        elif case == "degenerate":
+            df = spark.createDataFrame(
+                [(0, [1.0, 0.0]), (1, [0.0, 0.0]), (2, [0.5, 0.5])],
+                "vec_id long, embedding array<float>",
+            )
+            q, k = [1.0, 0.0], 3
+        else:
+            df = spark.createDataFrame(
+                [
+                    (i, [(1.0 + i * 1e-7) * c for c in (0.6, 0.8)])
+                    for i in range(50)
+                ],
+                "vec_id long, embedding array<float>",
+            ).coalesce(1)
+            q, k = [0.6, 0.8], 5
+        df.write.parquet(str(tmp_path / "emb"))
+        df = spark.read.parquet(str(tmp_path / "emb"))
+
+        def run():
+            out = similarity.cosine_topk(df, q, k=k)
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            return plan, [(r["vec_id"], r["cos_sim"]) for r in out.collect()]
+
+        jvm_plan, jvm = run()
+        assert "Python" not in jvm_plan and "Pandas" not in jvm_plan
+        monkeypatch.setattr(similarity, "_COSINE_JVM_MAX_BYTES", 0)
+        arrow_plan, arrow = run()
+        assert "MapInPandas" in arrow_plan
+        assert jvm == arrow and len(jvm) == k
+        if case == "degenerate":
+            assert jvm[-1] == (1, None)
+        if case == "rounding_tie":
+            assert jvm == [(i, 1.0) for i in range(5)]
+
     def test_lsh_bucket_restricts(self, emb):
-        out = similarity.lsh_topk(
-            emb, [1.0, 0.0, 0.0, 0.0], k=5, n_bits=4
+        out = similarity.lsh_multitable_topk(
+            emb, [1.0, 0.0, 0.0, 0.0], k=5, n_bits=4, n_tables=1
         ).collect()
         ids = [r["vec_id"] for r in out]
         assert 3 not in ids  # opposite sign bucket pruned
@@ -193,8 +237,8 @@ class TestSimilarity:
         emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
         cents = similarity.ivf_centroids(emb, n_centroids=3, n_iters=4)
         assert cents.shape == (3, 4)
-        out = similarity.ivf_topk(
-            emb, [1.0, 0.0, 0.0, 0.0], cents, k=5, n_probe=1
+        out = similarity.ivf_topk_seeded(
+            emb, [1.0, 0.0, 0.0, 0.0], cents.tolist(), k=5, n_probe=1
         ).collect()
         ids = [r["vec_id"] for r in out]
         assert len(ids) == 5
@@ -280,9 +324,9 @@ class TestMultimodal:
 
 class TestRotationLSH:
     def test_rotation_buckets_resist_anisotropy(self, spark):
-        # an anisotropic corpus (every component positive) defeats
-        # axis-aligned sign LSH: all rows land in one bucket; the seeded
-        # rotation spreads them across many buckets
+        # an anisotropic corpus (every component positive) would put
+        # every row in one axis-aligned sign bucket; the seeded rotation
+        # spreads them across many buckets
         import numpy as np
 
         from xcube_geodb_spark.functions import similarity as S
@@ -292,19 +336,13 @@ class TestRotationLSH:
             (i, [float(v) for v in rng.rand(16) + 0.05]) for i in range(200)
         ]
         df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-        axis = (
-            df.select(S.sign_lsh_bucket("embedding", 8).alias("b"))
-            .distinct()
-            .count()
-        )
         hp = S.lsh_hyperplanes(16, 8, 42)
         rot_counts = (
-            df.select(S.rotation_bucket(F.col("embedding"), hp).alias("b"))
+            df.select(S.rotation_bucket("embedding", hp).alias("b"))
             .groupBy("b")
             .count()
             .collect()
         )
-        assert axis == 1
         assert len(rot_counts) >= 8
         assert max(r["count"] for r in rot_counts) <= 100  # no giant bucket
 
@@ -315,7 +353,7 @@ class TestRotationLSH:
         assert hp == S.lsh_hyperplanes(4, 8, 42)  # deterministic
         vec = [0.5, -1.25, 0.75, -0.125]
         df = spark.createDataFrame([(vec,)], "embedding array<double>")
-        got = df.select(S.rotation_bucket(F.col("embedding"), hp).alias("b")).first()["b"]
+        got = df.select(S.rotation_bucket("embedding", hp).alias("b")).first()["b"]
         assert got == S.bucket_of(vec, hp)
 
 
@@ -481,6 +519,44 @@ class TestKnnJoin:
         assert counts == {0: 5, 1: 5, 2: 5}
         for qid in (0, 1, 2):
             assert qid in tops.get(qid, set())  # each query finds itself
+
+    def test_null_and_zero_norm_vectors_match_cosine_topk(self, spark):
+        """A NULL corpus vector is skipped and a zero-norm one scores
+        NULL: each query's rows equal cosine_topk's for that vector."""
+        from xcube_geodb_spark.functions.similarity import (
+            cosine_topk,
+            knn_join,
+        )
+
+        emb = spark.createDataFrame(
+            [
+                (0, [1.0, 0.0, 0.0]),
+                (1, [0.0, 0.0, 0.0]),
+                (2, None),
+                (3, [0.6, 0.8, 0.0]),
+                (4, [0.0, 0.0, 1.0]),
+                (5, [-1.0, 0.0, 0.0]),
+            ],
+            "vec_id long, embedding array<float>",
+        )
+        qvecs = {10: [1.0, 0.0, 0.0], 11: [0.0, 0.6, 0.8]}
+        queries = spark.createDataFrame(
+            list(qvecs.items()), "query_id long, embedding array<float>"
+        )
+        # k reaches the zero-norm row, one past the last real score
+        k = 5
+        got: dict = {}
+        for r in knn_join(emb, queries, k=k).collect():
+            got.setdefault(r["query_id"], []).append(
+                (r["vec_id"], r["cos_sim"])
+            )
+        for qid, qv in qvecs.items():
+            want = [
+                (r["vec_id"], r["cos_sim"])
+                for r in cosine_topk(emb, qv, k=k).collect()
+            ]
+            assert sorted(got[qid], key=want.index) == want
+            assert want[-1] == (1, None)
 
     def test_corpus_smaller_than_k(self, spark):
         from xcube_geodb_spark.functions.similarity import knn_join

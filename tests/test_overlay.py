@@ -109,6 +109,63 @@ class TestBasicOps:
             area(t1) - ai
         )
 
+    # a (three variants) has a vertex at (0.5, 6e-8), 30 lattice quanta
+    # from b's vertex at (0.5, 0): their edges cross there at shallow
+    # angles, so sub-edges beside the crossings sit within the "on"
+    # tolerance of the other boundary at their midpoints without running
+    # along it. Each bounds the result whichever operand it belongs to
+    # (b ∩ a used to come out empty for the first two).
+    _GRAZE_B = (
+        "POLYGON ((0.6234898018587336 0.7818314824680298, "
+        "-0.22252093395631434 0.9749279121818236, "
+        "-0.900968867902419 0.43388373911755823, "
+        "-0.9009688679024191 -0.433883739117558, "
+        "-0.2225209339563146 -0.9749279121818236, "
+        "0.6234898018587334 -0.7818314824680299, "
+        "0.5 -1.2246467991473532e-16, "
+        "0.6234898018587336 0.7818314824680298))"
+    )
+
+    @pytest.mark.parametrize(
+        "a_wkt",
+        [
+            "POLYGON ((0.4999998967617234 0.8660254633890773, "
+            "-0.5000001032382694 0.8660253441797878, "
+            "-0.9999999999999929 -1.1920928942831629e-07, "
+            "-0.49999989676172374 -0.866025463389077, "
+            f"{far}, "
+            "0.49999999999999645 5.960464420883659e-08, "
+            "0.4999998967617234 0.8660254633890773))"
+            for far in ("1.0000002064765376 -1.7320506883595763",
+                        "1.5000003097148065 -2.5980760325393644")
+        ]
+        + [
+            "POLYGON ((0.9201298637739657 1.7757705464927904, "
+            "-0.5766804195052635 0.8169698242647848, "
+            "-0.9906859298039943 -0.13616676719521323, "
+            "-0.3348794998447289 -0.9422609620395743, "
+            "0.6825532303410847 -0.7308358829114442, "
+            "0.49999999999999645 5.960464420883659e-08, "
+            "0.9201298637739657 1.7757705464927904))"
+        ],
+        ids=["one_crossing", "one_crossing_far", "two_crossings"],
+    )
+    def test_shallow_grazing_edges_either_operand_order(self, a_wkt):
+        a, b = P(a_wkt), P(self._GRAZE_B)
+        ai = area(overlay(a, b, "intersection"))
+        assert ai > 2.0
+        assert area(overlay(b, a, "intersection")) == pytest.approx(ai)
+        for x, y in ((a, b), (b, a)):
+            assert area(overlay(x, y, "difference")) == pytest.approx(
+                area(x) - ai
+            )
+            assert area(overlay(x, y, "union")) == pytest.approx(
+                area(a) + area(b) - ai
+            )
+            assert area(overlay(x, y, "symdifference")) == pytest.approx(
+                area(a) + area(b) - 2 * ai
+            )
+
 
 class TestHolesAndMulti:
     H = P(

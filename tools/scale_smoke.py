@@ -817,10 +817,10 @@ def main() -> None:
                     name="elsh",
                 ),
                 # the full Hamming-1 ring (1 + n_bits probes) — the
-                # single-table ceiling this fixture can reach; the path
-                # is DEPRECATED for production recall (r10 verdict
-                # order 7): see functions/similarity.lsh_topk's note,
-                # use lsh_multitable / ann_lsh_tables_topk instead
+                # single-table ceiling this fixture can reach; see the
+                # n_tables=1 note on functions/similarity.
+                # lsh_multitable_topk, and use more tables or
+                # ann_lsh_tables_topk for production recall
                 "lsh_ring": recall(
                     lambda v: ann_topk(
                         cat, "elsh", v, k=k, database="anndb",

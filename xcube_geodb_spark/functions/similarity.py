@@ -1,15 +1,17 @@
 """Similarity search over an embedding column (``array<float>``).
 
-Two paths, as a 100 TB design requires:
-
-- **brute-force cosine top-k** — the correctness baseline. One projection
-  (per-row dot products, JVM codegen via higher-order functions) + a top-k
-  sort. No shuffle except the final k-row ordering, which Spark executes
-  as a TakeOrderedAndProject (per-partition heaps, driver merge of k rows).
-- **sign-LSH bucketed** — the scale path: docs hash to 2^b buckets by the
-  sign pattern of their leading components; a query probes only its own
-  bucket (optionally neighboring buckets), turning a full scan into a
-  1/2^b partition-pruned scan when the bucket is a partition/sort key.
+- **exact cosine top-k** (:func:`cosine_topk`) — the correctness
+  baseline. It picks its scorer by the optimizer's size estimate: a JVM
+  expression (per-row higher-order folds, no Python worker) for a small
+  input, an Arrow ``mapInPandas`` numpy scorer for a corpus-sized scan.
+  Either way a k-row TakeOrderedAndProject finishes (per-partition
+  heaps, driver merge of k rows).
+- **pruning indexes** — multi-table seeded-rotation sign-LSH
+  (:func:`lsh_multitable_topk`), IVF over a seeded coarse quantizer
+  (:func:`ivf_topk_seeded`) and product quantization with ADC scoring
+  (:func:`pq_topk`, :func:`pq_topk_residual`). Each shrinks the scan to
+  a candidate set before an exact JVM rerank, or scores the codes only;
+  at rest the bucket is the file clustering key (``operators/ann.py``).
 
 All arithmetic is double-precision with left-to-right accumulation so a
 DuckDB oracle matches bit-for-bit (rounded to 6 decimals in outputs).
@@ -23,6 +25,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from xcube_geodb_spark.functions.spread import plan_size_bytes
 
 
 def _to_double(arr: Column) -> Column:
@@ -51,12 +55,6 @@ def l2_normalize(a: Column, eps: float = 1e-12) -> Column:
     once at rest beats re-dividing in every probe)."""
     n = F.greatest(norm(_to_double(a)), F.lit(eps))
     return F.transform(_to_double(a), lambda x: x / n)
-
-
-def with_normalized_embedding(
-    df, vec_col: str = "embedding", out_col: str = "embedding_unit"
-):
-    return df.withColumn(out_col, l2_normalize(F.col(vec_col)))
 
 
 def with_quantized_embedding(
@@ -93,6 +91,16 @@ def dequantize_embedding(q: Column, scale: Column) -> Column:
     return F.transform(q, lambda x: x.cast("double") * scale)
 
 
+# The exact scorer of :func:`cosine_topk` switches to the JVM expression
+# at or below this optimizer estimate of ``(id, vector)``. A Python worker
+# costs a ~0.27 s fixed dispatch (measured at sf0.1: scan-only 0.11 s ->
+# scan + mapInPandas 0.38 s; the TakeOrdered adds ~0), which dwarfs the
+# arithmetic on a corpus the optimizer proves tiny: there the JVM
+# expression wins, 0.19 vs 0.32 s best-of-5 at sf0.1. Above it the Arrow
+# scorer wins (~7x the JVM folds at 200k x 64).
+_COSINE_JVM_MAX_BYTES = 2 * 1024 * 1024
+
+
 def cosine_topk(
     df: DataFrame,
     query_vector: list[float],
@@ -100,7 +108,33 @@ def cosine_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Brute-force cosine top-k against a literal query vector.
+    """Exact cosine top-k against a literal query vector: ``(id_col,
+    cos_sim)`` with ``cos_sim`` rounded to 6, ordered by ``cos_sim`` desc
+    then id; a zero-norm or NaN vector scores NULL and ranks last.
+
+    The scorer follows the optimizer's ``sizeInBytes`` of
+    ``df.select(id_col, vec_col)``: the JVM expression
+    (:func:`_cosine_topk_jvm`) when ``0 < size <=``
+    ``_COSINE_JVM_MAX_BYTES``, the Arrow scorer
+    (:func:`_cosine_topk_arrow`) otherwise or when the estimate fails.
+    Both return the same rows unless the top ``k`` reaches a row with a
+    NULL vector: the Arrow scorer skips such rows, the JVM one ranks
+    their NULL score last, tied by id with the zero-norm vectors."""
+    size = plan_size_bytes(df.select(id_col, vec_col))
+    if size is not None and 0 < size <= _COSINE_JVM_MAX_BYTES:
+        return _cosine_topk_jvm(df, query_vector, k, vec_col, id_col)
+    return _cosine_topk_arrow(df, query_vector, k, vec_col, id_col)
+
+
+def _cosine_topk_jvm(
+    df: DataFrame,
+    query_vector: list[float],
+    k: int = 20,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """The JVM scorer of :func:`cosine_topk`, and the rerank of every
+    pruned candidate set (LSH, IVF, funnel, refine): no Python worker.
 
     The scoring expression builds as ONE parsed SQL string: the dim
     literals + three higher-order folds through the Column API cost
@@ -124,8 +158,8 @@ def cosine_topk(
             # zero (an ERROR under ANSI mode, NaN otherwise — which DESC
             # would rank FIRST) and a NaN-component vector scores NaN.
             # NULL ranks last under DESC in both Spark and DuckDB, and
-            # matches the Arrow path's explicit NaN masking — degenerate
-            # vectors rank last consistently on both paths.
+            # matches the Arrow kernel's explicit NaN masking — degenerate
+            # vectors rank last consistently on both scorers.
             f"round(nanvl(try_divide({_dot(td, ql)}, "
             f"sqrt({_dot(td, td)}) * sqrt({_dot(ql, ql)})), "
             f"CAST(NULL AS DOUBLE)), 6)"
@@ -134,7 +168,59 @@ def cosine_topk(
     return scored.orderBy(F.col("cos_sim").desc(), F.col(id_col).asc()).limit(k)
 
 
-def cosine_topk_arrow(
+def _cosine_kernel(qmat: "np.ndarray", keep: int, vec_col: str, id_col: str):
+    """The numpy exact-cosine kernel of both Arrow scorers: one query in
+    :func:`_cosine_topk_arrow`, a query matrix of any height in
+    :func:`knn_join`. Returns ``score(pdf)``, which yields ``(j, ids,
+    sims)`` for each row ``j`` of ``qmat``: the batch's local top
+    ``keep`` rows for that query.
+
+    - Rows with a NULL vector are dropped.
+    - Dots and norms accumulate in the JVM fold order (vectorized across
+      rows, sequential across dims), so raw scores are bit-identical to
+      the JVM expression and DuckDB's ``list_dot_product``.
+    - Each batch prunes on the ROUNDED score with an id tie-break (the
+      global sort key), so a rounding tie wider than ``keep`` cannot
+      drop a row locally that wins globally, as raw-score pruning could.
+    - NaN (a zero-norm vector) sorts last and comes out as SQL NULL,
+      which ranks last under DESC like the JVM scorer's nanvl -> NULL."""
+    nq, dim = qmat.shape
+    qnorm = np.zeros(nq)
+    for d in range(dim):
+        qnorm += qmat[:, d] * qmat[:, d]
+    qnorm = np.sqrt(qnorm)
+
+    def score(pdf):
+        pdf = pdf[pdf[vec_col].notna()]
+        n = len(pdf)
+        if n == 0:
+            return
+        # np.stack + astype is the same EXACT float32->float64 widening
+        # as per-element float(x), at none of the 12M-call Python cost
+        # (measured ~2 s per 200k x 64 batch set)
+        mat = np.stack(pdf[vec_col].to_numpy()).astype(
+            np.float64, copy=False
+        )
+        ids = pdf[id_col].to_numpy()
+        dots = np.zeros((n, nq))
+        vnorm = np.zeros(n)
+        for d in range(dim):
+            dots += mat[:, d : d + 1] * qmat[:, d]
+            vnorm += mat[:, d] * mat[:, d]
+        cos = dots / (np.sqrt(vnorm)[:, None] * qnorm[None, :])
+        cos_r = np.round(cos, 6)
+        m = min(keep, n)
+        for j in range(nq):
+            order = np.lexsort((ids, -cos_r[:, j]))[:m]
+            raw = cos[order, j]
+            sims = pd.array(raw, dtype="Float64")
+            sims[np.isnan(raw)] = pd.NA
+            yield j, ids[order], sims
+
+    return score
+
+
+def _cosine_topk_arrow(
     df: DataFrame,
     query_vector: list[float],
     k: int = 20,
@@ -142,30 +228,17 @@ def cosine_topk_arrow(
     id_col: str = "vec_id",
     local_margin: int = 32,
 ) -> DataFrame:
-    """Brute-force cosine top-k over a FULL corpus scan — the Arrow
-    fast path of :func:`cosine_topk` (identical results): one
-    ``mapInPandas`` stage scores each batch with numpy accumulation in
-    the EXACT fold order of the JVM/SQL sum (vectorized across rows,
-    sequential across dims — the same contract :func:`knn_join`
-    documents), keeps the local top ``k + local_margin`` raw scores per
-    batch, and one k-row TakeOrdered on the rounded score finishes.
-
-    Use this for corpus-sized scans (measured ~7x the JVM
-    higher-order-fold projection at 200k x 64: DuckDB-parity); keep
-    :func:`cosine_topk` for latency-critical post-filter rerank (LSH /
-    IVF probes), where launching Python workers costs more than the
-    arithmetic saves. Rows with NULL vectors are skipped (the JVM path
-    sorts their NULL scores last — identical top-k whenever >= k
-    non-null rows exist)."""
+    """The Arrow scorer of :func:`cosine_topk` for corpus-sized scans:
+    one ``mapInPandas`` stage runs :func:`_cosine_kernel` over each batch
+    and keeps the local top ``k + local_margin``, and one k-row
+    TakeOrdered on the rounded score finishes (measured ~7x the JVM
+    higher-order-fold projection at 200k x 64: DuckDB parity)."""
     from pyspark.sql import types as T
 
-    q = np.array([float(v) for v in query_vector], dtype=np.float64)
-    dim = len(q)
-    qnorm = 0.0
-    for d in range(dim):
-        qnorm += q[d] * q[d]
-    qnorm = math.sqrt(qnorm)
-    keep = k + local_margin
+    score = _cosine_kernel(
+        np.array([[float(v) for v in query_vector]], dtype=np.float64),
+        k + local_margin, vec_col, id_col,
+    )
     out_schema = T.StructType(
         [
             df.schema[id_col],
@@ -175,37 +248,8 @@ def cosine_topk_arrow(
 
     def _score(batches):
         for pdf in batches:
-            pdf = pdf[pdf[vec_col].notna()]
-            n = len(pdf)
-            if n == 0:
-                continue
-            # np.stack + astype is the same EXACT float32->float64
-            # widening as per-element float(x), at none of the 12M-call
-            # Python cost (measured ~2 s per 200k x 64 batch set)
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(
-                np.float64, copy=False
-            )
-            ids = pdf[id_col].to_numpy()
-            dots = np.zeros(n)
-            vnorm = np.zeros(n)
-            for d in range(dim):
-                dots += mat[:, d] * q[d]
-                vnorm += mat[:, d] * mat[:, d]
-            cos = dots / (np.sqrt(vnorm) * qnorm)
-            # prune on the ROUNDED score with id tiebreak — the exact
-            # global sort key — so a >k+margin-way rounding tie can never
-            # drop a row locally that wins globally (raw-score pruning
-            # could). NaN (zero-norm vector) lexsorts last here and is
-            # emitted as SQL NULL below, ranking last under DESC exactly
-            # like the JVM path's nanvl->NULL.
-            cos_r = np.round(cos, 6)
-            order = np.lexsort((ids, -cos_r))[: min(keep, n)]
-            raw = cos[order]
-            vals = pd.array(raw, dtype="Float64")
-            vals[np.isnan(raw)] = pd.NA
-            yield pd.DataFrame(
-                {id_col: ids[order], "__raw_sim": vals}
-            )
+            for _j, ids, sims in score(pdf):
+                yield pd.DataFrame({id_col: ids, "__raw_sim": sims})
 
     scored = df.select(id_col, vec_col).mapInPandas(_score, out_schema)
     return (
@@ -230,13 +274,12 @@ def cosine_topk_truncated(
     are themselves usable embeddings): score on the first ``dims``
     components only. At the 100-TB design point this is the cheap first
     pass of a two-stage funnel — a prefix column persisted at rest
-    scans dims/dim of the bytes (pair with
-    ``cosine_topk``/``cosine_topk_arrow`` over the full vectors as the
-    rerank); here the prefix is sliced JVM-side before the Arrow scorer
-    (``slice`` is codegen, the full column still reads from parquet —
-    persist the prefix to get the IO win). Results are exactly the
-    full scorer's semantics on the truncated space (same fold order,
-    rounding, NULL ranking)."""
+    scans dims/dim of the bytes (pair with :func:`cosine_topk` over the
+    full vectors as the rerank); here the prefix is sliced JVM-side
+    before :func:`cosine_topk` scores it (``slice`` is codegen, the full
+    column still reads from parquet — persist the prefix to get the IO
+    win). Results are exactly the full scorer's semantics on the
+    truncated space (same fold order, rounding, NULL ranking)."""
     dims = int(dims)
     if dims < 1 or dims > len(query_vector):
         raise ValueError(
@@ -245,7 +288,7 @@ def cosine_topk_truncated(
     sliced = df.select(
         F.col(id_col), F.slice(F.col(vec_col), 1, dims).alias(vec_col)
     )
-    return cosine_topk_arrow(
+    return cosine_topk(
         sliced, [float(v) for v in query_vector[:dims]], k=k,
         vec_col=vec_col, id_col=id_col,
     )
@@ -277,7 +320,7 @@ def cosine_topk_funnel(
         vec_col=vec_col, id_col=id_col,
     ).select(id_col)
     cand = df.join(F.broadcast(cand_ids), id_col, "inner")
-    return cosine_topk(
+    return _cosine_topk_jvm(
         cand, query_vector, k=k, vec_col=vec_col, id_col=id_col
     )
 
@@ -303,19 +346,17 @@ def knn_join(
     Plan, sized for a 100 TB corpus:
 
     1. **One corpus scan, no corpus shuffle for scoring**: an Arrow
-       ``mapInPandas`` stage scores each batch against the whole query
-       matrix and emits only the local top ``k + local_margin`` rows per
-       query per batch — output is bounded by batches x queries x k,
-       never corpus-sized. The dot/norm accumulation loops over the
-       vector dims with vectorized adds across rows, which reproduces the
-       left-to-right summation order of the JVM ``aggregate`` fold and
-       DuckDB's ``list_dot_product`` EXACTLY, so scores are bit-identical
-       to the oracle's.
+       ``mapInPandas`` stage runs :func:`_cosine_kernel` (the Arrow
+       :func:`cosine_topk` scorer's kernel) on each batch against the
+       whole query matrix and emits only the local top
+       ``k + local_margin`` rows per query per batch — output is bounded
+       by batches x queries x k, never corpus-sized. Scores are
+       bit-identical to the oracle's; NULL vectors are skipped and
+       zero-norm vectors score NULL, so each query's rows equal
+       :func:`cosine_topk`'s for that query vector.
     2. **One narrow shuffle** of the surviving candidates keyed by
        query_id; a window ranks on (rounded sim desc, id asc) — the same
-       deterministic tie-break every sim_* gate uses. ``local_margin``
-       keeps enough local slack that rounding ties at the k-boundary
-       cannot change the global result.
+       deterministic tie-break every sim_* gate uses.
     """
     from pyspark.sql import Window
     from pyspark.sql import types as T
@@ -333,17 +374,10 @@ def knn_join(
     if not qrows:
         raise ValueError("queries is empty")
     qids = [r[0] for r in qrows]
-    qmat = np.array([[float(v) for v in r[1]] for r in qrows], dtype=np.float64)
-    dim = qmat.shape[1]
-    # sequential-order query norms (scalar loop; tiny)
-    qnorm = np.empty(len(qids))
-    for j in range(len(qids)):
-        acc = 0.0
-        for d in range(dim):
-            acc += qmat[j, d] * qmat[j, d]
-        qnorm[j] = math.sqrt(acc)
-
-    keep = k + local_margin
+    score = _cosine_kernel(
+        np.array([[float(v) for v in r[1]] for r in qrows], dtype=np.float64),
+        k + local_margin, vec_col, id_col,
+    )
     out_schema = T.StructType(
         [
             T.StructField("query_id", T.LongType()),
@@ -354,29 +388,12 @@ def knn_join(
 
     def _score(batches):
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(
-                np.float64, copy=False
-            )
-            ids = pdf[id_col].to_numpy()
-            # accumulate over dims: vectorized across rows, sequential
-            # across dims — the exact fold order of the JVM/SQL sum
-            dots = np.zeros((n, len(qids)))
-            vnorm = np.zeros(n)
-            for d in range(dim):
-                dots += mat[:, d : d + 1] * qmat[:, d]
-                vnorm += mat[:, d] * mat[:, d]
-            cos = dots / (np.sqrt(vnorm)[:, None] * qnorm[None, :])
-            m = min(keep, n)
-            for j, qid in enumerate(qids):
-                order = np.lexsort((ids, -cos[:, j]))[:m]
+            for j, ids, sims in score(pdf):
                 yield pd.DataFrame(
                     {
-                        "query_id": np.full(m, qid, dtype=np.int64),
-                        id_col: ids[order],
-                        "__raw_sim": cos[order, j],
+                        "query_id": np.full(len(ids), qids[j], dtype=np.int64),
+                        id_col: ids,
+                        "__raw_sim": sims,
                     }
                 )
 
@@ -412,34 +429,24 @@ def lsh_hyperplanes(
     ]
 
 
-def rotation_bucket(
-    vec: Column | str, hyperplanes: list[list[float]]
-) -> Column:
+def rotation_bucket(vec: str, hyperplanes: list[list[float]]) -> Column:
     """'0'/'1' bucket id: sign of ``vec . r`` per seeded hyperplane.
-    ``vec`` should be a materialized double-array attribute (no CSE inside
+    ``vec`` names a materialized double-array column (no CSE inside
     higher-order functions).
 
-    Pass the COLUMN NAME (str) on hot paths: the expression then builds
-    as one parsed SQL string — bits x dim literal arrays through the
-    Column API cost thousands of py4j round trips per call (~0.6 s of
-    pure driver latency per probe at 8x64), the single F.expr parse is
-    one. Both paths produce the identical Catalyst tree (same zip_with/
-    aggregate left fold, same literals), so results are bit-identical."""
-    if isinstance(vec, str):
-        bits = []
-        for r in hyperplanes:
-            arr = "array(" + ",".join(f"{float(c)!r}D" for c in r) + ")"
-            d = (
-                f"aggregate(zip_with({vec}, {arr}, (x, y) -> x * y), "
-                f"0.0D, (acc, v) -> acc + v)"
-            )
-            bits.append(f"(CASE WHEN {d} >= 0 THEN '1' ELSE '0' END)")
-        return F.expr("concat(" + ", ".join(bits) + ")")
+    The expression builds as one parsed SQL string — bits x dim literal
+    arrays through the Column API would cost thousands of py4j round
+    trips per call (~0.6 s of pure driver latency per probe at 8x64);
+    the single F.expr parse is one."""
     bits = []
     for r in hyperplanes:
-        rv = F.array(*[F.lit(float(c)) for c in r])
-        bits.append(F.when(dot(vec, rv) >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
+        arr = "array(" + ",".join(f"{float(c)!r}D" for c in r) + ")"
+        d = (
+            f"aggregate(zip_with({vec}, {arr}, (x, y) -> x * y), "
+            f"0.0D, (acc, v) -> acc + v)"
+        )
+        bits.append(f"(CASE WHEN {d} >= 0 THEN '1' ELSE '0' END)")
+    return F.expr("concat(" + ", ".join(bits) + ")")
 
 
 def bucket_of(vector: list[float], hyperplanes: list[list[float]]) -> str:
@@ -447,20 +454,6 @@ def bucket_of(vector: list[float], hyperplanes: list[list[float]]) -> str:
     return "".join(
         "1" if _py_dot([float(v) for v in vector], r) >= 0 else "0"
         for r in hyperplanes
-    )
-
-
-def sign_lsh_bucket(vec_col: str = "embedding", n_bits: int = 8) -> Column:
-    """Legacy axis-aligned bucket: sign pattern of the first ``n_bits``
-    components. Kept for comparison/tests; production paths use
-    :func:`rotation_bucket` (skew-resistant)."""
-    return F.concat(
-        *[
-            F.when(F.element_at(F.col(vec_col), i + 1) >= 0, F.lit("1")).otherwise(
-                F.lit("0")
-            )
-            for i in range(n_bits)
-        ]
     )
 
 
@@ -519,48 +512,6 @@ def lsh_probe_buckets(
     return probes
 
 
-def lsh_topk(
-    df: DataFrame,
-    query_vector: list[float],
-    k: int = 20,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_bits: int = 8,
-    seed: int = 42,
-    hyperplanes: list[list[float]] | None = None,
-    n_probe: int = 1,
-) -> DataFrame:
-    """ANN: restrict the cosine scan to the query's seeded-rotation sign-LSH
-    bucket. At scale the bucket is a partition key, so this prunes
-    ~(1 - 2^-b) of the data before any arithmetic runs. ``n_probe > 1``
-    additionally scans the nearest neighboring buckets
-    (:func:`lsh_probe_buckets`) — strictly more candidates, so recall is
-    monotone in ``n_probe``.
-
-    .. deprecated:: r11
-        **Single-TABLE sign-LSH has a hard recall ceiling on weakly
-        structured corpora** — measured recall@10 on the structure-free
-        uniform-unit fixture: 0.12 at n_probe=1, 0.13 at 3, 0.18 at the
-        full Hamming-1 ring (9 of 256 buckets); the 2-step perturbations
-        keep it monotone but approach a full scan long before useful
-        recall. The theory matches: neighbor bit-collision probability
-        p = 1 - theta/pi is small when true neighbors sit at wide
-        angles, and one table pays p^b. Production paths should use
-        :func:`lsh_multitable_topk` (16x4-bit tables, measured 0.91) or
-        the at-rest :func:`~xcube_geodb_spark.operators.ann.
-        ann_lsh_tables_topk`; this single-table form stays for
-        cheap candidate pruning where downstream reranking tolerates
-        low recall."""
-    hp = hyperplanes or lsh_hyperplanes(len(query_vector), n_bits, seed)
-    probes = lsh_probe_buckets(query_vector, hp, n_probe)
-    bucketed = (
-        df.select("*", _to_double(F.col(vec_col)).alias("__v"))
-        .filter(rotation_bucket("__v", hp).isin(probes))
-        .drop("__v")
-    )
-    return cosine_topk(bucketed, query_vector, k, vec_col, id_col)
-
-
 def lsh_table_hyperplanes(
     dim: int, n_bits: int = 4, n_tables: int = 16, seed: int = 42
 ) -> list[list[list[float]]]:
@@ -606,7 +557,12 @@ def lsh_multitable_topk(
     JVM-side codegen expressions (no Python, no shuffle before the
     bounded top-k); ``n_probe > 1`` applies per-table multi-probe
     (:func:`lsh_probe_buckets`) for a strict candidate superset, so
-    recall is monotone in both ``n_tables`` and ``n_probe``."""
+    recall is monotone in both ``n_tables`` and ``n_probe``.
+
+    ``n_tables=1`` is classic single-table sign-LSH, the probe of the
+    at-rest ``lsh`` index: on the structure-free fixture at 8 bits it
+    measured recall@10 0.12 at ``n_probe=1``, 0.13 at 3 and 0.18 at the
+    full Hamming-1 ring (9 of 256 buckets)."""
     tabs = tables or lsh_table_hyperplanes(
         len(query_vector), n_bits, n_tables, seed
     )
@@ -620,7 +576,7 @@ def lsh_multitable_topk(
         .filter(cond)
         .drop("__v")
     )
-    return cosine_topk(bucketed, query_vector, k, vec_col, id_col)
+    return _cosine_topk_jvm(bucketed, query_vector, k, vec_col, id_col)
 
 
 def ivf_centroids(
@@ -669,26 +625,6 @@ def ivf_assignments(
         return pd.Series((X @ cents.T).argmax(axis=1).astype("int32"))
 
     return df.select(F.col(id_col), F.col(vec_col), _assign(F.col(vec_col)).alias("centroid_id"))
-
-
-def ivf_topk(
-    df: DataFrame,
-    query_vector: list[float],
-    centroids: "np.ndarray",
-    k: int = 20,
-    n_probe: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """IVF search: score only rows assigned to the query's ``n_probe``
-    nearest centroid lists — a 1/(n_centroids/n_probe) scan when
-    centroid_id is a partition key."""
-    q = np.asarray(query_vector, dtype=np.float64)
-    qn = q / max(np.linalg.norm(q), 1e-12)
-    probes = np.argsort(-(centroids @ qn))[:n_probe].tolist()
-    assigned = ivf_assignments(df, centroids, vec_col, id_col)
-    cand = assigned.filter(F.col("centroid_id").isin([int(p) for p in probes]))
-    return cosine_topk(cand, query_vector, k, vec_col, id_col)
 
 
 # --- seeded (oracle-replayable) IVF ----------------------------------------
@@ -815,7 +751,7 @@ def ivf_topk_seeded(
     cand = with_centroid_assignment(df, centroids, vec_col).filter(
         F.col("centroid_id").isin(probes)
     )
-    return cosine_topk(cand, query_vector, k, vec_col, id_col)
+    return _cosine_topk_jvm(cand, query_vector, k, vec_col, id_col)
 
 
 def pairwise_cosine_above(
@@ -993,33 +929,6 @@ def _train_subspace_books(
     return books
 
 
-def assigned_centroid_arr(
-    centroids: list[list[float]], bucket_col: str
-) -> Column:
-    """``array<double>`` literal lookup: the centroid vector of the row's
-    coarse bucket. The nested-array literal is k_c * dim doubles —
-    driver-sized, constant-folded into codegen (no join, no broadcast
-    variable plumbing)."""
-    cents = F.array(
-        *[F.array(*[F.lit(float(x)) for x in c]) for c in centroids]
-    )
-    return F.element_at(cents, F.col(bucket_col) + 1)
-
-
-def residual_of(
-    vec_col: str, centroids: list[list[float]], bucket_col: str
-) -> Column:
-    """``v - centroids[bucket]`` as pure Column algebra (the IVFADC
-    residual, Jegou et al. 2011: quantizing the residual instead of the
-    raw vector concentrates the PQ codebook's dynamic range on the
-    within-list displacement, which is what ADC actually ranks)."""
-    return F.zip_with(
-        _to_double(F.col(vec_col)),
-        assigned_centroid_arr(centroids, bucket_col),
-        lambda a, b: a - b,
-    )
-
-
 def _py_assign(v: list[float], centroids: list[list[float]]) -> int:
     """Driver-side replica of :func:`with_centroid_assignment`'s
     argmax-cosine (ties -> lowest cid), same fold order."""
@@ -1142,13 +1051,13 @@ def pq_codebooks_trained_residual(
     return _train_subspace_books(R, n_subspaces, n_centroids, n_iters)
 
 
-# Above this many (subspace x centroid) codebook entries, encode/ADC
-# switch from per-entry Column algebra (whose Catalyst tree and py4j
-# construction cost grow with every entry) to an Arrow-batched numpy
-# encoder / a single parsed SQL scoring expression. 512 keeps every
-# oracle-replayed seeded configuration (8x8, 8x16) on the bit-stable
-# Column path; production-resolution trained books (16x256 — classic
-# 8-bit PQ) take the vectorized paths.
+# Above this many (subspace x centroid) codebook entries, pq_encode
+# switches from the parsed SQL encoder (whose expression tree grows with
+# every entry) to an Arrow-batched numpy encoder. 512 keeps every
+# oracle-replayed seeded configuration (8x8, 8x16) on the bit-stable SQL
+# encoder; production-resolution trained books (16x256 — classic 8-bit
+# PQ) take the numpy encoder. ADC scoring is one parsed SQL expression
+# at every size.
 _PQ_COLUMN_PATH_MAX_ENTRIES = 512
 
 
@@ -1159,7 +1068,6 @@ def pq_encode(
     out_col: str = "pq_code",
     centroids: list[list[float]] | None = None,
     bucket_col: str = "centroid_id",
-    use_arrow: bool | None = None,
 ) -> DataFrame:
     """Adds ``pq_code``: per subspace, the index of the nearest codebook
     centroid (squared L2; ties -> lowest code). The at-rest form for
@@ -1167,29 +1075,26 @@ def pq_encode(
     4*dim — 32x smaller than float32 at m=8, dim=64.
 
     With ``centroids`` set, the RESIDUAL ``v - centroids[bucket_col]``
-    is encoded instead of the raw vector (IVFADC) — same Column algebra,
-    one extra zip_with subtraction, still replayed bit-for-bit by the
-    SQL oracle.
+    is encoded instead of the raw vector (IVFADC) — one extra zip_with
+    subtraction, still replayed bit-for-bit by the SQL oracle.
 
     Small codebooks (the oracle-replayable seeded configs) encode as
-    pure Column algebra: every (subspace, centroid) distance is a
+    one parsed SQL expression: every (subspace, centroid) distance is a
     sequential left-fold of squared differences (the association the SQL
     oracle replays bit-for-bit — only +,-,* on identical doubles, no
     transcendentals), and the argmin is the (-dist, -code) struct-max
     idiom assignment uses. No UDF, no shuffle.
 
     Large codebooks (``m * k >`` 512 entries, e.g. trained 16x256 8-bit
-    PQ) auto-switch to an Arrow-batched numpy encoder (``use_arrow``
-    overrides): one vectorized argmin per subspace per batch — the same
+    PQ) switch to an Arrow-batched numpy encoder: one vectorized
+    argmin per subspace per batch — the same
     squared-L2 metric and lowest-code tie rule, at none of the
     per-entry expression-tree cost. Deterministic, but not replayed by
     a plain-SQL oracle (numpy reduction order); keep seeded books for
     hash-gated paths."""
     m = len(codebooks)
     sd = len(codebooks[0][0])
-    if use_arrow is None:
-        use_arrow = m * len(codebooks[0]) > _PQ_COLUMN_PATH_MAX_ENTRIES
-    if use_arrow:
+    if m * len(codebooks[0]) > _PQ_COLUMN_PATH_MAX_ENTRIES:
         books_np = [np.asarray(b, dtype=np.float64) for b in codebooks]
         cents_np = (
             np.asarray(centroids, dtype=np.float64)
@@ -1228,10 +1133,8 @@ def pq_encode(
             return _codes_of(X)
 
         return df.withColumn(out_col, _enc(F.col(vec_col)))
-    # one parsed SQL expression instead of m*k Column-API entries (the
-    # rotation_bucket / pq_topk fast-path precedent): identical zip_with/
-    # aggregate left folds over identical double literals — bit-identical
-    # results at one py4j round trip instead of thousands (~4.7 s of pure
+    # one parsed SQL expression, as in rotation_bucket and pq_topk: one
+    # py4j round trip instead of m*k Column-API entries (~4.7 s of pure
     # driver latency per build at 8x8x8)
     if centroids is not None:
         cents_arr = (
@@ -1286,26 +1189,14 @@ def pq_topk(
     squared L2; ``dist_adc`` rounds per-entry to 9 decimals and sums as
     DECIMAL(28,9), so any engine replays the ranking exactly. Returns
     (id, dist_adc) ascending, heap top-k."""
-    m, kk = len(codebooks), len(codebooks[0])
+    m = len(codebooks)
     sd = len(codebooks[0][0])
     if len(query_vector) != m * sd:
         raise ValueError("query dimension does not match the codebooks")
-    tables = _adc_table(query_vector, codebooks)
-    if m * kk > _PQ_COLUMN_PATH_MAX_ENTRIES:
-        # one parsed SQL expression instead of m*k Column-API literal
-        # calls: the tree is identical (double-literal arrays, the same
-        # element_at lookups and DECIMAL(28,9) sum), but driver-side
-        # construction is one parse instead of thousands of py4j round
-        # trips — probe latency stays flat as codebooks grow
-        score = F.expr(_adc_score_sql(tables, code_col))
-    else:
-        score = None
-        for j in range(m):
-            arr = F.array(*[F.lit(t) for t in tables[j]])
-            part = F.element_at(arr, F.col(code_col)[j] + 1).cast(
-                "decimal(28,9)"
-            )
-            score = part if score is None else score + part
+    # one parsed SQL expression: the lookups and the DECIMAL(28,9) sum
+    # cost one parse instead of m*k py4j round trips, so probe latency
+    # stays flat as codebooks grow
+    score = F.expr(_adc_score_sql(_adc_table(query_vector, codebooks), code_col))
     return (
         df.select(
             F.col(id_col), score.cast("double").alias("dist_adc")
@@ -1325,8 +1216,8 @@ def _adc_score_sql(
     DECIMAL(28,9), summed. With ``case_bucket=(bucket_col, {probe:
     tables})``, each subspace's array is selected by a chained CASE over
     the probed lists (the residual/IVFADC form). Literals round-trip
-    exactly through repr -> Double.parseDouble, so the parsed tree equals
-    the Column-API construction bit-for-bit."""
+    exactly through repr -> Double.parseDouble, so the scores equal a
+    per-entry DECIMAL(28,9) sum of the :func:`_adc_table` entries."""
 
     def _arr(row: list[float]) -> str:
         return "array(" + ",".join(f"{float(v)!r}D" for v in row) + ")"
@@ -1406,25 +1297,12 @@ def pq_topk_residual(
         )
         for p in probes
     }
-    if m * len(codebooks[0]) > _PQ_COLUMN_PATH_MAX_ENTRIES:
-        score = F.expr(
-            _adc_score_sql(
-                next(iter(tables.values())), code_col,
-                case_bucket=(bucket_col, tables),
-            )
+    score = F.expr(
+        _adc_score_sql(
+            next(iter(tables.values())), code_col,
+            case_bucket=(bucket_col, tables),
         )
-    else:
-        score = None
-        for j in range(m):
-            sel = None
-            for p in probes:
-                arr = F.array(*[F.lit(t) for t in tables[int(p)][j]])
-                cond = F.col(bucket_col) == int(p)
-                sel = F.when(cond, arr) if sel is None else sel.when(cond, arr)
-            part = F.element_at(sel, F.col(code_col)[j] + 1).cast(
-                "decimal(28,9)"
-            )
-            score = part if score is None else score + part
+    )
     return (
         df.select(F.col(id_col), score.cast("double").alias("dist_adc"))
         .orderBy(F.col("dist_adc").asc(), F.col(id_col))

@@ -62,6 +62,26 @@ def _env_int(name: str, default: int) -> int:
         return default
 
 
+def plan_size_bytes(df: DataFrame) -> int | None:
+    """Catalyst's ``sizeInBytes`` estimate of ``df``'s optimized plan;
+    None for a streaming frame or when the estimate fails. The one size
+    probe behind every "small input, different plan" choice
+    (:func:`spread_small`, ``similarity.cosine_topk``)."""
+    try:
+        if df.isStreaming:
+            return None
+        return int(
+            str(
+                df._jdf.queryExecution()
+                .optimizedPlan()
+                .stats()
+                .sizeInBytes()
+            )
+        )
+    except Exception:
+        return None
+
+
 def spread_small(
     df: DataFrame,
     threshold: int | None = None,
@@ -72,18 +92,8 @@ def spread_small(
     estimation failure — the safe default is the plan Spark chose). A
     malformed ``SPARK_GRAFT_SPREAD_*`` value falls back to its default,
     and the partition count is at least 1."""
-    try:
-        if df.isStreaming:
-            return df
-        size = int(
-            str(
-                df._jdf.queryExecution()
-                .optimizedPlan()
-                .stats()
-                .sizeInBytes()
-            )
-        )
-    except Exception:
+    size = plan_size_bytes(df)
+    if size is None:
         return df
     if threshold is None:
         threshold = _env_int("SPARK_GRAFT_SPREAD_SMALL_BYTES", _DEFAULT_THRESHOLD)

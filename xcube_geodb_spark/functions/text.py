@@ -50,11 +50,8 @@ def with_token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
 def _quality_exprs(
     text: Column, norm: Column, alpha_chars: Column, punct_chars: Column
 ) -> dict[str, Column]:
-    """THE quality formula — the only copy (r7 verdict order 7: the
-    helper and the table path used to carry two bit-identical copies
-    that could drift). Callers supply the staging columns: the table
-    path passes materialized refs, the loose-column path passes the same
-    expressions inline. Hot-path formulation throughout: space-count
+    """THE quality formula — the only copy. The caller supplies the
+    staging columns as materialized refs. Hot-path formulation: space-count
     tokens over the normalized string and a one-pass regex stopword
     count (:func:`word_count_in`) — no interpreted higher-order filter."""
     n_tokens = (
@@ -80,28 +77,11 @@ def _quality_exprs(
     }
 
 
-def quality_score_columns(text_col: str = "text") -> dict[str, Column]:
-    """Deterministic quality heuristics: length, punctuation density,
-    stopword ratio, alphabetic ratio, and a blended [0,1] score —
-    :func:`_quality_exprs` with the staging expressions inlined (each
-    returned Column is self-contained; callers that score whole tables
-    should prefer :func:`with_quality_score`, which materializes the
-    normalized string once instead of once per reference)."""
-    text = F.col(text_col)
-    return _quality_exprs(
-        text,
-        normalized(text),
-        F.length(text) - F.length(F.translate(text, _ALPHABET, "")),
-        F.length(text) - F.length(F.translate(text, _PUNCT, "")),
-    )
-
-
 def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Table-level quality scoring with the normalized string materialized
-    once — the single-expression columns re-run normalization per
-    reference otherwise (same Catalyst inlining hazard as
-    dedup.shingle_table). Delegates to :func:`_quality_exprs`, the one
-    copy of the formula."""
+    once — inline expressions would re-run normalization per reference
+    (same Catalyst inlining hazard as dedup.shingle_table). Delegates to
+    :func:`_quality_exprs`, the one copy of the formula."""
     text = F.col(text_col)
     staged = (
         df.withColumn("__norm", normalized(text))
@@ -165,23 +145,6 @@ def lang_id_from_norm(norm: Column) -> Column:
             lang: word_count_in(norm, sw)
             for lang, sw in LANG_STOPWORDS.items()
         }
-    )
-
-
-def lang_id_from_tokens(toks: Column) -> Column:
-    """Stopword-vote language id over an already-materialized token array;
-    first-match CASE gives earlier languages the tie-break (a classic
-    n-gram-free heuristic, SQL-replicable). Prefer
-    :func:`lang_id_from_norm` when the normalized STRING is at hand —
-    higher-order filters evaluate interpreted per element."""
-
-    def _hits(words: tuple[str, ...]) -> Column:
-        # single-parameter lambda: two-parameter lambdas become
-        # (element, index) functions in Spark's filter()
-        return F.size(F.filter(toks, lambda t: t.isin(*words)))
-
-    return _lang_case(
-        {lang: _hits(sw) for lang, sw in LANG_STOPWORDS.items()}
     )
 
 

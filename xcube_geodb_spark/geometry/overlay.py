@@ -579,21 +579,22 @@ def overlay(a: Geometry | None, b: Geometry | None, op: str) -> Geometry | None:
         for (p, qq), mx, my, loc in zip(nonshared, mxs, mys, locs):
             mx, my = float(mx), float(my)
             if loc == "on":
-                # grazing contact without an exact partner edge: resolve
-                # like a shared edge using offset side probes
+                # grazing contact without an exact partner edge: offset
+                # side probes place the edge unless the other boundary
+                # passes between them. Then the exact midpoint decides,
+                # for either operand: keeping one operand's copy as for
+                # a shared edge drops the other's edge when the two only
+                # meet at a shallow angle rather than run along each
+                # other, and the ring no longer closes.
                 nx, ny = -(qq[1] - p[1]), (qq[0] - p[0])
                 nl = math.hypot(nx, ny) or 1.0
                 ox, oy = nx / nl * 8 * q, ny / nl * 8 * q
                 left_in = _point_in_rings(mx + ox, my + oy, other_rings)
                 right_in = _point_in_rings(mx - ox, my - oy, other_rings)
-                if left_in and right_in:
-                    loc = "in"
-                elif not left_in and not right_in:
-                    loc = "out"
+                if left_in == right_in:
+                    loc = "in" if left_in else "out"
                 else:
-                    if _shared_rule(op, same_dir=left_in) and src == "A":
-                        directed.add((p, qq))
-                    continue
+                    loc = "in" if _point_in_rings(mx, my, other_rings) else "out"
             how = _emit_rules(op, src, loc)
             if how == "fwd":
                 directed.add((p, qq))

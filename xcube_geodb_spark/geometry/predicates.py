@@ -214,13 +214,6 @@ def _polygon_clip_area(rings: Sequence[np.ndarray], box: Box) -> float:
     return max(area, 0.0)
 
 
-def _polygon_area(rings: Sequence[np.ndarray]) -> float:
-    area = _ring_area(np.asarray(rings[0]))
-    for hole in rings[1:]:
-        area -= _ring_area(np.asarray(hole))
-    return max(area, 0.0)
-
-
 # ---------------------------------------------------------------------------
 # Relations between the box and one geometry
 # ---------------------------------------------------------------------------

@@ -28,21 +28,6 @@ from xcube_geodb_spark.errors import GeoDBError
 from xcube_geodb_spark.geometry.geom import Geometry, _all_vertices
 
 
-def _circumcircle_test(ax, ay, bx, by, cx, cy, px, py, tol) -> bool:
-    """Is p strictly inside the circumcircle of (a, b, c)? The standard
-    3x3 lifted determinant; (a, b, c) must be counter-clockwise. |det|
-    <= tol counts as OUTSIDE, so cocircular ties never cascade."""
-    adx, ady = ax - px, ay - py
-    bdx, bdy = bx - px, by - py
-    cdx, cdy = cx - px, cy - py
-    det = (
-        (adx * adx + ady * ady) * (bdx * cdy - cdx * bdy)
-        - (bdx * bdx + bdy * bdy) * (adx * cdy - cdx * ady)
-        + (cdx * cdx + cdy * cdy) * (adx * bdy - bdx * ady)
-    )
-    return det > tol
-
-
 def _delaunay_sites(geom: Geometry) -> np.ndarray:
     pts = _all_vertices(geom)
     if len(pts) == 0:

@@ -27,8 +27,8 @@ from xcube_geodb_spark.functions.similarity import (
     bucket_of,
     ivf_topk_seeded,
     lsh_hyperplanes,
+    lsh_multitable_topk,
     lsh_probe_buckets,
-    lsh_topk,
     probe_ids,
 )
 from xcube_geodb_spark.operators.pruning import split_files_by_constraints
@@ -108,11 +108,12 @@ def ann_topk(
     file pruning, and the scan — probe latency pays one metadata read plus
     the footer checks, nothing else driver-side.
 
-    NOTE (r11): the single-table ``lsh`` index path carries the recall
-    ceiling documented on :func:`~xcube_geodb_spark.functions.
-    similarity.lsh_topk` (0.12-0.18 on weakly structured corpora even
-    with the full Hamming-1 ring). For production LSH recall use the
-    at-rest multitable pair :func:`build_lsh_tables_collection` /
+    NOTE: the ``lsh`` index is ONE hyperplane table, probed as
+    :func:`~xcube_geodb_spark.functions.similarity.lsh_multitable_topk`
+    with ``tables=[hp]``; a single table carries the recall ceiling
+    documented there (0.12-0.18 on weakly structured corpora even with
+    the full Hamming-1 ring). For production LSH recall use the at-rest
+    multitable pair :func:`build_lsh_tables_collection` /
     :func:`ann_lsh_tables_topk` (measured 0.91), or an ivf/ivfpq
     index."""
     m = catalog.meta(collection, database)
@@ -127,9 +128,9 @@ def ann_topk(
         hp = lsh_hyperplanes(
             int(idx["dim"]), int(idx.get("n_bits", 8)), int(idx.get("seed", 42))
         )
-        return lsh_topk(
+        return lsh_multitable_topk(
             sub, query_vector, k, vec_col=prop, id_col=id_col,
-            hyperplanes=hp, n_probe=lsh_n_probe,
+            tables=[hp], n_probe=lsh_n_probe,
         )
     return ivf_topk_seeded(
         sub,
@@ -271,7 +272,7 @@ def ann_ivfpq_topk_refined(
     ``(id_col, cos_sim)`` descending."""
     from pyspark.sql import functions as F
 
-    from xcube_geodb_spark.functions.similarity import cosine_topk
+    from xcube_geodb_spark.functions.similarity import _cosine_topk_jvm
 
     if expand < 1:
         raise GeoDBError("expand must be >= 1")
@@ -289,7 +290,7 @@ def ann_ivfpq_topk_refined(
     rows = catalog.load_files(collection, database, touched, meta=m).filter(
         F.col(id_col).isin(ids)
     )
-    return cosine_topk(
+    return _cosine_topk_jvm(
         rows, query_vector, k, vec_col=idx["property"], id_col=id_col
     )
 
@@ -447,7 +448,7 @@ def ann_lsh_tables_topk(
     from pyspark.sql import functions as F
 
     from xcube_geodb_spark.functions.similarity import (
-        cosine_topk,
+        _cosine_topk_jvm,
         lsh_probe_buckets,
         lsh_table_hyperplanes,
     )
@@ -477,4 +478,4 @@ def ann_lsh_tables_topk(
         database=database,
     ).distinct()
     rows = data.join(cand, on=id_col, how="leftsemi")
-    return cosine_topk(rows, query_vector, k, vec_col, id_col)
+    return _cosine_topk_jvm(rows, query_vector, k, vec_col, id_col)

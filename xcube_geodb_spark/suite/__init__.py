@@ -17,7 +17,8 @@ change-feed roundtrips). Family variants demoted past the window keep a
 representative inside it (``scan_filter_grammar``, ``geo_bbox_modes``,
 ``text_profile`` union whole families; ``rollup_lineitem`` covers the
 set-op family, ``scalar_string_funcs`` the scalar passthroughs;
-``ann_index_topk`` exercises the demoted lsh path end-to-end;
+``ann_index_topk`` keeps single-table LSH (``sim_lsh_topk``) covered
+end-to-end through the at-rest ``lsh`` index;
 ``events_json_extract`` keeps json extraction covered for the demoted
 arrow-select variant; ``scan_cs_cd_tokens`` is a demoted grammar variant
 whose family stays covered by ``scan_filter_grammar`` — its slot promotes
@@ -195,7 +196,7 @@ DRIVER_WINDOW = [
     "dedup_pipeline_kept",
     "dedup_lines_rebuilt",
     # similarity / ANN — r9: sim_knn_join rotates out (the batch variant
-    # shares sim_cosine_topk's np.stack matrix scorer; at-rest probes
+    # shares the numpy kernel of cosine_topk's Arrow scorer; at-rest probes
     # stay covered by the two ann_* entries); it remains registered and
     # locally verified
     "sim_cosine_topk",

@@ -528,37 +528,14 @@ LLM_DEDUP_ORACLES["dedup_semantic_kept"] = """
 
 
 def sim_cosine_topk(spark, sf_dir):
-    """Brute-force cosine top-k baseline over the full corpus — the
-    Arrow scan path (numpy fold in the JVM/SQL summation order,
-    per-batch local top-k, one TakeOrdered): ~7x the higher-order-fold
-    projection at corpus scale, bit-identical results. The expression
-    path stays on the probe/rerank surfaces (similarity.cosine_topk).
-
-    Path choice is size-adaptive (r13, guide §4): launching the Python
-    worker costs a ~0.27 s fixed dispatch (measured at sf0.1: scan-only
-    0.11 s -> scan+mapInPandas 0.38 s; TakeOrdered adds ~0), which
-    dwarfs the arithmetic on a corpus the optimizer proves tiny — there
-    the JVM expression spelling wins (0.19 vs 0.32 s best-of-5). Both
-    spellings return identical rows on this corpus (every vector
-    non-null, >= k rows; equality pinned in tests/test_functions.py and
-    by the DuckDB oracle at every SF), so only the plan changes."""
+    """Exact cosine top-k over the full corpus (similarity.cosine_topk):
+    the library picks its scorer from the optimizer's size estimate —
+    the JVM expression on a corpus it proves tiny (sf0.1), the Arrow
+    numpy scan at corpus scale. Both return identical rows on this
+    corpus (every vector non-null, >= k rows; pinned in
+    tests/test_functions.py and by the DuckDB oracle at every SF)."""
     emb = load(spark, sf_dir, "embeddings")
-    q = _query_vector(spark, sf_dir)
-    try:
-        size = int(
-            str(
-                emb.select("vec_id", "embedding")
-                ._jdf.queryExecution()
-                .optimizedPlan()
-                .stats()
-                .sizeInBytes()
-            )
-        )
-    except Exception:
-        size = 0
-    if 0 < size <= 2 * 1024 * 1024:
-        return similarity.cosine_topk(emb, q, k=20)
-    return similarity.cosine_topk_arrow(emb, q, k=20)
+    return similarity.cosine_topk(emb, _query_vector(spark, sf_dir), k=20)
 
 
 def sim_matryoshka_topk(spark, sf_dir):
@@ -589,7 +566,8 @@ def ann_index_topk(spark, sf_dir):
     """Warehouse ANN end-to-end: lsh-indexed collection -> ingest (files
     range-clustered by the persisted __annbucket) -> probe that prunes data
     files from parquet footers before the scan (operators/ann.py). Logical
-    result equals the direct lsh_topk, so the same SQL oracle applies."""
+    result equals the direct one-table lsh_multitable_topk scan, so the
+    same SQL oracle applies."""
     import tempfile
 
     from xcube_geodb_spark.client import GeoDBSparkClient
@@ -775,8 +753,12 @@ def ann_lsh_multiprobe(spark, sf_dir):
 
 
 def sim_lsh_topk(spark, sf_dir):
+    """Single-table sign-LSH: multi-table LSH with one 8-bit table,
+    probing only the query's own bucket."""
     emb = load(spark, sf_dir, "embeddings")
-    return similarity.lsh_topk(emb, _query_vector(spark, sf_dir), k=20)
+    return similarity.lsh_multitable_topk(
+        emb, _query_vector(spark, sf_dir), k=20, n_bits=8, n_tables=1
+    )
 
 
 def ann_lsh_multitable(spark, sf_dir):
@@ -1016,7 +998,8 @@ LLM_SIM_ORACLES = {
         ORDER BY cos_sim DESC, vec_id ASC LIMIT 20
     """,
     # the warehouse ANN path must produce the same logical result as the
-    # direct lsh_topk scan (vec_id mapped through the int->bigint property)
+    # direct one-table lsh_multitable_topk scan (vec_id mapped through the
+    # int->bigint property)
     "ann_index_topk": f"""
         {_COS_CTES}
         SELECT CAST(vec_id AS BIGINT) AS vec_id, {_COS_EXPR} AS cos_sim
